@@ -6,7 +6,8 @@ import graft.queries.Registry
 
 /** Emits COVERAGE.md: the SURVEY §2 operator inventory mapped to the
   * correctness-gate queries that exercise each operator. Run via
-  * `sbt "runMain graft.Coverage"` after registry changes.
+  * `sbt "runMain graft.Coverage"` after registry changes; writes
+  * COVERAGE.md in the working directory.
   */
 object Coverage {
   def main(args: Array[String]): Unit = {
@@ -45,7 +46,7 @@ object Coverage {
     Registry.all.foreach { q =>
       sb.append(s"| ${q.name} | ${q.survey} | ${if (q.oracle.isDefined) "DuckDB" else "rows-only"} |\n")
     }
-    Files.writeString(Paths.get("/root/repo/COVERAGE.md"), sb.result())
+    Files.writeString(Paths.get("COVERAGE.md"), sb.result())
     println(s"wrote COVERAGE.md: ${ordered.size} operators, ${Registry.all.size} queries")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One place for session construction so every entrypoint (Verify,
-  * Bench, Scratch, tests) runs with identical semantics-relevant conf.
+  * Bench, tests) runs with identical semantics-relevant conf.
   *
   * Scale notes (100 TB target): these knobs are the local[32] stand-ins
   * for cluster conf — shuffle partitions sized to cores here, to

@@ -12,10 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Plain parquet read. Filters/projections layered on top are pushed
     * into the scan by Catalyst (verify via explain: PushedFilters).
     */

@@ -252,9 +252,10 @@ object Similarity {
   /** Multi-probe LSH ANN: each query scans its own sign-bit bucket AND
     * every bucket at Hamming distance 1 (nPlanes+1 probes) — the
     * standard recall lever when the bucket count is small relative to
-    * the corpus. Measured at sf0.1 vs exact brute force (Scratch
-    * profile-recall, full corpus): single-probe recall@5 at nPlanes=4
-    * is 0.09; Hamming<=1 probing lifts it to 0.51 (IVF nProbe=2/8 sits
+    * the corpus. Measured at sf0.1 vs exact brute force (BENCH_NOTES.md,
+    * "Measured recall of the approximate family", full corpus):
+    * single-probe recall@5 at nPlanes=4 is 0.09; Hamming<=1 probing
+    * lifts it to 0.51 (IVF nProbe=2/8 sits
     * at 0.82) at (nPlanes+1)x the bucket-join fan-out — still
     * key-partitioned equi-join work, never all-pairs, because a probe
     * is just one more (bucket, query) row. At production scale the

@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * an operator at 100 TB; the 30-odd existing sites are all
   * |files|/|vocab|/1-row bounded by manual audit, and this spec makes
   * the NEXT unbounded (or just undeclared) one fail a test instead of
-  * a judge read. Scratch.scala is exempt: it is the profiling
-  * playground, not a product path.
+  * a judge read.
   */
 class BoundedCollectSpec extends AnyFunSuite {
 
@@ -27,7 +26,7 @@ class BoundedCollectSpec extends AnyFunSuite {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     files.forEachRemaining { p =>
       val name = p.getFileName.toString
-      if (name.endsWith(".scala") && name != "Scratch.scala") {
+      if (name.endsWith(".scala")) {
         val lines = java.nio.file.Files.readAllLines(p)
         var i = 0
         while (i < lines.size) {

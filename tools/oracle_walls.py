@@ -11,6 +11,10 @@ rule as the Spark side. DuckDB runs single-connection over the same
 parquet files the bench reads.
 
 Usage: python3 tools/oracle_walls.py <sfDir> <oracle_sql.json> [out] [passes]
+
+<oracle_sql.json> is `<verifyOutDir>/oracle_sql.json`: every graft.Verify
+run writes the full registry's oracle SQL there, also when query names
+restrict which results it dumps.
 """
 import sys, os, json, time
 import duckdb
