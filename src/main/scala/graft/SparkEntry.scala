@@ -4,7 +4,7 @@ import graft.queries.Registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` / `oracleSql` are derived from the QueryDef registry so an
   * operator counts as implemented exactly when it has a registered

@@ -1,5 +1,8 @@
 package graft
 
+import java.io.File
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One place for session construction so every entrypoint (Verify,
@@ -27,7 +30,7 @@ object SparkUtil {
       // session-wide, so scan behavior is not order-dependent (ADVICE r1).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // bucketed tables (co-located joins) land here instead of ./spark-warehouse
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
+      .config("spark.sql.warehouse.dir", new File("target/spark-warehouse").getAbsolutePath)
       // Spark 4.1 turned on checksum generation+verification for every
       // streaming-checkpoint file (ChecksumCheckpointFileManager, a
       // thread pool per write). For ephemeral local checkpoints the
@@ -44,6 +47,58 @@ object SparkUtil {
       // count is safe; 1M groups × small buffers ≈ tens of MB per
       // task, and the sort fallback still engages past that.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
+
+  /** The one scratch root for on-disk query state:
+    * `<working dir>/target/tmp/<name>/<dataset key>`, where the key is
+    * `dataDir` with every non-alphanumeric run replaced by `_` (`""`
+    * for state tied to no dataset). Keying by dataset lets persisted
+    * state of two scale factors coexist; resolving against the working
+    * directory keeps a copied checkout inside its own tree.
+    */
+  def scratchDir(name: String, dataDir: String): String =
+    new File(s"target/tmp/$name/${dataDir.replaceAll("[^A-Za-z0-9]+", "_")}").getAbsolutePath
+
+  /** [[scratchDir]], deleted first: for state a run must rebuild from
+    * nothing, where an earlier run's leftovers would poison the result.
+    */
+  def freshDir(name: String, dataDir: String): String = {
+    val dir = scratchDir(name, dataDir)
+    org.apache.commons.io.FileUtils.deleteDirectory(new File(dir))
+    dir
+  }
+
+  /** [[scratchDir]] built by `write` once per source state, for
+    * staging that is set-up rather than query work. The `_STAGED` marker
+    * stores `version` and `srcPath`'s (mtime, length) stamp; `write`
+    * re-runs only when that changed — a rewritten source invalidates
+    * the staged copy instead of being silently ignored — and the marker
+    * lands only after a successful (re)build.
+    */
+  def stagedDir(spark: SparkSession, name: String, dataDir: String, srcPath: String,
+      version: String)(write: String => Unit): String = {
+    val dir = scratchDir(name, dataDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = new Path(srcPath)
+    val dstDir = new Path(dir)
+    val fs = dstDir.getFileSystem(conf)
+    val marker = new Path(dstDir, "_STAGED")
+    val st = src.getFileSystem(conf).getFileStatus(src)
+    val stamp = s"$version:${st.getModificationTime}:${st.getLen}"
+    val current =
+      if (!fs.exists(marker)) None
+      else {
+        val in = fs.open(marker)
+        try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
+        finally in.close()
+      }
+    if (!current.contains(stamp)) {
+      if (fs.exists(dstDir)) fs.delete(dstDir, true)
+      write(dir)
+      val out = fs.create(marker, true)
+      try out.write(stamp.getBytes("UTF-8")) finally out.close()
+    }
+    dir
+  }
 
   /** Fixed default core count so Bench/Verify numbers are comparable
     * across machines (ADVICE r2); override via SPARK_GRAFT_CPUS.

@@ -168,9 +168,6 @@ object LocationFns {
     }
     list
   }
-  val extractLocationPairsListUdf = udf(extractLocationPairsListImpl _)
-  def extractLocationPairsList(pairs: Column, location: Column): Column =
-    extractLocationPairsListUdf(pairs, location)
 
   // ------------------------------------------------------------ F10 parse_job_location (the generator)
   private def parseSingleItem(item: String): List[Loc] = {

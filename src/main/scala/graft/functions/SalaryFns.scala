@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** F1: Vietnamese salary normalizer — `normalize_salary(text)` →
-  * (salary_min, salary_max, salary_type), re-expressed as a single
-  * codegen-friendly `when`/`regexp_extract` chain (no UDF, so the whole
-  * staging transform stays inside whole-stage codegen).
+  * (salary_min, salary_max, salary_type), as a codegen'd Catalyst
+  * expression (no UDF, so the whole staging transform stays inside
+  * whole-stage codegen).
   *
   * Semantics follow /root/reference/sql/stored_procedures.sql:6-105
   * branch-for-branch, including evaluation order:
@@ -32,69 +30,15 @@ import org.apache.spark.sql.types.DecimalType
   */
 object SalaryFns {
 
-  private val RangeUsd   = "(?iu)([0-9,.]+)\\s*-\\s*([0-9,.]+)\\s*usd"
-  private val RangeTrieu = "(?iu)([0-9,.]+)\\s*-\\s*([0-9,.]+)\\s*triệu"
-  private val UptoUsd    = "(?iu)tới\\s+([0-9,.]+)\\s*usd"
-  private val UptoTrieu  = "(?iu)tới\\s+([0-9,.]+)\\s*triệu"
-  private val FromTrieu  = "(?iu)từ\\s+([0-9,.]+)\\s*triệu"
-  private val OneUsd     = "(?iu)([0-9,.]+)\\s*usd"
-  private val OneTrieu   = "(?iu)([0-9,.]+)\\s*triệu"
-
-  private val Dec = DecimalType(18, 6)
-  private def usdNum(s: Column): Column =
-    regexp_replace(s, ",", "").cast(Dec) * 24000 / 1000000
-  private def trieuNum(s: Column): Column =
-    regexp_replace(s, ",", ".").cast(Dec)
-  private def zero: Column = lit(0).cast(Dec)
-
   /** Returns struct(salary_min: double, salary_max: double, salary_type: string).
     *
     * Backed by the custom Catalyst expression `NormalizeSalaryExpr`
-    * (single evaluation per row, precompiled patterns, codegen) — the
-    * `when`/`regexp_extract` chain below is kept as the executable
-    * specification and exercised by SalaryFnsSpec's parity test.
+    * (single evaluation per row, precompiled patterns, codegen). The
+    * original `when`/`regexp_extract` chain is the executable
+    * specification; it lives in src/test (`SalaryColumnChain`), where
+    * SalaryFnsSpec and PropertySpec pin parity against it.
     */
   def normalizeSalary(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       NormalizeSalaryExpr(org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
-  /** The same semantics as pure column expressions (the original
-    * formulation): each struct-field access re-inlines the whole branch
-    * chain, which measured ~10× slower than the custom expression at
-    * sf0.1 — kept for documentation and differential testing.
-    */
-  def normalizeSalaryColumns(c: Column): Column = {
-    val pre = when(c.isNull || c === "" || lower(c) === "thoả thuận",
-        struct(zero.as("mn"), zero.as("mx"), lit("negotiable").as("ty")))
-      .when(c.rlike(RangeUsd),
-        struct(usdNum(regexp_extract(c, RangeUsd, 1)).as("mn"),
-          usdNum(regexp_extract(c, RangeUsd, 2)).as("mx"), lit("range").as("ty")))
-      .when(c.rlike(RangeTrieu),
-        struct(trieuNum(regexp_extract(c, RangeTrieu, 1)).as("mn"),
-          trieuNum(regexp_extract(c, RangeTrieu, 2)).as("mx"), lit("range").as("ty")))
-      .when(c.rlike(UptoUsd),
-        struct(zero.as("mn"), usdNum(regexp_extract(c, UptoUsd, 1)).as("mx"),
-          lit("upto").as("ty")))
-      .when(c.rlike(UptoTrieu),
-        struct(zero.as("mn"), trieuNum(regexp_extract(c, UptoTrieu, 1)).as("mx"),
-          lit("upto").as("ty")))
-      .when(c.rlike(FromTrieu),
-        struct(trieuNum(regexp_extract(c, FromTrieu, 1)).as("mn"),
-          trieuNum(regexp_extract(c, FromTrieu, 1)).as("mx"), lit("from").as("ty")))
-      .when(c.rlike(OneUsd) && !c.contains("-"),
-        struct(usdNum(regexp_extract(c, OneUsd, 1)).as("mn"),
-          usdNum(regexp_extract(c, OneUsd, 1)).as("mx"), lit("range").as("ty")))
-      .when(c.rlike(OneTrieu) && !c.contains("-"),
-        struct(trieuNum(regexp_extract(c, OneTrieu, 1)).as("mn"),
-          trieuNum(regexp_extract(c, OneTrieu, 1)).as("mx"), lit("range").as("ty")))
-      .otherwise(
-        struct(zero.as("mn"), zero.as("mx"), lit("negotiable").as("ty")))
-
-    val mn = coalesce(pre.getField("mn"), zero)
-    val mx = coalesce(nullif(pre.getField("mx"), zero), mn)
-    struct(
-      mn.cast("double").as("salary_min"),
-      mx.cast("double").as("salary_max"),
-      pre.getField("ty").as("salary_type"))
-  }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** F2 due_date, F3 time_remaining, F13 load_month, F14 DimDate range,
-  * F15 daily fact date generation, F16 days_to_deadline.
+  * F15 daily fact date generation (F16 days_to_deadline is inline in
+  * AnalyticsViews.vwTop10Hanoi).
   *
   * Every wall-clock dependency is an explicit `now`/`asOf` parameter
   * (SURVEY §7.4(3)): the reference calls datetime.now()/CURRENT_TIMESTAMP
@@ -101,9 +102,4 @@ object TimeFns {
     when(start <= end, sequence(start, end))
       .otherwise(array().cast("array<date>"))
   }
-
-  // ------------------------------------------------------------ F16
-  /** days_to_deadline (ref sql/views.sql:48). */
-  def daysToDeadline(due: Column, asOf: Column): Column =
-    datediff(to_date(due), to_date(asOf))
 }

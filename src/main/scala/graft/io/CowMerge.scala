@@ -92,10 +92,10 @@ object CowMerge {
     val touchedDf =
       if (touched.isEmpty) tgt.limit(0) else spark.read.parquet(touched: _*)
     // 2. clause application + rewrite
-    val out = applyClauses(touchedDf, source, key, op, tgt.columns.toSeq, updateCols)
-      .repartition(numFiles, col(key))
-    out.write.mode("overwrite").parquet(newDataDir)
-    val rewritten = TableLog.filesUnder(spark, newDataDir)
+    val rewritten = TableLog.land(
+      applyClauses(touchedDf, source, key, op, tgt.columns.toSeq, updateCols)
+        .repartition(numFiles, col(key)),
+      newDataDir)
     // 3. one atomic commit
     TableLog.tryCommit(spark, logDir, baseVersion, committer,
         adds = rewritten, removes = touched)

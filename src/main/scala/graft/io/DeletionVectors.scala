@@ -61,14 +61,20 @@ object DeletionVectors {
     }
   }
 
+  /** The one spelling of a data-file path in DV tables, which join on
+    * it: `_metadata.file_path` and `input_file_name()` (the manifest
+    * side) differ in the `file:/` scheme prefix.
+    */
+  private def norm(c: Column): Column = regexp_replace(c, "^file:/+", "/")
+  private def filePath: Column = norm(col("_metadata.file_path"))
+
   /** Positions of base rows matching `pred`, as a (file, row_index)
     * deletion vector. One distributed scan; output is |matches| rows.
     * The predicate sees every data column of the base table.
     */
   def build(spark: SparkSession, basePath: String, pred: Column): DataFrame =
     guardSchema(spark.read.parquet(basePath), basePath)
-      .select(col("*"), col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("row_index"))
+      .select(col("*"), filePath.as("file"), col("_metadata.row_index").as("row_index"))
       .filter(pred)
       .select("file", "row_index")
 
@@ -79,73 +85,126 @@ object DeletionVectors {
   def writeBatch(dv: DataFrame, dvDir: String, batchId: Int): Unit =
     dv.write.mode("overwrite").parquet(s"$dvDir/batch=$batchId")
 
+  /** `df` (a scan of data files) minus the (file, row_index) positions
+    * in `dv`: |deletes| rows broadcast into an anti-join, so the read
+    * path adds no shuffle of table data (a table whose DVs outgrow the
+    * broadcast threshold is past its compaction threshold anyway).
+    */
+  private def minus(df: DataFrame, dv: DataFrame): DataFrame =
+    df.select(col("*"), filePath.as("__file"), col("_metadata.row_index").as("__pos"))
+      .join(broadcast(dv.select(col("file").as("__file"), col("row_index").as("__pos"))),
+        Seq("__file", "__pos"), "left_anti")
+      .drop("__file", "__pos")
+
   /** Merge-on-read scan: base rows minus every accumulated DV
-    * position. The DV side is |deletes| rows (distinct — overlapping
-    * batches may delete the same position twice), broadcast into an
-    * anti-join against the base scan, so the read path adds no
-    * shuffle of table data. If DVs ever outgrow the broadcast
-    * threshold Spark falls back to a shuffled anti-join on
-    * (file, row_index), which co-partitions fine — but a table whose
-    * DVs are that large is past its compaction threshold anyway.
+    * position (distinct — overlapping batches may delete the same
+    * position twice).
     */
   def readWithDv(spark: SparkSession, basePath: String, dvDir: String): DataFrame = {
     val raw = guardSchema(spark.read.parquet(basePath), basePath)
     if (!hasDv(spark, dvDir)) return raw // no deletes yet: bare base scan
-    val base = raw
-      .select(col("*"), col("_metadata.file_path").as("__file"),
-        col("_metadata.row_index").as("__pos"))
-    val dv = spark.read.parquet(dvDir)
-      .select(col("file").as("__file"), col("row_index").as("__pos"))
-      .distinct()
-    base.join(broadcast(dv), Seq("__file", "__pos"), "left_anti")
-      .drop("__file", "__pos")
+    minus(raw, spark.read.parquet(dvDir).select("file", "row_index").distinct())
   }
 
-  /** Compaction plan: per-file live/deleted counts from ONE manifest
-    * pass (|files| result rows), split at `threshold` deleted
-    * fraction. Files above it are worth rewriting; the rest keep
-    * riding their DVs.
+  /** One delete batch resolved to positions: the (file, row_index) of
+    * every row whose `keyCol` is in `keys`, scanning only the files
+    * whose Bloom filter in `manifest` might hold a key — the cost is
+    * |candidate files|, not the table.
     */
-  def compactionPlan(spark: SparkSession, basePath: String, dvDir: String,
-      threshold: Double): DataFrame = {
-    val perFile = spark.read.parquet(basePath)
-      .select(col("_metadata.file_path").as("file"))
-      .groupBy("file").agg(count(lit(1)).as("n_rows"))
-    val deleted = spark.read.parquet(dvDir)
+  def resolve(spark: SparkSession, manifest: DataFrame, keys: DataFrame,
+      keyCol: String, mBits: Int, k: Int): DataFrame = {
+    val files = Layout.bloomMatchingFiles(manifest, keys, keyCol, mBits, k)
+      .collect().map(_.getString(0)).sorted // |files|-bounded planner step
+    if (files.isEmpty)
+      spark.range(0).select(lit("").as("file"), col("id").as("row_index"))
+    else
+      spark.read.parquet(files.toIndexedSeq: _*)
+        .select(col(keyCol), filePath.as("file"), col("_metadata.row_index").as("row_index"))
+        .join(broadcast(keys), Seq(keyCol), "left_semi")
+        .select("file", "row_index")
+  }
+
+  /** A merge-on-read table that compacts itself as deletes arrive: a
+    * ledger under `root` keyed by batch id B. `base/` holds the data the
+    * caller lands first; batch B writes `dv/batch_id=B` (its positions),
+    * `gen/batch_id=B` (live rows of the files it compacted),
+    * `manifest/batch_id=B` (their stats; -1 is the base's) and
+    * `tomb/batch_id=B` (the compacted files). Live files are manifest
+    * rows without a tombstone. A batch reads the ledger AS OF the
+    * batches before it and overwrites only its own dirs, so a replay
+    * lands the same files with the same rows.
+    */
+  final case class Ledger(root: String, keyCol: String, mBits: Int, k: Int,
+      threshold: Double) {
+    val base: String = s"$root/base"
+    private[DeletionVectors] def dir(kind: String, batchId: Long) = s"$root/$kind/batch_id=$batchId"
+  }
+
+  private def writeManifest(spark: SparkSession, l: Ledger, dataDir: String, batchId: Long): Unit =
+    Layout.statsManifest(spark, dataDir, l.keyCol, l.keyCol, l.mBits, l.k)
+      .withColumn("file", norm(col("file")))
+      .coalesce(1).write.mode("overwrite").parquet(l.dir("manifest", batchId))
+
+  /** Start the ledger over `l.base`: its manifest, plus sentinel DV
+    * and tombstone rows so those dirs always have a schema.
+    */
+  def create(spark: SparkSession, l: Ledger): Unit = {
+    import spark.implicits._
+    writeManifest(spark, l, l.base, -1)
+    Seq(("", -1L)).toDF("file", "row_index").write.mode("overwrite").parquet(l.dir("dv", -1))
+    Seq("").toDF("file").write.mode("overwrite").parquet(l.dir("tomb", -1))
+  }
+
+  /** Manifest rows of the files live after the batches before
+    * `batchId`; the tombstones are read once, into the filter.
+    */
+  private def liveManifest(spark: SparkSession, l: Ledger, batchId: Long): DataFrame = {
+    val dead = spark.read.parquet(s"${l.root}/tomb").filter(col("batch_id") < batchId)
+      .select("file").collect().map(_.getString(0)) // |files|-bounded planner metadata
+    spark.read.parquet(s"${l.root}/manifest")
+      .filter(col("batch_id") < batchId && !col("file").isin(dead.toIndexedSeq: _*))
+  }
+
+  /** Positions deleted by the batches up to and including `batchId`. */
+  private def positions(spark: SparkSession, l: Ledger, batchId: Long): DataFrame =
+    spark.read.parquet(s"${l.root}/dv")
+      .filter(col("batch_id") <= batchId && col("file") =!= "")
       .select("file", "row_index").distinct()
-      .groupBy("file").agg(count(lit(1)).as("n_deleted"))
-    perFile.join(deleted, Seq("file"), "left")
-      .withColumn("n_deleted", coalesce(col("n_deleted"), lit(0L)))
-      .withColumn("rewrite", col("n_deleted") / col("n_rows") >= threshold)
+
+  /** Apply one delete batch: land `keys`' positions in the live files,
+    * then copy-on-write every live file whose deleted fraction reached
+    * the threshold into a generation, with a manifest delta so later
+    * batches resolve against it, and tombstone the old file (logically;
+    * its bytes stay). Cost: |candidate files| + |rows in crossing files|.
+    */
+  def applyBatch(spark: SparkSession, l: Ledger, keys: DataFrame, batchId: Long): Unit = {
+    import spark.implicits._
+    val live = liveManifest(spark, l, batchId) // once per batch; both steps share it
+    val ids = keys.localCheckpoint(false) // lazy: materializes inside the first consumer
+    resolve(spark, live, ids, l.keyCol, l.mBits, l.k)
+      .write.mode("overwrite").parquet(l.dir("dv", batchId))
+    val dv = positions(spark, l, batchId).localCheckpoint(false) // lazy: 1-2 consumers
+    val hot = live.select("file", "n_rows")
+      .join(dv.groupBy("file").agg(count(lit(1)).as("n_del")), Seq("file"))
+      .filter(col("n_del") / col("n_rows") >= l.threshold)
+      .select("file").collect().map(_.getString(0)).sorted // |files|-bounded compaction plan
+    if (hot.nonEmpty) {
+      // a fixed name: DVs, manifests and tombstones refer to the
+      // generation by path, so a replayed batch must land the same file
+      val gen = l.dir("gen", batchId)
+      TableLog.landFile(minus(spark.read.parquet(hot.toIndexedSeq: _*), dv),
+        s"$gen/part-00000.parquet")
+      writeManifest(spark, l, gen, batchId)
+      hot.toIndexedSeq.toDF("file").write.mode("overwrite").parquet(l.dir("tomb", batchId))
+    }
   }
 
-  /** Copy-on-write escalation for the hot files: rewrite ONLY the
-    * files the plan marks (DV already applied) into `compactDir`,
-    * leaving every cold file untouched on disk. Returns the cold
-    * file list — the table is thereafter (cold files + compactDir)
-    * with the residual DV restricted to cold files. Cost is
-    * |rows in rewritten files|, never the table.
+  /** Merge-on-read scan of the ledger's table: live files (base minus
+    * tombstoned, plus generations) minus the residual DV positions.
     */
-  def compact(spark: SparkSession, basePath: String, dvDir: String,
-      compactDir: String, threshold: Double): Seq[String] = {
-    val plan = compactionPlan(spark, basePath, dvDir, threshold)
-      .select("file", "rewrite").collect() // |files| rows: planner metadata
-    val hot = plan.filter(_.getBoolean(1)).map(_.getString(0))
-    val cold = plan.filterNot(_.getBoolean(1)).map(_.getString(0)).toSeq.sorted
-    if (hot.nonEmpty) {
-      val dv = spark.read.parquet(dvDir)
-        .select(col("file").as("__file"), col("row_index").as("__pos"))
-        .distinct()
-      spark.read.parquet(hot.toSeq: _*)
-        .select(col("*"), col("_metadata.file_path").as("__file"),
-          col("_metadata.row_index").as("__pos"))
-        .join(broadcast(dv), Seq("__file", "__pos"), "left_anti")
-        .drop("__file", "__pos")
-        .write.mode("overwrite").parquet(compactDir)
-    } else {
-      spark.read.parquet(basePath).limit(0)
-        .write.mode("overwrite").parquet(compactDir)
-    }
-    cold
+  def read(spark: SparkSession, l: Ledger): DataFrame = {
+    val live = liveManifest(spark, l, Long.MaxValue).select("file")
+      .collect().map(_.getString(0)).sorted // |files|-bounded
+    minus(spark.read.parquet(live.toIndexedSeq: _*), positions(spark, l, Long.MaxValue))
   }
 }

@@ -57,27 +57,6 @@ object Exports {
       .select("fact_id", "job_sk", "date_id", "job_id", "title_clean",
         "province", "city", "district", MonthTag)
 
-  /** BI projection (staging_to_dwh.py:705-713). */
-  private def analyticsTagged(dwh: Dwh, months: Seq[String]): DataFrame =
-    dwh.fact.filter(col("load_month").isin(months: _*))
-      .join(broadcast(dwh.dimJob.select("job_sk", "job_id", "title_clean")), "job_sk")
-      .join(broadcast(dwh.dimCompany.select("company_sk", "company_name_standardized")),
-        "company_sk")
-      .select("title_clean", "job_id", "company_name_standardized", "date_id",
-        "salary_min", "salary_max", "salary_type", "due_date", "posted_time",
-        "verified_employer", "load_month")
-      .withColumnRenamed("load_month", MonthTag)
-
-  private def tagged(dwh: Dwh, tpe: String, months: Seq[String]): DataFrame = tpe match {
-    case "analytics" => analyticsTagged(dwh, months)
-    case "facts"     => factsTagged(dwh, months)
-    case "locations" => locationsTagged(dwh, months)
-  }
-
-  /** One export projection in the reference's exact file schema. */
-  def exportOf(dwh: Dwh, tpe: String, months: Seq[String]): DataFrame =
-    tagged(dwh, tpe, months).drop(MonthTag)
-
   /** Months present in the fact table (staging_to_dwh.py:669-672). */
   def loadMonths(dwh: Dwh): Seq[String] =
     dwh.fact.select("load_month").distinct().orderBy("load_month")
@@ -105,12 +84,13 @@ object Exports {
     // aggregate and the parquet write SHARE one computation of the
     // joins — the previous formulation planned every projection twice
     // (once per consumer), doubling the export's join work.
-    // r15: `analytics` is a pure PROJECTION of the `facts` export's
-    // join (same fact ⋈ dimJob ⋈ dimCompany, narrower column list) —
-    // derive it from the facts checkpoint instead of re-running the
-    // whole join chain + broadcast builds a second time. Same rows,
-    // same column values, by construction.
-    val factsCk = tagged(dwh, "facts", months).localCheckpoint(false)
+    // r15: `analytics`, the BI projection (staging_to_dwh.py:705-713),
+    // is a pure PROJECTION of the `facts` export's join (same fact ⋈
+    // dimJob ⋈ dimCompany, narrower column list) — derive it from the
+    // facts checkpoint instead of re-running the whole join chain +
+    // broadcast builds a second time. Same rows, same column values,
+    // by construction.
+    val factsCk = factsTagged(dwh, months).localCheckpoint(false)
     val analyticsFromFacts = factsCk.select(
       col("title_clean"), col("job_id"), col("company_name_standardized"),
       col("date_id"), col("salary_min"), col("salary_max"),
@@ -119,7 +99,7 @@ object Exports {
     val taggedFrames: Seq[(String, DataFrame)] = Seq(
       "analytics" -> analyticsFromFacts,
       "facts" -> factsCk,
-      "locations" -> tagged(dwh, "locations", months).localCheckpoint(false))
+      "locations" -> locationsTagged(dwh, months).localCheckpoint(false))
 
     // all (type, month) record counts in one aggregation job — never a
     // per-file re-read

@@ -104,6 +104,7 @@ object Layout {
   def bloomManifest(spark: org.apache.spark.sql.SparkSession, path: String,
       keyCol: String, mBits: Int, k: Int): DataFrame = {
     require(mBits % 64 == 0, "mBits must be a multiple of 64")
+    require(k >= 1, s"k (probes per key) must be >= 1, got $k") // k = 0: an empty manifest
     val probes = (0 until k).map(i => probePos(col(keyCol), i, mBits))
     spark.read.parquet(path)
       .select(input_file_name().as("file"),
@@ -135,6 +136,7 @@ object Layout {
   def statsManifest(spark: org.apache.spark.sql.SparkSession, path: String,
       zoneCol: String, bloomKeyCol: String, mBits: Int, k: Int): DataFrame = {
     require(mBits % 64 == 0, "mBits must be a multiple of 64")
+    require(k >= 1, s"k (probes per key) must be >= 1, got $k") // k = 0: an empty manifest
     val probes = (0 until k).map(i => probePos(col(bloomKeyCol), i, mBits))
     spark.read.parquet(path)
       .select(input_file_name().as("file"), col(zoneCol).as("__z"),

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.input_file_name
 
 /** Versioned-table commit log: the minimal transaction layer the lake
   * queries build on (q_s33 snapshot expiration, q_s35 optimistic
@@ -178,9 +179,18 @@ object TableLog {
     require(keepFrom <= head, s"keepFrom=$keepFrom is past head=$head")
     val surviving = commits.map(_.version).filter(_ >= keepFrom)
     val referenced = surviving.flatMap(v => liveFiles(commits, Some(v))).toSet
+    val (dead, kept) = dataFilesOnDisk(spark, dataDir).partition(f => !referenced.contains(f))
+    deleteFiles(spark, dead)
+    (dead.sorted, kept.sorted)
+  }
+
+  /** Every data file ever written under `dataDir` (directly or one
+    * commit subdirectory down), committed or not — the filesystem side
+    * of vacuum and FSCK. ≤ |files| planner metadata.
+    */
+  def dataFilesOnDisk(spark: SparkSession, dataDir: String): Seq[String] = {
     val fs = fsOf(spark, dataDir)
-    // ≤ |files| planner metadata: every data file ever written
-    val onDisk = fs.listStatus(new Path(dataDir)).toSeq
+    fs.listStatus(new Path(dataDir)).toSeq
       .flatMap { st =>
         if (st.isDirectory)
           fs.listStatus(st.getPath).toSeq.filter(_.isFile).map(_.getPath)
@@ -188,17 +198,20 @@ object TableLog {
       }
       .filter(_.getName.endsWith(".parquet"))
       .map(_.toUri.getPath)
-    val (dead, kept) = onDisk.partition(f => !referenced.contains(f))
-    dead.foreach(f => fs.delete(new Path(f), false))
-    (dead.sorted, kept.sorted)
   }
+
+  /** Delete data files by path: a vacuum's dead files, or the staged
+    * files of a writer whose commit aborted.
+    */
+  def deleteFiles(spark: SparkSession, files: Seq[String]): Unit =
+    files.foreach(f => fsOf(spark, f).delete(new Path(f), false))
 
   /** Iceberg-style `history` metadata relation: one row per commit
     * with its file-level add/remove/live counts — |commits|² driver
     * set algebra over log metadata, surfaced as a DataFrame so audits
     * and maintenance jobs can join against it like any other table.
     */
-  def history(spark: SparkSession, logDir: String): org.apache.spark.sql.DataFrame = {
+  def history(spark: SparkSession, logDir: String): DataFrame = {
     val commits = readCommits(spark, logDir)
     val rows = commits.map { c =>
       (c.version, c.committer, c.adds.size.toLong, c.removes.size.toLong,
@@ -207,6 +220,43 @@ object TableLog {
     import spark.implicits._
     rows.toDF("version", "committer", "n_added", "n_removed", "n_live_files")
   }
+
+  /** Land `df` as the data files of one commit: overwrite-write it to
+    * `dir` and return the files the write produced (the commit's
+    * `adds`). The caller picks the partitioning, hence the file count.
+    */
+  def land(df: DataFrame, dir: String): Seq[String] = {
+    df.write.mode("overwrite").parquet(dir)
+    filesUnder(df.sparkSession, dir)
+  }
+
+  /** Land `df` as ONE data file at exactly `path`, replacing any file
+    * there. Spark names part files by write job; a file that metadata
+    * refers to by path must keep its name when it is rewritten.
+    */
+  def landFile(df: DataFrame, path: String): Unit = {
+    val out = new Path(path)
+    val tmp = new Path(out.getParent, s"_${out.getName}.tmp").toString
+    val fs = fsOf(df.sparkSession, path)
+    val part = land(df.coalesce(1), tmp) match {
+      case Seq(one) => one
+      case other => sys.error(s"landFile: expected one part file for $path, got $other")
+    }
+    fs.delete(out, false)
+    require(fs.rename(new Path(part), out), s"landFile: rename to $path failed")
+    fs.delete(new Path(tmp), true)
+  }
+
+  /** The subset of `files` holding at least one row matching `pred` —
+    * the files a copy-on-write delete or update must rewrite. One
+    * filtered scan.
+    */
+  def filesMatching(spark: SparkSession, files: Seq[String], pred: Column): Seq[String] =
+    spark.read.parquet(files: _*).filter(pred)
+      .select(input_file_name()).distinct()
+      .collect() // ≤ |files| planner metadata
+      .map(r => new Path(r.getString(0)).toUri.getPath)
+      .sorted.toSeq
 
   /** The data files a distributed write just produced under `dir` —
     * the `adds` list for its commit. ≤ |files| planner metadata.

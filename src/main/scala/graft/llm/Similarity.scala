@@ -44,8 +44,6 @@ object Similarity {
     */
   def dot(a: Column, b: Column): Column = graft.functions.VectorExprs.dotCol(a, b)
 
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   def cosine(a: Column, b: Column): Column = graft.functions.VectorExprs.cosineCol(a, b)
 
   /** Exact cosine top-k: for each row of `queries`, the k nearest

@@ -45,11 +45,6 @@ object TextAnalysis {
       .otherwise(aggregate(toks, lit(0), (acc, t) => acc + length(t)) / size(toks))
   }
 
-  /** Ratio of non-alphanumeric, non-space characters. */
-  def punctRatio(c: Column): Column =
-    when(c.isNull || length(c) === 0, 0.0)
-      .otherwise(length(regexp_replace(c, "[a-zA-Z0-9\\s]", "")) / length(c))
-
   // ------------------------------------------- repetition signals
   // The Gopher/C4 family of repetition filters: heavily templated or
   // looping documents (the classic web-crawl failure mode) show up as

@@ -93,12 +93,6 @@ object AsOfJoin {
     matched.select(out: _*)
   }
 
-  /** Convenience column: seconds from the matched right timestamp to
-    * the left timestamp (null when unmatched).
-    */
-  def gapSeconds(leftTs: Column, matchedTs: Column): Column =
-    unix_timestamp(leftTs) - unix_timestamp(matchedTs)
-
   /** Hot-key-safe backward as-of: the running window serializes each
     * key's rows into one task, and AQE's skew handling splits JOINS,
     * not window partitions — so a key owning a data center's worth of

@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SparkUtil, Tables}
 import graft.functions.TextFns
-import graft.io.{Bucketing, ChangeFeed, CowMerge, Exports, Snapshots, TableLog}
+import graft.io.{Bucketing, ChangeFeed, CowMerge, DeletionVectors, Exports, Snapshots, TableLog}
 import graft.streaming.CdcStream
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -14,12 +14,14 @@ import org.apache.spark.sql.types.DecimalType
   * Structured-Streaming windowed aggregation checked against a batch
   * oracle.
   *
-  * Side-effecting queries write under target/tmp/<query> (inside the
-  * repo), delete-first, so Verify re-runs are idempotent.
+  * Side-effecting queries keep their disk state under the one scratch
+  * root, `SparkUtil.scratchDir(<query>, <data dir>)` =
+  * `<working dir>/target/tmp/<query>/<dataset key>`. State a run must
+  * rebuild from nothing (commit logs, checkpoints) takes
+  * `SparkUtil.freshDir`, which deletes it first, so Verify re-runs are
+  * idempotent; marker-guarded staging persists across runs.
   */
 object IoQueries {
-
-  private val TmpBase = "/root/repo/target/tmp"
 
   private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
 
@@ -33,7 +35,7 @@ object IoQueries {
              |FROM orders WHERE strftime(o_orderdate, '%Y-%m') IN ('1997-03', '1998-11')
              |GROUP BY 1 ORDER BY load_month""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s10_partitions"
+        val tmp = SparkUtil.scratchDir("q_s10_partitions", dir)
         val months = Seq("1997-03", "1998-11")
         val withMonth = Tables.orders(s, dir)
           .withColumn("load_month", date_format(col("o_orderdate"), "yyyy-MM"))
@@ -82,8 +84,7 @@ object IoQueries {
              |         CAST(sum(n_rows) AS BIGINT), NULL FROM rws)
              |ORDER BY load_month, export_type""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s12_exports"
-        Snapshots.deleteDir(s, tmp)
+        val tmp = SparkUtil.freshDir("q_s12_exports", dir)
         val o = Tables.orders(s, dir)
         // mini star with the reference's full fact column set
         val fact = o.select(
@@ -173,8 +174,7 @@ object IoQueries {
              |max(strftime(ts, '%Y-%m-%dT%H:%M:%S')) AS max_ts
              |FROM rec GROUP BY 1 ORDER BY action""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s13_cdc"
-        Snapshots.deleteDir(s, tmp)
+        val tmp = SparkUtil.freshDir("q_s13_cdc", dir)
         val cutoff = expr("timestamp'2024-01-28 00:00:00'")
         val batch = Tables.events(s, dir).filter(col("ts") >= cutoff)
           .select(col("user_id").as("event_id"), col("ts"), col("event_type"), col("value"))
@@ -197,7 +197,7 @@ object IoQueries {
              |CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
              |FROM customer GROUP BY 1 ORDER BY segment""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s15_snapshots"
+        val tmp = SparkUtil.scratchDir("q_s15_snapshots", dir)
         val v1 = Tables.customer(s, dir)
         Snapshots.writeSnapshot(v1, tmp, "1")
         // a "corrupting" v2 write; restore must see v1 untouched
@@ -228,8 +228,7 @@ object IoQueries {
              |CAST(sum(CAST(tp AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
              |FROM merged GROUP BY processed ORDER BY processed""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s16_evolution"
-        Snapshots.deleteDir(s, tmp)
+        val tmp = SparkUtil.freshDir("q_s16_evolution", dir)
         val o = Tables.orders(s, dir)
         // generation 1: pre-evolution schema
         o.filter(col("o_orderkey") % 2 === 0)
@@ -337,7 +336,7 @@ object IoQueries {
              |  '2026-08-12 00:00:00' AS crawled_at
              |FROM part ORDER BY CAST(job_id AS BIGINT)""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s1_html"
+        val tmp = SparkUtil.scratchDir("q_s1_html", dir)
         val k = col("p_partkey")
         val html = Tables.part(s, dir).select(concat(
           lit("<div class=\"job-item-2\" data-job-id=\""), k,
@@ -413,7 +412,7 @@ object IoQueries {
              |FROM lineitem WHERE l_quantity > 25
              |GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s19_orc"
+        val tmp = SparkUtil.scratchDir("q_s19_orc", dir)
         Tables.lineitem(s, dir)
           .select("l_returnflag", "l_quantity", "l_extendedprice")
           .write.mode("overwrite").orc(tmp)
@@ -440,18 +439,13 @@ object IoQueries {
              |CAST(sum(o_orderkey) AS BIGINT) AS key_sum
              |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
       (s, dir) => {
-        val frag = s"$TmpBase/q_s23_fragmented"
-        val out = s"$TmpBase/q_s23_compacted"
         // fragmented staging is per-sfDir idempotent setup (the copy
         // is the PRE-EXISTING mess compaction exists to fix, not the
-        // work being measured) — keyed like CdcStream's staging
-        val marker = new org.apache.hadoop.fs.Path(s"$frag/_STAGED_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
-        val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          Tables.orders(s, dir).repartition(48)
-            .write.mode("overwrite").parquet(frag)
-          fs.create(marker, true).close()
+        // work being measured)
+        val frag = SparkUtil.stagedDir(s, "q_s23_fragmented", dir, s"$dir/orders.parquet", "v1") {
+          staged => Tables.orders(s, dir).repartition(48).write.mode("overwrite").parquet(staged)
         }
+        val out = SparkUtil.scratchDir("q_s23_compacted", dir)
         graft.io.Snapshots.compact(s, frag, out, targetBytes = 16L << 20)
         s.read.parquet(out)
           .groupBy("o_orderstatus")
@@ -476,7 +470,7 @@ object IoQueries {
              |  THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_good
              |FROM events""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s20_csv"
+        val tmp = SparkUtil.scratchDir("q_s20_csv", dir)
         // concat_ws SKIPS null columns (a short line would shift every
         // later field), so each field is explicitly null-coalesced —
         // an empty CSV token parses back as NULL, preserving shape
@@ -517,7 +511,7 @@ object IoQueries {
              |count(DISTINCT user_id) AS n_users
              |FROM e WHERE user_id BETWEEN 40 AND 60 AND daynum BETWEEN 10 AND 16""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s21_zorder"
+        val tmp = SparkUtil.scratchDir("q_s21_zorder", dir)
         val e = Tables.events(s, dir).select(
           col("user_id"),
           datediff(date_trunc("day", col("ts")).cast("date"), lit("2024-01-01"))
@@ -553,7 +547,7 @@ object IoQueries {
              |WHERE o_orderdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1995-03-31'
              |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s27_manifest"
+        val tmp = SparkUtil.scratchDir("q_s27_manifest", dir)
         Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderdate")
@@ -597,7 +591,7 @@ object IoQueries {
              |FROM orders WHERE o_orderkey IN (7, 113, 541, 997, 1499)
              |ORDER BY o_orderkey""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s28_bloom"
+        val tmp = SparkUtil.scratchDir("q_s28_bloom", dir)
         val (mBits, k) = (1 << 20, 4)
         Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -642,17 +636,17 @@ object IoQueries {
              |WHERE NOT (doc_id % 97 = 0) AND NOT (lang = 'zh' AND doc_id % 5 = 0)
              |GROUP BY source ORDER BY source""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s29_dv"
+        val tmp = SparkUtil.scratchDir("q_s29_dv", dir)
         val (base, dvDir) = (s"$tmp/base", s"$tmp/dv")
         Tables.documents(s, dir)
           .repartition(8, col("doc_id"))
           .write.mode("overwrite").parquet(base)
-        val dv1 = graft.io.DeletionVectors.build(s, base, col("doc_id") % 97 === 0)
-        graft.io.DeletionVectors.writeBatch(dv1, dvDir, 1)
-        val dv2 = graft.io.DeletionVectors.build(s, base,
+        val dv1 = DeletionVectors.build(s, base, col("doc_id") % 97 === 0)
+        DeletionVectors.writeBatch(dv1, dvDir, 1)
+        val dv2 = DeletionVectors.build(s, base,
           col("lang") === "zh" && col("doc_id") % 5 === 0)
-        graft.io.DeletionVectors.writeBatch(dv2, dvDir, 2)
-        graft.io.DeletionVectors.readWithDv(s, base, dvDir)
+        DeletionVectors.writeBatch(dv2, dvDir, 2)
+        DeletionVectors.readWithDv(s, base, dvDir)
           .groupBy("source")
           .agg(count(lit(1)).as("n_live"),
             sum(col("doc_id")).as("id_sum"),
@@ -685,10 +679,10 @@ object IoQueries {
              |  AND o_custkey IN (3, 41, 77, 104, 149)
              |GROUP BY 1 ORDER BY o_custkey""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s30_manifest"
+        val tmp = SparkUtil.scratchDir("q_s30_manifest", dir)
         val (mBits, k) = (1 << 17, 3)
         val cols = Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-        def land(batch: Int, pred: Column, nFiles: Int): Unit = {
+        def ingest(batch: Int, pred: Column, nFiles: Int): Unit = {
           Tables.orders(s, dir).filter(pred)
             .select(cols.map(col): _*)
             .repartitionByRange(nFiles, col("o_orderdate"))
@@ -699,8 +693,8 @@ object IoQueries {
             .coalesce(1)
             .write.mode("overwrite").parquet(s"$tmp/manifest/batch=$batch")
         }
-        land(1, col("o_orderkey") % 4 =!= 0, nFiles = 6)
-        land(2, col("o_orderkey") % 4 === 0, nFiles = 4)
+        ingest(1, col("o_orderkey") % 4 =!= 0, nFiles = 6)
+        ingest(2, col("o_orderkey") % 4 === 0, nFiles = 4)
         val (from, to) = (lit("1995-01-01").cast("timestamp"),
           lit("1995-12-31").cast("timestamp"))
         val probes = Seq(3L, 41L, 77L, 104L, 149L)
@@ -748,7 +742,7 @@ object IoQueries {
              |CAST(max(epoch_us(ts)) AS BIGINT) AS max_ts_us
              |FROM last WHERE rn = 1 GROUP BY 1 ORDER BY last_type""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s31_tt"
+        val tmp = SparkUtil.scratchDir("q_s31_tt", dir)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
         def lastWins(df: org.apache.spark.sql.DataFrame) =
@@ -801,7 +795,7 @@ object IoQueries {
              |FROM (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
              |GROUP BY priority ORDER BY priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s32_rename"
+        val tmp = SparkUtil.scratchDir("q_s32_rename", dir)
         val o = Tables.orders(s, dir)
         // gen 1: the ORIGINAL physical name
         o.filter(col("o_orderkey") % 3 === 0)
@@ -850,27 +844,23 @@ object IoQueries {
              |CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
              |FROM orders GROUP BY priority ORDER BY priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s33_expire"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s33_expire", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
         val o = Tables.orders(s, dir)
           .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        def land(sub: String, df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] = {
-          df.repartition(n, col("o_orderkey"))
-            .write.mode("overwrite").parquet(s"$dataDir/$sub")
-          TableLog.filesUnder(s, s"$dataDir/$sub")
-        }
-        val a = land("c1", o.filter(col("o_orderkey") % 3 === 0), 4)
+        val a = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 0).repartition(4, col("o_orderkey")), s"$dataDir/c1")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest-a", a, Nil)))
-        val b = land("c2", o.filter(col("o_orderkey") % 3 === 1), 3)
+        val b = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 1).repartition(3, col("o_orderkey")), s"$dataDir/c2")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(2, "ingest-b", b, Nil)))
         // v3: compaction — v1's four small files rewritten as one; the
         // OLD files stay referenced by versions 1-2 until retention
-        val compacted = land("c3", s.read.parquet(a: _*), 1)
+        val compacted = TableLog.land(
+          s.read.parquet(a: _*).repartition(1, col("o_orderkey")), s"$dataDir/c3")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(3, "compact", compacted, a)))
-        val c = land("c4", o.filter(col("o_orderkey") % 3 === 2), 3)
+        val c = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 2).repartition(3, col("o_orderkey")), s"$dataDir/c4")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(4, "ingest-c", c, Nil)))
         val commits = TableLog.readCommits(s, logDir)
         val v3Files = TableLog.liveFiles(commits, Some(3))
@@ -912,13 +902,10 @@ object IoQueries {
              |  AND o_orderpriority IN ('1-URGENT', '2-HIGH')
              |GROUP BY 1, 2 ORDER BY year, priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s34_specs"
         // the session's dynamic partitionOverwriteMode replaces only
-        // partitions PRESENT in the new write — a previous run at a
-        // bigger SF leaves stale sibling partitions behind, so wipe
-        new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
+        // partitions PRESENT in the new write — stale sibling
+        // partitions of a previous run would survive, so wipe
+        val tmp = SparkUtil.freshDir("q_s34_specs", dir)
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"),
             date_format(col("o_orderdate"), "yyyy").as("year"))
@@ -974,47 +961,36 @@ object IoQueries {
              |WHERE (o_orderkey % 4 <= 1 AND o_orderkey % 10 <> 0) OR o_orderkey % 4 = 2
              |GROUP BY priority ORDER BY priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s35_occ"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s35_occ", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
         val o = Tables.orders(s, dir)
           .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        def land(sub: String, df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] = {
-          df.repartition(n, col("o_orderkey"))
-            .write.mode("overwrite").parquet(s"$dataDir/$sub")
-          TableLog.filesUnder(s, s"$dataDir/$sub")
-        }
-        val base = land("c1", o.filter(col("o_orderkey") % 4 <= 1), 4)
+        val base = TableLog.land(
+          o.filter(col("o_orderkey") % 4 <= 1).repartition(4, col("o_orderkey")), s"$dataDir/c1")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest", base, Nil)))
         // writer A: delete o_orderkey%10==0 — rewrite ONLY files with hits
-        val hitFiles = s.read.parquet(base: _*)
-          .filter(col("o_orderkey") % 10 === 0)
-          .select(input_file_name().as("f")).distinct()
-          .collect() // ≤ |files| planner metadata
-          .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
-          .sorted.toSeq
+        val hitFiles = TableLog.filesMatching(s, base, col("o_orderkey") % 10 === 0)
         require(hitFiles.nonEmpty, "delete predicate matched no file — widen it")
-        val rewritten = land("c2",
-          s.read.parquet(hitFiles: _*).filter(col("o_orderkey") % 10 =!= 0),
-          hitFiles.size)
+        val rewritten = TableLog.land(
+          s.read.parquet(hitFiles: _*).filter(col("o_orderkey") % 10 =!= 0)
+            .repartition(hitFiles.size, col("o_orderkey")), s"$dataDir/c2")
         val rA = TableLog.tryCommit(s, logDir, base = 1, "writer-a-delete",
           adds = rewritten, removes = hitFiles)
         // writer B: blind append staged from the SAME base (never saw A)
-        val appended = land("c3", o.filter(col("o_orderkey") % 4 === 2), 2)
+        val appended = TableLog.land(
+          o.filter(col("o_orderkey") % 4 === 2).repartition(2, col("o_orderkey")), s"$dataDir/c3")
         val rB = TableLog.tryCommit(s, logDir, base = 1, "writer-b-append",
           adds = appended, removes = Nil)
         // writer C: compaction staged from base 1 — rewrites files A removed
-        val staged = land("c4", s.read.parquet(base: _*), 1)
+        val staged = TableLog.land(
+          s.read.parquet(base: _*).repartition(1, col("o_orderkey")), s"$dataDir/c4")
         val rC = TableLog.tryCommit(s, logDir, base = 1, "writer-c-compact",
           adds = staged, removes = base)
         require(rA == Right(2), s"writer A should claim v2 clean: $rA")
         require(rB == Right(3), s"writer B should rebase to v3: $rB")
         require(rC == Left(hitFiles),
           s"writer C must abort on A's removed files: $rC vs $hitFiles")
-        staged.foreach(f => // aborted writer sweeps its staged files
-          fs.delete(new org.apache.hadoop.fs.Path(f), false))
+        TableLog.deleteFiles(s, staged) // aborted writer sweeps its staged files
         val commits = TableLog.readCommits(s, logDir)
         require(commits.map(_.version) == Seq(1, 2, 3),
           s"log must hold exactly v1-v3: ${commits.map(_.version)}")
@@ -1047,44 +1023,35 @@ object IoQueries {
              |FROM orders WHERE o_orderkey % 15 <> 0
              |GROUP BY priority ORDER BY priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s36_branch"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s36_branch", dir) // idempotent re-runs
         val (dataDir, mainLog) = (s"$tmp/data", s"$tmp/log/main")
         val o = Tables.orders(s, dir)
           .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        def land(sub: String, df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] = {
-          df.repartition(n, col("o_orderkey"))
-            .write.mode("overwrite").parquet(s"$dataDir/$sub")
-          TableLog.filesUnder(s, s"$dataDir/$sub")
-        }
-        val a = land("c1", o.filter(col("o_orderkey") % 3 === 0), 4)
+        val a = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 0).repartition(4, col("o_orderkey")), s"$dataDir/c1")
         require(TableLog.tryClaim(s, mainLog, TableLog.Commit(1, "ingest-a", a, Nil)))
-        val b = land("c2", o.filter(col("o_orderkey") % 3 === 1), 3)
+        val b = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 1).repartition(3, col("o_orderkey")), s"$dataDir/c2")
         require(TableLog.tryClaim(s, mainLog, TableLog.Commit(2, "ingest-b", b, Nil)))
         val fork = 2
         val atFork = TableLog.liveFiles(TableLog.readCommits(s, mainLog), Some(fork))
         // branch "dev": GDPR delete (%15==0) staged against the fork state
         val devLog = s"$tmp/log/dev"
-        val hitFiles = s.read.parquet(atFork: _*)
-          .filter(col("o_orderkey") % 15 === 0)
-          .select(input_file_name().as("f")).distinct()
-          .collect() // ≤ |files| planner metadata
-          .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
-          .sorted.toSeq
+        val hitFiles = TableLog.filesMatching(s, atFork, col("o_orderkey") % 15 === 0)
         require(hitFiles.nonEmpty, "delete predicate matched no file — widen it")
-        val rewritten = land("dev1",
-          s.read.parquet(hitFiles: _*).filter(col("o_orderkey") % 15 =!= 0),
-          hitFiles.size)
+        val rewritten = TableLog.land(
+          s.read.parquet(hitFiles: _*).filter(col("o_orderkey") % 15 =!= 0)
+            .repartition(hitFiles.size, col("o_orderkey")), s"$dataDir/dev1")
         require(TableLog.tryClaim(s, devLog,
           TableLog.Commit(1, "dev-delete", rewritten, hitFiles)))
         // second branch commit: compact dev's OWN rewrite — nets out
-        val compacted = land("dev2", s.read.parquet(rewritten: _*), 1)
+        val compacted = TableLog.land(
+          s.read.parquet(rewritten: _*).repartition(1, col("o_orderkey")), s"$dataDir/dev2")
         require(TableLog.tryClaim(s, devLog,
           TableLog.Commit(2, "dev-compact", compacted, rewritten)))
         // main moves on concurrently: a blind append lands v3
-        val c = land("c3", o.filter(col("o_orderkey") % 3 === 2), 3)
+        val c = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 2).repartition(3, col("o_orderkey")), s"$dataDir/c3")
         require(TableLog.tryClaim(s, mainLog, TableLog.Commit(3, "ingest-c", c, Nil)))
         // merge dev → main: net delta (adds=compacted, removes=hitFiles)
         // as ONE commit, validated against v3
@@ -1093,14 +1060,14 @@ object IoQueries {
         // a second branch that compacted the same files dev deleted
         // must abort at merge — cross-branch lost update
         val rivalLog = s"$tmp/log/rival"
-        val staged = land("rival1", s.read.parquet(atFork: _*), 1)
+        val staged = TableLog.land(
+          s.read.parquet(atFork: _*).repartition(1, col("o_orderkey")), s"$dataDir/rival1")
         require(TableLog.tryClaim(s, rivalLog,
           TableLog.Commit(1, "rival-compact", staged, atFork)))
         val rival = TableLog.squashMerge(s, mainLog, rivalLog, fork, "merge-rival")
         require(rival == Left(hitFiles),
           s"rival merge must abort on dev's removed files: $rival")
-        staged.foreach(f => // aborted merge sweeps its staged files
-          fs.delete(new org.apache.hadoop.fs.Path(f), false))
+        TableLog.deleteFiles(s, staged) // aborted merge sweeps its staged files
         val commits = TableLog.readCommits(s, mainLog)
         // the fork read is untouched by everything that happened since
         require(TableLog.liveFiles(commits, Some(fork)) == atFork,
@@ -1131,7 +1098,7 @@ object IoQueries {
              |FROM (SELECT o_orderkey, o_totalprice, NULL AS priority FROM old
              |      UNION ALL SELECT * FROM new)""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s23_schema"
+        val tmp = SparkUtil.scratchDir("q_s23_schema", dir)
         val o = Tables.orders(s, dir)
         o.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_totalprice")
@@ -1179,7 +1146,7 @@ object IoQueries {
              |TRUE AS manifest_ok
              |FROM c GROUP BY 1 ORDER BY shard_id""".stripMargin),
       (s, dir) => {
-        val out = s"$TmpBase/q_s24_shards"
+        val out = SparkUtil.scratchDir("q_s24_shards", dir)
         // the ledger IS the files-recomputed aggregate (one scan serves
         // manifest write + this verify — the old second full-readback
         // aggregation was a duplicate action, pure job floor)
@@ -1227,7 +1194,7 @@ object IoQueries {
               |TRUE AS manifest_ok
               |FROM c2 GROUP BY shard_id ORDER BY shard_id""".stripMargin),
       (s, dir) => {
-        val out = s"$TmpBase/q_s25_curated_shards"
+        val out = SparkUtil.scratchDir("q_s25_curated_shards", dir)
         // ledger = one files-scan aggregation shared by manifest write
         // and this verify (n_ids = distinct underlying doc_ids — the
         // pack id rep_id is composite, so n_items counts repetitions)
@@ -1289,7 +1256,7 @@ object IoQueries {
              |TRUE AS manifest_ok
              |FROM c GROUP BY 1, 2 ORDER BY shard_id""".stripMargin),
       (s, dir) => {
-        val out = s"$TmpBase/q_s26_shards"
+        val out = SparkUtil.scratchDir("q_s26_shards", dir)
         val docs = Tables.documents(s, dir)
         graft.llm.Corpus.writeShardFilesLedger(docs, "doc_id", "text", 2048L, out)
         // simulate out-of-band loss of one shard file
@@ -1598,7 +1565,7 @@ object IoQueries {
         val watch = CdcStream.ensureStaged(s, dir)
         val sink = CdcStream.runForeachBatchToDir(
           s, CdcStream.readEvents(s, watch),
-          s"$TmpBase/st8_sink/${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
+          SparkUtil.freshDir("st8_sink", dir))
         s.read.parquet(sink)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -1626,7 +1593,7 @@ object IoQueries {
         val watch = CdcStream.ensureStaged(s, dir)
         val state = CdcStream.runMergeToStateTable(
           s, CdcStream.readEvents(s, watch),
-          s"$TmpBase/st9_state/${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
+          SparkUtil.freshDir("st9_state", dir))
         s.read.parquet(state)
           .groupBy(col("last_type"))
           .agg(count(lit(1)).as("n_users"), sum(col("last_id")).as("id_sum"),
@@ -1661,7 +1628,7 @@ object IoQueries {
         val watch = CdcStream.ensureStaged(s, dir)
         val state = CdcStream.runMergeToStateTable(
           s, CdcStream.readEvents(s, watch),
-          s"$TmpBase/st18_state/${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
+          SparkUtil.freshDir("st18_state", dir))
         val compacted = CdcStream.compactTombstones(
           s.read.parquet(state), "error", horizonUs = 1705363200000000L)
         compacted
@@ -1720,11 +1687,8 @@ object IoQueries {
             sum(graft.llm.TextAnalysis.tokenCount(col("text")).cast("long")),
             lit(0L)))
           .collect()(0).getLong(0) // 1-row aggregate: the initial append base
-        val stream = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
-        val outDir = s"$TmpBase/q_st19_out"
+        val stream = CdcStream.fileBatches(s, watch)
+        val outDir = SparkUtil.freshDir("q_st19_out", dir)
         // batch-id-keyed append-offset ledger: a retried micro-batch
         // re-packs at its ORIGINAL base (so its own partition
         // rewrites value-identical) and cannot advance the base twice
@@ -1780,8 +1744,7 @@ object IoQueries {
              |FROM documents WHERE NOT (doc_id % 15 = 0)
              |GROUP BY lang ORDER BY lang""".stripMargin),
       (s, dir) => {
-        val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-        val tmp = s"$TmpBase/q_st20_dv/$key"
+        val tmp = SparkUtil.freshDir("q_st20_dv", dir)
         val (base, dvDir) = (s"$tmp/base", s"$tmp/dv")
         val (mBits, k) = (1 << 20, 4)
         Tables.documents(s, dir)
@@ -1793,25 +1756,12 @@ object IoQueries {
         val manifest = graft.io.Layout.bloomManifest(s, base, "doc_id", mBits, k)
           .localCheckpoint(true)
         val watch = CdcStream.ensureStagedDocBatches(s, dir, nFiles = 4)
-        val stream = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
+        val stream = CdcStream.fileBatches(s, watch)
         CdcStream.runForeachBatchTransformWithId(s, stream, dvDir) { (b, _) =>
-          val ids = b.filter(col("doc_id") % 3 === 0).select("doc_id")
-          val files = graft.io.Layout
-            .bloomMatchingFiles(manifest, ids, "doc_id", mBits, k)
-            .collect().map(_.getString(0)).sorted // |files|-bounded planner step
-          if (files.isEmpty)
-            s.range(0).select(lit("").as("file"), col("id").as("row_index"))
-          else
-            s.read.parquet(files.toIndexedSeq: _*)
-              .select(col("doc_id"), col("_metadata.file_path").as("file"),
-                col("_metadata.row_index").as("row_index"))
-              .join(broadcast(ids), Seq("doc_id"), "left_semi")
-              .select("file", "row_index")
+          DeletionVectors.resolve(s, manifest,
+            b.filter(col("doc_id") % 3 === 0).select("doc_id"), "doc_id", mBits, k)
         }
-        graft.io.DeletionVectors.readWithDv(s, base, dvDir)
+        DeletionVectors.readWithDv(s, base, dvDir)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_live"),
             sum(col("doc_id")).as("id_sum"),
@@ -1856,103 +1806,25 @@ object IoQueries {
              |FROM documents WHERE NOT (doc_id % 15 = 0 AND doc_id % 8 < 2)
              |GROUP BY source ORDER BY source""".stripMargin),
       (s, dir) => {
-        import s.implicits._
-        val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-        val tmp = s"$TmpBase/q_st21_dvc/$key"
-        val (base, dvDir, genDir, tombDir, manDir) =
-          (s"$tmp/base", s"$tmp/dv", s"$tmp/gen", s"$tmp/tomb", s"$tmp/manifest")
-        val (mBits, k, threshold) = (1 << 17, 3, 0.03)
-        // file-path spellings differ between input_file_name() (the
-        // manifest side) and _metadata.file_path (the DV side) only in
-        // the scheme prefix; normalize both so they join
-        def norm(c: Column): Column = regexp_replace(c, "^file:/+", "/")
-        val fsRoot = new org.apache.hadoop.fs.Path(tmp)
-        val fs = fsRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(fsRoot)) fs.delete(fsRoot, true) // fresh run: stale generations poison the union
+        // fresh run: stale generations poison the union
+        val dvt = DeletionVectors.Ledger(SparkUtil.freshDir("q_st21_dvc", dir), "doc_id",
+          mBits = 1 << 17, k = 3, threshold = 0.03)
         // base layout: one file per doc_id class (mod 8) — the unit of
         // compaction is the FILE, so the class layout concentrates the
         // deletes in exactly two of eight files
         Tables.documents(s, dir)
           .withColumn("cls", pmod(col("doc_id"), lit(8)))
           .repartition(8, col("cls"))
-          .write.partitionBy("cls").mode("overwrite").parquet(base)
-        graft.io.Layout.statsManifest(s, base, "doc_id", "doc_id", mBits, k)
-          .withColumn("file", norm(col("file")))
-          .coalesce(1).write.parquet(s"$manDir/gen=base")
-        // sentinel seeds: unions over these dirs never hit a
-        // schema-less path even before the first real entry lands
-        Seq(("", -1L)).toDF("file", "row_index")
-          .write.parquet(s"$dvDir/batch_id=-1")
-        Seq("").toDF("file").write.parquet(s"$tombDir/batch_id=-1")
-        def tombSet(): Set[String] = // |files|-bounded planner metadata
-          s.read.parquet(tombDir).collect().map(_.getString(0)).toSet
-        def dvAll(): org.apache.spark.sql.DataFrame =
-          s.read.parquet(dvDir).filter(col("file") =!= "")
-            .select("file", "row_index").distinct()
-        // tombstones are read ONCE per batch and the live view derived
-        // from that snapshot — the original liveManifest() re-collected
-        // the tombstone dir per call (2-3 collect jobs per micro-batch
-        // of pure scheduling floor)
-        def liveManifestOf(dead: Set[String]): org.apache.spark.sql.DataFrame =
-          s.read.parquet(manDir).filter(!col("file").isin(dead.toSeq: _*))
+          .write.partitionBy("cls").mode("overwrite").parquet(dvt.base)
+        DeletionVectors.create(s, dvt)
         val watch = CdcStream.ensureStagedDocBatches(s, dir, nFiles = 4)
-        val stream = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
+        val stream = CdcStream.fileBatches(s, watch)
         CdcStream.runForeachBatchEffect(s, stream) { (b, batchId) =>
-          val dead = tombSet() // once per batch; both steps share it
-          val ids = b.filter(col("doc_id") % 3 === 0 && pmod(col("doc_id"), lit(8)) < 2)
-            .select("doc_id").localCheckpoint(false) // lazy: materializes inside the first consumer
-          // 1. resolve positions against the CURRENT layout (live
-          //    files only — post-compaction deletes land on gen files)
-          val cand = graft.io.Layout
-            .bloomMatchingFiles(liveManifestOf(dead), ids, "doc_id", mBits, k)
-            .collect().map(_.getString(0)).sorted // |files|-bounded planner step
-          val dvBatch =
-            if (cand.isEmpty)
-              s.range(0).select(lit("").as("file"), col("id").as("row_index"))
-            else
-              s.read.parquet(cand.toIndexedSeq: _*)
-                .select(col("doc_id"), norm(col("_metadata.file_path")).as("file"),
-                  col("_metadata.row_index").as("row_index"))
-                .join(broadcast(ids), Seq("doc_id"), "left_semi")
-                .select("file", "row_index")
-          dvBatch.write.mode("overwrite").parquet(s"$dvDir/batch_id=$batchId")
-          // 2. compaction check: per-file deleted fraction from
-          //    |files|-row metadata (manifest n_rows × accumulated DV)
-          val dv = dvAll().localCheckpoint(false) // lazy: 1-2 consumers
-          val hot = liveManifestOf(dead).select("file", "n_rows")
-            .join(dv.groupBy("file").agg(count(lit(1)).as("n_del")), Seq("file"))
-            .filter(col("n_del") / col("n_rows") >= threshold)
-            .select("file").collect().map(_.getString(0)).sorted // |files|-bounded compaction plan
-          if (hot.nonEmpty) {
-            val gen = s"$genDir/batch_id=$batchId"
-            s.read.parquet(hot.toIndexedSeq: _*)
-              .select(col("*"), norm(col("_metadata.file_path")).as("__file"),
-                col("_metadata.row_index").as("__pos"))
-              .join(broadcast(dv.select(col("file").as("__file"),
-                col("row_index").as("__pos"))), Seq("__file", "__pos"), "left_anti")
-              .drop("__file", "__pos")
-              .coalesce(1)
-              .write.mode("overwrite").parquet(gen)
-            graft.io.Layout.statsManifest(s, gen, "doc_id", "doc_id", mBits, k)
-              .withColumn("file", norm(col("file")))
-              .coalesce(1).write.mode("overwrite").parquet(s"$manDir/gen=b$batchId")
-            hot.toIndexedSeq.toDF("file")
-              .write.mode("overwrite").parquet(s"$tombDir/batch_id=$batchId")
-          }
+          DeletionVectors.applyBatch(s, dvt,
+            b.filter(col("doc_id") % 3 === 0 && pmod(col("doc_id"), lit(8)) < 2)
+              .select("doc_id"), batchId)
         }
-        // final merge-on-read scan over the surviving layout: live
-        // files (base minus tombstoned, plus generations) minus the
-        // residual DV positions
-        val liveFiles = liveManifestOf(tombSet()).select("file")
-          .collect().map(_.getString(0)).sorted // |files|-bounded
-        s.read.parquet(liveFiles.toIndexedSeq: _*)
-          .select(col("*"), norm(col("_metadata.file_path")).as("__file"),
-            col("_metadata.row_index").as("__pos"))
-          .join(broadcast(dvAll().select(col("file").as("__file"),
-            col("row_index").as("__pos"))), Seq("__file", "__pos"), "left_anti")
+        DeletionVectors.read(s, dvt)
           .groupBy("source")
           .agg(count(lit(1)).as("n_live"),
             sum(col("doc_id")).as("id_sum"),
@@ -1985,26 +1857,17 @@ object IoQueries {
              |CAST(max(epoch_us(ts)) AS BIGINT) AS max_ts_us
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
       (s, dir) => {
-        val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-        val tmp = s"$TmpBase/q_st22_txn/$key"
-        val fsP = new org.apache.hadoop.fs.Path(tmp)
-        val fs = fsP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(fsP, true) // fresh log: stale claims poison the replay check
+        val tmp = SparkUtil.freshDir("q_st22_txn", dir) // fresh log: stale claims poison the replay check
         val (watch, dataDir, logDir) = (s"$tmp/watch", s"$tmp/data", s"$tmp/log")
         Tables.events(s, dir)
           .select("event_id", "user_id", "event_type", "ts")
           .repartitionByRange(4, col("event_id"))
           .write.mode("overwrite").parquet(watch)
-        val stream = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
+        val stream = CdcStream.fileBatches(s, watch)
         CdcStream.runForeachBatchEffect(s, stream) { (batch, batchId) =>
-          val dirB = s"$dataDir/batch=$batchId"
-          batch.write.mode("overwrite").parquet(dirB) // idempotent staging
+          val staged = TableLog.land(batch, s"$dataDir/batch=$batchId") // idempotent staging
           val claimed = TableLog.tryClaim(s, logDir,
-            TableLog.Commit(batchId.toInt + 1, "stream-writer",
-              TableLog.filesUnder(s, dirB), Nil))
+            TableLog.Commit(batchId.toInt + 1, "stream-writer", staged, Nil))
           require(claimed, s"single writer lost its claim on batch $batchId")
         }
         val live = TableLog.liveFiles(TableLog.readCommits(s, logDir))
@@ -2141,7 +2004,7 @@ object IoQueries {
           .filter(col("event_type") === "view").select("user_id", "ts")
         val stream = CdcStream.readEvents(s, watch)
           .filter(col("event_type") === "purchase").select("user_id", "ts")
-        val outDir = s"$TmpBase/q_st12_out"
+        val outDir = SparkUtil.freshDir("q_st12_out", dir)
         CdcStream.runForeachBatchTransform(s, stream, outDir)(b =>
           graft.plans.NativeAsOfJoin.joinAsOfBackward(
             b, hist, Seq("user_id"), "ts", "ts", Seq("ts")))
@@ -2243,11 +2106,8 @@ object IoQueries {
         val cBands = graft.llm.Dedup.corpusBands(
             corpus, "doc_id", "text", shingleN = 3, perms = 128, bands = 32)
           .localCheckpoint(false)
-        val stream = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
-        val outDir = s"$TmpBase/q_st15_out"
+        val stream = CdcStream.fileBatches(s, watch)
+        val outDir = SparkUtil.freshDir("q_st15_out", dir)
         CdcStream.runForeachBatchTransform(s, stream, outDir)(b =>
           graft.llm.Dedup.dedupAgainstCorpusBanded(
             b, cBands, corpus, "doc_id", "text",
@@ -2293,11 +2153,8 @@ object IoQueries {
         val model = Classifier.nbTrain(seed, "text", "label", buckets = 64)
           .localCheckpoint(false)
         val prior = Classifier.nbPrior(seed, "label").localCheckpoint(false)
-        val stream = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
-        val outDir = s"$TmpBase/q_st16_out"
+        val stream = CdcStream.fileBatches(s, watch)
+        val outDir = SparkUtil.freshDir("q_st16_out", dir)
         CdcStream.runForeachBatchTransform(s, stream, outDir) { b =>
           val scored = Classifier.nbScore(b, "doc_id", "text", model, prior, buckets = 64)
           b.select(col("doc_id"), col("source"))
@@ -2344,10 +2201,7 @@ object IoQueries {
       (s, dir) => {
         val name = "q_st17_mem"
         val watch = CdcStream.ensureStagedEmbBatches(s, dir, nFiles = 4)
-        val stream = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
+        val stream = CdcStream.fileBatches(s, watch)
         val asD = graft.llm.Similarity.asDouble(col("embedding"))
         // one file per trigger = ONE input partition per micro-batch;
         // without this stateless shuffle the batch's d²-explode and
@@ -2493,20 +2347,15 @@ object IoQueries {
              |CAST(sum(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
              |FROM merged GROUP BY priority ORDER BY priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s37_merge"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s37_merge", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"),
             col("o_orderpriority").as("priority"))
         val maxK = o.agg(max(col("k")).cast("long")).head.getLong(0)
         val cut = maxK / 4 // floor — keys are positive
-        o.filter(col("k") % 3 =!= 2)
-          .repartitionByRange(8, col("k"))
-          .write.mode("overwrite").parquet(s"$dataDir/c1")
-        val ingested = TableLog.filesUnder(s, s"$dataDir/c1")
+        val ingested = TableLog.land(
+          o.filter(col("k") % 3 =!= 2).repartitionByRange(8, col("k")), s"$dataDir/c1")
         require(TableLog.tryClaim(s, logDir,
           TableLog.Commit(1, "ingest", ingested, Nil)))
         val src = o.filter(col("k") % 5 === 0 && col("k") <= cut)
@@ -2570,41 +2419,32 @@ object IoQueries {
              |CAST(sum(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
              |FROM changes GROUP BY 1, 2 ORDER BY change_type, priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s38_cdf"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s38_cdf", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"),
             col("o_orderpriority").as("priority"))
-        def land(sub: String, df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] = {
-          df.repartition(n, col("k"))
-            .write.mode("overwrite").parquet(s"$dataDir/$sub")
-          TableLog.filesUnder(s, s"$dataDir/$sub")
-        }
-        val v1 = land("c1", o.filter(col("k") % 3 =!= 2), 6)
+        val v1 = TableLog.land(
+          o.filter(col("k") % 3 =!= 2).repartition(6, col("k")), s"$dataDir/c1")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest", v1, Nil)))
         // v2: COW update (+50.00 on k%11) and delete (k%13 minus k%11)
         val isUpd = col("k") % 11 === 0
         val isDel = col("k") % 13 === 0 && col("k") % 11 =!= 0
-        val hit = s.read.parquet(v1: _*).filter(isUpd || isDel)
-          .select(input_file_name().as("f")).distinct()
-          .collect() // ≤ |files| planner metadata
-          .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
-          .sorted.toSeq
+        val hit = TableLog.filesMatching(s, v1, isUpd || isDel)
         require(hit.nonEmpty, "rewrite predicate matched no file — widen it")
-        val rewritten = land("c2",
+        val rewritten = TableLog.land(
           s.read.parquet(hit: _*).filter(!isDel)
             .withColumn("price",
               when(isUpd, (col("price").cast(DecimalType(18, 2))
                 + lit(BigDecimal("50.00"))).cast("double"))
-                .otherwise(col("price"))),
-          hit.size)
+                .otherwise(col("price")))
+            .repartition(hit.size, col("k")),
+          s"$dataDir/c2")
         require(TableLog.tryClaim(s, logDir,
           TableLog.Commit(2, "merge-rewrite", rewritten, hit)))
         // v3: blind append of the remaining third
-        val appended = land("c3", o.filter(col("k") % 3 === 2), 3)
+        val appended = TableLog.land(
+          o.filter(col("k") % 3 === 2).repartition(3, col("k")), s"$dataDir/c3")
         require(TableLog.tryClaim(s, logDir,
           TableLog.Commit(3, "append", appended, Nil)))
         ChangeFeed.changes(s, logDir, fromV = 1, toV = 3, key = "k")
@@ -2635,19 +2475,11 @@ object IoQueries {
              |FROM orders WHERE o_orderkey % 4 IN (0, 1)
              |GROUP BY priority ORDER BY priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s39_wap"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s39_wap", dir) // idempotent re-runs
         val (dataDir, mainLog) = (s"$tmp/data", s"$tmp/log/main")
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"),
             col("o_orderpriority").as("priority"))
-        def land(sub: String, df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] = {
-          df.repartition(n, col("k"))
-            .write.mode("overwrite").parquet(s"$dataDir/$sub")
-          TableLog.filesUnder(s, s"$dataDir/$sub")
-        }
         // audit: (null keys, duplicate keys, negative measures) of a batch
         def audit(files: Seq[String]): (Long, Long, Long) = {
           val r = s.read.parquet(files: _*)
@@ -2658,11 +2490,13 @@ object IoQueries {
             .head
           (r.getLong(0), r.getLong(1), r.getLong(2))
         }
-        val base = land("c1", o.filter(col("k") % 4 === 0), 4)
+        val base = TableLog.land(
+          o.filter(col("k") % 4 === 0).repartition(4, col("k")), s"$dataDir/c1")
         require(TableLog.tryClaim(s, mainLog, TableLog.Commit(1, "ingest", base, Nil)))
         // batch 1: clean — stage, audit, publish
         val wap1 = s"$tmp/log/wap1"
-        val staged1 = land("b1", o.filter(col("k") % 4 === 1), 3)
+        val staged1 = TableLog.land(
+          o.filter(col("k") % 4 === 1).repartition(3, col("k")), s"$dataDir/b1")
         require(TableLog.tryClaim(s, wap1, TableLog.Commit(1, "stage-b1", staged1, Nil)))
         val (n1, d1, g1) = audit(staged1)
         require(n1 == 0 && d1 == 0 && g1 == 0, s"clean batch failed audit: $n1/$d1/$g1")
@@ -2671,12 +2505,12 @@ object IoQueries {
         // batch 2: dirty (its k%8 slice duplicated) — stage, audit, ABORT
         val b2 = o.filter(col("k") % 4 === 2)
         val wap2 = s"$tmp/log/wap2"
-        val staged2 = land("b2", b2.unionAll(b2.filter(col("k") % 8 === 2)), 3)
+        val staged2 = TableLog.land(
+          b2.unionAll(b2.filter(col("k") % 8 === 2)).repartition(3, col("k")), s"$dataDir/b2")
         require(TableLog.tryClaim(s, wap2, TableLog.Commit(1, "stage-b2", staged2, Nil)))
         val (n2, d2, _) = audit(staged2)
         require(n2 == 0 && d2 > 0, s"the injected duplicates must trip the audit: $d2")
-        staged2.foreach(f => // rejected batch sweeps its staged files
-          fs.delete(new org.apache.hadoop.fs.Path(f), false))
+        TableLog.deleteFiles(s, staged2) // rejected batch sweeps its staged files
         val commits = TableLog.readCommits(s, mainLog)
         require(commits.map(_.version).max == 2,
           "a rejected batch must not move main")
@@ -2716,24 +2550,20 @@ object IoQueries {
              |  UNION ALL SELECT 4, 'ingest-c', a + b + d FROM c)
              |ORDER BY version""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s40_history"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s40_history", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
         val o = Tables.orders(s, dir).select("o_orderkey")
-        def land(sub: String, df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] = {
-          df.repartition(n, col("o_orderkey"))
-            .write.mode("overwrite").parquet(s"$dataDir/$sub")
-          TableLog.filesUnder(s, s"$dataDir/$sub")
-        }
-        val a = land("c1", o.filter(col("o_orderkey") % 3 === 0), 4)
+        val a = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 0).repartition(4, col("o_orderkey")), s"$dataDir/c1")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest-a", a, Nil)))
-        val b = land("c2", o.filter(col("o_orderkey") % 3 === 1), 3)
+        val b = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 1).repartition(3, col("o_orderkey")), s"$dataDir/c2")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(2, "ingest-b", b, Nil)))
-        val compacted = land("c3", s.read.parquet(a: _*), 1)
+        val compacted = TableLog.land(
+          s.read.parquet(a: _*).repartition(1, col("o_orderkey")), s"$dataDir/c3")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(3, "compact", compacted, a)))
-        val c = land("c4", o.filter(col("o_orderkey") % 3 === 2), 3)
+        val c = TableLog.land(
+          o.filter(col("o_orderkey") % 3 === 2).repartition(3, col("o_orderkey")), s"$dataDir/c4")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(4, "ingest-c", c, Nil)))
         val hist = TableLog.history(s, logDir)
         val fileCounts = hist // ≤ |commits| rows of log metadata
@@ -2780,20 +2610,14 @@ object IoQueries {
              |FROM events WHERE event_id % 7 <> 0
              |GROUP BY event_type ORDER BY event_type""".stripMargin),
       (s, dir) => {
-        val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-        val tmp = s"$TmpBase/q_st23_merge/$key"
-        val fsP = new org.apache.hadoop.fs.Path(tmp)
-        val fs = fsP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(fsP, true) // fresh log: stale claims poison the replay check
+        val tmp = SparkUtil.freshDir("q_st23_merge", dir) // fresh log: stale claims poison the replay check
         val (watch, dataDir, logDir) = (s"$tmp/watch", s"$tmp/data", s"$tmp/log")
         val ev = Tables.events(s, dir)
           .select(col("event_id").as("k"), col("value"), col("event_type"))
         // v1: two-thirds of events pre-exist in the table
-        ev.filter(col("k") % 3 =!= 2)
-          .repartitionByRange(6, col("k"))
-          .write.mode("overwrite").parquet(s"$dataDir/c1")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest",
-          TableLog.filesUnder(s, s"$dataDir/c1"), Nil)))
+          TableLog.land(ev.filter(col("k") % 3 =!= 2).repartitionByRange(6, col("k")),
+            s"$dataDir/c1"), Nil)))
         // the CDC stream: ALL events arrive as upsert/delete commands
         ev.repartitionByRange(4, col("k"))
           .write.mode("overwrite").parquet(watch)
@@ -2817,10 +2641,7 @@ object IoQueries {
             case Left(blocking) => sys.error(s"batch $bid merge aborted on $blocking")
           }
         }
-        val stream = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
+        val stream = CdcStream.fileBatches(s, watch)
         CdcStream.runForeachBatchEffect(s, stream)(applyBatch)
         val live = TableLog.liveFiles(TableLog.readCommits(s, logDir))
         // replay simulation: batch 0 fires again — guard skips, live set fixed
@@ -2865,23 +2686,17 @@ object IoQueries {
              |   OR (tbl = 'clone'  AND o_orderkey % 4 IN (0, 1, 3))
              |GROUP BY tbl, priority ORDER BY tbl, priority""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s41_clone"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s41_clone", dir) // idempotent re-runs
         val (srcData, srcLog) = (s"$tmp/src", s"$tmp/log/src")
         val (clnData, clnLog) = (s"$tmp/cln", s"$tmp/log/cln")
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"),
             col("o_orderpriority").as("priority"))
-        def land(base: String, sub: String, df: org.apache.spark.sql.DataFrame,
-            n: Int): Seq[String] = {
-          df.repartition(n, col("k")).write.mode("overwrite").parquet(s"$base/$sub")
-          TableLog.filesUnder(s, s"$base/$sub")
-        }
-        val fA = land(srcData, "c1", o.filter(col("k") % 4 === 0), 4)
+        val fA = TableLog.land(
+          o.filter(col("k") % 4 === 0).repartition(4, col("k")), s"$srcData/c1")
         require(TableLog.tryClaim(s, srcLog, TableLog.Commit(1, "ingest-a", fA, Nil)))
-        val fB = land(srcData, "c2", o.filter(col("k") % 4 === 1), 3)
+        val fB = TableLog.land(
+          o.filter(col("k") % 4 === 1).repartition(3, col("k")), s"$srcData/c2")
         require(TableLog.tryClaim(s, srcLog, TableLog.Commit(2, "append-b", fB, Nil)))
         // shallow clone AS OF v2: one metadata commit, zero files copied
         val snapV2 = TableLog.liveFiles(TableLog.readCommits(s, srcLog), Some(2))
@@ -2889,11 +2704,13 @@ object IoQueries {
         require(TableLog.tryClaim(s, clnLog,
           TableLog.Commit(1, "clone@v2", snapV2, Nil)))
         // diverge: source compacts A away and appends C; clone appends D
-        val fA2 = land(srcData, "c3", s.read.parquet(fA: _*), 1)
+        val fA2 = TableLog.land(s.read.parquet(fA: _*).repartition(1, col("k")), s"$srcData/c3")
         require(TableLog.tryClaim(s, srcLog, TableLog.Commit(3, "compact", fA2, fA)))
-        val fC = land(srcData, "c4", o.filter(col("k") % 4 === 2), 3)
+        val fC = TableLog.land(
+          o.filter(col("k") % 4 === 2).repartition(3, col("k")), s"$srcData/c4")
         require(TableLog.tryClaim(s, srcLog, TableLog.Commit(4, "append-c", fC, Nil)))
-        val fD = land(clnData, "c1", o.filter(col("k") % 4 === 3), 3)
+        val fD = TableLog.land(
+          o.filter(col("k") % 4 === 3).repartition(3, col("k")), s"$clnData/c1")
         require(TableLog.tryClaim(s, clnLog, TableLog.Commit(2, "append-d", fD, Nil)))
         def agg(files: Seq[String], tag: String) =
           s.read.parquet(files: _*)
@@ -2953,41 +2770,32 @@ object IoQueries {
              |SELECT event_type, count(*) AS n, CAST(sum(v) AS DOUBLE) AS sum_value
              |FROM fin GROUP BY event_type ORDER BY event_type""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s42_ivm"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s42_ivm", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
         val dec = DecimalType(18, 2)
         val ev = Tables.events(s, dir)
           .select(col("event_id").as("k"), col("value"), col("event_type"))
-        def land(sub: String, df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] = {
-          df.repartitionByRange(n, col("k"))
-            .write.mode("overwrite").parquet(s"$dataDir/$sub")
-          TableLog.filesUnder(s, s"$dataDir/$sub")
-        }
-        val v1 = land("c1", ev.filter(col("k") % 4 =!= 3), 8)
+        val v1 = TableLog.land(
+          ev.filter(col("k") % 4 =!= 3).repartitionByRange(8, col("k")), s"$dataDir/c1")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest", v1, Nil)))
         // v2: COW rewrite over RANGE predicates — touches few range files
         val isUpd = col("k") < 120
         val isDel = col("k") >= 120 && col("k") < 200
-        val hit = s.read.parquet(v1: _*).filter(isUpd || isDel)
-          .select(input_file_name().as("f")).distinct()
-          .collect() // ≤ |files| planner metadata
-          .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
-          .sorted.toSeq
+        val hit = TableLog.filesMatching(s, v1, isUpd || isDel)
         require(hit.nonEmpty && hit.size < v1.size,
           s"range rewrite must touch a strict file subset: ${hit.size}/${v1.size}")
-        val rewritten = land("c2",
+        val rewritten = TableLog.land(
           s.read.parquet(hit: _*).filter(!isDel)
             .withColumn("value",
               when(isUpd, (col("value").cast(dec) + lit(BigDecimal("25.00")))
-                .cast("double")).otherwise(col("value"))),
-          hit.size)
+                .cast("double")).otherwise(col("value")))
+            .repartitionByRange(hit.size, col("k")),
+          s"$dataDir/c2")
         require(TableLog.tryClaim(s, logDir,
           TableLog.Commit(2, "merge-rewrite", rewritten, hit)))
         // v3: blind append of the remaining quarter
-        val appended = land("c3", ev.filter(col("k") % 4 === 3), 3)
+        val appended = TableLog.land(
+          ev.filter(col("k") % 4 === 3).repartitionByRange(3, col("k")), s"$dataDir/c3")
         require(TableLog.tryClaim(s, logDir, TableLog.Commit(3, "append", appended, Nil)))
         // MV init from v1, then fold each version's change feed in
         val commits = TableLog.readCommits(s, logDir)
@@ -3042,11 +2850,7 @@ object IoQueries {
              |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
       (s, dir) => {
-        val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-        val tmp = s"$TmpBase/q_st24_restart/$key"
-        val fsP = new org.apache.hadoop.fs.Path(tmp)
-        val fs = fsP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(fsP, true) // fresh checkpoint: stale offsets poison the run
+        val tmp = SparkUtil.freshDir("q_st24_restart", dir) // fresh checkpoint: stale offsets poison the run
         val (watch, ckpt) = (s"$tmp/watch", s"$tmp/ckpt")
         val ev = Tables.events(s, dir)
           .select(col("event_id").as("k"), col("value"), col("event_type"))
@@ -3054,10 +2858,7 @@ object IoQueries {
           .repartitionByRange(4, col("k"))
           .write.mode("overwrite").parquet(watch)
         val dec = DecimalType(18, 2)
-        def agg() = s.readStream
-          .schema(s.read.parquet(watch).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(watch)
+        def agg() = CdcStream.fileBatches(s, watch)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum(col("value").cast(dec)).as("sv"))
         def run(sinkName: String): Long = CdcStream.withStreamShuffle(s) {
@@ -3124,10 +2925,7 @@ object IoQueries {
              |  FROM base WHERE k % 3 = 2)
              |ORDER BY status""".stripMargin),
       (s, dir) => {
-        val tmp = s"$TmpBase/q_s43_fsck"
-        val hPath = new org.apache.hadoop.fs.Path(tmp)
-        val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(hPath, true) // idempotent re-runs
+        val tmp = SparkUtil.freshDir("q_s43_fsck", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"),
@@ -3136,39 +2934,27 @@ object IoQueries {
         // file contents, so the planted deletion's lost rows are a slice)
         val sliceA = o.filter(col("k") % 3 === 0)
         val fA = (0 to 3).map { bkt =>
-          sliceA.filter(col("k") % 4 === bkt).coalesce(1)
-            .write.mode("overwrite").parquet(s"$dataDir/a$bkt")
-          TableLog.filesUnder(s, s"$dataDir/a$bkt") match {
+          TableLog.land(sliceA.filter(col("k") % 4 === bkt).coalesce(1), s"$dataDir/a$bkt") match {
             case Seq(one) => one
             case more => sys.error(s"bucket $bkt must be one file: $more")
           }
         }
         require(TableLog.tryClaim(s, logDir,
           TableLog.Commit(1, "ingest-a", fA, Nil)))
-        o.filter(col("k") % 3 === 1).repartition(3, col("k"))
-          .write.mode("overwrite").parquet(s"$dataDir/b")
-        val fB = TableLog.filesUnder(s, s"$dataDir/b")
+        val fB = TableLog.land(o.filter(col("k") % 3 === 1).repartition(3, col("k")), s"$dataDir/b")
         require(TableLog.tryClaim(s, logDir,
           TableLog.Commit(2, "append-b", fB, Nil)))
         // planted anomalies: an uncommitted ingest (orphans) and an
         // out-of-band deletion of the bucket-2 file (missing)
-        o.filter(col("k") % 3 === 2).repartition(2, col("k"))
-          .write.mode("overwrite").parquet(s"$dataDir/orphan")
-        val fOrphan = TableLog.filesUnder(s, s"$dataDir/orphan")
+        val fOrphan = TableLog.land(
+          o.filter(col("k") % 3 === 2).repartition(2, col("k")), s"$dataDir/orphan")
         require(fOrphan.size == 2, s"orphan plant must be 2 files: $fOrphan")
-        fs.delete(new org.apache.hadoop.fs.Path(fA(2)), false)
+        TableLog.deleteFiles(s, Seq(fA(2)))
         // FSCK audit: log vs filesystem, zero data read
         val commits = TableLog.readCommits(s, logDir)
         val everReferenced = commits.flatMap(_.adds).toSet
         val live = TableLog.liveFiles(commits).toSet
-        val onDisk = fs.listStatus(new org.apache.hadoop.fs.Path(dataDir)).toSeq
-          .flatMap { st =>
-            if (st.isDirectory)
-              fs.listStatus(st.getPath).toSeq.filter(_.isFile).map(_.getPath)
-            else Seq(st.getPath)
-          }
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.toUri.getPath).toSet
+        val onDisk = TableLog.dataFilesOnDisk(s, dataDir).toSet
         val orphans = onDisk -- everReferenced
         val missing = live -- onDisk
         require(orphans == fOrphan.toSet, s"orphan audit drift: $orphans")

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.SparkUtil
+import graft.io.TableLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -58,47 +60,6 @@ object CdcStream {
   def eventsSchema(spark: SparkSession, path: String): StructType =
     spark.read.parquet(path).schema
 
-  /** One-time idempotent staging of the events table into a watch
-    * directory (the file source watches a directory — that's the
-    * production shape, new files arriving). Staging is SETUP, not query
-    * work: it runs once per (source dir) per filesystem state and is
-    * skipped when the marker matches, so repeated/benchmarked queries
-    * don't re-pay the copy (round-2 verdict: the copy inside the query
-    * body inflated q_st1 by seconds).
-    */
-  /** Marker-guarded staging guard shared by EVERY stager here: runs
-    * `write(stagedDir)` only when the source's (mtime, length) stamp
-    * changed — the marker stores that stamp, so a rewritten source
-    * invalidates the staged copy instead of being silently ignored —
-    * and writes the marker only after a successful (re)build. One
-    * definition of the guard; each stager is just its write closure.
-    */
-  private def ensureStagedDir(
-      spark: SparkSession, stagedDir: String, srcPath: String, version: String)(
-      write: String => Unit): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(srcPath)
-    val dstDir = new org.apache.hadoop.fs.Path(stagedDir)
-    val fs = dstDir.getFileSystem(conf)
-    val marker = new org.apache.hadoop.fs.Path(dstDir, "_STAGED")
-    val st = src.getFileSystem(conf).getFileStatus(src)
-    val stamp = s"$version:${st.getModificationTime}:${st.getLen}"
-    val current =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-        finally in.close()
-      }
-    if (!current.contains(stamp)) {
-      if (fs.exists(dstDir)) fs.delete(dstDir, true)
-      write(stagedDir)
-      val out = fs.create(marker, true)
-      try out.write(stamp.getBytes("UTF-8")) finally out.close()
-    }
-    stagedDir
-  }
-
   /** Copy `srcPath` into `stagedDir` as a single file named `name`. */
   private def copyFileInto(
       spark: SparkSession, stagedDir: String, srcPath: String, name: String): Unit = {
@@ -112,9 +73,16 @@ object CdcStream {
       new org.apache.hadoop.fs.Path(dstDir, name), false, conf)
   }
 
+  /** One-time idempotent staging of the events table into a watch
+    * directory (the file source watches a directory — that's the
+    * production shape, new files arriving). Staging is SETUP, not query
+    * work: it runs once per (source dir) per filesystem state and is
+    * skipped when the marker matches, so repeated/benchmarked queries
+    * don't re-pay the copy (round-2 verdict: the copy inside the query
+    * body inflated q_st1 by seconds).
+    */
   def ensureStaged(spark: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    ensureStagedDir(spark, s"/root/repo/target/tmp/stream_events_watch/$key",
+    SparkUtil.stagedDir(spark, "stream_events_watch", dir,
         s"$dir/events.parquet", "v2") { staged =>
       copyFileInto(spark, staged, s"$dir/events.parquet", "events.parquet")
     }
@@ -129,8 +97,7 @@ object CdcStream {
     * marker-guarded like every staging helper here.
     */
   def ensureStagedDocBatches(spark: SparkSession, dir: String, nFiles: Int = 4): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    ensureStagedDir(spark, s"/root/repo/target/tmp/stream_docs_watch/$key",
+    SparkUtil.stagedDir(spark, "stream_docs_watch", dir,
         s"$dir/documents.parquet", s"v1:$nFiles") { staged =>
       graft.Tables.documents(spark, dir)
         .filter(org.apache.spark.sql.functions.col("doc_id") % 5 === 0)
@@ -152,27 +119,16 @@ object CdcStream {
     */
   def ensureStagedDocBatchesIndexed(
       spark: SparkSession, dir: String, nFiles: Int = 4): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    ensureStagedDir(spark, s"/root/repo/target/tmp/stream_docs_idx_watch/$key",
+    SparkUtil.stagedDir(spark, "stream_docs_idx_watch", dir,
         s"$dir/documents.parquet", s"v1:$nFiles") { staged =>
       import org.apache.spark.sql.functions._
       val docs = graft.Tables.documents(spark, dir)
         .filter(col("doc_id") % 5 === 0)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dst = new org.apache.hadoop.fs.Path(staged)
-      val fs = dst.getFileSystem(conf)
+      val fs = new org.apache.hadoop.fs.Path(staged)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       (0 until nFiles).foreach { b =>
-        val tmp = s"$staged/__tmp_b$b"
-        docs.filter(expr(s"pmod(doc_id div 5, $nFiles)") === b)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-          .sortBy(_.getName).headOption
-          .getOrElse(sys.error(s"no part file written for batch $b"))
-        val out = new org.apache.hadoop.fs.Path(dst, f"batch_$b%02d.parquet")
-        if (fs.exists(out)) fs.delete(out, false)
-        fs.rename(part, out)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        val out = new org.apache.hadoop.fs.Path(staged, f"batch_$b%02d.parquet")
+        TableLog.landFile(docs.filter(expr(s"pmod(doc_id div 5, $nFiles)") === b), out.toString)
         // fixed epoch base keeps the staged dir byte-identical across
         // runs (the marker guard skips re-staging); 60 s spacing keeps
         // every file inside the source's maxFileAge window
@@ -187,8 +143,7 @@ object CdcStream {
     * guarded like `ensureStagedDocBatches`.
     */
   def ensureStagedEmbBatches(spark: SparkSession, dir: String, nFiles: Int = 4): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    ensureStagedDir(spark, s"/root/repo/target/tmp/stream_emb_watch/$key",
+    SparkUtil.stagedDir(spark, "stream_emb_watch", dir,
         s"$dir/embeddings.parquet", s"v1:$nFiles") { staged =>
       graft.Tables.embeddings(spark, dir)
         .repartitionByRange(nFiles, org.apache.spark.sql.functions.col("vec_id"))
@@ -205,8 +160,7 @@ object CdcStream {
     * don't re-pay the copy per pass.
     */
   def ensureStagedWithSentinel(spark: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    ensureStagedDir(spark, s"/root/repo/target/tmp/stream_events_sentinel/$key",
+    SparkUtil.stagedDir(spark, "stream_events_sentinel", dir,
         s"$dir/events.parquet", "v2") { staged =>
       copyFileInto(spark, staged, s"$dir/events.parquet", "events.parquet")
       sentinelDf(spark, dir).write.mode("append").parquet(staged)
@@ -224,9 +178,7 @@ object CdcStream {
     * time.
     */
   def ensureStagedLateActs(spark: SparkSession, dir: String): Seq[String] = {
-    val key = dir.replaceAll("[^A-Za-z0-9]+", "_")
-    val baseDir = ensureStagedDir(spark,
-        s"/root/repo/target/tmp/stream_late_acts/$key",
+    val baseDir = SparkUtil.stagedDir(spark, "stream_late_acts", dir,
         s"$dir/events.parquet", "v1") { staged =>
       val events = spark.read.parquet(s"$dir/events.parquet")
       events.filter(col("event_id") % 2 === 0).write.parquet(s"$staged/act1")
@@ -245,7 +197,7 @@ object CdcStream {
   def runActs(spark: SparkSession, acts: Seq[String],
       makeAgg: DataFrame => DataFrame, name: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val watchDir = s"/root/repo/target/tmp/stream_late_run/${java.util.UUID.randomUUID()}"
+    val watchDir = SparkUtil.scratchDir("stream_late_run", java.util.UUID.randomUUID().toString)
     val watch = new org.apache.hadoop.fs.Path(watchDir)
     val fs = watch.getFileSystem(conf)
     fs.mkdirs(watch)
@@ -295,6 +247,13 @@ object CdcStream {
     graft.Tables.normalizeTs(
       spark.readStream.schema(eventsSchema(spark, watchDir)).parquet(watchDir))
 
+  /** Stream the parquet files of `watchDir` one file per micro-batch,
+    * with the schema the batch reader sees (a file source needs one).
+    */
+  def fileBatches(spark: SparkSession, watchDir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(watchDir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(watchDir)
+
   /** Event-time daily windowed aggregation with a watermark. */
   def dailyTypeCounts(events: DataFrame): DataFrame =
     events
@@ -326,7 +285,8 @@ object CdcStream {
     * own partition instead of duplicating rows — the standard
     * idempotent-writeback pattern for sinks without transactions.
     * Returns the sink path; the finished table is the union of the
-    * batch partitions.
+    * batch partitions, so `outDir` must start empty
+    * (`SparkUtil.freshDir`): stale batches would poison the union.
     */
   def runForeachBatchToDir(spark: SparkSession, events: DataFrame, outDir: String): String =
     runForeachBatchTransform(spark, events, outDir)(identity)
@@ -343,11 +303,6 @@ object CdcStream {
       transform: DataFrame => DataFrame): String =
     runForeachBatchTransformWithId(spark, events, outDir)((b, _) => transform(b))
 
-  /** [[runForeachBatchTransform]] variant handing the transform the
-    * micro-batch id — for operators whose per-batch work must be
-    * keyed by batch identity (e.g. q_st19's append-offset ledger,
-    * where a RETRIED batch must not advance the token base twice).
-    */
   /** foreachBatch runner for maintenance sinks whose per-batch output
     * is not ONE dataframe (multi-sidecar table upkeep like q_st21's
     * DV-append + conditional compaction): the body receives the batch
@@ -365,13 +320,14 @@ object CdcStream {
     q.stop()
   }
 
+  /** [[runForeachBatchTransform]] variant handing the transform the
+    * micro-batch id — for operators whose per-batch work must be
+    * keyed by batch identity (e.g. q_st19's append-offset ledger,
+    * where a RETRIED batch must not advance the token base twice).
+    */
   def runForeachBatchTransformWithId(
       spark: SparkSession, events: DataFrame, outDir: String)(
       transform: (DataFrame, Long) => DataFrame): String = withStreamShuffle(spark) {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val out = new org.apache.hadoop.fs.Path(outDir)
-    val fs = out.getFileSystem(conf)
-    if (fs.exists(out)) fs.delete(out, true) // fresh run, stale batches poison the union
     val q = events.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         transform(batch, batchId).write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
@@ -527,14 +483,14 @@ object CdcStream {
     * resolve through the pointer, so they never observe a
     * half-written table. Over a bounded source the final state equals
     * the batch last-wins query — the q_st9 oracle. Returns the
-    * committed snapshot dir.
+    * committed snapshot dir; `baseDir` must start empty
+    * (`SparkUtil.freshDir`), or an earlier run's state merges in.
     */
   def runMergeToStateTable(spark: SparkSession, events: DataFrame, baseDir: String): String = withStreamShuffle(spark) {
     import org.apache.spark.sql.expressions.Window
     val conf = spark.sparkContext.hadoopConfiguration
     val base = new org.apache.hadoop.fs.Path(baseDir)
     val fs = base.getFileSystem(conf)
-    if (fs.exists(base)) fs.delete(base, true)
     fs.mkdirs(base)
     val pointer = new org.apache.hadoop.fs.Path(base, "_LATEST")
     def committedVersion(): Option[String] = {

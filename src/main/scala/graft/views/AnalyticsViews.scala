@@ -77,7 +77,7 @@ object AnalyticsViews {
       .filter(
         lower(col("city")).contains("hà nội") || lower(col("city")).contains("hanoi") ||
           lower(coalesce(col("province"), lit(""))).contains("hà nội"))
-      .withColumn("days_to_deadline",
+      .withColumn("days_to_deadline", // views.sql:48
         datediff(to_date(col("due_date")), lit(asOf).cast("date")))
       .orderBy(col("due_date"), col("job_sk"))
       .limit(10)

@@ -246,8 +246,7 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("salary", lit("22 - 26 triệu"))
       .withColumn("crawled_at", to_timestamp(lit("2026-08-15 09:00:00")))
     val staging3 = Pipeline.rawToStaging(raw3, "2026-08-16 10:30:00")
-    val dir = "/root/repo/target/tmp/pipelinespec_stream_staging"
-    graft.io.Snapshots.deleteDir(spark, dir)
+    val dir = graft.SparkUtil.freshDir("pipelinespec_stream_staging", "")
     staging2.write.parquet(dir)
     // total function, not a Map: the appended day-3 files can be
     // discovered across more than one trigger listing (the running

@@ -49,7 +49,7 @@ class PropertySpec extends AnyFunSuite {
     val rows = inputs.toDF("salary")
       .select(col("salary"),
         SalaryFns.normalizeSalary(col("salary")).as("fast"),
-        SalaryFns.normalizeSalaryColumns(col("salary")).as("spec"))
+        SalaryColumnChain.normalizeSalary(col("salary")).as("spec"))
       .collect()
     rows.foreach { r =>
       assert(r.get(1) == r.get(2), s"divergence for '${r.getString(0)}'")

@@ -61,7 +61,7 @@ class SalaryFnsSpec extends AnyFunSuite {
     val df = inputs.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "salary")
     val both = df.select(col("id"),
       SalaryFns.normalizeSalary(col("salary")).as("fast"),
-      SalaryFns.normalizeSalaryColumns(col("salary")).as("spec"))
+      SalaryColumnChain.normalizeSalary(col("salary")).as("spec"))
       .orderBy("id").collect()
     both.zip(inputs).foreach { case (r, in) =>
       assert(r.get(1) == r.get(2), s"input='$in': fast=${r.get(1)} spec=${r.get(2)}")

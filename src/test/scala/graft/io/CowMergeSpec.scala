@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CowMergeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val Tmp = "/root/repo/target/tmp/cowmergespec"
+  private val Tmp = graft.SparkUtil.scratchDir("cowmergespec", "")
 
   private def wipe(sub: String): (String, String) = {
     val fs = new Path(Tmp).getFileSystem(spark.sparkContext.hadoopConfiguration)

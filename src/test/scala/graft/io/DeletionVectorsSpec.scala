@@ -6,14 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class DeletionVectorsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val Tmp = "/root/repo/target/tmp/dvspec"
+  private val Tmp = graft.SparkUtil.scratchDir("dvspec", "")
 
-  private def writeBase(): Unit = {
+  private def writeBase(path: String = s"$Tmp/base"): Unit = {
     import spark.implicits._
     (0L until 1000L).map(i => (i, s"g${i % 4}", i * 3 % 17))
       .toDF("id", "grp", "v")
       .repartition(5, col("id"))
-      .write.mode("overwrite").parquet(s"$Tmp/base")
+      .write.mode("overwrite").parquet(path)
   }
 
   test("merge-on-read equals row-wise delete; overlapping batches dedupe; base untouched") {
@@ -49,42 +49,88 @@ class DeletionVectorsSpec extends AnyFunSuite {
     assert(once == 900L && twice == 900L)
   }
 
+  /** A fresh ledger over the 5-file base; the first (lowest-path)
+    * base file's ids come back with it.
+    */
+  private def ledgerWithHotFile(name: String): (DeletionVectors.Ledger, Seq[Long]) = {
+    import spark.implicits._
+    val l = DeletionVectors.Ledger(graft.SparkUtil.freshDir(name, ""), "id",
+      mBits = 1 << 12, k = 3, threshold = 0.3)
+    writeBase(l.base)
+    DeletionVectors.create(spark, l)
+    val withFile = spark.read.parquet(l.base)
+      .select(col("_metadata.file_path").as("f"), col("id"))
+    val hotIds = withFile.filter(col("f") === withFile.select(min("f")).as[String].head())
+      .select("id").as[Long].collect().toSeq.sorted
+    (l, hotIds)
+  }
+
+  private def liveTotals(l: DeletionVectors.Ledger): (Long, Long) = {
+    import spark.implicits._
+    DeletionVectors.read(spark, l).agg(count(lit(1)), sum("id")).as[(Long, Long)].head()
+  }
+
   test("compaction rewrites ONLY hot files; cold files + residual DV unchanged") {
     import spark.implicits._
-    // skewed deletes: all ids in [0, 200) — under repartition(5, id)
-    // each file holds ~20% of them, so make the skew explicit instead:
-    // delete by grp so entire groups (25% of every file) die, then
-    // push ONE file over the threshold by deleting its ids directly
-    writeBase()
-    val firstFile = spark.read.parquet(s"$Tmp/base")
-      .select(col("_metadata.file_path").as("f"), col("id"))
-    val hotIds = firstFile.filter(
-        col("f") === firstFile.select(min("f")).as[String].head())
-      .select("id").as[Long].collect().toSeq
-    // delete 60% of the lexicographically-first file, 2% of the rest
-    val dv = DeletionVectors.build(spark, s"$Tmp/base",
-      (col("id").isin(hotIds.take(hotIds.length * 6 / 10): _*)) ||
-        col("id") % 50 === 0)
-    DeletionVectors.writeBatch(dv, s"$Tmp/dv_c", 1)
-    val before = DeletionVectors.readWithDv(spark, s"$Tmp/base", s"$Tmp/dv_c")
-      .agg(count(lit(1)), sum("id")).as[(Long, Long)].head()
-    val plan = DeletionVectors.compactionPlan(spark, s"$Tmp/base", s"$Tmp/dv_c", 0.3)
-      .collect()
-    assert(plan.count(_.getAs[Boolean]("rewrite")) == 1,
-      plan.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).mkString(","))
-    val cold = DeletionVectors.compact(spark, s"$Tmp/base", s"$Tmp/dv_c",
-      s"$Tmp/compacted", 0.3)
-    assert(cold.length == 4, s"expected 4 cold files, got ${cold.length}")
-    // post-compaction table: cold files (with residual DV) + compacted
-    val coldLive = spark.read.parquet(cold: _*)
-      .select(col("*"), col("_metadata.file_path").as("__file"),
-        col("_metadata.row_index").as("__pos"))
-      .join(spark.read.parquet(s"$Tmp/dv_c")
-        .select(col("file").as("__file"), col("row_index").as("__pos")).distinct(),
-        Seq("__file", "__pos"), "left_anti")
-      .drop("__file", "__pos")
-    val after = coldLive.unionByName(spark.read.parquet(s"$Tmp/compacted"))
-      .agg(count(lit(1)), sum("id")).as[(Long, Long)].head()
-    assert(after == before, s"compaction changed the table: $after vs $before")
+    // skewed deletes: 60% of the lexicographically-first file, 2% of
+    // the rest (id % 50) — one file crosses the 0.3 threshold
+    val (l, hotIds) = ledgerWithHotFile("dvspec_compact")
+    val deleted = (hotIds.take(hotIds.length * 6 / 10) ++ (0L until 1000L).filter(_ % 50 == 0))
+      .distinct
+    DeletionVectors.applyBatch(spark, l, deleted.toDF("id"), 0)
+    val kept = (0L until 1000L).filterNot(deleted.toSet)
+    val tombs = spark.read.parquet(s"${l.root}/tomb").filter(col("file") =!= "")
+      .select("file").as[String].collect()
+    assert(tombs.length == 1, s"expected exactly one rewritten file: ${tombs.toSeq}")
+    val cold = spark.read.parquet(s"${l.root}/manifest")
+      .filter(col("batch_id") === -1 && !col("file").isin(tombs.toSeq: _*)).count()
+    assert(cold == 4, s"expected 4 cold files, got $cold")
+    // post-compaction table: cold files (with residual DV) + generation
+    val after = liveTotals(l)
+    assert(after == ((kept.size.toLong, kept.sum)),
+      s"compaction changed the table: $after vs ${(kept.size, kept.sum)}")
+  }
+
+  /** Every DV, tombstone, manifest and generation batch dir of the
+    * ledger: its parquet file count and its rows, sorted. Spark names
+    * part files by write job, so only generation files (referenced by
+    * path) must keep their names; they are listed by name.
+    */
+  private def ledgerState(l: DeletionVectors.Ledger): Map[String, (Int, Seq[String])] = {
+    val root = new java.io.File(l.root)
+    Seq("dv", "tomb", "manifest", "gen").flatMap { kind =>
+      Option(new java.io.File(root, kind).listFiles).toSeq.flatten.filter(_.isDirectory).map { d =>
+        val files = d.listFiles.map(_.getName).filter(_.endsWith(".parquet")).sorted
+        val rows = spark.read.parquet(d.getPath).collect().map(_.toString).sorted.toSeq
+        val key = if (kind == "gen") s"gen/${d.getName}/${files.mkString(",")}" else s"$kind/${d.getName}"
+        key -> ((files.length, rows))
+      }
+    }.toMap
+  }
+
+  test("ledger replay: re-applying a batch leaves DV, tombstone, manifest and live set unchanged") {
+    import spark.implicits._
+    val (l, hotIds) = ledgerWithHotFile("dvspec_replay")
+    val batches = Seq(
+      hotIds.take(hotIds.length * 6 / 10), // crosses the threshold: compacts
+      (0L until 1000L).filter(_ % 50 == 0), // lands on cold files and the generation
+      (0L until 1000L).filter(_ % 7 == 0))
+    def apply(b: Int): Unit = DeletionVectors.applyBatch(spark, l, batches(b).toDF("id"), b)
+    batches.indices.foreach(apply)
+    val state = ledgerState(l)
+    val live = liveTotals(l)
+    assert(state.keys.exists(_.startsWith("gen/batch_id=0/")), s"batch 0 never compacted: ${state.keys}")
+    val kept = (0L until 1000L).filterNot(batches.flatten.toSet)
+    assert(live == ((kept.size.toLong, kept.sum)), s"live set wrong: $live")
+    for (b <- Seq(0, 2)) { // the compacting batch and the last one
+      apply(b)
+      val again = ledgerState(l)
+      assert(again.keySet == state.keySet, s"replaying batch $b changed the dirs")
+      state.foreach { case (k, v) =>
+        if (again(k) != v) fail(s"replaying batch $b changed $k: ${v._1} files/" +
+          s"${v._2.size} rows became ${again(k)._1} files/${again(k)._2.size} rows")
+      }
+      assert(liveTotals(l) == live, s"replaying batch $b changed the live set")
+    }
   }
 }

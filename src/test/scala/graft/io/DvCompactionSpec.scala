@@ -50,8 +50,7 @@ class DvCompactionSpec extends AnyFunSuite {
       .orderBy("source").collect()
     assert(result.map(_.toString).toSeq == expect.map(_.toString).toSeq)
 
-    val key = SfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    val tmp = s"/root/repo/target/tmp/q_st21_dvc/$key"
+    val tmp = graft.SparkUtil.scratchDir("q_st21_dvc", SfDir)
 
     // 1. compaction fired: at least one real tombstone, and a
     //    generation dir holding the rewrite

@@ -27,7 +27,7 @@ class LayoutSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (0L until 64L).flatMap(u => (0L until 64L).map(d => (u, d)))
       .toDF("u", "d")
-    val tmp = "/root/repo/target/tmp/layoutspec_z"
+    val tmp = graft.SparkUtil.scratchDir("layoutspec_z", "")
     Layout.zOrderBy2(df.repartition(8), col("u"), col("d"), numFiles = Some(8))
       .write.mode("overwrite").parquet(tmp)
     def spansOf(path: String) = spark.read.parquet(path)
@@ -44,7 +44,7 @@ class LayoutSpec extends AnyFunSuite {
       >= zSpans.length * 5, zSpans.mkString(","))
     // ...whereas a single-column sort leaves the OTHER dimension
     // spanning the full range in EVERY file — the layout z-order fixes
-    val tmpU = "/root/repo/target/tmp/layoutspec_usort"
+    val tmpU = graft.SparkUtil.scratchDir("layoutspec_usort", "")
     df.repartitionByRange(8, col("u")).sortWithinPartitions(col("u"))
       .write.mode("overwrite").parquet(tmpU)
     val uSpans = spansOf(tmpU)
@@ -53,7 +53,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("zone manifest: one row per file, planner prunes to overlapping zones only") {
     import spark.implicits._
-    val tmp = "/root/repo/target/tmp/layoutspec_manifest"
+    val tmp = graft.SparkUtil.scratchDir("layoutspec_manifest", "")
     (0L until 800L).map(i => (i, i % 100)).toDF("v", "g")
       .repartitionByRange(8, col("v"))
       .write.mode("overwrite").parquet(tmp)
@@ -76,7 +76,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("bloom manifest: point probes prune files zone maps cannot, zero false negatives") {
     import spark.implicits._
-    val tmp = "/root/repo/target/tmp/layoutspec_bloom"
+    val tmp = graft.SparkUtil.scratchDir("layoutspec_bloom", "")
     val (mBits, k) = (1 << 14, 4)
     // hash-distributed on a DIFFERENT column: every file's id zone
     // spans ~the full range (zone maps prune nothing for an id probe),
@@ -111,7 +111,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("manifest deltas: append batch never touches the standing delta; union == from-scratch") {
     import spark.implicits._
-    val tmp = "/root/repo/target/tmp/layoutspec_deltas"
+    val tmp = graft.SparkUtil.scratchDir("layoutspec_deltas", "")
     val (mBits, k) = (1 << 12, 3)
     def land(batch: Int, lo: Long, hi: Long): Unit = {
       (lo until hi).map(i => (i, i % 7)).toDF("v", "key")
@@ -144,5 +144,17 @@ class LayoutSpec extends AnyFunSuite {
     val scratch = canon(Layout.statsManifest(spark,
       s"$tmp/data", "v", "key", mBits, k))
     assert(union == scratch, "union-of-deltas diverged from from-scratch build")
+  }
+
+  test("k = 0 probes fails legibly instead of building an empty manifest") {
+    import spark.implicits._
+    val tmp = graft.SparkUtil.scratchDir("layoutspec_k0", "")
+    (0L until 100L).toDF("v").write.mode("overwrite").parquet(tmp)
+    val stats = intercept[IllegalArgumentException](
+      Layout.statsManifest(spark, tmp, "v", "v", 1 << 12, 0))
+    val bloom = intercept[IllegalArgumentException](
+      Layout.bloomManifest(spark, tmp, "v", 1 << 12, 0))
+    Seq(stats, bloom).foreach(e =>
+      assert(e.getMessage.contains("k (probes per key) must be >= 1, got 0"), e.getMessage))
   }
 }

@@ -16,8 +16,7 @@ class SnapshotsSpec extends AnyFunSuite {
   test("dynamic partition overwrite rewrites only the touched month") {
     import spark.implicits._
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic")
-    val path = "/root/repo/target/tmp/snapshots_dyn_overwrite"
-    Snapshots.deleteDir(spark, path)
+    val path = graft.SparkUtil.freshDir("snapshots_dyn_overwrite", "")
     val v1 = Seq(("2026-07", 1L, 10.0), ("2026-07", 2L, 20.0), ("2026-08", 3L, 30.0))
       .toDF("load_month", "id", "v")
     Snapshots.writePartitioned(v1, path)
@@ -34,8 +33,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("partition views: one pruned view per month, collisions rejected") {
     import spark.implicits._
-    val path = "/root/repo/target/tmp/snapshots_partition_views"
-    Snapshots.deleteDir(spark, path)
+    val path = graft.SparkUtil.freshDir("snapshots_partition_views", "")
     Seq(("2026-07", 1L), ("2026-07", 2L), ("2026-08", 3L))
       .toDF("load_month", "id")
       .write.mode("overwrite").partitionBy("load_month").parquet(path)
@@ -54,8 +52,8 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("compact: file count planned from on-disk bytes, data byte-identical") {
     import spark.implicits._
-    val src = "target/tmp/spec_compact_src"
-    val out = "target/tmp/spec_compact_out"
+    val src = graft.SparkUtil.scratchDir("spec_compact_src", "")
+    val out = graft.SparkUtil.scratchDir("spec_compact_out", "")
     val df = (1 to 10000).map(i => (i.toLong, s"row-$i", i * 1.5)).toDF("id", "s", "v")
     df.repartition(32).write.mode("overwrite").parquet(src)
     def files(dir: String) = {

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TableLogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val Tmp = "/root/repo/target/tmp/tablelogspec"
+  private val Tmp = graft.SparkUtil.scratchDir("tablelogspec", "")
 
   private def wipe(sub: String): (String, String) = {
     val fs = new Path(Tmp).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -306,7 +306,7 @@ class CorpusSpec extends AnyFunSuite {
 
   test("writeShardFiles lays out exactly one data file per shard plus a manifest") {
     val docs = (1L to 400L).map(i => (i, ("tok " * 17).trim)).toDF("doc_id", "text")
-    val out = "target/tmp/corpus_spec_shards"
+    val out = graft.SparkUtil.scratchDir("corpus_spec_shards", "")
     val back = Corpus.writeShardFiles(docs, "doc_id", "text", tokensPerShard = 512L, out)
     // 400 docs × 17 tokens = 6800 tokens → ceil(6800/512) = 14 shards
     val shardIds = back.select("shard_id").distinct()
@@ -333,7 +333,7 @@ class CorpusSpec extends AnyFunSuite {
 
   test("shard damage is detected from the manifest and rebuilt exactly (negative path)") {
     val docs = (1L to 400L).map(i => (i, ("tok " * 17).trim)).toDF("doc_id", "text")
-    val out = "target/tmp/corpus_spec_restore"
+    val out = graft.SparkUtil.scratchDir("corpus_spec_restore", "")
     Corpus.writeShardFilesLedger(docs, "doc_id", "text", tokensPerShard = 512L, out)
     // healthy layout: nothing to detect
     assert(Corpus.detectDamagedShards(spark, out, "doc_id").count() == 0L)
@@ -380,7 +380,7 @@ class CorpusSpec extends AnyFunSuite {
     // shard surfaces as a ledger-vs-manifest mismatch like any other
     // damage, and the same targeted rebuild converges.
     val docs = (1L to 400L).map(i => (i, ("tok " * 17).trim)).toDF("doc_id", "text")
-    val out = "target/tmp/corpus_spec_restore_corrupt"
+    val out = graft.SparkUtil.scratchDir("corpus_spec_restore_corrupt", "")
     Corpus.writeShardFilesLedger(docs, "doc_id", "text", tokensPerShard = 512L, out)
     assert(Corpus.detectDamagedShards(spark, out, "doc_id").count() == 0L)
     val before = spark.read.parquet(out)
@@ -419,7 +419,7 @@ class CorpusSpec extends AnyFunSuite {
     // loader would read a corrupted mixed layout; writeShardFiles
     // must force a full-replace snapshot
     val docs = (1L to 400L).map(i => (i, ("tok " * 17).trim)).toDF("doc_id", "text")
-    val out = "target/tmp/corpus_spec_shards_rerun"
+    val out = graft.SparkUtil.scratchDir("corpus_spec_shards_rerun", "")
     Corpus.writeShardFiles(docs, "doc_id", "text", tokensPerShard = 512L, out)
     val back2 = Corpus.writeShardFiles(docs, "doc_id", "text", tokensPerShard = 4096L, out)
     val expected = back2.select("shard_id").distinct().count()

@@ -33,7 +33,7 @@ class PcaSpec extends AnyFunSuite {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val local = Pca.topComponent(emb, "vec_id", "embedding", dim = 64, iters = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val dist = Pca.topComponentDistributed(emb, "vec_id", "embedding", dim = 64, iters = 3)
+    val dist = PcaDistributed.topComponent(emb, "vec_id", "embedding", dim = 64, iters = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(local.length == 64 && dist.length == 64)
     local.zip(dist).foreach { case (l, d) =>

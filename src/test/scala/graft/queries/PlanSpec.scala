@@ -49,7 +49,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned write + month filter prunes partitions at the source (S10/S11)") {
-    val tmp = "/root/repo/target/tmp/planspec_partitions"
+    val tmp = graft.SparkUtil.scratchDir("planspec_partitions", "")
     val withMonth = Tables.orders(spark, sf)
       .withColumn("load_month", date_format(col("o_orderdate"), "yyyy-MM"))
     Snapshots.writePartitioned(withMonth, tmp)
@@ -65,8 +65,7 @@ class PlanSpec extends AnyFunSuite {
     // gen-2 scan — if gen 2's priority filter degrades to a data
     // filter, the finer layout bought nothing and the read scans every
     // priority dir of the year.
-    val tmp = "/root/repo/target/tmp/planspec_specs"
-    graft.io.Snapshots.deleteDir(spark, tmp) // dynamic overwrite keeps stale siblings
+    val tmp = graft.SparkUtil.freshDir("planspec_specs", "") // dynamic overwrite keeps stale siblings
     val o = Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"),
         date_format(col("o_orderdate"), "yyyy").as("year"))
@@ -93,7 +92,7 @@ class PlanSpec extends AnyFunSuite {
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     Seq("planspec_orders_b", "planspec_lineitem_b").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      Snapshots.deleteDir(spark, s"$wh/$t")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$wh/$t"))
     }
     try {
       Snapshots.writeBucketed(
@@ -406,7 +405,7 @@ class PlanSpec extends AnyFunSuite {
     // shard N must open shard N's file, not scan the corpus — the
     // shard_id partition filter has to prune at the source
     import spark.implicits._
-    val tmp = "/root/repo/target/tmp/planspec_shards"
+    val tmp = graft.SparkUtil.scratchDir("planspec_shards", "")
     val docs = (1L to 300L).map(i => (i, ("tok " * 17).trim)).toDF("doc_id", "text")
     graft.llm.Corpus.writeShardFiles(docs, "doc_id", "text", 512L, tmp)
     val pruned = spark.read.parquet(tmp).filter(col("shard_id") === 3)
@@ -461,7 +460,7 @@ class PlanSpec extends AnyFunSuite {
     // of the table shuffles ALL table data on (file, row_index), which
     // at 100 TB is a full-table shuffle to subtract kilobytes.
     import spark.implicits._
-    val tmp = "/root/repo/target/tmp/planspec_dv"
+    val tmp = graft.SparkUtil.scratchDir("planspec_dv", "")
     (0L until 500L).map(i => (i, i % 5)).toDF("id", "g")
       .repartition(4, col("id"))
       .write.mode("overwrite").parquet(s"$tmp/base")
@@ -484,7 +483,7 @@ class PlanSpec extends AnyFunSuite {
     // the broadcast source, so the only shuffle in the whole merge is
     // the final numFiles repartition of the rewrite.
     import spark.implicits._
-    val tmp = "/root/repo/target/tmp/planspec_merge"
+    val tmp = graft.SparkUtil.scratchDir("planspec_merge", "")
     (0L until 500L).map(i => (i, i * 2, s"t$i")).toDF("id", "m", "tag")
       .repartition(4, col("id"))
       .write.mode("overwrite").parquet(s"$tmp/base")

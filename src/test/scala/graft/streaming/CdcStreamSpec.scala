@@ -47,8 +47,7 @@ class CdcStreamSpec extends AnyFunSuite {
       .toDF("user_id", "tss", "value")
       .withColumn("ts", to_timestamp(col("tss")))
       .select("user_id", "ts", "value")
-    val dir = "/root/repo/target/tmp/cdcspec_sessions_src"
-    graft.io.Snapshots.deleteDir(spark, dir)
+    val dir = graft.SparkUtil.freshDir("cdcspec_sessions_src", "")
     rows.write.parquet(dir)
     val stream = spark.readStream
       .schema("user_id LONG, ts TIMESTAMP, value DOUBLE").parquet(dir)
@@ -80,8 +79,7 @@ class CdcStreamSpec extends AnyFunSuite {
 
   test("windowed agg absorbs multi-file arrival and matches batch truth") {
     import spark.implicits._
-    val dir = "/root/repo/target/tmp/cdcspec_multifile"
-    graft.io.Snapshots.deleteDir(spark, dir)
+    val dir = graft.SparkUtil.freshDir("cdcspec_multifile", "")
     def shape(rows: Seq[(Long, String, String, Double)]) =
       rows.toDF("event_id", "tss", "event_type", "value")
         .withColumn("ts", to_timestamp(col("tss")))
@@ -121,10 +119,8 @@ class CdcStreamSpec extends AnyFunSuite {
     // user back. Retention keeps last-wins associative across any
     // batch split, so the tombstone stays the user's state row; only
     // watermark-gated compaction may remove it physically.
-    val src = "target/tmp/cdcspec_tomb_src"
-    val stDir = "target/tmp/cdcspec_tomb_state"
-    val fs = new java.io.File(src)
-    if (fs.exists()) { def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete() }; rm(fs) }
+    val src = graft.SparkUtil.freshDir("cdcspec_tomb_src", "")
+    val stDir = graft.SparkUtil.freshDir("cdcspec_tomb_state", "")
     val t = (s: String) => java.sql.Timestamp.valueOf(s)
     // file 1: user 1's DELETION (their latest event) + user 2 activity
     Seq((10L, t("2024-01-20 10:00:00"), 1L, "error"),
