@@ -582,15 +582,27 @@ object Corpus {
       .select(col("__id").as(idCol), col("n_tokens"), col("score"))
   }
 
-  /** Driver-side mirror of [[epochMixPlan]] for callers that already
-    * hold the |sources|-row stats in hand (bounded control flow — the
-    * planner input is one row per source by construction): identical
-    * 64-bit multiply-then-floor-divide water-filling, so allocations
-    * are bit-identical to the distributed form (Scala `Long./` and
-    * Spark `div` both truncate toward zero). The q_l21b curation
-    * chain uses this to collapse 3 rounds of agg+broadcast jobs on a
-    * ~30-row frame into zero jobs — at any corpus scale the stats
-    * frame stays |sources| rows, so this is never a driver bottleneck.
+  /** Data-constrained token-budget planner — the "how many epochs of
+    * each source" allocation of the data-constrained scaling regime
+    * (Muennighoff et al. 2023: repeating good data beats more bad
+    * data, up to ~4 epochs): budget flows to sources in proportion to
+    * their available tokens, each source's allocation is capped at
+    * its `cap` (tierEpochs × avail, the caller's repetition policy),
+    * and budget freed by capped sources is re-apportioned among the
+    * uncapped over `rounds` water-filling rounds.
+    *
+    * ALL arithmetic is 64-bit integer multiply-then-floor-divide —
+    * never a float — so the plan is bit-identical in any engine and
+    * insensitive to reduction order (the q_l72 oracle replays it in
+    * DuckDB). Allocations are monotone non-decreasing across rounds and
+    * never exceed `budget` (each round hands out at most the remaining
+    * budget).
+    *
+    * Runs driver-side: the input is one row per source by
+    * construction, so callers collect their |sources|-row stats once
+    * (q_l72, the q_l21b curation chain) and the rounds cost no Spark
+    * job at any corpus scale. CorpusSpec pins it bit-identical to the
+    * distributed form it replaced (`EpochMixDistributed`, test-side).
     *
     * `stats` rows are (source, avail > 0, cap); returns
     * (source, avail, alloc) in input order.
@@ -611,53 +623,6 @@ object Corpus {
       }
     }
     stats.zip(alloc).map { case ((src, av, _), a) => (src, av, a) }
-  }
-
-  /** Data-constrained token-budget planner — the "how many epochs of
-    * each source" allocation of the data-constrained scaling regime
-    * (Muennighoff et al. 2023: repeating good data beats more bad
-    * data, up to ~4 epochs): budget flows to sources in proportion to
-    * their available tokens, each source's allocation is capped at
-    * its `cap` (tierEpochs × avail, the caller's repetition policy),
-    * and budget freed by capped sources is re-apportioned among the
-    * uncapped over `rounds` water-filling rounds.
-    *
-    * ALL arithmetic is 64-bit integer multiply-then-floor-divide —
-    * never a float — so the plan is bit-identical in any engine and
-    * insensitive to reduction order. Allocations are monotone
-    * non-decreasing across rounds and never exceed `budget` (each
-    * round hands out at most the remaining budget).
-    *
-    * `stats` carries (source, avail BIGINT > 0, cap BIGINT); extra
-    * columns pass through. Returns stats + (alloc, epochs_micro =
-    * alloc·1e6 div avail), ordered by source.
-    *
-    * Scale shape: `stats` is |sources| rows — the caller's per-source
-    * aggregation is the only corpus pass (callers should pin it; this
-    * loop re-reads it 2× per round). Every round is one broadcast
-    * 1-row sum crossed back onto the tiny frame: no corpus work, no
-    * window, no driver loop over data.
-    */
-  def epochMixPlan(stats: DataFrame, budget: Long, rounds: Int): DataFrame = {
-    require(rounds >= 1, "epochMixPlan needs at least one round")
-    val passThrough = stats.columns.filterNot(_ == "alloc").map(col).toSeq
-    var cur = stats.withColumn("alloc", lit(0L))
-    for (_ <- 1 to rounds) {
-      val sums = cur.agg(
-        sum(when(col("alloc") < col("cap"), col("avail")).otherwise(0L))
-          .cast("long").as("__sumw"),
-        sum(col("alloc")).cast("long").as("__tot"))
-      cur = cur.crossJoin(broadcast(sums))
-        .withColumn("__give",
-          when(col("alloc") < col("cap") && col("__sumw") > 0,
-            greatest(expr(s"((${budget}L - __tot) * avail) div __sumw"), lit(0L)))
-            .otherwise(lit(0L)))
-        .select((passThrough :+
-          least(col("cap"), col("alloc") + col("__give")).as("alloc")): _*)
-    }
-    cur
-      .withColumn("epochs_micro", expr("(alloc * 1000000L) div avail"))
-      .orderBy("source")
   }
 
   /** Frequency-based boilerplate line removal — the CCNet/RefinedWeb

@@ -34,12 +34,9 @@ object Pca {
     */
   private[llm] def pcInit(j: Int): Double = Similarity.md5Weight(s"pc:$j")
 
-  /** Top principal component after `iters` power steps:
-    * (j 1-based, loading, lambda) with the sign fixed so loading(1) ≥ 0
-    * and lambda = ‖C·v‖ of the final step (the Rayleigh estimate of
-    * the top eigenvalue once iterates align).
-    */
-  /** d×d covariance cells (ci, cj, cov), one corpus pass.
+  /** The lower-triangle covariance kernel (ci, cj ≤ ci, sp = the
+    * DECIMAL sum of centered products), before the checkpoint and the
+    * mirror in [[covariance]].
     *
     * r15 shape (guide §2.4, remove shuffles outright): the old form
     * exploded every row to n·d (vec, j, x) rows, hash-repartitioned
@@ -65,11 +62,15 @@ object Pca {
     * before the cell aggregation is narrow, so the scan is widened
     * (widenByFiles — metadata-only, a no-op on a real many-file
     * corpus) or the whole n·d² pass serializes into one task.
-    */
-  /** The triangle kernel pre-checkpoint: per-row centering against the
-    * means literal + generator outer product + d²-cell aggregation.
-    * Public to `llm` so PlanSpec can pin the join-free single-pass
-    * shape (the checkpoint in [[covariance]] hides it from the plan).
+    *
+    * Building this plan RUNS A SPARK JOB: the means collect executes
+    * when `covarianceTri` is called, not when its result is, so
+    * [[covariance]] and [[topComponent]] pay that corpus pass at plan
+    * construction too. Every dimension needs a non-null value in some
+    * row; an all-null dimension has no mean and fails a `require`
+    * naming it. Visible to `graft` so PlanSpec can pin the join-free
+    * single-pass shape (the checkpoint in [[covariance]] hides it from
+    * the plan).
     */
   private[graft] def covarianceTri(
       emb: DataFrame, embCol: String): DataFrame = {
@@ -79,7 +80,12 @@ object Pca {
       .select(posexplode(e).as(Seq("j0", "x")))
       .groupBy("j0")
       .agg((sum(col("x").cast(DecimalType(25, 10))).cast("double") / count(lit(1))).as("m"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1) // bounded: ≤ |dim| rows
+      .collect().sortBy(_.getInt(0)) // bounded: ≤ |dim| rows
+      .map { r =>
+        require(!r.isNullAt(1),
+          s"PCA dimension ${r.getInt(0) + 1} is null in every row; its mean is undefined")
+        (r.getInt(0), r.getDouble(1))
+      }
     val mArr = array(mRows.map(t => lit(t._2)): _*)
     wide
       .select(zip_with(e, mArr, (x, mm) => x - mm).as("cx"))
@@ -93,6 +99,9 @@ object Pca {
       .agg(sum(col("p")).as("sp"))
   }
 
+  /** d×d covariance cells (ci, cj, cov), one corpus pass (plus the
+    * means collect [[covarianceTri]] runs while this plan is built).
+    */
   def covariance(
       emb: DataFrame, idCol: String, embCol: String): DataFrame = {
     val nFrame = emb.agg(count(lit(1)).as("n"))
@@ -110,7 +119,12 @@ object Pca {
         (col("sp").cast("double") / (col("n") - 1)).as("cov"))
   }
 
-  /** Top principal component with the power steps run DRIVER-SIDE over
+  /** Top principal component after `iters` power steps:
+    * (j 1-based, loading, lambda) with the sign fixed so loading(1) ≥ 0
+    * and lambda = ‖C·v‖ of the final step (the Rayleigh estimate of
+    * the top eigenvalue once iterates align).
+    *
+    * The power steps run DRIVER-SIDE over
     * the collected d² cells (bounded: |dim|² rows — driver control
     * flow, the mmrSelectLocal/epochMixPlanLocal pattern). The corpus
     * pass (covariance) stays distributed; the iteration is d²-row
@@ -124,9 +138,11 @@ object Pca {
     * projection (sign fix, 6-dp rounds) still runs through the SAME
     * Spark expressions, so output formatting shares one code path.
     *
-    * Contract (ADVICE r14 mmrSelectLocal note, applied here from the
-    * start): `cells` must be the dense d×d grid with non-null doubles
-    * — covariance() produces exactly that by construction.
+    * Contract: the covariance cells must be the dense `dim`×`dim` grid
+    * (covariance() yields the grid of the embedding width, so `dim`
+    * must equal it); an empty frame or a `dim` that disagrees with the
+    * grid fails a `require` naming both. Like [[covariance]], calling
+    * this runs the corpus pass (the cells are collected here).
     */
   def topComponent(
       emb: DataFrame, idCol: String, embCol: String, dim: Int, iters: Int): DataFrame = {
@@ -145,6 +161,10 @@ object Pca {
     }
     val cells = covariance(emb, idCol, embCol)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))) // bounded: ≤ |dim|² rows
+    require(cells.nonEmpty && cells.length == dim * dim &&
+        cells.forall { case (ci, cj, _) => ci >= 1 && ci <= dim && cj >= 1 && cj <= dim },
+      s"topComponent needs the dense $dim×$dim covariance grid (${dim * dim} cells); " +
+        s"got ${cells.length} cells spanning dims 1..${(0 +: cells.map(_._1)).max}")
     var v: Map[Int, Double] = (1 to dim).map(j => j -> pcInit(j)).toMap
     var nrm = 0.0
     var it = 0

@@ -605,98 +605,29 @@ object Similarity {
     * duplicate passages don't crowd out coverage.
     *
     * `cand` is the per-query candidate pool (query, candidate id,
-    * relevance as an EXACT decimal, embedding as array<double>) —
-    * at 100 TB the pool comes from an ANN stage, so |cand| per query
-    * is a constant k and the pairwise similarity frame is k² per
-    * query, key-partitioned by query. λ is passed as a numerator over
-    * a fixed denominator of 10 and the MMR objective is computed as
-    * λnum·rel − (10−λnum)·maxsim in exact decimal arithmetic —
-    * selection order is engine-independent, no float ever decides a
-    * pick (pairwise cosines are rounded to 9 decimals first, the same
-    * determinism boundary the relevance column carries in).
+    * relevance as an EXACT decimal, embedding as array<double>). λ is
+    * passed as a numerator over a fixed denominator of 10 and the MMR
+    * objective is computed as λnum·rel − (10−λnum)·maxsim in exact
+    * decimal arithmetic — selection order is engine-independent, no
+    * float ever decides a pick (pairwise cosines are rounded to 9
+    * decimals first, the same determinism boundary the relevance
+    * column carries in); ties break on the smaller candidate id.
     *
-    * Greedy selection is inherently sequential in `steps`, so the
-    * loop is `steps` rounds of (max-sim join + arg-max aggregate) on
-    * the candidate frame — each round one key-partitioned aggregate,
-    * never a global window; `steps` is a small constant (a context
-    * window's slot count), not data-dependent.
+    * The pool is BOUNDED by construction — an upstream top-k stage caps
+    * it at |probes|·k rows (q_l73 has 8·10) — so the pool and its
+    * pairwise cosine matrix (computed distributed) are collected once
+    * and the greedy loop, inherently sequential in `steps`, runs
+    * driver-side in exact BigDecimal arithmetic at zero Spark jobs per
+    * pick. SimilaritySpec pins it bit-identical to the distributed
+    * join/arg-max loop it replaced (`MmrDistributed`, test-side).
     *
     * Returns (query, step, candidate, rel, max_sim, mmr) with mmr =
     * (λnum·rel − (10−λnum)·max_sim)/10 cast to double for reporting.
-    */
-  def mmrSelect(
-      cand: DataFrame, qCol: String, idCol: String, relCol: String,
-      embCol: String, steps: Int, lambdaNum: Int = 7): DataFrame = {
-    require(steps >= 1, "mmrSelect needs at least one step")
-    require(lambdaNum >= 0 && lambdaNum <= 10, "lambdaNum is a tenth in [0,10]")
-    val dec = org.apache.spark.sql.types.DecimalType(18, 9)
-    // pin the pool and its pairwise similarities: every greedy round
-    // re-reads both
-    val base = cand.select(col(qCol).as("query_id"), col(idCol).as("cand_id"),
-      col(relCol).cast(dec).as("rel"), col(embCol).as("__e"))
-      .localCheckpoint(false)
-    val sims = base.select(col("query_id"), col("cand_id").as("a"), col("__e").as("__ea"))
-      .join(base.select(col("query_id"), col("cand_id").as("b"), col("__e").as("__eb")),
-        Seq("query_id"))
-      .filter(col("a") =!= col("b"))
-      .select(col("query_id"), col("a"), col("b"),
-        round(cosine(col("__ea"), col("__eb")), 9).cast(dec).as("sim"))
-      .localCheckpoint(false)
-    val pool = base.select("query_id", "cand_id", "rel")
-    def argmax(scored: DataFrame, step: Int): DataFrame =
-      scored
-        .withColumn("__neg", -col("cand_id"))
-        .withColumn("score10",
-          lit(lambdaNum) * col("rel") - lit(10 - lambdaNum) * col("max_sim"))
-        .groupBy("query_id")
-        .agg(max(struct(col("score10"), col("__neg"), col("cand_id"), col("rel"),
-          col("max_sim"))).as("__p"))
-        .select(col("query_id"), lit(step).as("step"),
-          col("__p.cand_id").as("cand_id"), col("__p.rel").as("rel"),
-          col("__p.max_sim").as("max_sim"), col("__p.score10").as("score10"))
-    var selected = argmax(
-      pool.withColumn("max_sim", lit(java.math.BigDecimal.ZERO).cast(dec)), 1)
-    var remaining = pool.join(selected.select("query_id", "cand_id"),
-      Seq("query_id", "cand_id"), "left_anti")
-    for (step <- 2 to steps) {
-      val ms = sims
-        .join(selected.select(col("query_id"), col("cand_id").as("b")),
-          Seq("query_id", "b"))
-        .groupBy(col("query_id"), col("a").as("cand_id"))
-        .agg(max(col("sim")).as("max_sim"))
-      val scored = remaining.join(ms, Seq("query_id", "cand_id"))
-      val pick = argmax(scored, step)
-      selected = selected.unionByName(pick)
-      remaining = remaining.join(pick.select("query_id", "cand_id"),
-        Seq("query_id", "cand_id"), "left_anti")
-    }
-    selected.select(col("query_id"), col("step"), col("cand_id"),
-        col("rel").cast("double").as("rel"),
-        col("max_sim").cast("double").as("max_sim"),
-        (col("score10").cast("double") / 10).as("mmr"))
-      .orderBy("query_id", "step")
-  }
-
-  /** [[mmrSelect]] with the greedy loop run driver-side — for callers
-    * whose candidate pool is BOUNDED by construction (an upstream
-    * top-k stage caps it at |probes|·k rows; q_l73 has 8·10). The
-    * distributed form plans `steps` rounds of join/agg over a
-    * frame of a few dozen rows — ~5 scheduling-floor jobs per greedy
-    * pick; here the pool and its pairwise cosine matrix (computed
-    * distributed, exactly as [[mmrSelect]] does) are collected once
-    * and the picks run in exact BigDecimal arithmetic, bit-identical
-    * to the distributed operator: same DECIMAL(18,9) values in, the
-    * same exact integer-weighted score (7·rel − 3·max_sim is exact in
-    * either engine), the same (score desc, cand_id asc) tie order,
-    * and the same final double casts. Equivalence to [[mmrSelect]] is
-    * pinned in SimilaritySpec. Large-|Q| rerank fleets stay on the
-    * distributed form.
     *
     * CONTRACT (ADVICE r14): query/candidate ids must be non-null
     * LongType and rel/embedding non-null with rel inside
-    * DECIMAL(18,9) — the local loop reads them with unchecked
-    * getLong/getDecimal where [[mmrSelect]] would degrade SQL-style
-    * (null-absorbing). The one caller (q_l73) satisfies this by
+    * DECIMAL(18,9) — the loop reads them with unchecked
+    * getLong/getDecimal. The one caller (q_l73) satisfies this by
     * construction; a new caller with different id types must widen
     * the reads first.
     */
@@ -710,8 +641,7 @@ object Similarity {
     val base = cand.select(col(qCol).as("query_id"), col(idCol).as("cand_id"),
       col(relCol).cast(dec).as("rel"), col(embCol).as("__e"))
       .localCheckpoint(false)
-    // pairwise similarities computed DISTRIBUTED (same expression as
-    // mmrSelect — the doubles must match bit-for-bit), then collected:
+    // pairwise similarities computed DISTRIBUTED, then collected:
     // ≤ |pool|²/|Q| rows per query, |pool| ≤ |probes|·k by the
     // caller's top-k contract
     val simRows = base.select(col("query_id"), col("cand_id").as("a"), col("__e").as("__ea"))

@@ -80,36 +80,21 @@ object TextAnalysis {
       .otherwise(lit(1.0) - size(array_distinct(g)).cast("double") / size(g))
   }
 
-  /** Per-row top-2-gram stats: struct(n2 = total 2-gram count, best =
-    * max multiplicity of any single 2-gram) via array_sort + a
-    * run-length fold. This replaces the (doc, gram) explode → two-level
-    * aggregation the Gopher top-gram-mass rule used to require — the
-    * single biggest shuffle of the curation cascade (the exploded gram
-    * multiset is token-volume-sized), removed outright (guide §2.4);
-    * counts are exact integers either way, so filter outcomes are
-    * bit-identical (pinned in TextAnalysisSpec against the explode
-    * form).
-    */
-  def topBigramStats(c: Column): Column = {
-    val grams = array_sort(wordBigrams(c))
-    val folded = aggregate(grams,
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, g) => {
-        val run = when(g === acc.getField("prev"), acc.getField("run") + 1L)
-          .otherwise(lit(1L))
-        struct(g.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      })
-    struct(size(grams).cast("long").as("n2"), folded.getField("best").as("best"))
-  }
-
-  /** `best/n2` of [[topBigramStats]] as the 0.0-defaulted fraction the
-    * cascade thresholds on. The fold appears exactly ONCE in the
-    * expression tree (referencing struct fields of one shared
-    * topBigramStats call duplicated the whole sort+fold per field —
-    * codegen subexpression elimination does not cover higher-order
-    * functions); n2 comes from the cheap closed form instead
-    * (|tokens|−1 clamped at 0 ≡ |bigrams|).
+  /** Top-2-gram mass: max multiplicity of any single 2-gram over the
+    * total 2-gram count (0.0 when fewer than two tokens), via
+    * array_sort + a run-length fold. This replaces the (doc, gram)
+    * explode → two-level aggregation the Gopher top-gram-mass rule used
+    * to require — the single biggest shuffle of the curation cascade
+    * (the exploded gram multiset is token-volume-sized), removed
+    * outright (guide §2.4); counts are exact integers either way, so
+    * filter outcomes are bit-identical (pinned in TextAnalysisSpec
+    * against the explode form).
+    *
+    * The fold appears exactly ONCE in the expression tree (referencing
+    * several struct fields of one fold duplicates the whole sort+fold
+    * per field — codegen subexpression elimination does not cover
+    * higher-order functions); n2 comes from the cheap closed form
+    * instead (|tokens|−1 clamped at 0 ≡ |bigrams|).
     */
   def topBigramFraction(c: Column): Column = {
     val n2 = greatest(size(tokens(c)) - 1, lit(0)).cast("long")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{
   IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{array, col, explode, lit, pmod, when, xxhash64}
 
 /** The as-of join as a FIRST-CLASS Catalyst operator — the SURVEY §7.3
   * option-(c) toolchain end to end: a custom `LogicalPlan` node, a
@@ -21,32 +21,32 @@ import org.apache.spark.sql.functions.col
   * `GraftColumnBridge.addStrategy` (the runtime counterpart of
   * `SparkSessionExtensions.injectPlannerStrategy`).
   *
-  * Why a physical operator when `operators/AsOfJoin` already exists:
-  * the composed form UNIONS both sides into one frame and runs a
-  * running-`last` window over |L|+|R| rows — every right payload column
-  * is widened onto every left row before the window even runs, and the
-  * window operator buffers its frame. The native exec keeps the sides
+  * Semantics: for each left row, the right row with the greatest
+  * rightTs <= leftTs in its key group (backward) or the smallest
+  * rightTs >= leftTs (forward); ties rightTs == leftTs admit the right
+  * row; right rows tying on (keys, ts) resolve to the lexicographically
+  * greatest payload — enforced by appending the remaining orderable
+  * right columns to the required child ordering; null timestamps follow
+  * each direction's default null ordering (first in backward/asc, last
+  * in forward/desc). q_w4 (backward) and q_w4c (forward) pin the
+  * answer to DuckDB's native ASOF JOIN.
+  *
+  * Why a physical operator and not a DataFrame composition: the
+  * union + running-`last` window form (kept in src/test as
+  * `ComposedAsOf`, the witness NativeAsOfJoinSpec compares against)
+  * widens every right payload column onto every left row and buffers
+  * a window frame over |L|+|R| rows. The native exec keeps the sides
   * separate until the merge instant: EnsureRequirements hash-partitions
   * BOTH children on the keys (`ClusteredDistribution` pair — the same
   * co-partitioning contract SortMergeJoinExec declares) and sorts each
   * side by (keys, ts), and `doExecute` then streams the two sorted
   * iterators with O(1) state per partition — one candidate row — never
-  * materializing a group, never widening the union. Backward-as-of
-  * semantics are IDENTICAL to `AsOfJoin.joinAsOfBackward` (ties
-  * rightTs == leftTs admit the right row; right rows tying on
-  * (keys, ts) resolve to the lexicographically greatest payload —
-  * enforced here by appending the remaining orderable right columns to
-  * the required child ordering; null timestamps follow each
-  * direction's default null ordering — first in backward/asc, last in
-  * forward/desc — exactly like the window form), and the spec pins
-  * row-for-row equality between the two forms plus the DuckDB ASOF
-  * oracle through q_w4d (backward) and q_w4e (forward).
+  * materializing a group.
   *
-  * Scale: one hash exchange + one sort per side — strictly less data
-  * through the shuffle than the union form (no widened nulls), and the
-  * merge is a single forward pass. The hot-key caveat is the same as
-  * every key-clustered operator's (one key = one task's merge);
-  * `AsOfJoin.joinAsOfBackwardSalted` remains the salted escape hatch.
+  * Scale: one hash exchange + one sort per side, and the merge is a
+  * single forward pass. A hot key is one task's merge, as for every
+  * key-clustered operator; `NativeAsOfJoin.joinAsOfBackwardSalted`
+  * spreads its left rows over salt sub-keys.
   */
 case class AsOfJoinNode(
     left: LogicalPlan, right: LogicalPlan,
@@ -294,9 +294,9 @@ case class BroadcastAsOfJoinExec(
 /** DataFrame-level API over the native operator. */
 object NativeAsOfJoin {
 
-  /** Backward as-of with `AsOfJoin.joinAsOfBackward`'s exact contract:
-    * left columns unchanged, right timestamp + payload columns
-    * appended as `prefix`-prefixed nullable columns.
+  /** Backward as-of: left columns unchanged, the right timestamp and
+    * payload columns of each left row's nearest-earlier match
+    * appended as `prefix`-prefixed nullable columns (null: no match).
     */
   def joinAsOfBackward(
       left: DataFrame, right: DataFrame, keys: Seq[String],
@@ -305,8 +305,8 @@ object NativeAsOfJoin {
     joinImpl(left, right, keys, leftTs, rightTs, payloadCols, prefix,
       forward = false)
 
-  /** Forward (nearest-later) as-of, `AsOfJoin.joinAsOfForward`'s
-    * contract: smallest rightTs >= leftTs per key, ties admitted.
+  /** Forward (nearest-later) as-of, same output shape: smallest
+    * rightTs >= leftTs per key, ties admitted.
     */
   def joinAsOfForward(
       left: DataFrame, right: DataFrame, keys: Seq[String],
@@ -314,6 +314,34 @@ object NativeAsOfJoin {
       prefix: String = "asof_"): DataFrame =
     joinImpl(left, right, keys, leftTs, rightTs, payloadCols, prefix,
       forward = true)
+
+  /** Hot-key-safe backward as-of, the way `Skew.saltedJoin` salts
+    * joins: left rows scatter over `saltBuckets` deterministic
+    * sub-keys (xxhash64 of the whole row, so identical duplicate rows
+    * still agree), right rows REPLICATE to every sub-key, and the
+    * as-of runs on (keys, salt). Every left row still sees its key's
+    * full right history, so the result is row-for-row identical to
+    * [[joinAsOfBackward]]; on the sort-merge exec the hot key's left
+    * rows now spread over `saltBuckets` tasks instead of one merge.
+    *
+    * Cost: the right side ships ×saltBuckets — the right trade when
+    * the left side dominates (events vs. a bounded state history).
+    * Keep `saltBuckets` modest (8-32) and salt only when a
+    * key-frequency probe says the top key breaches task-size comfort.
+    */
+  def joinAsOfBackwardSalted(
+      left: DataFrame, right: DataFrame, keys: Seq[String],
+      leftTs: String, rightTs: String, payloadCols: Seq[String],
+      prefix: String = "asof_", saltBuckets: Int = 16): DataFrame = {
+    require(saltBuckets > 1, "saltBuckets must be > 1 (use joinAsOfBackward instead)")
+    val saltedLeft = left.withColumn("__salt",
+      pmod(xxhash64(left.columns.map(col): _*), lit(saltBuckets)).cast("int"))
+    val saltedRight = right.withColumn("__salt",
+      explode(array((0 until saltBuckets).map(lit): _*)))
+    joinAsOfBackward(
+      saltedLeft, saltedRight, keys :+ "__salt", leftTs, rightTs, payloadCols, prefix)
+      .drop("__salt")
+  }
 
   private def joinImpl(
       left: DataFrame, right: DataFrame, keys: Seq[String],
@@ -364,17 +392,31 @@ object NativeAsOfJoin {
     joined.select(sel: _*)
   }
 
-  /** Point-in-time (validity-interval) join on the native exec:
-    * `AsOfJoin.joinPointInTime`'s exact contract — backward as-of on
-    * validFrom, then matches whose validTo had already passed are
-    * voided to null (gapped version histories; null validTo = open).
+  /** Point-in-time (validity-interval) join: attach the right-side
+    * version whose [validFrom, validTo) interval covers each left
+    * row's timestamp — the SCD2 "which dimension version was current
+    * when this fact happened" lookup. Backward as-of on validFrom, then
+    * matches whose validTo had already passed are voided to null
+    * (gapped version histories); a null validTo is open-ended (the
+    * SCD2 current row).
     */
   def joinPointInTime(
       left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, validFrom: String, validTo: String,
-      payloadCols: Seq[String], prefix: String = "pit_"): DataFrame =
-    graft.operators.AsOfJoin.voidExpired(
-      joinAsOfBackward(left, right, keys, leftTs, validFrom,
-        (payloadCols :+ validTo).distinct, prefix),
-      leftTs, validFrom, validTo, payloadCols, prefix)
+      payloadCols: Seq[String], prefix: String = "pit_"): DataFrame = {
+    val joined = joinAsOfBackward(left, right, keys, leftTs, validFrom,
+      (payloadCols :+ validTo).distinct, prefix)
+    // materialize the flag BEFORE voiding: the first voided column is
+    // validTo itself, and re-deriving the predicate from the already-
+    // nulled column would spare every later column
+    val flagged = joined.withColumn("__expired",
+      col(s"$prefix$validTo").isNotNull && col(s"$prefix$validTo") <= col(leftTs))
+    ((validFrom +: validTo +: payloadCols).distinct)
+      .foldLeft(flagged) { (df, c) =>
+        df.withColumn(s"$prefix$c",
+          when(col("__expired"), lit(null).cast(df.schema(s"$prefix$c").dataType))
+            .otherwise(col(s"$prefix$c")))
+      }
+      .drop("__expired")
+  }
 }

@@ -1835,7 +1835,7 @@ object LlmQueries {
         // all three repetition measures are per-row now: dup2 is
         // definitionally dupBigramFraction (1 − distinct/total), and
         // the per-doc TOP gram comes from the array_sort + run-length
-        // fold (TextAnalysis.topBigramStats) — the (doc, gram)
+        // fold (TextAnalysis.topBigramFraction) — the (doc, gram)
         // explode+agg+join is gone (guide §2.4)
         base
           .select(col("source"),
@@ -3670,7 +3670,7 @@ object LlmQueries {
              |ORDER BY stage""".stripMargin),
       (s, dir) => {
         // the top-2gram mass is per-row after all (array_sort +
-        // run-length fold, TextAnalysis.topBigramStats) — the
+        // run-length fold, TextAnalysis.topBigramFraction) — the
         // (doc, gram) explode+agg+join this used to ride is gone
         // (guide §2.4: remove shuffles outright). The per-row text
         // work is now scan-bound, so widen the single-file local scan.
@@ -3798,15 +3798,12 @@ object LlmQueries {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         // the only corpus pass: per-source token supply + an exact
-        // integer quality key (en docs over the stopword floor) —
-        // pinned, because the water-filling rounds re-read it
+        // integer quality key (en docs over the stopword floor)
         val per = docs.groupBy("source").agg(
           sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("avail"),
           sum(when(col("lang") === "en" &&
               TextAnalysis.stopwordRatio(col("text")) >= 0.02, 1L).otherwise(0L))
             .as("n_good"))
-          .localCheckpoint(false)
-        val budget = 2L * per.agg(sum("avail")).collect()(0).getLong(0) // 1-row aggregate
         // rank window runs over |sources| rows (20) — bounded by the
         // source vocabulary, never by the corpus
         val tiers = per
@@ -3815,9 +3812,16 @@ object LlmQueries {
           .withColumn("tier",
             when(col("qrank") <= 5, 4).when(col("qrank") <= 15, 2).otherwise(1))
           .withColumn("cap", col("tier").cast("long") * col("avail"))
-        Corpus.epochMixPlan(tiers, budget, rounds = 3)
-          .select("source", "avail", "n_good", "qrank", "tier", "cap",
-            "alloc", "epochs_micro")
+          .select("source", "avail", "n_good", "qrank", "tier", "cap")
+          .collect() // bounded: one row per source, ≤ |sources| planner rows
+        val budget = 2L * tiers.map(_.getLong(1)).sum
+        val plan = Corpus.epochMixPlanLocal(
+          tiers.toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(5))), budget, rounds = 3)
+        import s.implicits._
+        tiers.toSeq.zip(plan).map { case (r, (src, av, alloc)) =>
+          (src, av, r.getLong(2), r.getLong(3), r.getInt(4), r.getLong(5), alloc,
+            alloc * 1000000L / av)
+        }.toDF("source", "avail", "n_good", "qrank", "tier", "cap", "alloc", "epochs_micro")
           .orderBy("source")
       }),
 
@@ -3914,10 +3918,8 @@ object LlmQueries {
         val cand = cand0.withColumn("__r", row_number().over(w))
           .filter(col("__r") <= 10)
           .select("query_id", "cand_id", "rel", "__ce")
-        // pool is 8 probes × top-10 = 80 rows by construction — the
-        // driver-side greedy variant skips ~15 scheduling-floor jobs
-        // (bit-identical to mmrSelect; equivalence pinned in
-        // SimilaritySpec, hash re-proved vs the DuckDB oracle)
+        // pool is 8 probes × top-10 = 80 rows by construction, so the
+        // greedy picks run driver-side
         Similarity.mmrSelectLocal(cand, "query_id", "cand_id", "rel", "__ce",
           steps = 4, lambdaNum = 7)
       }),
@@ -4957,7 +4959,7 @@ object LlmQueries {
     val docs = Tables.documents(s, dir)
     // stage 1 — cascade (q_l70's language-agnostic rules). The
     // top-gram-mass rule is a pure per-row computation
-    // (TextAnalysis.topBigramStats) — the explode → (doc, gram) agg →
+    // (TextAnalysis.topBigramFraction) — the explode → (doc, gram) agg →
     // join it used to ride was the chain's biggest shuffle, removed
     // outright (guide §2.4); counts are exact integers either way.
     // r15: the three repetition predicates fold into ONE sorted pass
@@ -5034,8 +5036,7 @@ object LlmQueries {
     // ONE |sources|-row collect (bounded driver control flow: the
     // planner input is one row per source by construction); budget,
     // tiering and the 3 water-filling rounds then run driver-side via
-    // epochMixPlanLocal — bit-identical integer arithmetic to the
-    // distributed q_l72 planner, minus ~8 agg/broadcast job floors.
+    // epochMixPlanLocal, the planner q_l72 runs too.
     val perRows = mixed.groupBy("source")
       .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("avail"))
       .collect().map(r => (r.getString(0), r.getLong(1))) // |sources|-bounded planner input

@@ -207,18 +207,21 @@ class CorpusSpec extends AnyFunSuite {
     // (400,100,400): round 1 gives (150,150→100,300); round 2 spreads
     // the 50 freed by b over a,c ∝ avail → (166,100,333); round 3
     // moves nothing (integer crumbs only). 1 token stays unallocated.
-    val stats = Seq(
-      ("a", 100L, 400L), ("b", 100L, 100L), ("c", 200L, 400L)
-    ).toDF("source", "avail", "cap")
-    val out = Corpus.epochMixPlan(stats, budget = 600L, rounds = 3)
+    val stats = Seq(("a", 100L, 400L), ("b", 100L, 100L), ("c", 200L, 400L))
+    val alloc = Corpus.epochMixPlanLocal(stats, budget = 600L, rounds = 3)
+      .map(t => t._1 -> t._3).toMap
+    assert(alloc == Map("a" -> 166L, "b" -> 100L, "c" -> 333L), alloc)
+    assert(alloc.values.sum <= 600L)
+    // the distributed witness agrees and adds epochs_micro = alloc·1e6 div avail
+    val out = EpochMixDistributed.epochMixPlan(
+        stats.toDF("source", "avail", "cap"), budget = 600L, rounds = 3)
       .select("source", "alloc", "epochs_micro")
       .as[(String, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
     assert(out == Map("a" -> (166L, 1660000L), "b" -> (100L, 1000000L),
       "c" -> (333L, 1665000L)), out)
-    assert(out.values.map(_._1).sum <= 600L)
     // a budget below every cap allocates proportionally, nothing capped
-    val flat = Corpus.epochMixPlan(stats, budget = 200L, rounds = 3)
-      .select("source", "alloc").as[(String, Long)].collect().toMap
+    val flat = Corpus.epochMixPlanLocal(stats, budget = 200L, rounds = 3)
+      .map(t => t._1 -> t._3).toMap
     assert(flat == Map("a" -> 50L, "b" -> 50L, "c" -> 100L), flat)
   }
 
@@ -295,7 +298,7 @@ class CorpusSpec extends AnyFunSuite {
       (Seq(("a", 100L, 400L), ("b", 100L, 100L), ("c", 200L, 400L)), 200L),
       (Seq(("w", 7L, 28L), ("x", 1000L, 1000L), ("y", 13L, 13L), ("z", 3L, 12L)), 1500L))
     for ((stats, budget) <- cases; rounds <- 1 to 4) {
-      val dist = Corpus.epochMixPlan(
+      val dist = EpochMixDistributed.epochMixPlan(
           stats.toDF("source", "avail", "cap"), budget, rounds)
         .select("source", "alloc").as[(String, Long)].collect().toMap
       val local = Corpus.epochMixPlanLocal(stats, budget, rounds)

@@ -41,6 +41,30 @@ class PcaSpec extends AnyFunSuite {
     }
   }
 
+  test("an empty embeddings frame fails a require naming dim and the grid size") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Pca.topComponent(empty, "vec_id", "embedding", dim = 4, iters = 3)
+    }
+    assert(e.getMessage.contains("dense 4×4 covariance grid (16 cells)") &&
+      e.getMessage.contains("got 0 cells"), e.getMessage)
+  }
+
+  test("an all-null dimension fails a require naming that dimension") {
+    import spark.implicits._
+    // dimension 2 is null in every row: it has no mean to center on
+    val rows = Seq(
+      (1L, Seq(Some(1.0f), None, Some(3.0f))),
+      (2L, Seq(Some(2.0f), None, Some(1.0f))),
+      (3L, Seq(Some(4.0f), None, Some(2.0f))))
+    val e = intercept[IllegalArgumentException] {
+      Pca.topComponent(rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+        dim = 3, iters = 2)
+    }
+    assert(e.getMessage.contains("PCA dimension 2 is null in every row"), e.getMessage)
+  }
+
   test("md5 seed is the SQL closed form and lands in [-1, 1)") {
     (1 to 64).foreach { j =>
       val w = Pca.pcInit(j)

@@ -195,15 +195,16 @@ class SimilaritySpec extends AnyFunSuite {
       (1L, 30L, BigDecimal("0.7"), Seq(0.0, 1.0)),
       (1L, 31L, BigDecimal("0.7"), Seq(0.0, 1.0))
     ).toDF("query_id", "cand_id", "rel", "emb")
-    val out = Similarity.mmrSelect(cand, "query_id", "cand_id", "rel", "emb",
-        steps = 3, lambdaNum = 7)
-      .select("step", "cand_id", "max_sim", "mmr").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    assert(out.map(t => t._1 -> t._2).toSeq == Seq(1 -> 10L, 2 -> 30L, 3 -> 20L))
-    val byStep = out.map(t => t._1 -> t).toMap
-    assert(byStep(2)._3 == 0.0) // c30 is orthogonal to the first pick
-    assert(math.abs(byStep(3)._4 - 0.32) < 1e-9) // (7·.8 − 3·.8)/10
-    assert(math.abs(byStep(3)._3 - 0.8) < 1e-9) // c20's max sim is to c30
+    for (select <- Seq(Similarity.mmrSelectLocal _, MmrDistributed.mmrSelect _)) {
+      val out = select(cand, "query_id", "cand_id", "rel", "emb", 3, 7)
+        .select("step", "cand_id", "max_sim", "mmr").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      assert(out.map(t => t._1 -> t._2).toSeq == Seq(1 -> 10L, 2 -> 30L, 3 -> 20L))
+      val byStep = out.map(t => t._1 -> t).toMap
+      assert(byStep(2)._3 == 0.0) // c30 is orthogonal to the first pick
+      assert(math.abs(byStep(3)._4 - 0.32) < 1e-9) // (7·.8 − 3·.8)/10
+      assert(math.abs(byStep(3)._3 - 0.8) < 1e-9) // c20's max sim is to c30
+    }
   }
 
   test("mmrSelectLocal is bit-identical to the distributed mmrSelect") {
@@ -215,14 +216,14 @@ class SimilaritySpec extends AnyFunSuite {
         math.sin(q * 31 + c * 7 + i * 3).abs + 0.01 * i)
       (q, c * 10 + q, BigDecimal((0.95 - 0.07 * c).toString), emb)
     }).toDF("query_id", "cand_id", "rel", "emb")
-    val a = Similarity.mmrSelect(cand, "query_id", "cand_id", "rel", "emb",
+    val a = MmrDistributed.mmrSelect(cand, "query_id", "cand_id", "rel", "emb",
       steps = 4, lambdaNum = 7).collect().map(_.toSeq).toSeq
     val b = Similarity.mmrSelectLocal(cand, "query_id", "cand_id", "rel", "emb",
       steps = 4, lambdaNum = 7).collect().map(_.toSeq).toSeq
     assert(a == b, s"local/distributed MMR diverged:\n$a\n$b")
     // steps > pool: both stop at pool exhaustion identically
     val small = cand.filter($"cand_id" % 10 === 1 && $"query_id" === 1)
-    val a2 = Similarity.mmrSelect(small, "query_id", "cand_id", "rel", "emb",
+    val a2 = MmrDistributed.mmrSelect(small, "query_id", "cand_id", "rel", "emb",
       steps = 4).collect().map(_.toSeq).toSeq
     val b2 = Similarity.mmrSelectLocal(small, "query_id", "cand_id", "rel", "emb",
       steps = 4).collect().map(_.toSeq).toSeq

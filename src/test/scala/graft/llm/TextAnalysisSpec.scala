@@ -49,7 +49,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(f("word1   word2") == "word1 word2")
   }
 
-  test("topBigramStats run-length fold equals the explode+groupBy form") {
+  test("topBigramFraction run-length fold equals the explode+groupBy form") {
     // the fold replaced the (doc, gram) shuffle in q_l21b/q_l24/q_l70/
     // q_l78 (r14 optimization) — equality must hold on repetition-heavy,
     // tiny, and empty docs alike
@@ -63,27 +63,21 @@ class TextAnalysisSpec extends AnyFunSuite {
       ("nullish", null)
     ).toDF("doc_id", "text")
     val tt = trim(coalesce(col("text"), lit("")))
-    val viaFold = docs.select(col("doc_id"),
-        TextAnalysis.topBigramStats(tt).as("st"))
-      .select(col("doc_id"), col("st.n2"), col("st.best"))
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
+    val viaFold = docs.select(col("doc_id"), TextAnalysis.topBigramFraction(tt))
+      .as[(String, Double)].collect().toMap
     val viaExplode = docs
       .select(col("doc_id"), explode(TextAnalysis.wordBigrams(tt)).as("gram"))
       .groupBy("doc_id", "gram").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id").agg(sum("c").as("n2"), max("c").as("top2"))
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
+      .groupBy("doc_id").agg((max("c").cast("double") / sum("c")).as("top2f"))
+      .as[(String, Double)].collect().toMap
     docs.select("doc_id").as[String].collect().foreach { id =>
-      val fold = viaFold(id)
-      val explBest = viaExplode.get(id).map(_._2).getOrElse(0L) // gram-less docs drop out of the explode
-      val explN2 = viaExplode.get(id).map(_._1).getOrElse(0L)
-      assert(fold._1 == explN2, s"$id n2: fold=${fold._1} explode=$explN2")
-      assert(fold._2 == explBest, s"$id best: fold=${fold._2} explode=$explBest")
+      // gram-less docs drop out of the explode: their fraction is 0.0
+      val expl = viaExplode.getOrElse(id, 0.0)
+      assert(viaFold(id) == expl, s"$id: fold=${viaFold(id)} explode=$expl")
     }
-    assert(viaFold("rep") == ((6L, 4L))) // "spam spam" runs: 3+1 → max 4
-    assert(viaFold("loop")._2 >= 29L)    // "cd ab" repeats 29x
-    assert(viaFold("one") == ((0L, 0L)) && viaFold("empty") == ((0L, 0L)))
+    assert(viaFold("rep") == 4.0 / 6) // "spam spam" runs: 3+1 → max 4 of 6
+    assert(viaFold("loop") >= 29.0 / 59) // "cd ab" repeats 29x
+    assert(viaFold("one") == 0.0 && viaFold("empty") == 0.0 && viaFold("nullish") == 0.0)
   }
 
   test("repetitionGate equals the three-predicate conjunction row for row") {

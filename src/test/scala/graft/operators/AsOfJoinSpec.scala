@@ -1,11 +1,24 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.plans.NativeAsOfJoin
+import graft.plans.NativeAsOfJoinSpec.withBroadcastThreshold
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The as-of join contract — backward, forward, point-in-time, tie
+  * determinism and the salted hot-key form — on [[NativeAsOfJoin]],
+  * each case under both physical choices: the sort-merge exec
+  * (broadcast disabled) and the broadcast exec.
+  */
 class AsOfJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  private def onBothExecs(body: => Unit): Unit =
+    for (threshold <- Seq("-1", "100MB"))
+      withClue(s"autoBroadcastJoinThreshold=$threshold: ") {
+        withBroadcastThreshold(threshold)(body)
+      }
 
   test("backward as-of picks the greatest right ts at-or-before each left row") {
     import spark.implicits._
@@ -22,15 +35,17 @@ class AsOfJoinSpec extends AnyFunSuite {
       (1L, t("2024-01-01 11:00:00")), // after every left row; never matched
       (2L, t("2024-01-01 09:00:00")))
       .toDF("user_id", "ts")
-    val out = AsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
-      .select("tag", "asof_ts").collect()
-      .map(r => r.getString(0) -> Option(r.getTimestamp(1)).map(_.toString).orNull)
-      .toMap
-    assert(out == Map(
-      "p1" -> "2024-01-01 09:58:00.0",
-      "p2" -> "2024-01-01 10:30:00.0",
-      "p3" -> null,
-      "p4" -> null), out.toString)
+    onBothExecs {
+      val out = NativeAsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
+        .select("tag", "asof_ts").collect()
+        .map(r => r.getString(0) -> Option(r.getTimestamp(1)).map(_.toString).orNull)
+        .toMap
+      assert(out == Map(
+        "p1" -> "2024-01-01 09:58:00.0",
+        "p2" -> "2024-01-01 10:30:00.0",
+        "p3" -> null,
+        "p4" -> null), out.toString)
+    }
   }
 
   test("forward as-of picks the smallest right ts at-or-after each left row") {
@@ -47,15 +62,17 @@ class AsOfJoinSpec extends AnyFunSuite {
       (1L, t("2024-01-01 10:30:00")),
       (1L, t("2024-01-01 11:00:00")))
       .toDF("user_id", "ts")
-    val out = AsOfJoin.joinAsOfForward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
-      .select("tag", "asof_ts").collect()
-      .map(r => r.getString(0) -> Option(r.getTimestamp(1)).map(_.toString).orNull)
-      .toMap
-    assert(out == Map(
-      "v1" -> "2024-01-01 10:30:00.0",
-      "v2" -> "2024-01-01 10:30:00.0",
-      "v3" -> null,
-      "v4" -> null), out.toString)
+    onBothExecs {
+      val out = NativeAsOfJoin.joinAsOfForward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
+        .select("tag", "asof_ts").collect()
+        .map(r => r.getString(0) -> Option(r.getTimestamp(1)).map(_.toString).orNull)
+        .toMap
+      assert(out == Map(
+        "v1" -> "2024-01-01 10:30:00.0",
+        "v2" -> "2024-01-01 10:30:00.0",
+        "v3" -> null,
+        "v4" -> null), out.toString)
+    }
   }
 
   test("point-in-time join honors validity intervals, expiry gaps, and open ends") {
@@ -74,13 +91,15 @@ class AsOfJoinSpec extends AnyFunSuite {
       (1L, t("2024-01-01 23:00:00"), "in-open-v3"),
       (1L, t("2024-01-01 08:00:00"), "before-all"))
       .toDF("user_id", "ts", "tag")
-    val out = AsOfJoin.joinPointInTime(
-        left, right, Seq("user_id"), "ts", "valid_from", "valid_to", Seq("ver"))
-      .select("tag", "pit_ver").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(out == Map(
-      "in-v1" -> "v1", "v2-start-inclusive" -> "v2", "in-gap" -> null,
-      "in-open-v3" -> "v3", "before-all" -> null), out.toString)
+    onBothExecs {
+      val out = NativeAsOfJoin.joinPointInTime(
+          left, right, Seq("user_id"), "ts", "valid_from", "valid_to", Seq("ver"))
+        .select("tag", "pit_ver").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(out == Map(
+        "in-v1" -> "v1", "v2-start-inclusive" -> "v2", "in-gap" -> null,
+        "in-open-v3" -> "v3", "before-all" -> null), out.toString)
+    }
   }
 
   test("duplicate right (key, ts) rows resolve to one deterministic payload") {
@@ -92,20 +111,22 @@ class AsOfJoinSpec extends AnyFunSuite {
     // physical layout — the match must be the field-wise greatest
     // payload struct on every layout, never partition-sort luck
     val dupes = Seq((1L, ts, "a", 10), (1L, ts, "c", 30), (1L, ts, "b", 20))
-    for (parts <- Seq(1, 3, 7); shift <- 0 until 3) {
-      val right = (dupes.drop(shift) ++ dupes.take(shift))
-        .toDF("user_id", "ts", "tag", "amount").repartition(parts)
-      val got = AsOfJoin.joinAsOfBackward(
-          left, right, Seq("user_id"), "ts", "ts", Seq("tag", "amount"))
-        .select("asof_tag", "asof_amount").as[(String, Int)].collect().toSeq
-      assert(got == Seq(("c", 30)), s"parts=$parts shift=$shift got=$got")
+    onBothExecs {
+      for (parts <- Seq(1, 3, 7); shift <- 0 until 3) {
+        val right = (dupes.drop(shift) ++ dupes.take(shift))
+          .toDF("user_id", "ts", "tag", "amount").repartition(parts)
+        val got = NativeAsOfJoin.joinAsOfBackward(
+            left, right, Seq("user_id"), "ts", "ts", Seq("tag", "amount"))
+          .select("asof_tag", "asof_amount").as[(String, Int)].collect().toSeq
+        assert(got == Seq(("c", 30)), s"parts=$parts shift=$shift got=$got")
+      }
     }
   }
 
   test("salted as-of matches unsalted on a planted hot key and spreads its tasks") {
     import spark.implicits._
-    // one user owns 90% of the left rows — the unsalted window would
-    // put all of them in a single task
+    // one user owns 90% of the left rows — the unsalted sort-merge
+    // would put all of them in a single task
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     def ts(m: Int) = new java.sql.Timestamp(base + m * 60000L)
     val left = ((1 to 900).map(i => (7L, ts(i))) ++ (1 to 100).map(i => (i.toLong + 100, ts(i))))
@@ -115,32 +136,20 @@ class AsOfJoinSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("user_id", "ts", "asof_tag").as[(Long, java.sql.Timestamp, String)]
         .collect().sortBy(r => (r._1, r._2.getTime, r._3)).toSeq
-    val plain = AsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("tag"))
-    val salted = AsOfJoin.joinAsOfBackwardSalted(
-      left, right, Seq("user_id"), "ts", "ts", Seq("tag"), saltBuckets = 8)
-    assert(canon(salted) == canon(plain))
-    // the layout is genuinely salted: the window shuffle partitions by
-    // (user_id, __salt), so the hot key no longer maps to one task
-    val p = salted.queryExecution.executedPlan.toString
-    assert(p.contains("__salt"), s"salt column missing from plan:\n$p")
+    onBothExecs {
+      val plain = NativeAsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("tag"))
+      val salted = NativeAsOfJoin.joinAsOfBackwardSalted(
+        left, right, Seq("user_id"), "ts", "ts", Seq("tag"), saltBuckets = 8)
+      assert(canon(salted) == canon(plain))
+      // the layout is genuinely salted: the sort-merge exec partitions
+      // by (user_id, __salt), so the hot key no longer maps to one task
+      val p = salted.queryExecution.executedPlan.toString
+      assert(p.contains("__salt"), s"salt column missing from plan:\n$p")
+    }
     val hotSalts = left.filter(col("user_id") === 7L)
       .withColumn("__salt",
         pmod(xxhash64(col("user_id"), col("ts")), lit(8)).cast("int"))
       .select(countDistinct(col("__salt"))).as[Long].head()
     assert(hotSalts >= 6, s"hot key only landed on $hotSalts of 8 salts")
-  }
-
-  test("as-of plan shuffles once on the key and keeps a running window") {
-    import spark.implicits._
-    val left = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0))
-      .toDF("user_id", "ts", "value")
-    val right = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 09:00:00")))
-      .toDF("user_id", "ts")
-    val plan = AsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
-      .queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1, s"expected one key shuffle, plan:\n$plan")
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      "as-of must not fall back to a product join")
   }
 }

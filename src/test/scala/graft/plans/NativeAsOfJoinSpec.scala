@@ -4,26 +4,17 @@ import graft.{Tables, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The native Catalyst as-of operator against the composed
-  * union+window form (operators/AsOfJoin): identical contract, so the
-  * two implementations must agree row for row on every input —
-  * including the adversarial tie/no-match edges and the real events
-  * table. q_w4d additionally pins it to DuckDB's native ASOF JOIN.
+/** The native Catalyst as-of operator against its test-side witness,
+  * the union+window composition [[ComposedAsOf]]: identical contract,
+  * so the two must agree row for row on the real events table, and
+  * the plan-shape, optimizer-rule and API-guard cases pin the native
+  * operator itself. q_w4 additionally pins it to DuckDB's native ASOF
+  * JOIN.
   */
 class NativeAsOfJoinSpec extends AnyFunSuite {
+  import NativeAsOfJoinSpec.withBroadcastThreshold
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
-
-  /** Run `body` with autoBroadcastJoinThreshold pinned, restoring it
-    * after — forces the sort-merge (threshold "-1") or broadcast
-    * (large threshold) physical choice deterministically.
-    */
-  private def withBroadcastThreshold[A](v: String)(body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, v)
-    try body finally spark.conf.set(key, prev)
-  }
 
   test("native as-of handles tie, no-earlier, and absent-key edges") {
     import spark.implicits._
@@ -75,7 +66,7 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
       .select("user_id", "ts", "value")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("user_id", "ts", "asof_ts").collect().map(_.toString).toSeq
-    val composed = canon(graft.operators.AsOfJoin.joinAsOfBackward(
+    val composed = canon(ComposedAsOf.joinAsOfBackward(
       p, v, Seq("user_id"), "ts", "ts", Seq("ts", "value")))
     for (threshold <- Seq("-1", "100MB")) withBroadcastThreshold(threshold) {
       val native = NativeAsOfJoin.joinAsOfBackward(
@@ -91,7 +82,7 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
     val v = ev.filter(col("event_type") === "view").select("user_id", "ts", "value")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("user_id", "ts", "asof_ts").collect().map(_.toString).toSeq
-    val composed = canon(graft.operators.AsOfJoin.joinAsOfForward(
+    val composed = canon(ComposedAsOf.joinAsOfForward(
       p, v, Seq("user_id"), "ts", "ts", Seq("ts", "value")))
     for (threshold <- Seq("-1", "100MB")) withBroadcastThreshold(threshold) {
       val native = NativeAsOfJoin.joinAsOfForward(
@@ -138,7 +129,7 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
     }
     assert(filtersAbove.isEmpty, opt.toString)
     // and the answer is the answer
-    val expect = graft.operators.AsOfJoin.joinAsOfBackward(
+    val expect = ComposedAsOf.joinAsOfBackward(
       p.filter(col("user_id") < 500), v, Seq("user_id"), "ts", "ts", Seq("ts")).count()
     assert(joined.count() == expect)
   }
@@ -195,5 +186,20 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
       NativeAsOfJoin.joinAsOfBackward(left, rightBadTs, Seq("k"), "ts", "ts", Seq("v"))
     }
     assert(e2.getMessage.contains("timestamp types must match"), e2.getMessage)
+  }
+}
+
+object NativeAsOfJoinSpec {
+
+  /** Run `body` with autoBroadcastJoinThreshold pinned, restoring it
+    * after — forces the sort-merge (threshold "-1") or broadcast
+    * (large threshold) physical choice deterministically.
+    */
+  def withBroadcastThreshold[A](v: String)(body: => A): A = {
+    val spark = TestSpark.spark
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, v)
+    try body finally spark.conf.set(key, prev)
   }
 }
