@@ -47,6 +47,32 @@ object SparkUtil {
       // count is safe; 1M groups × small buffers ≈ tens of MB per
       // task, and the sort fallback still engages past that.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
+      // Generated classes must survive from one run of a plan to the
+      // next, or every rerun pays Janino and then the JIT again. With
+      // the codegen stage id in whole-stage class names
+      // (`GeneratedIteratorForCodegenStage<N>`), identical code gets a
+      // new name whenever AQE creates stages in another order, and
+      // misses the class cache; the cache itself is sized by
+      // CodegenCacheEntries.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`). One `full_load` run of the
+    * pipeline (load, star build, commit, exports, next-day batch) uses
+    * about 400 distinct classes, so the default of 100 evicts classes
+    * before their next use: at the default, a rerun of that run
+    * recompiled more than 500 classes and each repeat of a `bi_views`
+    * dashboard round about 145. 1024 holds those working sets with room
+    * to spare. A cached class costs about 24 KB of heap, so a full
+    * cache costs about 25 MB.
+    *
+    * This is a static conf: Spark reads it once, when its
+    * `CodeGenerator` object initialises on the first compilation in
+    * the JVM. A session built after that, or a conf change at run
+    * time, leaves the cache at the size it was born with.
+    */
+  val CodegenCacheEntries = 1024
 
   /** The one scratch root for on-disk query state:
     * `<working dir>/target/tmp/<name>/<dataset key>`, where the key is

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   * `metadata_<month>.json` per month (record counts + files) and a
   * top-level `index.json` — the reference's export contract. `asOf`
   * stands in for the reference's datetime.now() so metadata is
-  * deterministic (SURVEY §7.4(3)).
+  * deterministic (SURVEY §7.4(3)), and so are the data files: for one
+  * star, every exported file holds the same rows in the same order
+  * whichever physical joins AQE picks (see `locationsTagged`).
   *
   * Scale shape: ONE partitioned write job per export type covers every
   * month (`partitionBy` on an internal `__month` tag that Spark strips
@@ -45,16 +47,31 @@ object Exports {
         "company_sk")
       .withColumn(MonthTag, col("load_month"))
 
-  /** fact ⋈ bridge ⋈ DimLocation leg (staging_to_dwh.py:696-703). */
+  /** fact ⋈ bridge ⋈ DimLocation leg (staging_to_dwh.py:696-703), with
+    * each month's rows in one partition and `location_sk` kept for the
+    * sort in [[exportMonths]].
+    *
+    * The fact ⋈ bridge join has no hint, so AQE picks sort-merge or
+    * broadcast by which stage finishes first, and the rows would land in
+    * that join's order and split. One partition per month, sorted by
+    * (fact_id, location_sk), a key that determines every output column,
+    * gives one file per month, as the reference writes, with the same
+    * bytes whichever join ran. The month tag is non-nullable so that
+    * sort also serves the partitioned write: a nullable string partition
+    * column is rewritten (empty to null) before the write, which loses
+    * the ordering and adds a sort by month alone. The `isin` filter has
+    * already dropped null months, so the `coalesce` changes no value.
+    */
   private def locationsTagged(dwh: Dwh, months: Seq[String]): DataFrame =
     dwh.fact.filter(col("load_month").isin(months: _*))
       .select(col("fact_id"), col("job_sk"), col("date_id"),
-        col("load_month").as(MonthTag))
+        coalesce(col("load_month"), lit("")).as(MonthTag))
       .join(broadcast(dwh.dimJob.select("job_sk", "job_id", "title_clean")), "job_sk")
       .join(dwh.bridge, "fact_id")
       .join(broadcast(dwh.dimLocation.select("location_sk", "province", "city", "district")),
         "location_sk")
-      .select("fact_id", "job_sk", "date_id", "job_id", "title_clean",
+      .repartition(col(MonthTag))
+      .select("fact_id", "location_sk", "job_sk", "date_id", "job_id", "title_clean",
         "province", "city", "district", MonthTag)
 
   /** Months present in the fact table (staging_to_dwh.py:669-672). */
@@ -99,7 +116,9 @@ object Exports {
     val taggedFrames: Seq[(String, DataFrame)] = Seq(
       "analytics" -> analyticsFromFacts,
       "facts" -> factsCk,
-      "locations" -> locationsTagged(dwh, months).localCheckpoint(false))
+      // sorted after the checkpoint, which does not keep an ordering
+      "locations" -> locationsTagged(dwh, months).localCheckpoint(false)
+        .sortWithinPartitions(MonthTag, "fact_id", "location_sk").drop("location_sk"))
 
     // all (type, month) record counts in one aggregation job — never a
     // per-file re-read

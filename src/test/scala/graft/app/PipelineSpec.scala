@@ -3,7 +3,7 @@ package graft.app
 import graft.TestSpark
 import graft.quality.Validator
 import graft.views.AnalyticsViews
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,34 +16,6 @@ class PipelineSpec extends AnyFunSuite {
   private val AsOf = "2026-08-12"
   private val AsOfTs = "2026-08-12 10:30:00"
 
-  private def rawFixture: DataFrame = {
-    import spark.implicits._
-    Seq(
-      // job_id, title, company, salary, location, detail, deadline, last_update, crawled
-      ("J1", "Senior Python Developer - Urgent", "công ty tnhh ABC", "15 - 20 triệu",
-        "Hà Nội", "<div>Hà Nội: Cầu Giấy</div>", "30", "2 giờ trước", "2026-08-01 09:00:00"),
-      ("J2", "Frontend React Developer / Team Lead", "CÔNG TY CỔ PHẦN XYZ VIỆT NAM",
-        "Thoả thuận", "Hồ Chí Minh & Đà Nẵng",
-        "<div>Hồ Chí Minh: 456 XYZ<br/>Đà Nẵng: 789 DEF</div>", "15", "1 ngày trước",
-        "2026-08-02 09:00:00"),
-      ("J3", "DevOps Engineer (AWS)", "fpt software", "từ 12 triệu",
-        "Hà Nội", "<div>Hà Nội: Đống Đa</div>", "30", "30 phút trước", "2026-08-03 09:00:00"),
-      ("J4", "Data Engineer", "Tech Corp", "1,000 - 2,000 USD",
-        "TP HCM", null, "1", "3 tuần trước", "2026-08-01 09:00:00"), // expires Aug 2
-      ("J5", "Backend Engineer", "Acme Ltd", "10,5 triệu",
-        "Hà Nội", null, "20", "45 giây trước", "2026-08-05 09:00:00"),
-      ("J6", "QA Engineer", "Null Island Co", "negotiable text",
-        null, null, "10", "vừa xong", "2026-08-06 09:00:00")) // unknown location
-      .toDF("job_id", "title", "company_name", "salary", "location", "location_detail",
-        "deadline", "last_update", "crawled")
-      .withColumn("crawled_at", to_timestamp(col("crawled")))
-      .withColumn("job_url", concat(lit("https://jobs/"), col("job_id")))
-      .withColumn("skills", lit("[\"Python\"]"))
-      .withColumn("logo_url", lit(null).cast("string"))
-      .withColumn("company_url", concat(lit("https://co/"), col("job_id")))
-      .withColumn("verified_employer", col("job_id").isin("J1", "J3"))
-  }
-
   /** Materialize a star the way a production day boundary does (the
     * reference persists the warehouse between daily runs): without
     * this, every assertion over a star built ON TOP of another star
@@ -55,7 +27,7 @@ class PipelineSpec extends AnyFunSuite {
       d.dimLocation.localCheckpoint(), d.dimDate.localCheckpoint(),
       d.fact.localCheckpoint(), d.bridge.localCheckpoint())
 
-  private lazy val staging = Pipeline.rawToStaging(rawFixture, AsOfTs)
+  private lazy val staging = Pipeline.rawToStaging(PipelineSpec.rawFixture(spark), AsOfTs)
   private lazy val dwh = materialized(Pipeline.stagingToDwh(staging, AsOf))
 
   test("staging carries reference-golden cleaned values") {
@@ -294,5 +266,37 @@ class PipelineSpec extends AnyFunSuite {
       Validator.invertedRange("salary_inverted", dwh.fact, "salary_min", "salary_max")))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(checks.values.forall(_ == 0L), checks.toString)
+  }
+}
+
+object PipelineSpec {
+
+  /** FIXTURES.md §1-shaped raw crawl of six jobs, one load month. */
+  def rawFixture(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      // job_id, title, company, salary, location, detail, deadline, last_update, crawled
+      ("J1", "Senior Python Developer - Urgent", "công ty tnhh ABC", "15 - 20 triệu",
+        "Hà Nội", "<div>Hà Nội: Cầu Giấy</div>", "30", "2 giờ trước", "2026-08-01 09:00:00"),
+      ("J2", "Frontend React Developer / Team Lead", "CÔNG TY CỔ PHẦN XYZ VIỆT NAM",
+        "Thoả thuận", "Hồ Chí Minh & Đà Nẵng",
+        "<div>Hồ Chí Minh: 456 XYZ<br/>Đà Nẵng: 789 DEF</div>", "15", "1 ngày trước",
+        "2026-08-02 09:00:00"),
+      ("J3", "DevOps Engineer (AWS)", "fpt software", "từ 12 triệu",
+        "Hà Nội", "<div>Hà Nội: Đống Đa</div>", "30", "30 phút trước", "2026-08-03 09:00:00"),
+      ("J4", "Data Engineer", "Tech Corp", "1,000 - 2,000 USD",
+        "TP HCM", null, "1", "3 tuần trước", "2026-08-01 09:00:00"), // expires Aug 2
+      ("J5", "Backend Engineer", "Acme Ltd", "10,5 triệu",
+        "Hà Nội", null, "20", "45 giây trước", "2026-08-05 09:00:00"),
+      ("J6", "QA Engineer", "Null Island Co", "negotiable text",
+        null, null, "10", "vừa xong", "2026-08-06 09:00:00")) // unknown location
+      .toDF("job_id", "title", "company_name", "salary", "location", "location_detail",
+        "deadline", "last_update", "crawled")
+      .withColumn("crawled_at", to_timestamp(col("crawled")))
+      .withColumn("job_url", concat(lit("https://jobs/"), col("job_id")))
+      .withColumn("skills", lit("[\"Python\"]"))
+      .withColumn("logo_url", lit(null).cast("string"))
+      .withColumn("company_url", concat(lit("https://co/"), col("job_id")))
+      .withColumn("verified_employer", col("job_id").isin("J1", "J3"))
   }
 }
