@@ -3,7 +3,6 @@ package graft.app
 import graft.dwh.{Dimensions, Facts, ScdType2, StableId}
 import graft.functions._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference pipeline's entry points (SURVEY §3), jobs-schema in,
@@ -138,6 +137,40 @@ object Pipeline {
     */
   private def pin(table: DataFrame): DataFrame = table.localCheckpoint()
 
+  /** A SCD2 dimension's input: natural key, tracked columns and the
+    * crawl time its latest-crawl survivor rule orders by.
+    */
+  private def dimInput(staging: DataFrame, key: String, tracked: Seq[String]): DataFrame =
+    staging.select((key +: tracked :+ "crawled_at").map(col): _*)
+
+  /** The fact's columns up to its id: keys, measures, load month and
+    * the bridge's location source.
+    */
+  private val FactCols: Seq[String] =
+    ("job_sk" +: "company_sk" +: "date_id" +: FactMeasureCols) ++ Seq("load_month", "location_src")
+
+  /** D9/J6: the fact rows a staging batch yields over committed dims —
+    * SKs resolved, ×5-day grain, projected to `FactCols`. The initial
+    * build's dedup and the daily merge both receive this frame, so an
+    * exact crawl tie hashes the same payload in both modes.
+    */
+  private def factInput(
+      staging: DataFrame, dimJob: DataFrame, dimCompany: DataFrame, asOf: String): DataFrame = {
+    val resolved = Facts.resolveSks(
+      staging.select(("job_id" +: "company_name_standardized" +: FactMeasureCols) ++
+        Seq("load_month", "location_src") map col: _*),
+      dimJob, dimCompany, "job_id", "company_name_standardized")
+    Facts.explodeDailyGrain(resolved, asOf).select(FactCols.map(col): _*)
+  }
+
+  /** D8: the DimDate window of a run, asOf−30d .. asOf+270d
+    * (etl_main.py:460-484).
+    */
+  private def dimDateWindow(asOf: String): (String, String) = {
+    val day = java.time.LocalDate.parse(asOf)
+    (day.minusDays(30).toString, day.plusDays(270).toString)
+  }
+
   /** E3: staging → full star-schema snapshot (initial build; the daily
     * incremental mode is `incrementalBatch` below).
     */
@@ -155,12 +188,9 @@ object Pipeline {
     // Dimensions.prepareDimAssigning); SKs are dense in natural-key
     // order with no single-partition window stage anywhere
     val dimJob = pin(Dimensions.prepareDimAssigning(
-      staging.select(("job_id" +: JobTrackedCols :+ "crawled_at").map(col): _*),
-      "job_id", "job_sk", 10000L, asOf))
-
+      dimInput(staging, "job_id", JobTrackedCols), "job_id", "job_sk", 10000L, asOf))
     val dimCompany = pin(Dimensions.prepareDimAssigning(
-      staging.select(
-        ("company_name_standardized" +: CompanyTrackedCols :+ "crawled_at").map(col): _*),
+      dimInput(staging, "company_name_standardized", CompanyTrackedCols),
       "company_name_standardized", "company_sk", 10000L, asOf))
 
     // Unknown row seeded before bridge resolution (SURVEY §7.4(6))
@@ -174,23 +204,16 @@ object Pipeline {
         Dimensions.prepareDimLocation(staging, "location_src")),
       Seq(col("city"), col("province"), col("district")), "location_sk", 10000L)
 
-    // -------- DimDate (D8): asOf−30d .. asOf+270d (etl_main.py:460-484)
-    val dimDate = TimeFns.dimDateRange(spark,
-      java.time.LocalDate.parse(asOf).minusDays(30).toString,
-      java.time.LocalDate.parse(asOf).plusDays(270).toString)
+    // -------- DimDate (D8)
+    val (dateLo, dateHi) = dimDateWindow(asOf)
+    val dimDate = TimeFns.dimDateRange(spark, dateLo, dateHi)
 
-    // -------- facts (D9/D10): SK resolution → ×5-day explode → dedup.
-    // Measure set mirrors FactJobPostingDaily (schema_dwh.sql:52-70).
-    val resolved = Facts.resolveSks(
-      staging.select(("job_id" +: "company_name_standardized" +: FactMeasureCols) ++
-        Seq("load_month", "location_src") map col: _*),
-      dimJob, dimCompany, "job_id", "company_name_standardized")
-    // dedup and id assignment fused into one range exchange (see
-    // Facts.dedupAssigningIds); survivors follow the latest-crawl rule
+    // -------- facts (D9/D10): dedup and id assignment fused into one
+    // range exchange (see Facts.dedupAssigningIds); survivors follow
+    // the latest-crawl rule
     val fact = pin(Facts.dedupAssigningIds(
-        Facts.explodeDailyGrain(resolved, asOf), "fact_id", 10000L)
-      .select(("fact_id" +: "job_sk" +: "company_sk" +: "date_id" +: FactMeasureCols) ++
-        Seq("load_month", "location_src") map col: _*))
+        factInput(staging, dimJob, dimCompany, asOf), "fact_id", 10000L)
+      .select(("fact_id" +: FactCols).map(col): _*))
 
     // -------- bridge (D11)
     val bridge = Facts.buildBridge(
@@ -229,48 +252,22 @@ object Pipeline {
 
   /** `incrementalBatch` over staging already pinned by `pinStaging`. */
   private[graft] def applyStaging(prev: Dwh, staging: DataFrame, asOf: String): Dwh = {
-    val spark = staging.sparkSession
-
-    // within-batch dedup per natural key: the reference's upsert loop
-    // processes rows in crawl order, so for conflicting duplicates the
-    // LAST crawl wins — order by crawled_at desc (ordering by the
-    // partition key itself would tie every row and leave the survivor
-    // to partition layout); exact-timestamp ties break on a
-    // deterministic payload hash, same rule as prepareDimAssigning
-    def dedupBy(df: DataFrame, key: String): DataFrame = {
-      val tie = Facts.tieHash(df, Seq(key, "crawled_at"))
-      val w = Window.partitionBy(key).orderBy(col("crawled_at").desc, tie)
-      df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .drop("__rn", "crawled_at")
-    }
+    // within-batch dedup per natural key, same survivor rule as the
+    // initial build (Facts.keepLatest): the latest crawl wins
+    def latest(key: String, tracked: Seq[String]): DataFrame =
+      Facts.keepLatest(dimInput(staging, key, tracked), Seq(key)).drop("crawled_at")
 
     val dimJob = pin(ScdType2.applyBatch(
-      prev.dimJob,
-      dedupBy(staging.select(("job_id" +: JobTrackedCols :+ "crawled_at").map(col): _*),
-        "job_id"),
-      "job_id", JobTrackedCols, "job_sk", asOf))
+      prev.dimJob, latest("job_id", JobTrackedCols), "job_id", JobTrackedCols, "job_sk", asOf))
     val dimCompany = pin(ScdType2.applyBatch(
-      prev.dimCompany,
-      dedupBy(staging.select(
-        ("company_name_standardized" +: CompanyTrackedCols :+ "crawled_at").map(col): _*),
-        "company_name_standardized"),
+      prev.dimCompany, latest("company_name_standardized", CompanyTrackedCols),
       "company_name_standardized", CompanyTrackedCols, "company_sk", asOf))
     val dimLocation = Dimensions.appendNewLocationsKeepSk(
       prev.dimLocation, Dimensions.prepareDimLocation(staging, "location_src"))
+    val (dateLo, dateHi) = dimDateWindow(asOf)
+    val dimDate = Dimensions.fillDimDate(prev.dimDate, dateLo, dateHi)
 
-    val day = java.time.LocalDate.parse(asOf)
-    val freshDates = TimeFns.dimDateRange(spark,
-      day.minusDays(30).toString, day.plusDays(270).toString)
-      .join(prev.dimDate.select("date_id"), Seq("date_id"), "left_anti")
-    val dimDate = prev.dimDate.unionByName(freshDates)
-
-    val resolved = Facts.resolveSks(
-      staging.select(("job_id" +: "company_name_standardized" +: FactMeasureCols) ++
-        Seq("load_month", "location_src") map col: _*),
-      dimJob, dimCompany, "job_id", "company_name_standardized")
-    val incoming = Facts.explodeDailyGrain(resolved, asOf)
-      .select(("job_sk" +: "company_sk" +: "date_id" +: FactMeasureCols) ++
-        Seq("load_month", "location_src") map col: _*)
+    val incoming = factInput(staging, dimJob, dimCompany, asOf)
     val prevFact =
       if (prev.fact.columns.contains("location_src")) prev.fact
       else prev.fact.withColumn("location_src", lit(null).cast("string"))

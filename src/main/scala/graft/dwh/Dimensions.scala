@@ -1,70 +1,35 @@
 package graft.dwh
 
-import graft.functions.LocationFns
+import graft.functions.{LocationFns, TimeFns}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dimension preparation (SURVEY D1-D3, D7, D8).
   *
   * Mirrors /root/reference/src/processing/data_prepare.py:29-430 and
-  * src/etl/dimension_handler.py:262-321 as set-based dataflow: project +
-  * fallback-fill + SCD stamp + natural-key dedup; DimLocation explodes
-  * the parsed location pairs and is insert-only with a null-safe
-  * composite key and a seeded 'Unknown' row.
+  * src/etl/dimension_handler.py:262-321 as set-based dataflow:
+  * latest-crawl natural-key dedup + SCD stamp + SK numbering in one
+  * exchange; DimLocation explodes the parsed location pairs and is
+  * insert-only with a null-safe composite key and a seeded 'Unknown'
+  * row; DimDate is an idempotent generated-range fill.
   */
 object Dimensions {
 
-  /** D1/D2 generic prep: project, fill fallbacks, dedup on the natural
-    * key (deterministic keep-first by tiebreak), stamp SCD columns.
+  /** D1/D2 prep fused with surrogate-key assignment: dedup on the
+    * natural key, stamp the SCD columns, number the survivors. ONE
+    * range exchange on the natural key serves the dedup window, the SCD
+    * stamp and the dense SK numbering (`Facts.keepLatest` with
+    * `arrange`; `StableId.assignPrearranged` numbers the same
+    * checkpointed partitions in place), where a dedup-then-assign
+    * formulation pays a hash shuffle for the dedup AND a range shuffle
+    * for the ids — per dimension, over a frame the size of staging.
     *
-    * The dedup is a `min_by` hash aggregation rather than a
-    * row_number window: same keep-first-by-tiebreak semantics, but
-    * with map-side partial aggregation and no sort — one cheaper
-    * shuffle per dimension build, which matters when the "dimension"
-    * is per-job (≈ row count of staging).
-    */
-  def prepareDim(
-      staging: DataFrame, naturalKey: String, tiebreak: String,
-      asOfDate: String): DataFrame = {
-    val payload = staging.columns.filterNot(_ == naturalKey).toSeq
-    // order by a STRUCT of (tiebreak, payload hash), not the bare
-    // tiebreak: min_by ignores rows whose ordering value is NULL (a key
-    // whose rows all carry a NULL tiebreak would surface an all-NULL
-    // payload), and bare-tiebreak ties would leave the survivor to
-    // shuffle order — the struct is never NULL and the hash makes ties
-    // deterministic (same rule as prepareDimArranged / dedupBy)
-    val ord = struct(col(tiebreak),
-      Facts.tieHash(staging, Seq(naturalKey, tiebreak)))
-    staging
-      .groupBy(col(naturalKey))
-      .agg(min_by(struct(payload.map(col): _*), ord).as("__p"))
-      .select(col(naturalKey) +: payload.map(c => col(s"__p.$c").as(c)): _*)
-      .withColumn(ScdType2.EffectiveCol, lit(asOfDate).cast("date"))
-      .withColumn(ScdType2.ExpiryCol, lit(null).cast("date"))
-      .withColumn(ScdType2.CurrentCol, lit(true))
-  }
-
-  /** D1/D2 prep FUSED with surrogate-key assignment for the pipeline
-    * build: ONE range exchange on the natural key serves the dedup
-    * window (RangePartitioning on the key satisfies the window's
-    * ClusteredDistribution and the within-partition sort already
-    * matches its required ordering, so Catalyst inserts no second
-    * exchange or sort), the SCD stamp, and the dense SK numbering
-    * (`StableId.assignPrearranged` numbers the same checkpointed
-    * partitions in place — the trick `Facts.dedupAssigningIds` uses).
-    * The separate prepareDim-then-assign formulation paid a hash
-    * shuffle for the min_by dedup AND a range shuffle for the ids —
-    * per dimension, over a frame the size of staging.
-    *
-    * Survivor rule: LATEST crawl wins (`crawled_at` desc), matching the
-    * reference's crawl-order upsert (its per-row loop processes crawls
-    * in order, so the last write per key sticks) and incrementalBatch's
-    * dedupBy — the initial build and the daily mode share one rule
-    * (round-5 advice: the old min_by-on-natural-key tiebreak tied every
-    * row and left the survivor to partition layout). Exact-timestamp
-    * ties break on a deterministic payload hash so re-runs cannot flip
-    * survivors. SKs are `base+1..base+N` in natural-key order.
+    * Survivor rule: `Facts.keepLatest`, the LATEST crawl wins, matching
+    * the reference's crawl-order upsert (its per-row loop processes
+    * crawls in order, so the last write per key sticks) and the daily
+    * batch's dim inputs. Exact-timestamp ties break on a deterministic
+    * payload hash so re-runs cannot flip survivors. SKs are
+    * `base+1..base+N` in natural-key order; `crawled_at` is consumed.
     */
   def prepareDimAssigning(
       staging: DataFrame, naturalKey: String, skCol: String, base: Long,
@@ -78,13 +43,7 @@ object Dimensions {
   private[graft] def prepareDimArranged(
       staging: DataFrame, naturalKey: String, asOfDate: String): DataFrame = {
     val payload = staging.columns.filterNot(c => c == naturalKey || c == "crawled_at").toSeq
-    val tieHash = Facts.tieHash(staging, Seq(naturalKey, "crawled_at"))
-    val arranged = staging
-      .repartitionByRange(col(naturalKey))
-      .sortWithinPartitions(col(naturalKey), col("crawled_at").desc, tieHash)
-    val w = Window.partitionBy(naturalKey).orderBy(col("crawled_at").desc, tieHash)
-    arranged
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    Facts.keepLatest(staging, Seq(naturalKey), arrange = true)
       .select(col(naturalKey) +: payload.map(col): _*)
       .withColumn(ScdType2.EffectiveCol, lit(asOfDate).cast("date"))
       .withColumn(ScdType2.ExpiryCol, lit(null).cast("date"))
@@ -108,16 +67,9 @@ object Dimensions {
     * `province IS NULL AND ? IS NULL OR province = ?` by hand — `<=>`
     * is the set-based equivalent).
     */
-  def appendNewLocations(dimLocation: DataFrame, candidates: DataFrame): DataFrame = {
-    val cand = candidates.select("province", "city", "district")
-    val existing = dimLocation.select(
-      col("province").as("__p"), col("city").as("__c"), col("district").as("__d"))
-    val fresh = cand.join(existing,
-      col("province") <=> col("__p") && col("city") <=> col("__c") &&
-        col("district") <=> col("__d"),
-      "left_anti")
-    dimLocation.select("province", "city", "district").unionByName(fresh)
-  }
+  def appendNewLocations(dimLocation: DataFrame, candidates: DataFrame): DataFrame =
+    dimLocation.select("province", "city", "district")
+      .unionByName(newLocations(dimLocation, candidates))
 
   /** D7 incremental form: append candidate locations not already in the
     * dimension, KEEPING existing surrogate keys and numbering fresh rows
@@ -125,32 +77,40 @@ object Dimensions {
     * dimension is insert-only, so existing SKs never move).
     */
   def appendNewLocationsKeepSk(dimLocation: DataFrame, candidates: DataFrame): DataFrame = {
-    val cand = candidates.select("province", "city", "district")
-    val existing = dimLocation.select(
-      col("province").as("__p"), col("city").as("__c"), col("district").as("__d"))
-    val fresh = cand.join(existing,
-      col("province") <=> col("__p") && col("city") <=> col("__c") &&
-        col("district") <=> col("__d"),
-      "left_anti")
     val freshWithSk = StableId.assignAfterMax(
-      fresh, Seq(col("city"), col("province"), col("district")), "location_sk",
+      newLocations(dimLocation, candidates),
+      Seq(col("city"), col("province"), col("district")), "location_sk",
       dimLocation, "location_sk", 9999L)
     dimLocation.select("location_sk", "province", "city", "district")
       .unionByName(freshWithSk.select("location_sk", "province", "city", "district"))
   }
 
-  /** D8: idempotent DimDate fill — generate [start, end] and append only
-    * dates absent from the existing dimension (anti-join replaces the
-    * reference's per-day exists probe, etl_main.py:460-484).
+  /** Candidate locations absent from the dimension: a null-safe
+    * anti-join on the full (province, city, district) key.
     */
-  def fillDimDate(existingDates: DataFrame, start: String, end: String): DataFrame = {
+  private def newLocations(dimLocation: DataFrame, candidates: DataFrame): DataFrame = {
+    val existing = dimLocation.select(
+      col("province").as("__p"), col("city").as("__c"), col("district").as("__d"))
+    candidates.select("province", "city", "district").join(existing,
+      col("province") <=> col("__p") && col("city") <=> col("__c") &&
+        col("district") <=> col("__d"),
+      "left_anti")
+  }
+
+  /** D8: idempotent DimDate fill — generate the DimDate rows of
+    * [start, end] (`TimeFns.dimDateRange`, projected to the existing
+    * frame's columns) and append only dates absent from the existing
+    * dimension (anti-join replaces the reference's per-day exists
+    * probe, etl_main.py:460-484).
+    */
+  def fillDimDate(existing: DataFrame, start: String, end: String): DataFrame = {
     // validate driver-side: a malformed bound would cast to NULL and
     // the sequence would silently generate nothing
     val (s0, e0) = (java.time.LocalDate.parse(start).toString,
       java.time.LocalDate.parse(end).toString)
-    val range = existingDates.sparkSession.range(1)
-      .select(explode(sequence(lit(s0).cast("date"), lit(e0).cast("date"))).as("date_id"))
-    val fresh = range.join(existingDates.select("date_id"), Seq("date_id"), "left_anti")
-    existingDates.select("date_id").unionByName(fresh)
+    val fresh = TimeFns.dimDateRange(existing.sparkSession, s0, e0)
+      .select(existing.columns.map(col).toSeq: _*)
+      .join(existing.select("date_id"), Seq("date_id"), "left_anti")
+    existing.unionByName(fresh)
   }
 }

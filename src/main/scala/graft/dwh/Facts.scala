@@ -42,106 +42,66 @@ object Facts {
       explode(sequence(lit(d).cast("date"), date_add(lit(d).cast("date"), 4))))
   }
 
-  /** W1/A4/D12: keep exactly one fact per (job_sk, date_id) — lowest
-    * fact_id survives, matching cleanup_duplicate_fact_records's
-    * MIN(fact_id) survivor rule (fact_handler.py:566-615).
-    */
-  def dedupFacts(facts: DataFrame): DataFrame = {
-    val w = Window.partitionBy("job_sk", "date_id").orderBy(col("fact_id"))
-    facts.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** Fused W1 dedup + fact_id assignment for the initial build: ONE
-    * range exchange on (job_sk, date_id) serves both the keep-latest
-    * window (RangePartitioning on the keys satisfies the window's
-    * ClusteredDistribution, and the within-partition sort already
-    * matches its required ordering, so Catalyst inserts no second
-    * exchange or sort) and the dense id numbering
-    * (StableId.assignPrearranged numbers the checkpointed partitions
-    * in place). The separate dedup-then-assign formulation shuffled
-    * and sorted the exploded fact twice; survivors and ids are
-    * identical (keys are unique after dedup, so the id order is the
-    * same (job_sk, date_id) total order).
-    */
   /** Deterministic final dedup tiebreak: two same-key rows with an
     * IDENTICAL crawled_at but different measures (a crawler retry that
     * re-parsed differently) must not leave the survivor to shuffle
     * fetch order — hash the full payload so exact-timestamp ties are
-    * stable across runs (round-5 advice). Shared by every dedup site
-    * (fact dedup, dim prep, the daily batch's dedupBy) so the survivor
-    * rule cannot silently diverge between the initial build and the
-    * incremental mode.
+    * stable across runs.
     */
   private[graft] def tieHash(df: DataFrame, excluded: Seq[String]): org.apache.spark.sql.Column =
     xxhash64(struct(df.columns.filterNot(excluded.contains).map(col).toSeq: _*))
 
-  def dedupAssigningIds(exploded: DataFrame, idCol: String, base: Long): DataFrame = {
-    val tie = tieHash(exploded, Seq("job_sk", "date_id", "crawled_at", "load_month"))
-    val arranged = exploded
-      .repartitionByRange(col("job_sk"), col("date_id"))
-      .sortWithinPartitions(
-        col("job_sk"), col("date_id"), col("crawled_at").desc, col("load_month").desc, tie)
-    val w = Window.partitionBy("job_sk", "date_id")
-      .orderBy(col("crawled_at").desc, col("load_month").desc, tie)
-    val deduped = arranged
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    StableId.assignPrearranged(deduped, idCol, base)
-  }
-
-  /** D10/S9/W3: last-wins merge of incoming fact rows onto existing
-    * ones. The UPSERT kept the latest measures but preserved the
-    * original fact_id and load_month (fact_handler.py:237-255
-    * deliberately does not update load_month) — so the merge coalesces
-    * identity columns from the existing side and takes measures from
-    * the incoming side.
+  /** The survivor rule of every latest-crawl dedup (fact dedup, fact
+    * merge, dim prep, the daily batch's dim inputs): per `keys`, keep
+    * the row with the latest `crawled_at`, then the latest `load_month`
+    * where the frame carries one; `tieHash` over the rest of the row
+    * breaks exact ties. The reference's upsert loop processes crawls in
+    * order, so the last write per key sticks; one rule here means the
+    * initial build and the incremental mode cannot silently diverge.
+    *
+    * `arrange` range-partitions and sorts on (keys, rule) first: that
+    * one exchange satisfies the window's ClusteredDistribution and the
+    * within-partition sort already matches its ordering, so Catalyst
+    * adds no second exchange or sort, and `StableId.assignPrearranged`
+    * can number the surviving partitions in place.
     */
-  def mergeFacts(
-      existing: DataFrame, incoming: DataFrame,
-      measureCols: Seq[String]): DataFrame = {
-    val keys = Seq("job_sk", "date_id")
-    val e = existing.select(
-      keys.map(col) ++
-        Seq(col("fact_id").as("__e_fact_id"), col("load_month").as("__e_load_month")) ++
-        measureCols.map(c => col(c).as(s"__e_$c")): _*)
-    // presence flag, not coalesce: the reference's ON CONFLICT DO
-    // UPDATE overwrites each measure with the incoming value INCLUDING
-    // NULL (fact_handler.py:237-255) — `coalesce(incoming, existing)`
-    // would silently resurrect the old value whenever the new crawl
-    // nulled a field out (e.g. a salary removed from the posting)
-    // defensive within-batch dedup: duplicate incoming keys would fan
-    // the full-outer join out and emit several rows sharing one
-    // fact_id; callers with an ordering (crawl time) dedup upstream,
-    // residual duplicates collapse deterministically by payload hash
-    val incomingDeduped = {
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(tieHash(incoming, keys))
-      incoming.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    }
-    val merged = incomingDeduped.withColumn("__inc", lit(true)).join(e, keys, "full")
-    val out = merged
-      .withColumn("fact_id", coalesce(col("__e_fact_id"), col("fact_id")))
-      .withColumn("load_month", coalesce(col("__e_load_month"), col("load_month")))
-    // rows only in existing keep their measures; matched rows take
-    // incoming's value even when it is NULL
-    val withMeasures = measureCols.foldLeft(out) { (df, c) =>
-      df.withColumn(c, when(col("__inc").isNotNull, col(c)).otherwise(col(s"__e_$c")))
-    }
-    withMeasures.drop(
-      Seq("__inc", "__e_fact_id", "__e_load_month") ++ measureCols.map(c => s"__e_$c"): _*)
+  private[graft] def keepLatest(
+      df: DataFrame, keys: Seq[String], arrange: Boolean = false): DataFrame = {
+    require(df.columns.contains("crawled_at"), "keepLatest orders by crawled_at")
+    val crawl = Seq("crawled_at", "load_month").filter(df.columns.contains)
+    val order = crawl.map(c => col(c).desc) :+ tieHash(df, keys ++ crawl)
+    val in =
+      if (!arrange) df
+      else df.repartitionByRange(keys.map(col): _*).sortWithinPartitions(keys.map(col) ++ order: _*)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+    in.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** D10/S9 incremental form: merge an incoming batch WITHOUT fact_ids
-    * onto the existing fact table. Matched (job_sk, date_id) keys keep
-    * the existing fact_id, load_month AND every `preserveCols` column
-    * (the reference's DO UPDATE list deliberately excludes company_sk,
-    * fact_handler.py:245-254) and take the incoming value — including
-    * NULL — for every `carryCols` column; brand-new keys get dense ids
-    * continuing after max(existing fact_id), in (job_sk, date_id)
-    * order, via the distributed StableId assigner. Incoming is deduped
-    * last-wins within the batch first: the per-key UPSERT loop runs in
-    * crawl order, so the latest `crawled_at` wins (load_month desc
-    * breaks exact-timestamp ties).
+  /** Fused W1 dedup + fact_id assignment for the initial build: ONE
+    * range exchange on (job_sk, date_id) serves both the keep-latest
+    * window and the dense id numbering (`keepLatest` with `arrange`;
+    * StableId.assignPrearranged numbers the checkpointed partitions in
+    * place). Survivors and ids equal those of a dedup followed by a
+    * separate numbering, which would shuffle and sort the exploded fact
+    * twice (keys are unique after dedup, so the id order is the same
+    * (job_sk, date_id) total order).
+    */
+  def dedupAssigningIds(exploded: DataFrame, idCol: String, base: Long): DataFrame =
+    StableId.assignPrearranged(
+      keepLatest(exploded, Seq("job_sk", "date_id"), arrange = true), idCol, base)
+
+  /** D10/S9/W3: last-wins merge of an incoming batch WITHOUT fact_ids
+    * onto the existing fact table (the UPSERT of fact_handler.py:
+    * 237-255). Matched (job_sk, date_id) keys keep the existing
+    * fact_id, load_month (the UPSERT deliberately does not update it)
+    * AND every `preserveCols` column (the reference's DO UPDATE list
+    * deliberately excludes company_sk, fact_handler.py:245-254) and
+    * take the incoming value — including NULL — for every `carryCols`
+    * column; brand-new keys get dense ids continuing after
+    * max(existing fact_id), in (job_sk, date_id) order, via the
+    * distributed StableId assigner. Incoming is deduped within the
+    * batch first by `keepLatest`: the per-key UPSERT loop runs in crawl
+    * order, so the latest crawl wins.
     *
     * `incoming` carries (job_sk, date_id, carryCols ++ preserveCols);
     * `existing` carries (fact_id, job_sk, date_id, load_month,
@@ -152,12 +112,7 @@ object Facts {
       existing: DataFrame, incoming: DataFrame, carryCols: Seq[String],
       preserveCols: Seq[String] = Seq("company_sk")): DataFrame = {
     val keys = Seq("job_sk", "date_id")
-    val dedup = {
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(col("crawled_at").desc, col("load_month").desc,
-          tieHash(incoming, keys ++ Seq("crawled_at", "load_month")))
-      incoming.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    }
+    val dedup = keepLatest(incoming, keys)
     val e = existing.select(
       keys.map(col) ++
         Seq(col("fact_id").as("__e_fact_id"), col("load_month").as("__e_load_month")) ++
@@ -165,7 +120,9 @@ object Facts {
     val merged = dedup.withColumn("__inc", lit(true)).join(e, keys, "full")
       .withColumn("load_month", coalesce(col("__e_load_month"), col("load_month")))
     // carry: incoming wins on matched rows even when NULL (presence
-    // flag, same DO UPDATE semantics as mergeFacts above)
+    // flag: the reference's ON CONFLICT DO UPDATE overwrites each
+    // measure with the incoming value INCLUDING NULL, where a coalesce
+    // would resurrect the old value of a field the new crawl nulled out)
     val withCarry = carryCols.foldLeft(merged) { (df, c) =>
       df.withColumn(c, when(col("__inc").isNotNull, col(c)).otherwise(col(s"__e_$c")))
     }

@@ -73,7 +73,7 @@ object ScdType2 {
     // is_current row per day, breaking the idempotency contract above;
     // reject it like the reference's PK constraint does. Duplicate keys
     // within one batch would double-insert current versions the same
-    // way — callers with an ordering dedup first (Pipeline.dedupBy);
+    // way — callers with an ordering dedup first (Facts.keepLatest);
     // residual duplicates collapse deterministically by payload hash.
     val keyed = incoming.filter(col(naturalKey).isNotNull)
     val incomingDeduped = {

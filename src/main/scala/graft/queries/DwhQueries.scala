@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.dwh.{Dimensions, Facts, ScdType2}
+import graft.operators.TopK
 import graft.quality.Validator
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -192,11 +193,15 @@ object DwhQueries {
              |      FROM customer) t
              |WHERE rn = 1 ORDER BY company_name""".stripMargin),
       (s, dir) =>
-        Dimensions.prepareDim(
+        // the pipeline's prep keeps the latest crawl per key: a crawl
+        // time that falls as c_custkey rises makes the oracle's
+        // survivor, the lowest c_custkey per name prefix, the latest
+        Dimensions.prepareDimAssigning(
           Tables.customer(s, dir)
             .select(substring(col("c_name"), 1, 16).as("company_name"),
-              col("c_custkey").as("src_key"), col("c_mktsegment").as("segment")),
-          "company_name", "src_key", AsOf)
+              col("c_custkey").as("src_key"), col("c_mktsegment").as("segment"),
+              timestamp_seconds(lit(2000000000L) - col("c_custkey")).as("crawled_at")),
+          "company_name", "company_sk", 0L, AsOf)
           .select(col("company_name"), col("src_key"), col("segment"),
             date_format(col(ScdType2.EffectiveCol), "yyyy-MM-dd").as("effective_date"),
             col(ScdType2.CurrentCol).as("is_current"))
@@ -381,12 +386,15 @@ object DwhQueries {
           .select(col("o_orderkey").as("job_sk"), to_date(col("o_orderdate")).as("date_id"),
             (col("o_orderkey") * 10).as("fact_id"), lit("2026-07").as("load_month"),
             col("o_totalprice").as("salary"))
+        // incoming carries no fact ids (the merge assigns them) and one
+        // crawl time: its keys are unique, so no crawl tie is broken
         val incoming = o.filter(col("o_orderkey") % 3 === 0)
           .select(col("o_orderkey").as("job_sk"), to_date(col("o_orderdate")).as("date_id"),
-            (col("o_orderkey") * 10 + 1).as("fact_id"), lit("2026-08").as("load_month"),
+            lit("2026-08").as("load_month"),
             when(col("o_orderkey") % 9 === 0, lit(null).cast("decimal(15,2)"))
-              .otherwise(col("o_totalprice") + 1000).as("salary"))
-        Facts.mergeFacts(existing, incoming, Seq("salary"))
+              .otherwise(col("o_totalprice") + 1000).as("salary"),
+            lit(AsOf).cast("timestamp").as("crawled_at"))
+        Facts.mergeFactsAssigning(existing, incoming, Seq("salary"), preserveCols = Nil)
           .groupBy("load_month")
           .agg(count(lit(1)).as("n"),
             (count(lit(1)) - count(col("salary"))).cast("long").as("n_null_salary"),
@@ -488,7 +496,8 @@ object DwhQueries {
           col("o_orderkey").as("job_sk"), to_date(col("o_orderdate")).as("date_id"),
           (col("o_orderkey") * 10 + idOffset).as("fact_id"))
         val facts = shape(0).unionByName(shape(1).filter(col("job_sk") % 5 === 0))
-        val cleaned = Facts.dedupFacts(facts)
+        // MIN(fact_id) survives (fact_handler.py:566-615)
+        val cleaned = TopK.groupedTopK(facts, Seq("job_sk", "date_id"), Seq(col("fact_id")), 1)
         val before = facts.agg(count(lit(1)).as("n"))
         val after = cleaned.agg(count(lit(1)).as("n"))
         after.select(lit("after").as("stage"), col("n"))

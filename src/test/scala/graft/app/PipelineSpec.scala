@@ -279,6 +279,37 @@ class PipelineSpec extends AnyFunSuite {
     assert(si == Set(16.0), s"initial-build fact measures should be latest crawl, got $si")
   }
 
+  test("an exact crawl tie keeps one fact survivor in the initial build and the batch") {
+    import spark.implicits._
+    // eight new jobs, each crawled twice at one instant with different
+    // salaries: crawled_at and load_month tie, so the payload hash picks
+    // the survivor. The jobs post for J3's company with J3's company
+    // columns, so its SK is the same in both stars below.
+    val tied = (1 to 8).flatMap { i =>
+      Seq(s"từ ${10 + i} triệu", s"từ ${20 + i} triệu").map(salary =>
+        (s"T$i", "DevOps Engineer (AWS)", "fpt software", salary, "Hà Nội",
+          "<div>Hà Nội: Đống Đa</div>", "30", "30 phút trước", "2026-08-03 09:00:00"))
+    }.toDF("job_id", "title", "company_name", "salary", "location", "location_detail",
+        "deadline", "last_update", "crawled")
+      .withColumn("crawled_at", to_timestamp(col("crawled")))
+      .withColumn("job_url", concat(lit("https://jobs/"), col("job_id")))
+      .withColumn("skills", lit("[\"Python\"]"))
+      .withColumn("logo_url", lit(null).cast("string"))
+      .withColumn("company_url", lit("https://co/J3"))
+      .withColumn("verified_employer", lit(true))
+    val st = Pipeline.rawToStaging(tied, AsOfTs)
+    def survivors(d: Pipeline.Dwh): Set[(String, java.sql.Date, Double)] =
+      d.fact.join(d.dimJob.filter(col("is_current")).select("job_sk", "job_id"), "job_sk")
+        .filter(col("job_id").startsWith("T"))
+        .select("job_id", "date_id", "salary_min").collect()
+        .map(r => (r.getString(0), r.getDate(1), r.getDouble(2))).toSet
+    val initial = survivors(Pipeline.stagingToDwh(staging.unionByName(st), AsOf))
+    val batch = survivors(Pipeline.incrementalBatch(dwh, st, AsOf))
+    assert(initial.size == 40, initial)
+    assert(initial == batch,
+      s"the initial build kept ${initial -- batch}, the batch ${batch -- initial}")
+  }
+
   test("streaming micro-batches through StreamingStar equal the batch incremental path") {
     import org.apache.spark.sql.DataFrame
     def same(a: DataFrame, b: DataFrame, what: String): Unit =

@@ -4,10 +4,10 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Dimension prep dedup semantics (D1/D2): the min_by survivor rule
-  * must hold under NULL tiebreaks (min_by skips NULL-ordered rows — a
-  * bare-column ordering would surface an all-NULL payload for a key
-  * whose rows all carry NULL) and break exact ties deterministically.
+/** Dimension prep dedup semantics (D1/D2): the latest-crawl survivor
+  * rule must surface a real payload for a key whose crawl times are all
+  * NULL and break exact crawl-time ties deterministically, whatever the
+  * input order.
   */
 class DimensionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -19,7 +19,7 @@ class DimensionsSpec extends AnyFunSuite {
       ("ACME", null.asInstanceOf[java.sql.Timestamp], "Software"),
       ("GLOBEX", java.sql.Timestamp.valueOf("2026-08-01 00:00:00"), "Retail"))
       .toDF("company_name", "crawled_at", "industry")
-    val dim = Dimensions.prepareDim(staging, "company_name", "crawled_at", "2026-08-12")
+    val dim = Dimensions.prepareDimAssigning(staging, "company_name", "company_sk", 0L, "2026-08-12")
     assert(dim.count() == 2)
     val acme = dim.filter($"company_name" === "ACME").collect().head
     assert(acme.getAs[String]("industry") != null) // not the all-NULL struct
@@ -31,11 +31,11 @@ class DimensionsSpec extends AnyFunSuite {
     val staging = Seq(
       ("ACME", ts, "Tech"), ("ACME", ts, "Software"), ("ACME", ts, "Hardware"))
       .toDF("company_name", "crawled_at", "industry")
-    val a = Dimensions.prepareDim(staging, "company_name", "crawled_at", "2026-08-12")
+    val a = Dimensions.prepareDimAssigning(staging, "company_name", "company_sk", 0L, "2026-08-12")
     // shuffle the input order — the survivor must not depend on it
-    val b = Dimensions.prepareDim(
-      staging.orderBy(desc("industry")).repartition(3), "company_name",
-      "crawled_at", "2026-08-12")
+    val b = Dimensions.prepareDimAssigning(
+      staging.orderBy(desc("industry")).repartition(3), "company_name", "company_sk", 0L,
+      "2026-08-12")
     assert(a.count() == 1)
     assert(a.except(b).isEmpty && b.except(a).isEmpty)
   }

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Fact upsert statistics (S9): key-grain insert/update split, row-grain
   * success rate, and the empty-batch boundary the reference reports as
-  * 0/0 (fact_handler.py:186-196).
+  * 0/0 (fact_handler.py:186-196); the merge's within-batch dedup; the
+  * daily grain's date check.
   */
 class FactsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -41,20 +42,23 @@ class FactsSpec extends AnyFunSuite {
   test("mergeFacts collapses duplicate incoming keys to one row per key") {
     val existing = Seq((100L, 1L, "d1", "2026-01", 50.0))
       .toDF("fact_id", "job_sk", "date_id", "load_month", "salary")
-    // duplicate (1, d1) incoming rows: without the within-batch dedup
-    // the full-outer join fans out and two rows share fact_id 100
+    // duplicate (1, d1) incoming rows tied on crawl time: without the
+    // within-batch dedup the full-outer join fans out and two rows
+    // share fact_id 100
+    val crawl = java.sql.Timestamp.valueOf("2026-08-01 09:00:00")
     val incoming = Seq(
-      (999L, 1L, "d1", "2026-08", 60.0),
-      (998L, 1L, "d1", "2026-08", 70.0),
-      (997L, 2L, "d1", "2026-08", 80.0))
-      .toDF("fact_id", "job_sk", "date_id", "load_month", "salary")
-    val out = Facts.mergeFacts(existing, incoming, Seq("salary"))
+      (1L, "d1", "2026-08", 60.0, crawl),
+      (1L, "d1", "2026-08", 70.0, crawl),
+      (2L, "d1", "2026-08", 80.0, crawl))
+      .toDF("job_sk", "date_id", "load_month", "salary", "crawled_at")
+    def merge() = Facts.mergeFactsAssigning(existing, incoming, Seq("salary"), preserveCols = Nil)
+    val out = merge()
     assert(out.count() == 2)
     val matched = out.filter($"job_sk" === 1L).collect()
     assert(matched.length == 1)
     assert(matched.head.getAs[Long]("fact_id") == 100L) // existing id preserved
     // deterministic: the survivor is the same on a second run
-    val again = Facts.mergeFacts(existing, incoming, Seq("salary"))
+    val again = merge()
     assert(out.except(again).isEmpty && again.except(out).isEmpty)
   }
 

@@ -130,21 +130,11 @@ class PlanSpec extends AnyFunSuite {
     // correctness property here, not a preference. Assert on the
     // pre-checkpoint stage (the checkpoint truncates lineage): range
     // arrange + window + filter must plan ONE exchange, a range one.
-    import org.apache.spark.sql.expressions.Window
     val exploded = Tables.orders(spark, sf).select(
       col("o_orderkey").as("job_sk"), to_date(col("o_orderdate")).as("date_id"),
       col("o_orderdate").cast("timestamp").as("crawled_at"),
       date_format(col("o_orderdate"), "yyyy-MM").as("load_month"))
-    val arranged = exploded
-      .repartitionByRange(col("job_sk"), col("date_id"))
-      .sortWithinPartitions(
-        col("job_sk"), col("date_id"), col("crawled_at").desc, col("load_month").desc)
-    val w = Window.partitionBy("job_sk", "date_id")
-      .orderBy(col("crawled_at").desc, col("load_month").desc)
-    val deduped = arranged
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val p = plan(deduped)
+    val p = plan(graft.dwh.Facts.keepLatest(exploded, Seq("job_sk", "date_id"), arrange = true))
     val nExchanges = "(?i)exchange".r.findAllIn(p).size
     assert(nExchanges == 1, s"expected one exchange, got $nExchanges:\n$p")
     assert(p.contains("rangepartitioning"), p)
