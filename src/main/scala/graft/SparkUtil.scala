@@ -212,9 +212,11 @@ object SparkUtil {
   def local(cpus: Int = envCpus.getOrElse(DefaultCpus)): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // The StableId offsets pass runs a cumulative-sum window over a
-    // ≤#partitions-row frame — intentionally unpartitioned. Silence the
-    // per-use warning; data-side window properties are enforced by
+    // Some windows are intentionally unpartitioned, over reduced frames:
+    // Corpus.packShards' token offsets (≤ #partitions rows), the
+    // running count over distinct values in Ranks.doubledAvgRank, and the
+    // queries' row_numbers over aggregated or bounded results. Silence
+    // the per-use warning; data-side window properties are enforced by
     // PlanSpec/StableIdSpec instead of log eyeballing.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",

@@ -125,15 +125,17 @@ object Pipeline {
   }
 
   /** Commit a star table that another star table is planned over: the
-    * SK dims (the fact's SK resolution) and the fact (the bridge).
-    * Eager: the table is computed and its lineage cut here, so every
-    * reader is planned over a `LogicalRDD` leaf of finished blocks
-    * instead of re-planning the table's lineage, and a star kept across
-    * batches (`StreamingStar`) holds no lineage that grows per batch.
-    * DimLocation has one reader in the star, the bridge, and is left to
-    * the caller with DimDate and the bridge: a caller that reads only
-    * the fact never commits them (DimLocation's numbering still runs
-    * its range shuffle while the star is built, see `StableId`).
+    * SK dims (the fact's SK resolution), the fact (the bridge) and, in
+    * the daily batch, DimLocation (the bridge). Eager: the table is
+    * computed and its lineage cut here, so every reader is planned over
+    * a `LogicalRDD` leaf of finished blocks instead of re-planning the
+    * table's lineage, and a star kept across batches (`StreamingStar`)
+    * holds no lineage that grows per batch. DimDate and the bridge are
+    * read by no other star table and are left to the caller, so a
+    * caller that reads only the fact never commits them. The initial
+    * build leaves DimLocation uncommitted too: its numbering already
+    * stored its rows (see `StableId`), so a reader scans those blocks
+    * and projects the ids.
     */
   private def pin(table: DataFrame): DataFrame = table.localCheckpoint()
 
@@ -172,7 +174,9 @@ object Pipeline {
   }
 
   /** E3: staging → full star-schema snapshot (initial build; the daily
-    * incremental mode is `incrementalBatch` below).
+    * incremental mode is `incrementalBatch` below). Commits DimJob,
+    * DimCompany and the fact (see `pin`); DimLocation, DimDate and the
+    * bridge come back lazy.
     */
   def stagingToDwh(staging0: DataFrame, asOf: String): Dwh = {
     val spark = staging0.sparkSession
@@ -236,16 +240,19 @@ object Pipeline {
     *    DO UPDATE of fact_handler.py:237-255); new keys get dense ids
     *    after max(fact_id);
     *  - bridge rebuild for touched facts only (the reference deletes
-    *    and re-inserts bridges per touched fact, fact_handler.py:443-539).
+    *    and re-inserts bridges per touched fact, fact_handler.py:443-539):
+    *    the merge flags the rows whose key the batch carried
+    *    (`Facts.InBatchCol`), and the bridge rebuilds those.
     *
     * Idempotent: re-applying the same batch returns an identical star
-    * (asserted in PipelineSpec). Order: the SCD2 dims are committed
-    * first (see `pin`), the fact resolves SKs over them and is
-    * committed, the bridge reads the committed fact; DimLocation,
-    * DimDate and the bridge come back lazy, so a caller that reads only
-    * the fact never commits them. Scale shape: dims ride broadcasts,
-    * the fact merge shuffles once on (job_sk, date_id), untouched
-    * bridge rows move only through one anti-join.
+    * (asserted in PipelineSpec). Order: the SCD2 dims and DimLocation
+    * are committed first (see `pin`), the fact resolves SKs over the
+    * dims and is committed with its flag, the bridge reads the
+    * committed fact and DimLocation; DimDate and the bridge come back
+    * lazy, so a caller that reads only the fact never commits them.
+    * Scale shape: dims ride broadcasts, the fact merge shuffles once on
+    * (job_sk, date_id), untouched bridge rows move only through one
+    * anti-join.
     */
   def incrementalBatch(prev: Dwh, staging0: DataFrame, asOf: String): Dwh =
     applyStaging(prev, pinStaging(staging0), asOf)
@@ -262,8 +269,8 @@ object Pipeline {
     val dimCompany = pin(ScdType2.applyBatch(
       prev.dimCompany, latest("company_name_standardized", CompanyTrackedCols),
       "company_name_standardized", CompanyTrackedCols, "company_sk", asOf))
-    val dimLocation = Dimensions.appendNewLocationsKeepSk(
-      prev.dimLocation, Dimensions.prepareDimLocation(staging, "location_src"))
+    val dimLocation = pin(Dimensions.appendNewLocationsKeepSk(
+      prev.dimLocation, Dimensions.prepareDimLocation(staging, "location_src")))
     val (dateLo, dateHi) = dimDateWindow(asOf)
     val dimDate = Dimensions.fillDimDate(prev.dimDate, dateLo, dateHi)
 
@@ -277,13 +284,13 @@ object Pipeline {
     val fact = pin(Facts.mergeFactsAssigning(prevFact, incoming,
       FactMeasureCols :+ "location_src"))
 
-    // bridge: rebuild exactly the touched facts, keep the rest
-    val touched = fact.join(incoming.select("job_sk", "date_id").distinct(),
-      Seq("job_sk", "date_id"), "left_semi")
+    // bridge: rebuild exactly the facts the batch touched, keep the rest
+    val touched = fact.filter(col(Facts.InBatchCol))
     val untouched = prev.bridge.join(touched.select("fact_id"), Seq("fact_id"), "left_anti")
     val bridge = untouched.unionByName(Facts.buildBridge(
       touched.select(col("fact_id"), col("location_src").as("location")), dimLocation))
 
-    Dwh(dimJob, dimCompany, dimLocation, dimDate, fact.drop("location_src"), bridge)
+    Dwh(dimJob, dimCompany, dimLocation, dimDate, fact.drop("location_src", Facts.InBatchCol),
+      bridge)
   }
 }

@@ -90,6 +90,9 @@ object Facts {
     StableId.assignPrearranged(
       keepLatest(exploded, Seq("job_sk", "date_id"), arrange = true), idCol, base)
 
+  /** The flag column `mergeFactsAssigning` adds (see there). */
+  val InBatchCol = "in_batch"
+
   /** D10/S9/W3: last-wins merge of an incoming batch WITHOUT fact_ids
     * onto the existing fact table (the UPSERT of fact_handler.py:
     * 237-255). Matched (job_sk, date_id) keys keep the existing
@@ -107,6 +110,12 @@ object Facts {
     * `existing` carries (fact_id, job_sk, date_id, load_month,
     * carryCols ++ preserveCols). carryCols = measures + passthroughs
     * (e.g. the location source for bridge rebuild).
+    *
+    * The result carries one more column, `InBatchCol`: true on the rows
+    * whose key the incoming batch carried (matched or brand-new), false
+    * on rows only `existing` held. A caller that rebuilds what the
+    * batch touched (the daily bridge) filters on it instead of planning
+    * `incoming` a second time; a caller that stores the fact drops it.
     */
   def mergeFactsAssigning(
       existing: DataFrame, incoming: DataFrame, carryCols: Seq[String],
@@ -134,7 +143,7 @@ object Facts {
     // lazy checkpoint: cleaned feeds both the matched branch and the
     // fresh branch (via assignAfterMax) — without the pin the full
     // outer merge join and its dedup window execute twice per action
-    val cleaned = withPreserve.drop(
+    val cleaned = withPreserve.withColumn(InBatchCol, col("__inc").isNotNull).drop(
       Seq("__inc", "__e_load_month") ++ (carryCols ++ preserveCols).map(c => s"__e_$c"): _*)
       .localCheckpoint(false)
     val matched = cleaned.filter(col("__e_fact_id").isNotNull)

@@ -1,7 +1,7 @@
 package graft.dwh
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Distributed stable surrogate-key assignment (SURVEY §7.4(1)).
@@ -18,17 +18,21 @@ import org.apache.spark.sql.functions._
   *      materializes the partitions, so the sampled range boundaries
   *      and the row order are PINNED: every downstream consumer reads
   *      the same physical rows. (This is the fix for the
-  *      exchange-reuse hazard: without it, the offsets aggregate and
-  *      the data side could re-sample range boundaries independently
-  *      and disagree on partition ids.)
-  *   2. per-partition row counts → cumulative offsets. One row per
-  *      partition; the cumulative-sum window runs over that tiny frame,
-  *      not the data.
-  *   3. id = base + offset(partition) + position-within-partition. The
-  *      position comes from `monotonically_increasing_id()` (partition
-  *      id in the upper bits, record index in the lower 33) on the
-  *      checkpointed, sorted partitions — no window over the data, so
-  *      no second exchange.
+  *      exchange-reuse hazard: without it, the offsets and the data
+  *      side could re-sample range boundaries independently and
+  *      disagree on partition ids.)
+  *   2. one job over the pinned partitions stores their blocks and
+  *      returns each partition's row count to the driver; the
+  *      exclusive running sum of those counts is each partition's
+  *      offset.
+  *   3. id = base + offset(partition) + position-within-partition, with
+  *      the offsets as an array literal indexed by
+  *      `spark_partition_id()`. The position comes from
+  *      `monotonically_increasing_id()` (partition id in the upper
+  *      bits, record index in the lower 33) on the checkpointed, sorted
+  *      partitions — no aggregate, window, join or second exchange in
+  *      any reader's plan: a reader scans the stored blocks and
+  *      projects.
   *
   * Because partitions are contiguous ranges of the same total order,
   * the result equals the global row_number regardless of where the
@@ -41,56 +45,48 @@ import org.apache.spark.sql.functions._
   * Scale note: `localCheckpoint` persists to executor memory/disk —
   * the same storage cost as the shuffle it pins. On a cluster with
   * preemptible executors, swap for a reliable `checkpoint()` dir; the
-  * id semantics are unchanged.
+  * id semantics are unchanged. The driver receives one long per
+  * partition, and the offsets literal in every reader's plan holds
+  * the same ≤ #partitions longs (a few KB at thousands of partitions).
   */
 object StableId {
 
-  private val PidCol = "__sid_pid"
-  private val MidCol = "__sid_mid"
-  private val OffCol = "__sid_offset"
-
-  private def requireClean(df: DataFrame, idCol: String): Unit = {
-    require(!df.columns.contains(idCol),
-      s"StableId.assign: input already has a '$idCol' column")
-    Seq(PidCol, MidCol, OffCol).foreach(h =>
-      require(!df.columns.contains(h), s"StableId.assign: reserved helper column '$h' present"))
-  }
-
   /** Number a frame whose partitions are contiguous ranges of the id
-    * order with rows sorted inside each: checkpoint (lazy — pins
-    * boundaries + row order at first materialization; every consumer,
-    * including the offsets aggregate riding the broadcast, reads the
-    * same physical rows), then base + cumulative-offset + local
-    * position.
+    * order with rows sorted inside each: checkpoint it, count each
+    * pinned partition in the one job that stores its blocks, then
+    * base + offset + local position.
     */
   private def numberArranged(arranged: DataFrame, idCol: String, base: Long): DataFrame = {
-    val parted = arranged
-      .localCheckpoint(false)
-      .withColumn(PidCol, spark_partition_id())
-      .withColumn(MidCol, monotonically_increasing_id())
-    // offsets: ≤ #partitions rows — the Window.orderBy here is over that
-    // tiny frame, not the data
-    val offsets = parted.groupBy(col(PidCol)).agg(count(lit(1)).as("__n"))
-      .withColumn(OffCol,
-        coalesce(sum(col("__n")).over(Window.orderBy(col(PidCol))) - col("__n"), lit(0L)))
-      .select(col(PidCol), col(OffCol))
-    parted.join(broadcast(offsets), Seq(PidCol))
-      .withColumn(idCol,
-        // monotonically_increasing_id = (pid << 33) + 0-based record
-        // index within the partition; subtract the pid part to recover
-        // the local position in the checkpointed sort order
-        (lit(base) + col(OffCol) +
-          (col(MidCol) - shiftleft(col(PidCol).cast("long"), 33)) + lit(1L))
-          .cast("long"))
-      .drop(PidCol, MidCol, OffCol)
+    require(!arranged.columns.contains(idCol),
+      s"StableId.assign: input already has a '$idCol' column")
+    val pinned = arranged.localCheckpoint(false)
+    val offsets = partitionCounts(pinned).scanLeft(0L)(_ + _).init
+    val pid = spark_partition_id()
+    pinned.withColumn(idCol,
+      // monotonically_increasing_id = (pid << 33) + 0-based record
+      // index within the partition; subtract the pid part to recover
+      // the local position in the checkpointed sort order
+      (lit(base) + typedLit(offsets).getItem(pid) +
+        (monotonically_increasing_id() - shiftleft(pid.cast("long"), 33)) + lit(1L))
+        .cast("long"))
   }
 
-  def assign(df: DataFrame, orderCols: Seq[Column], idCol: String, base: Long): DataFrame = {
-    requireClean(df, idCol)
+  /** Row count of each partition of a `localCheckpoint(false)` frame,
+    * by partition index. The job computes the pinned partitions, so the
+    * checkpoint's blocks are stored by it and readers scan them.
+    */
+  private def partitionCounts(pinned: DataFrame): Array[Long] =
+    pinned.queryExecution.analyzed match {
+      case r: LogicalRDD =>
+        r.rdd.sparkContext.runJob(r.rdd, (rows: Iterator[_]) => rows.foldLeft(0L)((n, _) => n + 1))
+      case other =>
+        throw new IllegalStateException(s"StableId: expected a checkpointed frame, got\n$other")
+    }
+
+  def assign(df: DataFrame, orderCols: Seq[Column], idCol: String, base: Long): DataFrame =
     numberArranged(
       df.repartitionByRange(orderCols: _*).sortWithinPartitions(orderCols: _*),
       idCol, base)
-  }
 
   /** `assign` for inputs that are ALREADY range-partitioned and sorted
     * in the id order (e.g. a dedup window that just shuffled on the
@@ -101,10 +97,8 @@ object StableId {
     * `sortWithinPartitions` upstream, with only order-preserving
     * narrow ops — filter/project — in between).
     */
-  def assignPrearranged(df: DataFrame, idCol: String, base: Long): DataFrame = {
-    requireClean(df, idCol)
+  def assignPrearranged(df: DataFrame, idCol: String, base: Long): DataFrame =
     numberArranged(df, idCol, base)
-  }
 
   /** Assign ids continuing after `max(existing(existingIdCol))` (or
     * `defaultBase` when `existing` is empty) — the incremental-batch

@@ -172,12 +172,13 @@ object Corpus {
     * independent of cluster layout, reproducible across runs, the
     * property that makes training resumable.
     *
-    * Scale shape: the global prefix sum is the StableId pattern — one
-    * range shuffle into contiguous hash-order partitions (pinned by a
-    * lazy localCheckpoint so the boundaries cannot re-sample), a
-    * per-partition token-total aggregate whose cumulative window runs
-    * over ≤ #partitions rows, and one partition-preserving hash
-    * exchange for the within-partition running sum. Nothing windows
+    * Scale shape: one range shuffle into contiguous hash-order
+    * partitions (pinned by a lazy localCheckpoint so the boundaries
+    * cannot re-sample), a per-partition token-total aggregate whose
+    * cumulative window runs over ≤ #partitions rows (the offsets sum
+    * tokens, not rows, so `StableId`'s row-count offsets do not apply),
+    * and one partition-preserving hash exchange for the
+    * within-partition running sum. Nothing windows
     * over the full data in one task. (A zero-extra-shuffle variant —
     * greedy per-partition packing with pid-prefixed shard ids — is the
     * production choice when global determinism doesn't matter; this

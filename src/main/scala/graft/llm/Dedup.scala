@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.dwh.StableId
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -531,10 +532,10 @@ object Dedup {
     * adjacently.
     *
     * Scale shape: the global order is a range exchange, NOT a
-    * single-partition window — global positions are per-partition
-    * row_numbers plus a broadcast running offset over per-partition
-    * counts (the same two-pass zip Corpus.packShards uses for token
-    * offsets). Neighbor pairing is an equi-join on the dense position
+    * single-partition window — global positions are the dense
+    * `StableId` numbering (partition offset from the per-partition row
+    * counts plus the position inside the sorted partition). Neighbor
+    * pairing is an equi-join on the dense position
     * (each row emits `window − 1` probe positions), and the exact
     * Jaccard verify evaluates on the joined pair rows only — never on
     * the full corpus cross product.
@@ -547,22 +548,11 @@ object Dedup {
       col(idCol).as("__id"),
       substring(normalizeText(col(textCol)), 1, keyLen).as("__k"),
       shingles(col(textCol), shingleN).as("__sh"))
-    val arranged = base
-      .repartitionByRange(col("__k"), col("__id"))
-      .sortWithinPartitions(col("__k"), col("__id"))
-      .localCheckpoint(false) // pins partition ids for the offset zip
-      .withColumn("__pid", spark_partition_id())
-    // ≤ one row per partition: the running-offset window is tiny by
-    // construction (same argument as Corpus.packShards)
-    val offs = arranged.groupBy("__pid").agg(count(lit(1)).as("__n"))
-      .withColumn("__off",
-        coalesce(sum("__n").over(Window.orderBy("__pid")) - col("__n"), lit(0L)))
-      .select("__pid", "__off")
-    val ranked = arranged.join(broadcast(offs), Seq("__pid"))
-      .withColumn("rn", col("__off") +
-        row_number().over(Window.partitionBy("__pid").orderBy(col("__k"), col("__id"))))
+    // dense global positions 1..N in (key, id) order; the numbering
+    // pins its partitions, so both sides of the neighbor join read the
+    // same stored rows
+    val ranked = StableId.assign(base, Seq(col("__k"), col("__id")), "rn", 0L)
       .select(col("__id"), col("__sh"), col("rn"))
-      .localCheckpoint(false) // consumed by both sides of the neighbor join
     val probes = ranked.select(col("__id").as("__ida"), col("__sh").as("__sha"),
       explode(sequence(col("rn") + 1, col("rn") + (window - 1))).as("rn"))
     probes

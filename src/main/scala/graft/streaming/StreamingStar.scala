@@ -13,9 +13,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * streaming implementation that could drift.
   *
   * State = the star itself. `incrementalBatch` commits the tables
-  * another table is planned over (the SCD2 dims and the fact, see
-  * `Pipeline.pin`) as it builds them; `applyBatch` commits the three
-  * it leaves lazy (DimLocation, DimDate, the bridge) and checkpoints
+  * another table is planned over (the SCD2 dims, DimLocation and the
+  * fact, see `Pipeline.pin`) as it builds them; `applyBatch` commits
+  * the two it leaves lazy (DimDate and the bridge) and checkpoints
   * nothing twice. Every commit is eager, so each state table is a
   * `LogicalRDD` over checkpointed blocks and the lineage does not grow
   * across batches — the streaming analogue of the reference's per-run
@@ -33,10 +33,11 @@ final class StreamingStar(initial: Pipeline.Dwh, asOfForBatch: Long => String) {
   /** The star as of the last completed micro-batch. */
   def dwh: Pipeline.Dwh = current
 
-  /** Commit what `incrementalBatch` left unpinned. */
+  /** Commit what `incrementalBatch` left unpinned: DimDate and the
+    * bridge.
+    */
   private def materialize(d: Pipeline.Dwh): Pipeline.Dwh =
-    d.copy(dimLocation = d.dimLocation.localCheckpoint(),
-      dimDate = d.dimDate.localCheckpoint(), bridge = d.bridge.localCheckpoint())
+    d.copy(dimDate = d.dimDate.localCheckpoint(), bridge = d.bridge.localCheckpoint())
 
   /** Apply one micro-batch (also usable directly in tests). Emptiness
     * is tested on the pinned staging, which the batch then reads, so

@@ -8,7 +8,8 @@ import graft.TestSpark
 import graft.quality.Validator
 import graft.views.AnalyticsViews
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
+import org.apache.spark.sql.catalyst.expressions.Sequence
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Project, Window}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
@@ -135,7 +136,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     val dimJob = exchanges("dimJob", prev.dimJob.columns.toSet)
     val dimCompany = exchanges("dimCompany", prev.dimCompany.columns.toSet)
-    val fact = exchanges("fact", PipelineSpec.FactCols)
+    val fact = exchanges("fact", PipelineSpec.BatchFactCols)
     // the measured counts: each dim's SCD2 routing runs once, the fact
     // reads the committed dims
     assert(dimJob <= 7 && dimCompany <= 5 && fact <= 5,
@@ -149,27 +150,43 @@ class PipelineSpec extends AnyFunSuite {
     assert(run.error.isEmpty, run)
     val jobs = run.jobs
     info(s"jobs of one applyBatch: $jobs")
-    // measured 60 (96 before the dependency-order build); the slack
-    // covers a join-strategy flip or two
-    assert(jobs <= 65, s"one applyBatch ran $jobs jobs")
+    // measured 49 (60 with StableId's offsets aggregate, window and
+    // broadcast in every numbering, 96 before the dependency-order
+    // build); the slack covers a join-strategy flip or two
+    assert(jobs <= 54, s"one applyBatch ran $jobs jobs")
   }
 
   test("the bridge reads the committed fact, not the merge or dedup that built it") {
-    def check(bridge: DataFrame, what: String): Unit = {
+    def committed(df: DataFrame): Seq[LogicalRDD] =
+      df.queryExecution.analyzed.collectLeaves().collect { case r: LogicalRDD => r }
+    def check(bridge: DataFrame, what: String, factCols: Set[String]): Unit = {
       val plan = bridge.queryExecution.analyzed
-      val committed = plan.collectLeaves().collect {
-        case r: LogicalRDD => r.output.map(_.name).toSet
-      }
-      assert(committed.contains(PipelineSpec.FactCols),
+      assert(committed(bridge).exists(_.output.map(_.name).toSet == factCols),
         s"$what bridge reads no committed fact:\n$plan")
-      // DimLocation stays unpinned; its numbering keeps one unkeyed
-      // window over the per-partition counts. The dims' dedup and the
-      // fact's dedup/merge windows are keyed.
-      val windows = plan.collect { case w: Window if w.partitionSpec.nonEmpty => w }
-      assert(windows.isEmpty, s"$what bridge plans ${windows.size} keyed windows:\n$plan")
+      // no dedup, merge or numbering window of an upstream table is
+      // planned again (ids come from StableId's offsets literal)
+      val windows = plan.collect { case w: Window => w }
+      assert(windows.isEmpty, s"$what bridge plans ${windows.size} windows:\n$plan")
+      // nor the fact's ×5-day grain: the touched facts come from the
+      // committed fact's batch flag, not from the incoming frame
+      val dateGrain = plan.collect {
+        case g: Generate if g.generator.children.exists(_.isInstanceOf[Sequence]) => g
+      }
+      assert(dateGrain.isEmpty, s"$what bridge plans the date-grain explode:\n$plan")
     }
-    check(Pipeline.stagingToDwh(staging, AsOf).bridge, "initial")
-    check(Pipeline.incrementalBatch(dwh, staging2, AsOf2).bridge, "incremental")
+    check(Pipeline.stagingToDwh(staging, AsOf).bridge, "initial", PipelineSpec.FactCols)
+    val d = Pipeline.incrementalBatch(dwh, staging2, AsOf2)
+    check(d.bridge, "incremental", PipelineSpec.BatchFactCols)
+    // the batch's DimLocation is committed, and the bridge reads that
+    // commit, not the previous dimension under the append's plan
+    val dimLocation = d.dimLocation.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.id
+      case other => fail(s"the batch's DimLocation is not committed:\n$other")
+    }
+    val locationLeaves = committed(d.bridge)
+      .filter(_.output.map(_.name).toSet == dwh.dimLocation.columns.toSet).map(_.rdd.id)
+    assert(locationLeaves.toSet == Set(dimLocation),
+      s"incremental bridge reads DimLocation leaves $locationLeaves, not commit $dimLocation")
   }
 
   test("StreamingStar state is committed and checkpointed: no lineage grows across batches") {
@@ -373,12 +390,17 @@ class PipelineSpec extends AnyFunSuite {
 
 object PipelineSpec {
 
-  /** The fact's columns as committed inside the pipeline, before the
-    * bridge's location source is dropped.
+  /** The fact's columns as committed inside the initial build, before
+    * the bridge's location source is dropped.
     */
   val FactCols: Set[String] =
     (("fact_id" +: "job_sk" +: "company_sk" +: "date_id" +: Pipeline.FactMeasureCols) ++
       Seq("load_month", "location_src")).toSet
+
+  /** The fact's columns as committed inside a daily batch: the merge's
+    * batch flag rides along with the location source.
+    */
+  val BatchFactCols: Set[String] = FactCols + graft.dwh.Facts.InBatchCol
 
   /** Exchanges (shuffle, broadcast, reused) in an executed plan,
     * looking inside AQE's query stages.

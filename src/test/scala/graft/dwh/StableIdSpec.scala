@@ -1,6 +1,11 @@
 package graft.dwh
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,26 +54,48 @@ class StableIdSpec extends AnyFunSuite {
 
   test("no shuffle or window over the data in the result plan") {
     val df = spark.range(0, 100).select(col("id").as("k"))
-    val plan = StableId.assign(df, Seq(col("k")), "sk", 0L)
-      .queryExecution.executedPlan.toString
-    // data side is a checkpointed scan + broadcast join; ids come from
-    // monotonically_increasing_id over the pinned sort order, so there
-    // is no window (and no second exchange) over the data — the only
-    // window is the cumulative sum over the per-partition counts frame
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
-    assert(!plan.contains("rangepartitioning"), // the one data shuffle already ran, pinned
-      s"unpinned range exchange left in result plan:\n$plan")
+    val plan = StableId.assign(df, Seq(col("k")), "sk", 0L).queryExecution.executedPlan
+    // the one data shuffle already ran and is pinned; ids come from the
+    // partition offsets literal plus monotonically_increasing_id over the
+    // pinned sort order, so a reader scans the stored blocks and projects
+    object Plans extends AdaptiveSparkPlanHelper
+    val joins = Plans.collect(plan) { case j: BaseJoinExec => j }
+    val windows = Plans.collect(plan) { case w: WindowExec => w }
+    val exchanges = Plans.collect(plan) { case e: Exchange => e }
+    assert(joins.isEmpty && windows.isEmpty && exchanges.isEmpty, plan.toString)
   }
 
-  test("helper/id column collisions fail loudly") {
+  test("a pre-arranged numbering runs one job after its checkpoint") {
+    val arranged = spark.range(0, 2000).select((col("id") * 7 % 1999).as("k"))
+      .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))
+      .localCheckpoint() // the caller's range shuffle, already run
+    val harness = new graft.Harness(spark)
+    val numbering = harness.run(StableId.assignPrearranged(arranged, "sk", 0L))
+    assert(numbering.error.isEmpty, numbering)
+    assert(numbering.jobs === 1L, s"numbering ran ${numbering.jobs} jobs")
+  }
+
+  test("edge layouts: one partition, more partitions than rows, empty input") {
+    def check(df: DataFrame, what: String): Unit = {
+      val expected = df.withColumn("sk",
+        (row_number().over(Window.orderBy(col("k"))) + 10L).cast("long"))
+      val actual = StableId.assign(df, Seq(col("k")), "sk", 10L)
+      assert(expected.exceptAll(actual).isEmpty && actual.exceptAll(expected).isEmpty, what)
+    }
+    check(spark.range(0, 500, 1, 1).select((col("id") * 3 % 499).as("k"))
+      .repartitionByRange(1, col("k")), "all rows in one partition")
+    check(spark.range(0, 3, 1, 3).select((col("id") * 5).as("k")).repartition(8),
+      "more partitions than rows")
+    val ids = StableId.assign(spark.range(0, 3).select(col("id").as("k")).repartition(8),
+      Seq(col("k")), "sk", 0L).select("sk").as[Long].collect().sorted
+    assert(ids === Array(1L, 2L, 3L))
+    check(spark.range(0).select(col("id").as("k")), "empty input")
+  }
+
+  test("an id column collision fails loudly") {
     val df = spark.range(0, 10).select(col("id").as("k"), lit(1L).as("sk"))
     intercept[IllegalArgumentException] {
       StableId.assign(df, Seq(col("k")), "sk", 0L)
-    }
-    val df2 = spark.range(0, 10).select(col("id").as("k"), lit(1).as("__sid_pid"))
-    intercept[IllegalArgumentException] {
-      StableId.assign(df2, Seq(col("k")), "sk", 0L)
     }
   }
 

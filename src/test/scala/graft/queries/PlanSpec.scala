@@ -180,7 +180,7 @@ class PlanSpec extends AnyFunSuite {
       val p = plan(df)
       assert(!p.toLowerCase.contains("exchange"), s"$name shuffles:\n$p")
     }
-    // the shard packer's data path is the StableId shape: the arranged
+    // the shard packer's data path is one range shuffle: the arranged
     // stage (pre-checkpoint — the lazy checkpoint hides it downstream)
     // shuffles the corpus exactly once, by range
     val pa = plan(graft.llm.Corpus.packArranged(docs, "doc_id", "text"))
