@@ -196,18 +196,16 @@ object SparkUtil {
     * commits `spark.sql.shuffle.partitions` (= cores) state-store
     * deltas per micro-batch. These streams carry KB-scale bounded
     * state; 32-way state files are pure per-batch I/O floor (guide
-    * §2.2: fewer, larger partitions). Parameterised for scale:
-    * SPARK_GRAFT_STREAM_SHUFFLE overrides (a production deployment
-    * sizes this to state volume / aggregate write throughput, e.g.
-    * 2-3x executor cores when per-batch state is GBs); the local
-    * default min(8, cores) stays fixed across the driver's core
-    * counts (8 at both 32 and 16 cores), keeping the bench's scaling
-    * measurement comparable. Partitioning never changes results:
+    * §2.2: fewer, larger partitions). The count is min(8, cores):
+    * the same on every bench host of 8 or more cores (8 at both 32
+    * and 16), keeping the bench's scaling measurement comparable. A
+    * production deployment would size it to state volume / aggregate
+    * write throughput instead (e.g. 2-3x executor cores when
+    * per-batch state is GBs). Partitioning never changes results:
     * every stateful operator here is key-hashed and order-insensitive.
     */
   def streamShufflePartitions(spark: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(_.toInt).getOrElse(
-      math.min(8, spark.sparkContext.defaultParallelism))
+    math.min(8, spark.sparkContext.defaultParallelism)
 
   def local(cpus: Int = envCpus.getOrElse(DefaultCpus)): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()

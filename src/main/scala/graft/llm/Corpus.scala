@@ -234,15 +234,36 @@ object Corpus {
   }
 
   /** Schema of the manifest JSON written next to the shard files —
-    * manifest READS must pass it explicitly: schema inference over
+    * [[readManifest]] passes it explicitly: schema inference over
     * JSON is a full extra Spark job per read, pure floor at any scale.
     */
-  val ManifestSchema: org.apache.spark.sql.types.StructType =
+  private val ManifestSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(
       Seq("shard_id", "n_docs", "shard_tokens", "id_sum", "start_min",
         "end_max").map(n =>
         org.apache.spark.sql.types.StructField(n,
           org.apache.spark.sql.types.LongType)))
+
+  /** The manifest beside `outDir` (see [[writeShardFilesLedger]]), its
+    * fields renamed `__m_*` so it joins a files ledger on shard_id
+    * for [[manifestOk]].
+    */
+  def readManifest(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(ManifestSchema).json(outDir + "_manifest")
+      .select(col("shard_id"), col("n_docs").as("__m_items"),
+        col("shard_tokens").as("__m_tokens"), col("id_sum").as("__m_ids"),
+        col("start_min").as("__m_start"), col("end_max").as("__m_end"))
+
+  /** Over a [[ledgerOfFiles]] row joined to [[readManifest]]: every
+    * ledger field equals its manifest field; false when either side
+    * is missing.
+    */
+  def manifestOk: Column = coalesce(
+    col("n_items") === col("__m_items") &&
+      col("shard_tokens") === col("__m_tokens") &&
+      col("id_sum") === col("__m_ids") &&
+      col("start_min") === col("__m_start") &&
+      col("end_max") === col("__m_end"), lit(false))
 
   /** [[writeShardFiles]] variant returning the files-recomputed
     * LEDGER instead of the row-level readback: one aggregation pass
@@ -318,21 +339,11 @@ object Corpus {
     * flow).
     */
   def detectDamagedShards(spark: SparkSession, outDir: String,
-      ck: String): DataFrame = {
-    val files = ledgerOfFiles(spark, outDir, ck, tolerateCorrupt = true)
-    val man = spark.read.schema(ManifestSchema).json(outDir + "_manifest")
-      .select(col("shard_id"), col("n_docs").as("__m_items"),
-        col("shard_tokens").as("__m_tokens"), col("id_sum").as("__m_ids"),
-        col("start_min").as("__m_start"), col("end_max").as("__m_end"))
-    files.join(man, Seq("shard_id"), "full_outer")
-      .filter(not(coalesce(
-        col("n_items") === col("__m_items") &&
-          col("shard_tokens") === col("__m_tokens") &&
-          col("id_sum") === col("__m_ids") &&
-          col("start_min") === col("__m_start") &&
-          col("end_max") === col("__m_end"), lit(false))))
+      ck: String): DataFrame =
+    ledgerOfFiles(spark, outDir, ck, tolerateCorrupt = true)
+      .join(readManifest(spark, outDir), Seq("shard_id"), "full_outer")
+      .filter(not(manifestOk))
       .select("shard_id")
-  }
 
   /** Targeted shard rebuild — the repair half of the manifest check:
     * re-derive the deterministic packing plan from the source corpus

@@ -352,6 +352,23 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
+  /** The pair set behind every dedup decision (q_l14, q_l15, q_l50,
+    * q_l76): MinHash near-dup pairs (3-shingle Jaccard ≥ 0.8, 128
+    * perms in 32 bands) ∪ exact-duplicate pairs (same
+    * [[exactFingerprint]], a fingerprint self-join), distinct, as
+    * (id_a, id_b) with id_a < id_b.
+    */
+  def nearOrExactPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val near = minhashNearDupPairs(docs, idCol, textCol,
+        shingleN = 3, perms = 128, bands = 32, threshold = 0.8)
+      .select("id_a", "id_b")
+    val fp = docs.select(col(idCol), exactFingerprint(col(textCol)).as("f"))
+    val exact = fp.as("a")
+      .join(fp.as("b"), col("a.f") === col("b.f") && col(s"a.$idCol") < col(s"b.$idCol"))
+      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+    near.unionByName(exact).distinct()
+  }
+
   /** INCREMENTAL near-dup: which docs of an incoming `batch` duplicate
     * something already in `corpus` (the realistic production shape — a
     * daily crawl lands against a 100 TB corpus, and re-deduping the
@@ -724,6 +741,28 @@ object Dedup {
       .filter(col("hamming") <= maxDistance)
   }
 
+  /** The dedup DECISION applied to the corpus: given duplicate pairs
+    * (near or exact, any generator above), keep each cluster's
+    * minimum-id member plus every unpaired document, drop the rest —
+    * the filtered corpus a training pipeline actually ships. One
+    * anti-join of the corpus against the losers (cluster members that
+    * are not their component's minimum); unpaired docs never appear in
+    * `pairs` and pass through untouched. Scale shape: no forced
+    * broadcast — in heavily-duplicated LLM corpora the loser set is
+    * routinely 20-50% of all docs, far past any broadcast limit, so the
+    * join strategy is left to AQE: it broadcasts when the loser set is
+    * actually small and falls back to a shuffled anti-join when it
+    * isn't, instead of failing the job on the 8 GB broadcast ceiling.
+    */
+  def dedupCorpus(
+      docs: DataFrame, idCol: String, pairs: DataFrame,
+      aCol: String, bCol: String): DataFrame = {
+    val losers = connectedComponents(pairs, aCol, bCol)
+      .filter(col("id") =!= col("comp"))
+      .select(col("id").as(idCol))
+    docs.join(losers, Seq(idCol), "left_anti")
+  }
+
   /** Connected components of the undirected pair graph via iterative
     * min-label propagation: every node repeatedly adopts the smallest
     * label among itself and its neighbors until no label changes, so
@@ -749,28 +788,6 @@ object Dedup {
     * Nodes with no pair are absent — callers treat them as their own
     * singleton component (see the q_l14 registry query).
     */
-  /** The dedup DECISION applied to the corpus: given duplicate pairs
-    * (near or exact, any generator above), keep each cluster's
-    * minimum-id member plus every unpaired document, drop the rest —
-    * the filtered corpus a training pipeline actually ships. One
-    * anti-join of the corpus against the losers (cluster members that
-    * are not their component's minimum); unpaired docs never appear in
-    * `pairs` and pass through untouched. Scale shape: no forced
-    * broadcast — in heavily-duplicated LLM corpora the loser set is
-    * routinely 20-50% of all docs, far past any broadcast limit, so the
-    * join strategy is left to AQE: it broadcasts when the loser set is
-    * actually small and falls back to a shuffled anti-join when it
-    * isn't, instead of failing the job on the 8 GB broadcast ceiling.
-    */
-  def dedupCorpus(
-      docs: DataFrame, idCol: String, pairs: DataFrame,
-      aCol: String, bCol: String): DataFrame = {
-    val losers = connectedComponents(pairs, aCol, bCol)
-      .filter(col("id") =!= col("comp"))
-      .select(col("id").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
-  }
-
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 25): DataFrame = {
     val sym = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))

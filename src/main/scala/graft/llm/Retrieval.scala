@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Corpus retrieval / indexing: TF-IDF keyword extraction, BM25 ranked
   * retrieval, and inverted-index (posting-list) construction — the
@@ -29,6 +30,32 @@ object Retrieval {
       .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
+
+  /** Per-doc log-probability under the corpus's own add-one unigram
+    * LM: (id, logp_sum, n_tokens) with logp_sum = Σ tf·ln((c+1)/(T+V))
+    * over the doc's terms (c the term's corpus count, T the token
+    * total, V the vocabulary size). Each (doc, term) contribution is
+    * rounded to 9dp and summed as DECIMAL, so the per-doc sum is
+    * order-independent. At scale: two term-keyed aggregates + one
+    * broadcast join; the LM itself is |vocab| rows.
+    */
+  def unigramDocLogProb(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    // the term-frequency explode feeds the unigram-count agg AND the
+    // per-doc scoring join — pinned so it runs once
+    val tf = termFreqs(docs, idCol, textCol)
+      .localCheckpoint(false)
+    val c = tf.groupBy("term").agg(sum(col("tf")).as("c"))
+    val tot = c.agg(sum(col("c")).as("t"), count(lit(1)).as("v"))
+    val contrib = col("tf") *
+      log((col("c") + lit(1.0)) / (col("t") + col("v")))
+    tf
+      .join(broadcast(c), "term")
+      .crossJoin(broadcast(tot))
+      .groupBy(idCol)
+      .agg(sum(round(contrib, 9).cast(DecimalType(28, 9))).cast("double")
+        .as("logp_sum"),
+        sum(col("tf")).as("n_tokens"))
+  }
 
   /** Top-k TF-IDF terms per document (smoothed idf = ln((1+N)/(1+df))),
     * ranked by raw score with the term as tiebreaker. df/N always come

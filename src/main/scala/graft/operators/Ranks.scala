@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Distributed ranking without row-level windows.
   *
@@ -39,5 +40,26 @@ object Ranks {
       .withColumn(outCol, (col("__below") * 2 + col("__cnt") + 1).cast("long"))
       .select(col(valueCol), col(outCol))
     nonNull.join(ranked, Seq(valueCol))
+  }
+
+  /** Spearman's rho from doubled ranks `x2`, `y2` (any doubled-rank
+    * source — [[doubledAvgRank]] or a min+max window pair): one row
+    * (n, rho), Pearson's r over the ranks rounded to 6dp. Doubled
+    * ranks are exact integers, so every moment is an exact sum
+    * (DECIMAL where x² could overflow int64) and rho is one identical
+    * double expression on both engines.
+    */
+  def spearmanRho(rk: DataFrame): DataFrame = {
+    def d18(c: Column) = c.cast(DecimalType(18, 0))
+    val m = rk.agg(
+      count(lit(1)).as("n"), sum(col("x2")).as("sx"), sum(col("y2")).as("sy"),
+      sum(d18(col("x2")) * d18(col("y2"))).cast("double").as("sxy"),
+      sum(d18(col("x2")) * d18(col("x2"))).cast("double").as("sxx"),
+      sum(d18(col("y2")) * d18(col("y2"))).cast("double").as("syy"))
+    m.select(col("n"),
+      round((col("n").cast("double") * col("sxy") - col("sx").cast("double") * col("sy"))
+        / sqrt((col("n").cast("double") * col("sxx") - col("sx").cast("double") * col("sx"))
+          * (col("n").cast("double") * col("syy") - col("sy").cast("double") * col("sy"))),
+        6).as("rho"))
   }
 }

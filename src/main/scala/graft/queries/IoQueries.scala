@@ -4,7 +4,7 @@ import graft.{SparkUtil, Tables}
 import graft.functions.TextFns
 import graft.io.{Bucketing, ChangeFeed, CowMerge, DeletionVectors, Exports, Snapshots, TableLog}
 import graft.streaming.CdcStream
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -24,6 +24,62 @@ import org.apache.spark.sql.types.DecimalType
 object IoQueries {
 
   private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+
+  /** Per-type event count and exact value sum over events — the
+    * closed form of every exactly-once landing of the stream (q_st8's
+    * foreachBatch sink, q_st24's restarted aggregation).
+    */
+  private val eventTypeTotalsOracle = Some(
+    """SELECT event_type, count(*) AS n,
+      |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+
+  /** [[eventTypeTotalsOracle]] plus distinct ids: the closed form of a
+    * doubled delivery deduped back to exactly-once (q_st2, q_st7).
+    */
+  private val dedupedEventsOracle = Some(
+    """SELECT event_type, count(*) AS n, count(DISTINCT event_id) AS n_ids,
+      |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+
+  /** q_st2's and q_st7's body: the staged events delivered TWICE
+    * (at-least-once redelivery), deduped by `dedup` into the append-
+    * mode memory sink `name`, then counted per type.
+    */
+  private def dedupedEvents(s: SparkSession, dir: String, name: String)(
+      dedup: DataFrame => DataFrame): DataFrame = {
+    val watch = CdcStream.ensureStaged(s, dir)
+    val doubled = CdcStream.readEvents(s, watch)
+      .unionByName(CdcStream.readEvents(s, watch))
+    CdcStream.runToMemory(s, dedup(doubled), name, mode = "append")
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("n_ids"),
+        dsum(col("value")).as("sum_value"))
+      .orderBy("event_type")
+  }
+
+  /** The four-version TableLog table of q_s33 and q_s40 over `o` (a
+    * projection of orders): v1 and v2 ingest o_orderkey % 3 = 0 and
+    * = 1 (4 and 3 files), v3 compacts v1's files into one, v4 ingests
+    * % 3 = 2 (3 files). Returns v1's files — the ones v3 removed,
+    * still referenced by versions 1-2 until retention.
+    */
+  private def fourVersionTable(
+      s: SparkSession, o: DataFrame, dataDir: String, logDir: String): Seq[String] = {
+    val a = TableLog.land(
+      o.filter(col("o_orderkey") % 3 === 0).repartition(4, col("o_orderkey")), s"$dataDir/c1")
+    require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest-a", a, Nil)))
+    val b = TableLog.land(
+      o.filter(col("o_orderkey") % 3 === 1).repartition(3, col("o_orderkey")), s"$dataDir/c2")
+    require(TableLog.tryClaim(s, logDir, TableLog.Commit(2, "ingest-b", b, Nil)))
+    val compacted = TableLog.land(
+      s.read.parquet(a: _*).repartition(1, col("o_orderkey")), s"$dataDir/c3")
+    require(TableLog.tryClaim(s, logDir, TableLog.Commit(3, "compact", compacted, a)))
+    val c = TableLog.land(
+      o.filter(col("o_orderkey") % 3 === 2).repartition(3, col("o_orderkey")), s"$dataDir/c4")
+    require(TableLog.tryClaim(s, logDir, TableLog.Commit(4, "ingest-c", c, Nil)))
+    a
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -846,22 +902,8 @@ object IoQueries {
       (s, dir) => {
         val tmp = SparkUtil.freshDir("q_s33_expire", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
-        val o = Tables.orders(s, dir)
-          .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        val a = TableLog.land(
-          o.filter(col("o_orderkey") % 3 === 0).repartition(4, col("o_orderkey")), s"$dataDir/c1")
-        require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest-a", a, Nil)))
-        val b = TableLog.land(
-          o.filter(col("o_orderkey") % 3 === 1).repartition(3, col("o_orderkey")), s"$dataDir/c2")
-        require(TableLog.tryClaim(s, logDir, TableLog.Commit(2, "ingest-b", b, Nil)))
-        // v3: compaction — v1's four small files rewritten as one; the
-        // OLD files stay referenced by versions 1-2 until retention
-        val compacted = TableLog.land(
-          s.read.parquet(a: _*).repartition(1, col("o_orderkey")), s"$dataDir/c3")
-        require(TableLog.tryClaim(s, logDir, TableLog.Commit(3, "compact", compacted, a)))
-        val c = TableLog.land(
-          o.filter(col("o_orderkey") % 3 === 2).repartition(3, col("o_orderkey")), s"$dataDir/c4")
-        require(TableLog.tryClaim(s, logDir, TableLog.Commit(4, "ingest-c", c, Nil)))
+        val a = fourVersionTable(s, Tables.orders(s, dir)
+          .select("o_orderkey", "o_totalprice", "o_orderpriority"), dataDir, logDir)
         val commits = TableLog.readCommits(s, logDir)
         val v3Files = TableLog.liveFiles(commits, Some(3))
         val v3Rows = s.read.parquet(v3Files: _*).count() // pre-vacuum baseline
@@ -1152,22 +1194,9 @@ object IoQueries {
         // aggregation was a duplicate action, pure job floor)
         val ledger = graft.llm.Corpus.writeShardFilesLedger(
           Tables.documents(s, dir), "doc_id", "text", 2048L, out)
-        val man = s.read.schema(graft.llm.Corpus.ManifestSchema)
-          .json(s"${out}_manifest").select(
-            col("shard_id"),
-            col("n_docs").as("__m_docs"),
-            col("shard_tokens").as("__m_tokens"),
-            col("id_sum").as("__m_ids"),
-            col("start_min").as("__m_start"),
-            col("end_max").as("__m_end"))
         ledger.withColumn("n_docs", col("n_items"))
-          .join(man, Seq("shard_id"), "left")
-          .withColumn("manifest_ok", coalesce(
-            col("__m_docs") === col("n_docs") &&
-              col("__m_tokens") === col("shard_tokens") &&
-              col("__m_ids") === col("id_sum") &&
-              col("__m_start") === col("start_min") &&
-              col("__m_end") === col("end_max"), lit(false)))
+          .join(graft.llm.Corpus.readManifest(s, out), Seq("shard_id"), "left")
+          .withColumn("manifest_ok", graft.llm.Corpus.manifestOk)
           .select("shard_id", "n_docs", "shard_tokens", "id_sum",
             "start_min", "end_max", "manifest_ok")
           .orderBy("shard_id")
@@ -1201,22 +1230,9 @@ object IoQueries {
         val ledger = graft.llm.Corpus.writeShardFilesLedger(
           LlmQueries.curationItems(s, dir), "rep_id", "text", 2048L, out,
           checksumCol = Some("doc_id"))
-        val man = s.read.schema(graft.llm.Corpus.ManifestSchema)
-          .json(s"${out}_manifest").select(
-            col("shard_id"),
-            col("n_docs").as("__m_items"),
-            col("shard_tokens").as("__m_tokens"),
-            col("id_sum").as("__m_ids"),
-            col("start_min").as("__m_start"),
-            col("end_max").as("__m_end"))
         ledger.withColumn("n_docs", col("n_ids"))
-          .join(man, Seq("shard_id"), "left")
-          .withColumn("manifest_ok", coalesce(
-            col("__m_items") === col("n_items") &&
-              col("__m_tokens") === col("shard_tokens") &&
-              col("__m_ids") === col("id_sum") &&
-              col("__m_start") === col("start_min") &&
-              col("__m_end") === col("end_max"), lit(false)))
+          .join(graft.llm.Corpus.readManifest(s, out), Seq("shard_id"), "left")
+          .withColumn("manifest_ok", graft.llm.Corpus.manifestOk)
           .select("shard_id", "n_items", "n_docs", "shard_tokens", "id_sum",
             "start_min", "end_max", "manifest_ok")
           .orderBy("shard_id")
@@ -1269,25 +1285,12 @@ object IoQueries {
         require(damaged == Seq(1L),
           s"damage detection must find exactly the lost shard, got $damaged")
         graft.llm.Corpus.rebuildShards(docs, "doc_id", "text", 2048L, out, damaged)
-        val man = s.read.schema(graft.llm.Corpus.ManifestSchema)
-          .json(s"${out}_manifest").select(
-            col("shard_id"),
-            col("n_docs").as("__m_docs"),
-            col("shard_tokens").as("__m_tokens"),
-            col("id_sum").as("__m_ids"),
-            col("start_min").as("__m_start"),
-            col("end_max").as("__m_end"))
         graft.llm.Corpus.ledgerOfFiles(s, out, "doc_id")
-          .join(man, Seq("shard_id"), "full_outer")
+          .join(graft.llm.Corpus.readManifest(s, out), Seq("shard_id"), "full_outer")
           .withColumn("status",
             when(col("shard_id").isin(damaged: _*), lit("rebuilt"))
               .otherwise(lit("kept")))
-          .withColumn("manifest_ok", coalesce(
-            col("__m_docs") === col("n_items") &&
-              col("__m_tokens") === col("shard_tokens") &&
-              col("__m_ids") === col("id_sum") &&
-              col("__m_start") === col("start_min") &&
-              col("__m_end") === col("end_max"), lit(false)))
+          .withColumn("manifest_ok", graft.llm.Corpus.manifestOk)
           .select(col("shard_id"), col("status"),
             col("n_items").as("n_docs"), col("shard_tokens"),
             col("id_sum"), col("manifest_ok"))
@@ -1357,21 +1360,8 @@ object IoQueries {
       // redelivery, the case streaming dedup exists for); dedup must
       // collapse it back to exactly-once, so the closed form is the
       // plain batch aggregate over events
-      Some("""SELECT event_type, count(*) AS n, count(DISTINCT event_id) AS n_ids,
-             |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
-      (s, dir) => {
-        val name = "q_st2_mem"
-        val watch = CdcStream.ensureStaged(s, dir)
-        val doubled = CdcStream.readEvents(s, watch)
-          .unionByName(CdcStream.readEvents(s, watch))
-        val deduped = CdcStream.runToMemory(
-          s, CdcStream.dedupStream(doubled), name, mode = "append")
-        deduped.groupBy("event_type")
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("n_ids"),
-            dsum(col("value")).as("sum_value"))
-          .orderBy("event_type")
-      }),
+      dedupedEventsOracle,
+      (s, dir) => dedupedEvents(s, dir, "q_st2_mem")(CdcStream.dedupStream)),
 
     // ---------------------------------------------------------------- ST: streaming sessionization (native session_window)
     QueryDef(
@@ -1534,21 +1524,8 @@ object IoQueries {
       // by the delay horizon. The doubled delivery here arrives well
       // inside the horizon, so the closed form is the same exactly-once
       // batch aggregate.
-      Some("""SELECT event_type, count(*) AS n, count(DISTINCT event_id) AS n_ids,
-             |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
-      (s, dir) => {
-        val name = "q_st7_mem"
-        val watch = CdcStream.ensureStaged(s, dir)
-        val doubled = CdcStream.readEvents(s, watch)
-          .unionByName(CdcStream.readEvents(s, watch))
-        val deduped = CdcStream.runToMemory(
-          s, CdcStream.dedupStreamBounded(doubled), name, mode = "append")
-        deduped.groupBy("event_type")
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("n_ids"),
-            dsum(col("value")).as("sum_value"))
-          .orderBy("event_type")
-      }),
+      dedupedEventsOracle,
+      (s, dir) => dedupedEvents(s, dir, "q_st7_mem")(CdcStream.dedupStreamBounded)),
 
     // ---------------------------------------------------------------- ST: exactly-once foreachBatch file sink
     QueryDef(
@@ -1558,9 +1535,7 @@ object IoQueries {
       // the landed table is read back and aggregated: landing must be
       // complete and exactly-once, so the closed form is the plain
       // batch aggregate over events.
-      Some("""SELECT event_type, count(*) AS n,
-             |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      eventTypeTotalsOracle,
       (s, dir) => {
         val watch = CdcStream.ensureStaged(s, dir)
         val sink = CdcStream.runForeachBatchToDir(
@@ -1898,33 +1873,7 @@ object IoQueries {
       // strongest convergence check a streaming sketch can get. The
       // finalize (grid + harmonic sum) runs as a tiny batch step over
       // the memory sink.
-      Some("""WITH h AS (SELECT event_type,
-             |    CAST(CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-             |         AS UBIGINT) AS BIGINT) AS h
-             |  FROM events),
-             |b AS (SELECT event_type, CAST(h >> 26 AS INT) AS idx, h & 67108863 AS rem
-             |      FROM h),
-             |r AS (SELECT event_type, idx,
-             |    max(CASE WHEN rem = 0 THEN 27 ELSE 27 - length(bin(rem)) END) AS m
-             |  FROM b GROUP BY 1, 2),
-             |g AS (SELECT et.event_type, gs.i
-             |      FROM (SELECT DISTINCT event_type FROM events) et
-             |      CROSS JOIN generate_series(0, 63) gs(i)),
-             |reg AS (SELECT g.event_type, coalesce(r.m, 0) AS m
-             |        FROM g LEFT JOIN r ON r.event_type = g.event_type AND r.idx = g.i),
-             |z AS (SELECT event_type,
-             |    sum(1.0 / CAST(CAST(1 AS BIGINT) << m AS DOUBLE)) AS z,
-             |    count(*) FILTER (WHERE m = 0) AS v FROM reg GROUP BY 1),
-             |est AS (SELECT event_type, v,
-             |    (0.7213 / (1 + 1.079 / 64)) * 4096 / z AS e_raw FROM z),
-             |fin AS (SELECT event_type,
-             |    CASE WHEN e_raw <= 160.0 AND v > 0 THEN 64 * ln(64.0 / v)
-             |         ELSE e_raw END AS e FROM est),
-             |x AS (SELECT event_type, count(DISTINCT user_id) AS n_exact FROM events
-             |      GROUP BY 1)
-             |SELECT fin.event_type, x.n_exact, round(fin.e, 4) AS est,
-             |round(abs(round(fin.e, 4) - x.n_exact) / x.n_exact, 4) AS rel_err
-             |FROM fin JOIN x USING (event_type) ORDER BY event_type""".stripMargin),
+      StatQueries.hllDistinctOracle,
       (s, dir) => {
         val watch = CdcStream.ensureStaged(s, dir)
         val streamed = graft.llm.Sketches.hllRegisters(
@@ -1933,12 +1882,7 @@ object IoQueries {
         val fin = graft.llm.Sketches.hllEstimate(registers, Seq("event_type"))
         val x = s.read.parquet(s"$dir/events.parquet")
           .groupBy("event_type").agg(countDistinct("user_id").as("n_exact"))
-        fin.join(broadcast(x), "event_type")
-          .select(col("event_type"), col("n_exact"),
-            round(col("est_raw"), 4).as("est"),
-            round(abs(round(col("est_raw"), 4) - col("n_exact")) / col("n_exact"), 4)
-              .as("rel_err"))
-          .orderBy("event_type")
+        StatQueries.hllDistinctAnswer(fin, x)
       }),
 
     // ---------------------------------------------------------------- ST: streaming Count-Min heavy hitters
@@ -1991,13 +1935,7 @@ object IoQueries {
       // of per-batch joins IS the batch join — so q_w4's DuckDB ASOF
       // oracle applies verbatim. Idempotent overwrite-own-partition
       // sink per batch (q_st8's exactly-once contract).
-      Some("""WITH p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
-             |v AS (SELECT user_id, ts FROM events WHERE event_type = 'view')
-             |SELECT strftime(date_trunc('day', p.ts), '%Y-%m-%d') AS day,
-             |count(*) AS n_purchases, count(v.ts) AS n_matched,
-             |round(avg(epoch_us(p.ts) - epoch_us(v.ts)) / 1e6, 6) AS avg_gap_sec
-             |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND v.ts <= p.ts
-             |GROUP BY 1 ORDER BY day""".stripMargin),
+      RelationalQueries.asofPurchasesOracle,
       (s, dir) => {
         val watch = CdcStream.ensureStaged(s, dir)
         val hist = Tables.events(s, dir)
@@ -2008,13 +1946,7 @@ object IoQueries {
         CdcStream.runForeachBatchTransform(s, stream, outDir)(b =>
           graft.plans.NativeAsOfJoin.joinAsOfBackward(
             b, hist, Seq("user_id"), "ts", "ts", Seq("ts")))
-        s.read.parquet(outDir)
-          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).as("n_purchases"),
-            count(col("asof_ts")).as("n_matched"),
-            round(avg(unix_micros(col("ts")) - unix_micros(col("asof_ts"))) / 1e6, 6)
-              .as("avg_gap_sec"))
-          .orderBy("day")
+        RelationalQueries.asofDailyGaps(s.read.parquet(outDir))
       }),
 
     // ---------------------------------------------------------------- ST: multimodal decode inside the stream
@@ -2075,23 +2007,7 @@ object IoQueries {
       // IS the batch-mode q_l22 result, and its exact closed-form
       // oracle applies verbatim: the strongest convergence check the
       // streaming form can get.
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-             |inter AS (SELECT b.doc_id AS new_id, c.doc_id AS corpus_id, count(*) AS inter
-             |          FROM sh b JOIN sh c ON b.s = c.s
-             |          WHERE b.doc_id % 5 = 0 AND c.doc_id % 5 <> 0
-             |          GROUP BY 1, 2),
-             |j AS (SELECT new_id, corpus_id,
-             |        CAST(inter AS DOUBLE) / (sb.n + sc.n - inter) AS jac
-             |      FROM inter JOIN sizes sb ON sb.doc_id = new_id
-             |                 JOIN sizes sc ON sc.doc_id = corpus_id
-             |      WHERE CAST(inter AS DOUBLE) / (sb.n + sc.n - inter) >= 0.8)
-             |SELECT new_id, corpus_id, round(jac, 6) AS jaccard FROM j
-             |QUALIFY row_number() OVER (PARTITION BY new_id ORDER BY jac DESC, corpus_id) = 1
-             |ORDER BY new_id""".stripMargin),
+      LlmQueries.incrementalDedupOracle,
       (s, dir) => {
         val watch = CdcStream.ensureStagedDocBatches(s, dir, nFiles = 4)
         val corpus = graft.Tables.documents(s, dir)
@@ -2142,17 +2058,10 @@ object IoQueries {
       (s, dir) => {
         import graft.llm.Classifier
         val watch = CdcStream.ensureStagedDocBatches(s, dir, nFiles = 4)
-        val docs = Tables.documents(s, dir)
-        val posSet = Seq("src0", "src1", "src2", "src3", "src4")
-        val negSet = Seq("src15", "src16", "src17", "src18", "src19")
-        val seed = docs
-          .filter(col("doc_id") % 5 =!= 0)
-          .filter(col("source").isin(posSet ++ negSet: _*))
-          .withColumn("label", col("source").isin(posSet: _*).cast("int"))
+        val (_, m, p) = LlmQueries.nbSeedModel(
+          Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0))
         // trained once, pinned: every micro-batch reads the same model
-        val model = Classifier.nbTrain(seed, "text", "label", buckets = 64)
-          .localCheckpoint(false)
-        val prior = Classifier.nbPrior(seed, "label").localCheckpoint(false)
+        val (model, prior) = (m.localCheckpoint(false), p.localCheckpoint(false))
         val stream = CdcStream.fileBatches(s, watch)
         val outDir = SparkUtil.freshDir("q_st16_out", dir)
         CdcStream.runForeachBatchTransform(s, stream, outDir) { b =>
@@ -2552,19 +2461,7 @@ object IoQueries {
       (s, dir) => {
         val tmp = SparkUtil.freshDir("q_s40_history", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
-        val o = Tables.orders(s, dir).select("o_orderkey")
-        val a = TableLog.land(
-          o.filter(col("o_orderkey") % 3 === 0).repartition(4, col("o_orderkey")), s"$dataDir/c1")
-        require(TableLog.tryClaim(s, logDir, TableLog.Commit(1, "ingest-a", a, Nil)))
-        val b = TableLog.land(
-          o.filter(col("o_orderkey") % 3 === 1).repartition(3, col("o_orderkey")), s"$dataDir/c2")
-        require(TableLog.tryClaim(s, logDir, TableLog.Commit(2, "ingest-b", b, Nil)))
-        val compacted = TableLog.land(
-          s.read.parquet(a: _*).repartition(1, col("o_orderkey")), s"$dataDir/c3")
-        require(TableLog.tryClaim(s, logDir, TableLog.Commit(3, "compact", compacted, a)))
-        val c = TableLog.land(
-          o.filter(col("o_orderkey") % 3 === 2).repartition(3, col("o_orderkey")), s"$dataDir/c4")
-        require(TableLog.tryClaim(s, logDir, TableLog.Commit(4, "ingest-c", c, Nil)))
+        fourVersionTable(s, Tables.orders(s, dir).select("o_orderkey"), dataDir, logDir)
         val hist = TableLog.history(s, logDir)
         val fileCounts = hist // ≤ |commits| rows of log metadata
           .select("version", "n_live_files").collect()
@@ -2846,9 +2743,7 @@ object IoQueries {
       // 100 TB: restart cost is new-data + state-store reload — this
       // is the contract that makes long-lived streaming pipelines
       // upgradeable at all.
-      Some("""SELECT event_type, count(*) AS n,
-             |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-             |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      eventTypeTotalsOracle,
       (s, dir) => {
         val tmp = SparkUtil.freshDir("q_st24_restart", dir) // fresh checkpoint: stale offsets poison the run
         val (watch, ckpt) = (s"$tmp/watch", s"$tmp/ckpt")
@@ -2861,18 +2756,10 @@ object IoQueries {
         def agg() = CdcStream.fileBatches(s, watch)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum(col("value").cast(dec)).as("sv"))
-        def run(sinkName: String): Long = CdcStream.withStreamShuffle(s) {
-          val q = agg().writeStream
-            .outputMode("complete")
-            .format("memory")
-            .queryName(sinkName)
-            .option("checkpointLocation", ckpt)
-            .start()
-          q.processAllAvailable()
-          val in = q.recentProgress.map(_.numInputRows).sum
-          q.stop()
-          in
-        }
+        def run(sinkName: String): Long = CdcStream.runToEnd(s)(agg().writeStream
+            .outputMode("complete").format("memory").queryName(sinkName)
+            .option("checkpointLocation", ckpt))
+          .recentProgress.map(_.numInputRows).sum
         val in1 = run("q_st24_run1")
         require(s.table("q_st24_run1").count() > 0, "run 1 produced no state")
         // new files land while the stream is down

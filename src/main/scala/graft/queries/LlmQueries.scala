@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.llm.{Bpe, Classifier, Corpus, Dedup, Multimodal, Pca, Retrieval, Similarity, Sketches, TextAnalysis, Unigram}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -28,6 +28,24 @@ object LlmQueries {
 
   private def davg6(perDoc: Column): Column =
     round(sum(round(perDoc, 6).cast(DecimalType(18, 6))).cast("double") / count(lit(1)), 6)
+
+  /** The NB classifier's weak seed labels (SQL: [[NbSeedSources]]):
+    * src0-4 positive, src15-19 negative.
+    */
+  private[queries] val NbPositive = Seq("src0", "src1", "src2", "src3", "src4")
+  private[queries] val NbSeedSet = NbPositive ++ Seq("src15", "src16", "src17", "src18", "src19")
+
+  /** The labelled seed of `docs` (label 1 = positive source) with the
+    * 64-bucket NB model and class prior trained on it — q_l59, q_l80
+    * and q_st16 (which passes its standing corpus).
+    */
+  private[queries] def nbSeedModel(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val seed = docs
+      .filter(col("source").isin(NbSeedSet: _*))
+      .withColumn("label", col("source").isin(NbPositive: _*).cast("int"))
+    (seed, Classifier.nbTrain(seed, "text", "label", buckets = 64),
+      Classifier.nbPrior(seed, "label"))
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -488,43 +506,13 @@ object LlmQueries {
       // min reachable id via a recursive CTE — a different algorithm
       // arriving at the same fixpoint, so the propagation loop is
       // value-checked, not replayed.
-      Some("""WITH RECURSIVE
-             |toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-             |np AS (SELECT id_a, id_b FROM
-             |         (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-             |          GROUP BY 1, 2) p
-             |       JOIN sizes sa ON sa.doc_id = p.id_a
-             |       JOIN sizes sb ON sb.doc_id = p.id_b
-             |       WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-             |fp AS (SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
-             |       FROM documents),
-             |ep AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             |       FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id),
-             |edges AS (SELECT id_a, id_b FROM np UNION SELECT id_a, id_b FROM ep),
-             |sym AS (SELECT id_a AS src, id_b AS dst FROM edges
-             |        UNION SELECT id_b, id_a FROM edges),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM (SELECT DISTINCT src FROM sym) t
-             |  UNION
-             |  SELECT s.src, q.r FROM sym s JOIN reach q ON q.id = s.dst),
-             |comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
+      Some(s"""$dupComponentsOracleCtes
              |SELECT cluster_id, count(*) AS n_docs, CAST(sum(id) AS BIGINT) AS id_sum
              |FROM comp GROUP BY cluster_id ORDER BY cluster_id""".stripMargin),
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val near = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-            shingleN = 3, perms = 128, bands = 32, threshold = 0.8)
-          .select("id_a", "id_b")
-        val fp = docs.select(col("doc_id"), Dedup.exactFingerprint(col("text")).as("f"))
-        val exact = fp.as("a")
-          .join(fp.as("b"), col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        val cc = Dedup.connectedComponents(near.unionByName(exact).distinct(), "id_a", "id_b")
+        val cc = Dedup.connectedComponents(
+          Dedup.nearOrExactPairs(docs, "doc_id", "text"), "id_a", "id_b")
         cc.groupBy(col("comp").as("cluster_id"))
           .agg(count(lit(1)).as("n_docs"), sum("id").cast("long").as("id_sum"))
           .orderBy("cluster_id")
@@ -540,31 +528,7 @@ object LlmQueries {
       // (cluster, partition) over the shuffle, no per-cluster window).
       // The oracle recomputes components via the recursive CTE and
       // picks the same argmax with a rank window.
-      Some("""WITH RECURSIVE
-             |toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-             |np AS (SELECT id_a, id_b FROM
-             |         (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-             |          GROUP BY 1, 2) p
-             |       JOIN sizes sa ON sa.doc_id = p.id_a
-             |       JOIN sizes sb ON sb.doc_id = p.id_b
-             |       WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-             |fp AS (SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
-             |       FROM documents),
-             |ep AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             |       FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id),
-             |edges AS (SELECT id_a, id_b FROM np UNION SELECT id_a, id_b FROM ep),
-             |sym AS (SELECT id_a AS src, id_b AS dst FROM edges
-             |        UNION SELECT id_b, id_a FROM edges),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM (SELECT DISTINCT src FROM sym) t
-             |  UNION
-             |  SELECT s.src, q.r FROM sym s JOIN reach q ON q.id = s.dst),
-             |comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+      Some(s"""$dupComponentsOracleCtes,
              |qual AS (SELECT doc_id,
              |    least(len(w) / 100.0, 1.0) * 0.4 +
              |      (1.0 - CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is','for')))
@@ -584,14 +548,8 @@ object LlmQueries {
              |WHERE rn = 1 ORDER BY cluster_id""".stripMargin),
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val near = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-            shingleN = 3, perms = 128, bands = 32, threshold = 0.8)
-          .select("id_a", "id_b")
-        val fp = docs.select(col("doc_id"), Dedup.exactFingerprint(col("text")).as("f"))
-        val exact = fp.as("a")
-          .join(fp.as("b"), col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        val cc = Dedup.connectedComponents(near.unionByName(exact).distinct(), "id_a", "id_b")
+        val cc = Dedup.connectedComponents(
+          Dedup.nearOrExactPairs(docs, "doc_id", "text"), "id_a", "id_b")
         // RAW score for ordering and output (rounded scores can flip
         // cross-engine on exact halves — TextAnalysis.qualityScoreRaw)
         val q = docs.select(col("doc_id"),
@@ -617,31 +575,7 @@ object LlmQueries {
       // doc, drop the rest. The oracle derives the same loser set from
       // the recursive-CTE components (members ≠ their component min)
       // and anti-joins it — different algorithm, same corpus.
-      Some("""WITH RECURSIVE
-             |toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-             |np AS (SELECT id_a, id_b FROM
-             |         (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-             |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-             |          GROUP BY 1, 2) p
-             |       JOIN sizes sa ON sa.doc_id = p.id_a
-             |       JOIN sizes sb ON sb.doc_id = p.id_b
-             |       WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-             |fp AS (SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
-             |       FROM documents),
-             |ep AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             |       FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id),
-             |edges AS (SELECT id_a, id_b FROM np UNION SELECT id_a, id_b FROM ep),
-             |sym AS (SELECT id_a AS src, id_b AS dst FROM edges
-             |        UNION SELECT id_b, id_a FROM edges),
-             |reach(id, r) AS (
-             |  SELECT src, src FROM (SELECT DISTINCT src FROM sym) t
-             |  UNION
-             |  SELECT s.src, q.r FROM sym s JOIN reach q ON q.id = s.dst),
-             |comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+      Some(s"""$dupComponentsOracleCtes,
              |losers AS (SELECT id FROM comp WHERE id <> cluster_id),
              |kept AS (SELECT * FROM documents
              |         WHERE doc_id NOT IN (SELECT id FROM losers))
@@ -650,15 +584,8 @@ object LlmQueries {
              |FROM kept GROUP BY source ORDER BY source""".stripMargin),
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val near = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-            shingleN = 3, perms = 128, bands = 32, threshold = 0.8)
-          .select("id_a", "id_b")
-        val fp = docs.select(col("doc_id"), Dedup.exactFingerprint(col("text")).as("f"))
-        val exact = fp.as("a")
-          .join(fp.as("b"), col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         Dedup.dedupCorpus(docs, "doc_id",
-            near.unionByName(exact).distinct(), "id_a", "id_b")
+            Dedup.nearOrExactPairs(docs, "doc_id", "text"), "id_a", "id_b")
           .groupBy("source")
           .agg(count(lit(1)).as("n_kept"),
             sum(col("doc_id")).cast("long").as("id_sum"),
@@ -1757,23 +1684,7 @@ object LlmQueries {
       // keep max jaccard / min corpus_id per new doc) — the LSH
       // candidate stage at 128/32 has full recall at this threshold,
       // same argument as q_l2.
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-             |inter AS (SELECT b.doc_id AS new_id, c.doc_id AS corpus_id, count(*) AS inter
-             |          FROM sh b JOIN sh c ON b.s = c.s
-             |          WHERE b.doc_id % 5 = 0 AND c.doc_id % 5 <> 0
-             |          GROUP BY 1, 2),
-             |j AS (SELECT new_id, corpus_id,
-             |        CAST(inter AS DOUBLE) / (sb.n + sc.n - inter) AS jac
-             |      FROM inter JOIN sizes sb ON sb.doc_id = new_id
-             |                 JOIN sizes sc ON sc.doc_id = corpus_id
-             |      WHERE CAST(inter AS DOUBLE) / (sb.n + sc.n - inter) >= 0.8)
-             |SELECT new_id, corpus_id, round(jac, 6) AS jaccard FROM j
-             |QUALIFY row_number() OVER (PARTITION BY new_id ORDER BY jac DESC, corpus_id) = 1
-             |ORDER BY new_id""".stripMargin),
+      incrementalDedupOracle,
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         Dedup.dedupAgainstCorpus(
@@ -2087,19 +1998,9 @@ object LlmQueries {
       // counts, are rounded to 9dp and summed as DECIMAL — the
       // per-doc sum is order-independent, so both engines agree
       // exactly (a raw double sum over tokens would be reduction-
-      // order luck). At scale: two term-keyed aggregates + one
-      // broadcast join; the LM itself is |vocab| rows.
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term
-             |  FROM documents),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-             |c AS (SELECT term, sum(tf) AS c FROM tf GROUP BY 1),
-             |tot AS (SELECT sum(c) AS t, count(*) AS v FROM c),
-             |per AS (SELECT tf.doc_id,
-             |    CAST(sum(CAST(round(tf.tf * ln((c.c + 1.0) / (tot.t + tot.v)), 9)
-             |                  AS DECIMAL(28,9))) AS DOUBLE) AS logp_sum,
-             |    sum(tf.tf) AS n_tokens
-             |  FROM tf JOIN c ON tf.term = c.term CROSS JOIN tot
-             |  GROUP BY tf.doc_id),
+      // order luck). Retrieval.unigramDocLogProb builds the per-doc
+      // sums.
+      Some(s"""$unigramLogProbOracleCtes,
              |scored AS (SELECT d.source,
              |    round(p.logp_sum / p.n_tokens, 6) AS score
              |  FROM per p JOIN documents d ON d.doc_id = p.doc_id)
@@ -2110,22 +2011,7 @@ object LlmQueries {
              |FROM scored GROUP BY source ORDER BY source""".stripMargin),
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        // r15: the term-frequency explode feeds the unigram-count agg
-        // AND the per-doc scoring join — pinned so it runs once
-        val tf = Retrieval.termFreqs(docs, "doc_id", "text")
-          .localCheckpoint(false)
-        val c = tf.groupBy("term").agg(sum(col("tf")).as("c"))
-        val tot = c.agg(sum(col("c")).as("t"), count(lit(1)).as("v"))
-        val contrib = col("tf") *
-          log((col("c") + lit(1.0)) / (col("t") + col("v")))
-        val per = tf
-          .join(broadcast(c), "term")
-          .crossJoin(broadcast(tot))
-          .groupBy("doc_id")
-          .agg(sum(round(contrib, 9).cast(DecimalType(28, 9))).cast("double")
-            .as("logp_sum"),
-            sum(col("tf")).as("n_tokens"))
-        per
+        Retrieval.unigramDocLogProb(docs, "doc_id", "text")
           .withColumn("score", round(col("logp_sum") / col("n_tokens"), 6))
           .join(docs.select("doc_id", "source"), "doc_id")
           .groupBy("source")
@@ -2950,13 +2836,7 @@ object LlmQueries {
               |GROUP BY d.source ORDER BY d.source""".stripMargin),
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val posSet = Seq("src0", "src1", "src2", "src3", "src4")
-        val negSet = Seq("src15", "src16", "src17", "src18", "src19")
-        val seed = docs
-          .filter(col("source").isin(posSet ++ negSet: _*))
-          .withColumn("label", col("source").isin(posSet: _*).cast("int"))
-        val model = Classifier.nbTrain(seed, "text", "label", buckets = 64)
-        val prior = Classifier.nbPrior(seed, "label")
+        val (_, model, prior) = nbSeedModel(docs)
         val scored = Classifier.nbScore(docs, "doc_id", "text", model, prior, buckets = 64)
         docs.select(col("doc_id"), col("source"))
           .join(scored.select(col("doc_id"), col("accept")), Seq("doc_id"))
@@ -3103,17 +2983,7 @@ object LlmQueries {
       // broadcast back for the bucket assignment. Doc+token counts
       // per (lang, bucket) drive the mix a CCNet pipeline feeds
       // downstream.
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term
-             |  FROM documents),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-             |c AS (SELECT term, sum(tf) AS c FROM tf GROUP BY 1),
-             |tot AS (SELECT sum(c) AS t, count(*) AS v FROM c),
-             |per AS (SELECT tf.doc_id,
-             |    CAST(sum(CAST(round(tf.tf * ln((c.c + 1.0) / (tot.t + tot.v)), 9)
-             |                  AS DECIMAL(28,9))) AS DOUBLE) AS logp_sum,
-             |    sum(tf.tf) AS n_tokens
-             |  FROM tf JOIN c ON tf.term = c.term CROSS JOIN tot
-             |  GROUP BY tf.doc_id),
+      Some(s"""$unigramLogProbOracleCtes,
              |scored AS (SELECT d.lang, p.doc_id,
              |    CAST(round(p.logp_sum / p.n_tokens, 6) AS DECIMAL(18,6)) AS score,
              |    p.n_tokens
@@ -3135,22 +3005,7 @@ object LlmQueries {
              |GROUP BY 1, 2 ORDER BY s.lang, bucket""".stripMargin),
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        // r15: the term-frequency explode feeds the unigram-count agg
-        // AND the per-doc scoring join — pinned so it runs once
-        val tf = Retrieval.termFreqs(docs, "doc_id", "text")
-          .localCheckpoint(false)
-        val c = tf.groupBy("term").agg(sum(col("tf")).as("c"))
-        val tot = c.agg(sum(col("c")).as("t"), count(lit(1)).as("v"))
-        val contrib = col("tf") *
-          log((col("c") + lit(1.0)) / (col("t") + col("v")))
-        val per = tf
-          .join(broadcast(c), "term")
-          .crossJoin(broadcast(tot))
-          .groupBy("doc_id")
-          .agg(sum(round(contrib, 9).cast(DecimalType(28, 9))).cast("double")
-            .as("logp_sum"),
-            sum(col("tf")).as("n_tokens"))
-        val scored = per
+        val scored = Retrieval.unigramDocLogProb(docs, "doc_id", "text")
           .withColumn("score",
             round(col("logp_sum") / col("n_tokens"), 6).cast(DecimalType(18, 6)))
           .join(docs.select("doc_id", "lang"), "doc_id")
@@ -3600,15 +3455,12 @@ object LlmQueries {
            |FROM ($union) t ORDER BY fold""".stripMargin
       },
       (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val posSet = Seq("src0", "src1", "src2", "src3", "src4")
-        val negSet = Seq("src15", "src16", "src17", "src18", "src19")
-        val labeled = docs
-          .filter(col("source").isin(posSet ++ negSet: _*))
+        val labeled = Tables.documents(s, dir)
+          .filter(col("source").isin(NbSeedSet: _*))
           .select(col("doc_id"), col("text"),
             (conv(substring(md5(concat(lit("fold:"), col("doc_id").cast("string"))),
               1, 8), 16, 10).cast("long") % 5).as("fold"),
-            col("source").isin(posSet: _*).cast("int").as("truth"))
+            col("source").isin(NbPositive: _*).cast("int").as("truth"))
         // fold-as-data: ONE token pass, all five train-set models by
         // total-minus-fold subtraction (bit-identical to the looped
         // nbTrain/nbScore per fold — see Classifier.nbCrossVal; the
@@ -3982,17 +3834,10 @@ object LlmQueries {
               |  (CAST(sum(truth) AS BIGINT) * 1000000) // count(*) AS obs_pos_micro
               |FROM cal GROUP BY bin ORDER BY bin""".stripMargin),
       (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val posSet = Seq("src0", "src1", "src2", "src3", "src4")
-        val negSet = Seq("src15", "src16", "src17", "src18", "src19")
-        val seed = docs
-          .filter(col("source").isin(posSet ++ negSet: _*))
-          .withColumn("label", col("source").isin(posSet: _*).cast("int"))
-        val model = Classifier.nbTrain(seed, "text", "label", buckets = 64)
-        val prior = Classifier.nbPrior(seed, "label")
+        val (seed, model, prior) = nbSeedModel(Tables.documents(s, dir))
         Classifier.nbScore(seed, "doc_id", "text", model, prior, buckets = 64)
           .join(seed.select(col("doc_id"),
-            col("source").isin(posSet: _*).cast("long").as("truth")), "doc_id")
+            col("source").isin(NbPositive: _*).cast("long").as("truth")), "doc_id")
           .select(
             CalBinBoundaries
               .map(b => when(col("score") >= b, 1L).otherwise(0L))
@@ -4333,14 +4178,8 @@ object LlmQueries {
              |FROM d GROUP BY source ORDER BY source""".stripMargin),
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val near = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-            shingleN = 3, perms = 128, bands = 32, threshold = 0.8)
-          .select("id_a", "id_b")
-        val fp = docs.select(col("doc_id"), Dedup.exactFingerprint(col("text")).as("f"))
-        val exact = fp.as("a")
-          .join(fp.as("b"), col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        val cc = Dedup.connectedComponents(near.unionByName(exact).distinct(), "id_a", "id_b")
+        val cc = Dedup.connectedComponents(
+          Dedup.nearOrExactPairs(docs, "doc_id", "text"), "id_a", "id_b")
         val mem = cc.join(cc.groupBy("comp").agg(count(lit(1)).as("csize")), "comp")
           .select(col("id").as("doc_id"), col("csize"))
         docs.join(mem, Seq("doc_id"), "left")
@@ -4864,6 +4703,78 @@ object LlmQueries {
        |  $rows)
        |ORDER BY rule_a, rule_b""".stripMargin
   }
+
+  /** Oracle CTEs shared by the dedup-decision queries (q_l14, q_l50,
+    * q_l15): exact 3-shingle Jaccard ≥ 0.8 pairs (np) ∪ normalized-md5
+    * pairs (ep), then connected components as the minimum reachable
+    * id (comp: id, cluster_id) via a recursive CTE.
+    */
+  private def dupComponentsOracleCtes: String =
+    """WITH RECURSIVE
+      |toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
+      |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
+      |                                            for i in generate_series(1, len(w)-2)])) AS s
+      |       FROM toks WHERE len(w) >= 3),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      |np AS (SELECT id_a, id_b FROM
+      |         (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+      |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+      |          GROUP BY 1, 2) p
+      |       JOIN sizes sa ON sa.doc_id = p.id_a
+      |       JOIN sizes sb ON sb.doc_id = p.id_b
+      |       WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
+      |fp AS (SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
+      |       FROM documents),
+      |ep AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      |       FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id),
+      |edges AS (SELECT id_a, id_b FROM np UNION SELECT id_a, id_b FROM ep),
+      |sym AS (SELECT id_a AS src, id_b AS dst FROM edges
+      |        UNION SELECT id_b, id_a FROM edges),
+      |reach(id, r) AS (
+      |  SELECT src, src FROM (SELECT DISTINCT src FROM sym) t
+      |  UNION
+      |  SELECT s.src, q.r FROM sym s JOIN reach q ON q.id = s.dst),
+      |comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
+
+  /** Oracle CTEs mirroring [[Retrieval.unigramDocLogProb]] (q_l32,
+    * q_l62): per (doc, term) counts → unigram counts → per-doc exact-
+    * decimal log-prob sum (per: doc_id, logp_sum, n_tokens).
+    */
+  private def unigramLogProbOracleCtes: String =
+    """WITH tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term
+      |  FROM documents),
+      |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+      |c AS (SELECT term, sum(tf) AS c FROM tf GROUP BY 1),
+      |tot AS (SELECT sum(c) AS t, count(*) AS v FROM c),
+      |per AS (SELECT tf.doc_id,
+      |    CAST(sum(CAST(round(tf.tf * ln((c.c + 1.0) / (tot.t + tot.v)), 9)
+      |                  AS DECIMAL(28,9))) AS DOUBLE) AS logp_sum,
+      |    sum(tf.tf) AS n_tokens
+      |  FROM tf JOIN c ON tf.term = c.term CROSS JOIN tot
+      |  GROUP BY tf.doc_id)""".stripMargin
+
+  /** q_l22's exact closed form (all batch × corpus pairs at J ≥ 0.8,
+    * best corpus match per new doc) — also q_st15's: the streamed
+    * batches' decisions union to the batch answer.
+    */
+  private[queries] def incrementalDedupOracle: Option[String] = Some(
+    """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
+      |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
+      |                                            for i in generate_series(1, len(w)-2)])) AS s
+      |       FROM toks WHERE len(w) >= 3),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      |inter AS (SELECT b.doc_id AS new_id, c.doc_id AS corpus_id, count(*) AS inter
+      |          FROM sh b JOIN sh c ON b.s = c.s
+      |          WHERE b.doc_id % 5 = 0 AND c.doc_id % 5 <> 0
+      |          GROUP BY 1, 2),
+      |j AS (SELECT new_id, corpus_id,
+      |        CAST(inter AS DOUBLE) / (sb.n + sc.n - inter) AS jac
+      |      FROM inter JOIN sizes sb ON sb.doc_id = new_id
+      |                 JOIN sizes sc ON sc.doc_id = corpus_id
+      |      WHERE CAST(inter AS DOUBLE) / (sb.n + sc.n - inter) >= 0.8)
+      |SELECT new_id, corpus_id, round(jac, 6) AS jaccard FROM j
+      |QUALIFY row_number() OVER (PARTITION BY new_id ORDER BY jac DESC, corpus_id) = 1
+      |ORDER BY new_id""".stripMargin)
 
   /** Seed-membership predicate shared by the NB classifier queries. */
   private[queries] def NbSeedSources: String =

@@ -35,9 +35,10 @@ object RelationalQueries {
     * view at-or-before it; DuckDB's native ASOF JOIN is the oracle.
     * Gaps compare in exact microseconds; avg is an exact-int sum over a
     * count, identical across engines. `saltBuckets` picks the salted
-    * (hot-key-safe) form, whose answer is the same.
+    * (hot-key-safe) form, whose answer is the same. q_st12 streams the
+    * same join and shares the oracle.
     */
-  private val asofPurchasesOracle = Some(
+  private[queries] val asofPurchasesOracle = Some(
     """WITH p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
       |v AS (SELECT user_id, ts FROM events WHERE event_type = 'view')
       |SELECT strftime(date_trunc('day', p.ts), '%Y-%m-%d') AS day,
@@ -57,14 +58,21 @@ object RelationalQueries {
         case Some(b) => NativeAsOfJoin.joinAsOfBackwardSalted(
           p, v, Seq("user_id"), "ts", "ts", Seq("ts"), saltBuckets = b)
       }
-      joined
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).as("n_purchases"),
-          count(col("asof_ts")).as("n_matched"),
-          round(avg(unix_micros(col("ts")) - unix_micros(col("asof_ts"))) / 1e6, 6)
-            .as("avg_gap_sec"))
-        .orderBy("day")
+      asofDailyGaps(joined)
     }
+
+  /** W4's answer over an as-of-joined (ts, asof_ts) purchase frame:
+    * per day, purchases, matched purchases and the mean gap in exact
+    * microseconds — also q_st12's answer over its streamed join.
+    */
+  private[queries] def asofDailyGaps(joined: DataFrame): DataFrame =
+    joined
+      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      .agg(count(lit(1)).as("n_purchases"),
+        count(col("asof_ts")).as("n_matched"),
+        round(avg(unix_micros(col("ts")) - unix_micros(col("asof_ts"))) / 1e6, 6)
+          .as("avg_gap_sec"))
+      .orderBy("day")
 
   /** W4 forward as-of, the time-reversed twin: each view looks up the
     * user's NEXT purchase at-or-after it ("did this impression convert,
@@ -92,6 +100,94 @@ object RelationalQueries {
           .as("avg_gap_sec"))
       .orderBy("day")
   }
+
+  /** A27's per-order frame: (o_orderkey, xv = o_totalprice in cents,
+    * yv = line count) — the two variables q_a27 and q_a27b rank.
+    */
+  private def spearmanPerOrder(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(Tables.lineitem(s, dir).select(col("l_orderkey")),
+        col("l_orderkey") === col("o_orderkey"), "left")
+      .groupBy("o_orderkey")
+      .agg(
+        first((col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long"))
+          .as("xv"),
+        count(col("l_orderkey")).as("yv"))
+
+  /** A27's oracle for both twins: doubled average ranks by row_number
+    * windows, then the exact moment aggregate.
+    */
+  private val spearmanOracle = Some(
+    """WITH per AS (SELECT o_orderkey,
+      |    CAST(any_value(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT) AS xv,
+      |    count(l_orderkey) AS yv
+      |  FROM orders LEFT JOIN lineitem ON l_orderkey = o_orderkey
+      |  GROUP BY o_orderkey),
+      |rk AS (SELECT
+      |    CAST(min(rnx) OVER (PARTITION BY xv) + max(rnx) OVER (PARTITION BY xv)
+      |      AS BIGINT) AS x2, -- doubled average rank = min+max of positions
+      |    CAST(min(rny) OVER (PARTITION BY yv) + max(rny) OVER (PARTITION BY yv)
+      |      AS BIGINT) AS y2
+      |  FROM (SELECT xv, yv,
+      |      row_number() OVER (ORDER BY xv, o_orderkey) AS rnx,
+      |      row_number() OVER (ORDER BY yv, o_orderkey) AS rny
+      |    FROM per)),
+      |m AS (SELECT count(*) AS n, sum(x2) AS sx, sum(y2) AS sy,
+      |    CAST(sum(CAST(x2 AS DECIMAL(18,0)) * CAST(y2 AS DECIMAL(18,0)))
+      |      AS DOUBLE) AS sxy,
+      |    CAST(sum(CAST(x2 AS DECIMAL(18,0)) * CAST(x2 AS DECIMAL(18,0)))
+      |      AS DOUBLE) AS sxx,
+      |    CAST(sum(CAST(y2 AS DECIMAL(18,0)) * CAST(y2 AS DECIMAL(18,0)))
+      |      AS DOUBLE) AS syy
+      |  FROM rk)
+      |SELECT n,
+      |round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
+      |  / sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
+      |         * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 6) AS rho
+      |FROM m""".stripMargin)
+
+  /** A10's oracle for both twins (q_a10 window, q_a10b histogram
+    * selection): the nearest-rank order statistic ceil(q·n) by
+    * position in a totally-ordered window.
+    */
+  private val groupQuantilesOracle = Some(
+    """WITH t AS (SELECT o_orderpriority AS p, o_totalprice AS v,
+      |  row_number() OVER (PARTITION BY o_orderpriority
+      |    ORDER BY o_totalprice, o_orderkey) AS rn,
+      |  count(*) OVER (PARTITION BY o_orderpriority) AS n
+      |  FROM orders)
+      |SELECT p AS o_orderpriority,
+      |max(CASE WHEN rn = CAST(ceil(0.5 * n) AS BIGINT) THEN v END) AS p50,
+      |max(CASE WHEN rn = CAST(ceil(0.9 * n) AS BIGINT) THEN v END) AS p90
+      |FROM t GROUP BY 1 ORDER BY 1""".stripMargin)
+
+  /** W5's oracle for both twins (q_w5 rank window, q_w5b k-capped
+    * aggregate): top 3 spenders per event type.
+    */
+  private val groupedTopKOracle = Some(
+    """WITH t AS (SELECT event_type, user_id,
+      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+      |  FROM events GROUP BY 1, 2)
+      |SELECT event_type, user_id, total,
+      |       CAST(row_number() OVER (PARTITION BY event_type
+      |         ORDER BY total DESC, user_id) AS BIGINT) AS rank
+      |FROM t
+      |QUALIFY rank <= 3
+      |ORDER BY event_type, rank""".stripMargin)
+
+  /** W5's input: (event_type, user_id, total) with the exact
+    * decimal-summed value per user and type.
+    */
+  private def userTotals(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .groupBy("event_type", "user_id")
+      .agg(dsum(col("value")).as("total"))
+
+  /** W5's answer shape over either top-k form's (…, total, rank). */
+  private def topSpenders(topK: DataFrame): DataFrame =
+    topK.withColumn("rank", col("rank").cast("long"))
+      .select("event_type", "user_id", "total", "rank")
+      .orderBy("event_type", "rank")
 
   /** J12 point-in-time lookup: each purchase opens a 'tier' version
     * valid until the next purchase or 7 days, whichever first; every
@@ -715,15 +811,7 @@ object RelationalQueries {
       // big the cluster. Exact-small-groups only; q_a10b is the
       // scale-safe twin (two-level distributed histogram selection,
       // operators/GroupedQuantiles) with identical semantics.
-      Some("""WITH t AS (SELECT o_orderpriority AS p, o_totalprice AS v,
-             |  row_number() OVER (PARTITION BY o_orderpriority
-             |    ORDER BY o_totalprice, o_orderkey) AS rn,
-             |  count(*) OVER (PARTITION BY o_orderpriority) AS n
-             |  FROM orders)
-             |SELECT p AS o_orderpriority,
-             |max(CASE WHEN rn = CAST(ceil(0.5 * n) AS BIGINT) THEN v END) AS p50,
-             |max(CASE WHEN rn = CAST(ceil(0.9 * n) AS BIGINT) THEN v END) AS p90
-             |FROM t GROUP BY 1 ORDER BY 1""".stripMargin),
+      groupQuantilesOracle,
       (s, dir) => {
         val w = Window.partitionBy("o_orderpriority")
           .orderBy(col("o_totalprice"), col("o_orderkey"))
@@ -751,15 +839,7 @@ object RelationalQueries {
       // parallelism does NOT collapse to the 5-value group
       // cardinality. The oracle is deliberately the sort-based
       // formulation — different algorithm, identical answers.
-      Some("""WITH t AS (SELECT o_orderpriority AS p, o_totalprice AS v,
-             |  row_number() OVER (PARTITION BY o_orderpriority
-             |    ORDER BY o_totalprice, o_orderkey) AS rn,
-             |  count(*) OVER (PARTITION BY o_orderpriority) AS n
-             |  FROM orders)
-             |SELECT p AS o_orderpriority,
-             |max(CASE WHEN rn = CAST(ceil(0.5 * n) AS BIGINT) THEN v END) AS p50,
-             |max(CASE WHEN rn = CAST(ceil(0.9 * n) AS BIGINT) THEN v END) AS p90
-             |FROM t GROUP BY 1 ORDER BY 1""".stripMargin),
+      groupQuantilesOracle,
       (s, dir) =>
         graft.operators.GroupedQuantiles.exactQuantiles(
             Tables.orders(s, dir), "o_orderpriority", "o_totalprice",
@@ -771,25 +851,9 @@ object RelationalQueries {
       "q_w5_grouped_topk", "W5 grouped top-k",
       // top 3 spenders per event type by summed value; rank carried in
       // the output, ties broken on user_id so survivors are stable
-      Some("""WITH t AS (SELECT event_type, user_id,
-             |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-             |  FROM events GROUP BY 1, 2)
-             |SELECT event_type, user_id, total,
-             |       CAST(row_number() OVER (PARTITION BY event_type
-             |         ORDER BY total DESC, user_id) AS BIGINT) AS rank
-             |FROM t
-             |QUALIFY rank <= 3
-             |ORDER BY event_type, rank""".stripMargin),
-      (s, dir) => {
-        val totals = Tables.events(s, dir)
-          .groupBy("event_type", "user_id")
-          .agg(dsum(col("value")).as("total"))
-        graft.operators.TopK.groupedTopK(
-            totals, Seq("event_type"), Seq(col("total").desc, col("user_id")), 3)
-          .withColumn("rank", col("rank").cast("long"))
-          .select("event_type", "user_id", "total", "rank")
-          .orderBy("event_type", "rank")
-      }),
+      groupedTopKOracle,
+      (s, dir) => topSpenders(graft.operators.TopK.groupedTopK(userTotals(s, dir),
+        Seq("event_type"), Seq(col("total").desc, col("user_id")), 3))),
 
     // ---------------------------------------------------------------- W5b (grouped top-k, map-combine aggregate form)
     QueryDef(
@@ -801,25 +865,9 @@ object RelationalQueries {
       // that survives a hot key at 100 TB. Top-k under the total order
       // (total desc, user_id) is partition-order independent, so the
       // aggregate form is exactly the window form's answer.
-      Some("""WITH t AS (SELECT event_type, user_id,
-             |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-             |  FROM events GROUP BY 1, 2)
-             |SELECT event_type, user_id, total,
-             |       CAST(row_number() OVER (PARTITION BY event_type
-             |         ORDER BY total DESC, user_id) AS BIGINT) AS rank
-             |FROM t
-             |QUALIFY rank <= 3
-             |ORDER BY event_type, rank""".stripMargin),
-      (s, dir) => {
-        val totals = Tables.events(s, dir)
-          .groupBy("event_type", "user_id")
-          .agg(dsum(col("value")).as("total"))
-        graft.operators.TopK.groupedTopKAgg(
-            totals, Seq("event_type"), "total", "user_id", 3)
-          .withColumn("rank", col("rank").cast("long"))
-          .select("event_type", "user_id", "total", "rank")
-          .orderBy("event_type", "rank")
-      }),
+      groupedTopKOracle,
+      (s, dir) => topSpenders(graft.operators.TopK.groupedTopKAgg(userTotals(s, dir),
+        Seq("event_type"), "total", "user_id", 3))),
 
     // ---------------------------------------------------------------- J12 (point-in-time / validity-interval join)
     QueryDef("q_j12_point_in_time", "J12 point-in-time lookup",
@@ -1607,49 +1655,16 @@ object RelationalQueries {
       // integers, so every moment is an exact sum (DECIMAL where x²
       // could overflow int64) and r is one identical double
       // expression on both engines. Two rank windows over a total
-      // order + the same moment aggregate as q_a21. SCALE CAVEAT:
-      // global ranking serializes like q_a10's windows — the
-      // scale-safe path computes ranks by the GroupedQuantiles
-      // histogram method (count-below per value) instead.
-      Some("""WITH per AS (SELECT o_orderkey,
-             |    CAST(any_value(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT) AS xv,
-             |    count(l_orderkey) AS yv
-             |  FROM orders LEFT JOIN lineitem ON l_orderkey = o_orderkey
-             |  GROUP BY o_orderkey),
-             |rk AS (SELECT
-             |    CAST(min(rnx) OVER (PARTITION BY xv) + max(rnx) OVER (PARTITION BY xv)
-             |      AS BIGINT) AS x2, -- doubled average rank = min+max of positions
-             |    CAST(min(rny) OVER (PARTITION BY yv) + max(rny) OVER (PARTITION BY yv)
-             |      AS BIGINT) AS y2
-             |  FROM (SELECT xv, yv,
-             |      row_number() OVER (ORDER BY xv, o_orderkey) AS rnx,
-             |      row_number() OVER (ORDER BY yv, o_orderkey) AS rny
-             |    FROM per)),
-             |m AS (SELECT count(*) AS n, sum(x2) AS sx, sum(y2) AS sy,
-             |    CAST(sum(CAST(x2 AS DECIMAL(18,0)) * CAST(y2 AS DECIMAL(18,0)))
-             |      AS DOUBLE) AS sxy,
-             |    CAST(sum(CAST(x2 AS DECIMAL(18,0)) * CAST(x2 AS DECIMAL(18,0)))
-             |      AS DOUBLE) AS sxx,
-             |    CAST(sum(CAST(y2 AS DECIMAL(18,0)) * CAST(y2 AS DECIMAL(18,0)))
-             |      AS DOUBLE) AS syy
-             |  FROM rk)
-             |SELECT n,
-             |round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-             |  / sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-             |         * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 6) AS rho
-             |FROM m""".stripMargin),
+      // order + the same moment aggregate as q_a21
+      // (Ranks.spearmanRho). SCALE CAVEAT: global ranking serializes
+      // like q_a10's windows — the scale-safe twin q_a27b computes
+      // ranks from per-value counts and a running sum over the
+      // distinct values (operators/Ranks) instead.
+      spearmanOracle,
       (s, dir) => {
-        val per = Tables.orders(s, dir)
-          .join(Tables.lineitem(s, dir).select(col("l_orderkey")),
-            col("l_orderkey") === col("o_orderkey"), "left")
-          .groupBy("o_orderkey")
-          .agg(
-            first((col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long"))
-              .as("xv"),
-            count(col("l_orderkey")).as("yv"))
         val wx = Window.orderBy(col("xv"), col("o_orderkey"))
         val wy = Window.orderBy(col("yv"), col("o_orderkey"))
-        val rk = per
+        val rk = spearmanPerOrder(s, dir)
           .withColumn("rnx", row_number().over(wx))
           .withColumn("rny", row_number().over(wy))
           .select(
@@ -1657,17 +1672,7 @@ object RelationalQueries {
               + max(col("rnx")).over(Window.partitionBy("xv"))).cast("long").as("x2"),
             (min(col("rny")).over(Window.partitionBy("yv"))
               + max(col("rny")).over(Window.partitionBy("yv"))).cast("long").as("y2"))
-        def d18(c: Column) = c.cast(DecimalType(18, 0))
-        val m = rk.agg(
-          count(lit(1)).as("n"), sum(col("x2")).as("sx"), sum(col("y2")).as("sy"),
-          sum(d18(col("x2")) * d18(col("y2"))).cast("double").as("sxy"),
-          sum(d18(col("x2")) * d18(col("x2"))).cast("double").as("sxx"),
-          sum(d18(col("y2")) * d18(col("y2"))).cast("double").as("syy"))
-        m.select(col("n"),
-          round((col("n").cast("double") * col("sxy") - col("sx").cast("double") * col("sy"))
-            / sqrt((col("n").cast("double") * col("sxx") - col("sx").cast("double") * col("sx"))
-              * (col("n").cast("double") * col("syy") - col("sy").cast("double") * col("sy"))),
-            6).as("rho"))
+        graft.operators.Ranks.spearmanRho(rk)
       }),
 
     // ---------------------------------------------------------------- A27b (scale-safe Spearman: ranks without row windows)
@@ -1679,55 +1684,10 @@ object RelationalQueries {
       // over the distinct-VALUE table (operators/Ranks) — no task ever
       // sorts the frame. The oracle is deliberately q_a27's
       // row_number formulation: different algorithm, identical rho.
-      Some("""WITH per AS (SELECT o_orderkey,
-             |    CAST(any_value(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT) AS xv,
-             |    count(l_orderkey) AS yv
-             |  FROM orders LEFT JOIN lineitem ON l_orderkey = o_orderkey
-             |  GROUP BY o_orderkey),
-             |rk AS (SELECT
-             |    CAST(min(rnx) OVER (PARTITION BY xv) + max(rnx) OVER (PARTITION BY xv)
-             |      AS BIGINT) AS x2,
-             |    CAST(min(rny) OVER (PARTITION BY yv) + max(rny) OVER (PARTITION BY yv)
-             |      AS BIGINT) AS y2
-             |  FROM (SELECT xv, yv,
-             |      row_number() OVER (ORDER BY xv, o_orderkey) AS rnx,
-             |      row_number() OVER (ORDER BY yv, o_orderkey) AS rny
-             |    FROM per)),
-             |m AS (SELECT count(*) AS n, sum(x2) AS sx, sum(y2) AS sy,
-             |    CAST(sum(CAST(x2 AS DECIMAL(18,0)) * CAST(y2 AS DECIMAL(18,0)))
-             |      AS DOUBLE) AS sxy,
-             |    CAST(sum(CAST(x2 AS DECIMAL(18,0)) * CAST(x2 AS DECIMAL(18,0)))
-             |      AS DOUBLE) AS sxx,
-             |    CAST(sum(CAST(y2 AS DECIMAL(18,0)) * CAST(y2 AS DECIMAL(18,0)))
-             |      AS DOUBLE) AS syy
-             |  FROM rk)
-             |SELECT n,
-             |round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-             |  / sqrt((CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-             |         * (CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 6) AS rho
-             |FROM m""".stripMargin),
+      spearmanOracle,
       (s, dir) => {
-        val per = Tables.orders(s, dir)
-          .join(Tables.lineitem(s, dir).select(col("l_orderkey")),
-            col("l_orderkey") === col("o_orderkey"), "left")
-          .groupBy("o_orderkey")
-          .agg(
-            first((col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long"))
-              .as("xv"),
-            count(col("l_orderkey")).as("yv"))
-        val rk = graft.operators.Ranks.doubledAvgRank(
-          graft.operators.Ranks.doubledAvgRank(per, "xv", "x2"), "yv", "y2")
-        def d18(c: Column) = c.cast(DecimalType(18, 0))
-        val m = rk.agg(
-          count(lit(1)).as("n"), sum(col("x2")).as("sx"), sum(col("y2")).as("sy"),
-          sum(d18(col("x2")) * d18(col("y2"))).cast("double").as("sxy"),
-          sum(d18(col("x2")) * d18(col("x2"))).cast("double").as("sxx"),
-          sum(d18(col("y2")) * d18(col("y2"))).cast("double").as("syy"))
-        m.select(col("n"),
-          round((col("n").cast("double") * col("sxy") - col("sx").cast("double") * col("sy"))
-            / sqrt((col("n").cast("double") * col("sxx") - col("sx").cast("double") * col("sx"))
-              * (col("n").cast("double") * col("syy") - col("sy").cast("double") * col("sy"))),
-            6).as("rho"))
+        val x2 = graft.operators.Ranks.doubledAvgRank(spearmanPerOrder(s, dir), "xv", "x2")
+        graft.operators.Ranks.spearmanRho(graft.operators.Ranks.doubledAvgRank(x2, "yv", "y2"))
       }),
 
     // ---------------------------------------------------------------- A29 (link analysis: PageRank, unrolled)
@@ -1746,42 +1706,17 @@ object RelationalQueries {
       // applied to graph propagation. Symmetric edges ⇒ no dangling
       // nodes. The iteration is two key-partitioned join+agg rounds —
       // the Pregel-free shape that scales as ordinary shuffles.
-      Some("""WITH p AS (SELECT DISTINCT user_id AS u,
-             |    CAST(props->>'$.k' AS BIGINT) AS k
+      Some(s"""WITH p AS (SELECT DISTINCT user_id AS u,
+             |    CAST(props->>'$$.k' AS BIGINT) AS k
              |  FROM events WHERE event_type = 'purchase'),
              |e AS (SELECT a.u AS src, b.u AS dst
              |      FROM p a JOIN p b ON a.k = b.k AND a.u <> b.u
              |      GROUP BY 1, 2 HAVING count(*) >= 3),
              |d AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-             |pr1 AS (SELECT e.dst AS u,
-             |    round(0.15 + 0.85 * CAST(sum(CAST(round(1.0 / d.deg, 12)
-             |        AS DECIMAL(28,12))) AS DOUBLE), 12) AS pr
-             |  FROM e JOIN d ON e.src = d.src GROUP BY e.dst),
-             |pr2 AS (SELECT e.dst AS u,
-             |    round(0.15 + 0.85 * CAST(sum(CAST(round(pr1.pr / d.deg, 12)
-             |        AS DECIMAL(28,12))) AS DOUBLE), 12) AS pr
-             |  FROM e JOIN d ON e.src = d.src JOIN pr1 ON pr1.u = e.src
-             |  GROUP BY e.dst)
-             |SELECT u AS user_id, round(pr, 6) AS pagerank FROM pr2
-             |ORDER BY pagerank DESC, user_id LIMIT 20""".stripMargin),
-      (s, dir) => {
-        // salted skew-parallel edge build (see CoPurchaseGraph)
-        val e = CoPurchaseGraph.strongTieEdges(s, dir, minShared = 3)
-        val d = e.groupBy("src").agg(count(lit(1)).as("deg"))
-          .localCheckpoint(false) // consumed by pr0 + both iterations
-        def iterate(pr: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-          e.join(d, "src")
-            .join(pr.select(col("u").as("src"), col("pr")), Seq("src"))
-            .groupBy(col("dst").as("u"))
-            .agg(round(lit(0.15) + lit(0.85) *
-              sum(round(col("pr") / col("deg"), 12).cast(DecimalType(28, 12)))
-                .cast("double"), 12).as("pr"))
-        val pr0 = d.select(col("src").as("u"), lit(1.0).as("pr"))
-        val pr2 = iterate(iterate(pr0))
-        pr2.select(col("u").as("user_id"), round(col("pr"), 6).as("pagerank"))
-          .orderBy(col("pagerank").desc, col("user_id"))
-          .limit(20)
-      }),
+             |${CoPurchaseGraph.pageRankOracleTail}""".stripMargin),
+      // salted skew-parallel edge build (see CoPurchaseGraph)
+      (s, dir) =>
+        CoPurchaseGraph.twoStepPageRank(CoPurchaseGraph.strongTieEdges(s, dir, minShared = 3))),
 
     // ---------------------------------------------------------------- A29b (PageRank over the CONTRIBUTION-CAPPED graph)
     QueryDef(
@@ -1802,8 +1737,8 @@ object RelationalQueries {
       // phase-equivalence bug is a hash mismatch, not lost rows. Same
       // two unrolled rounded-DECIMAL PageRank iterations as q_a29 —
       // the wall delta between the two queries IS the cap's value.
-      Some("""WITH p AS MATERIALIZED (SELECT DISTINCT user_id AS u,
-             |    CAST(props->>'$.k' AS BIGINT) AS k
+      Some(s"""WITH p AS MATERIALIZED (SELECT DISTINCT user_id AS u,
+             |    CAST(props->>'$$.k' AS BIGINT) AS k
              |  FROM events WHERE event_type = 'purchase'),
              |pc AS MATERIALIZED (SELECT u, k FROM (SELECT u, k,
              |    row_number() OVER (PARTITION BY k
@@ -1813,35 +1748,9 @@ object RelationalQueries {
              |      FROM pc a JOIN pc b ON a.k = b.k AND a.u <> b.u
              |      GROUP BY 1, 2 HAVING count(*) >= 3),
              |d AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-             |pr1 AS (SELECT e.dst AS u,
-             |    round(0.15 + 0.85 * CAST(sum(CAST(round(1.0 / d.deg, 12)
-             |        AS DECIMAL(28,12))) AS DOUBLE), 12) AS pr
-             |  FROM e JOIN d ON e.src = d.src GROUP BY e.dst),
-             |pr2 AS (SELECT e.dst AS u,
-             |    round(0.15 + 0.85 * CAST(sum(CAST(round(pr1.pr / d.deg, 12)
-             |        AS DECIMAL(28,12))) AS DOUBLE), 12) AS pr
-             |  FROM e JOIN d ON e.src = d.src JOIN pr1 ON pr1.u = e.src
-             |  GROUP BY e.dst)
-             |SELECT u AS user_id, round(pr, 6) AS pagerank FROM pr2
-             |ORDER BY pagerank DESC, user_id LIMIT 20""".stripMargin),
-      (s, dir) => {
-        val e = CoPurchaseGraph.strongTieEdgesCapped(s, dir, minShared = 3,
-          cap = 16)
-        val d = e.groupBy("src").agg(count(lit(1)).as("deg"))
-          .localCheckpoint(false)
-        def iterate(pr: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-          e.join(d, "src")
-            .join(pr.select(col("u").as("src"), col("pr")), Seq("src"))
-            .groupBy(col("dst").as("u"))
-            .agg(round(lit(0.15) + lit(0.85) *
-              sum(round(col("pr") / col("deg"), 12).cast(DecimalType(28, 12)))
-                .cast("double"), 12).as("pr"))
-        val pr0 = d.select(col("src").as("u"), lit(1.0).as("pr"))
-        val pr2 = iterate(iterate(pr0))
-        pr2.select(col("u").as("user_id"), round(col("pr"), 6).as("pagerank"))
-          .orderBy(col("pagerank").desc, col("user_id"))
-          .limit(20)
-      }),
+             |${CoPurchaseGraph.pageRankOracleTail}""".stripMargin),
+      (s, dir) => CoPurchaseGraph.twoStepPageRank(
+        CoPurchaseGraph.strongTieEdgesCapped(s, dir, minShared = 3, cap = 16))),
 
     // ---------------------------------------------------------------- A44 (label-propagation communities)
     QueryDef(
@@ -1912,39 +1821,18 @@ object RelationalQueries {
       // two equi-joins, no per-node adjacency materialization. At
       // scale the further refinement orients by DEGREE (low→high) so
       // hub nodes never anchor the wedge join.
-      Some("""WITH p AS (SELECT DISTINCT user_id AS u,
-             |    CAST(props->>'$.k' AS BIGINT) AS k
+      Some(s"""WITH p AS (SELECT DISTINCT user_id AS u,
+             |    CAST(props->>'$$.k' AS BIGINT) AS k
              |  FROM events WHERE event_type = 'purchase'),
              |und AS (SELECT a.u AS src, b.u AS dst
              |        FROM p a JOIN p b ON a.k = b.k AND a.u <> b.u
              |        GROUP BY 1, 2 HAVING count(*) >= 5),
              |deg AS (SELECT src AS u, count(*) AS d FROM und GROUP BY 1),
              |o AS (SELECT src, dst FROM und WHERE src < dst),
-             |tri AS (SELECT count(*) AS t
-             |  FROM o e1 JOIN o e2 ON e2.src = e1.dst
-             |            JOIN o e3 ON e3.src = e1.src AND e3.dst = e2.dst),
-             |w AS (SELECT CAST(sum(d * (d - 1) / 2) AS BIGINT) AS wedges FROM deg)
-             |SELECT (SELECT count(*) FROM o) AS n_edges, tri.t AS n_triangles,
-             |w.wedges,
-             |round(3.0 * tri.t / w.wedges, 6) AS clustering_coeff
-             |FROM tri CROSS JOIN w""".stripMargin),
-      (s, dir) => {
-        // salted skew-parallel edge build (see CoPurchaseGraph)
-        val und = CoPurchaseGraph.strongTieEdges(s, dir, minShared = 5)
-        val deg = und.groupBy(col("src").as("u")).agg(count(lit(1)).as("d"))
-        val o = und.filter(col("src") < col("dst"))
-        val tri = o.as("e1")
-          .join(o.as("e2"), col("e2.src") === col("e1.dst"))
-          .join(o.as("e3"),
-            col("e3.src") === col("e1.src") && col("e3.dst") === col("e2.dst"))
-          .agg(count(lit(1)).as("t"))
-        val wedges = deg.agg(sum(floor(col("d") * (col("d") - 1) / 2)).cast("long")
-          .as("wedges"))
-        val nEdges = o.agg(count(lit(1)).as("n_edges"))
-        nEdges.crossJoin(broadcast(tri)).crossJoin(broadcast(wedges))
-          .select(col("n_edges"), col("t").as("n_triangles"), col("wedges"),
-            round(lit(3.0) * col("t") / col("wedges"), 6).as("clustering_coeff"))
-      }),
+             |${CoPurchaseGraph.triangleOracleTail}""".stripMargin),
+      // salted skew-parallel edge build (see CoPurchaseGraph)
+      (s, dir) =>
+        CoPurchaseGraph.triangleStats(CoPurchaseGraph.strongTieEdges(s, dir, minShared = 5))),
 
     // ---------------------------------------------------------------- A30b (triangles over the CONTRIBUTION-CAPPED graph)
     QueryDef(
@@ -1960,8 +1848,8 @@ object RelationalQueries {
       // node worst-case — then the identical once-per-triangle
       // (a<b<c) two-join count and clustering coefficient. The
       // oracle replays cap, threshold, and count exactly.
-      Some("""WITH p AS MATERIALIZED (SELECT DISTINCT user_id AS u,
-             |    CAST(props->>'$.k' AS BIGINT) AS k
+      Some(s"""WITH p AS MATERIALIZED (SELECT DISTINCT user_id AS u,
+             |    CAST(props->>'$$.k' AS BIGINT) AS k
              |  FROM events WHERE event_type = 'purchase'),
              |pc AS MATERIALIZED (SELECT u, k FROM (SELECT u, k,
              |    row_number() OVER (PARTITION BY k
@@ -1972,31 +1860,9 @@ object RelationalQueries {
              |        GROUP BY 1, 2 HAVING count(*) >= 5),
              |deg AS (SELECT src AS u, count(*) AS d FROM und GROUP BY 1),
              |o AS MATERIALIZED (SELECT src, dst FROM und WHERE src < dst),
-             |tri AS (SELECT count(*) AS t
-             |  FROM o e1 JOIN o e2 ON e2.src = e1.dst
-             |            JOIN o e3 ON e3.src = e1.src AND e3.dst = e2.dst),
-             |w AS (SELECT CAST(sum(d * (d - 1) / 2) AS BIGINT) AS wedges FROM deg)
-             |SELECT (SELECT count(*) FROM o) AS n_edges, tri.t AS n_triangles,
-             |w.wedges,
-             |round(3.0 * tri.t / w.wedges, 6) AS clustering_coeff
-             |FROM tri CROSS JOIN w""".stripMargin),
-      (s, dir) => {
-        val und = CoPurchaseGraph.strongTieEdgesCapped(s, dir, minShared = 5,
-          cap = 16)
-        val deg = und.groupBy(col("src").as("u")).agg(count(lit(1)).as("d"))
-        val o = und.filter(col("src") < col("dst"))
-        val tri = o.as("e1")
-          .join(o.as("e2"), col("e2.src") === col("e1.dst"))
-          .join(o.as("e3"),
-            col("e3.src") === col("e1.src") && col("e3.dst") === col("e2.dst"))
-          .agg(count(lit(1)).as("t"))
-        val wedges = deg.agg(sum(floor(col("d") * (col("d") - 1) / 2)).cast("long")
-          .as("wedges"))
-        val nEdges = o.agg(count(lit(1)).as("n_edges"))
-        nEdges.crossJoin(broadcast(tri)).crossJoin(broadcast(wedges))
-          .select(col("n_edges"), col("t").as("n_triangles"), col("wedges"),
-            round(lit(3.0) * col("t") / col("wedges"), 6).as("clustering_coeff"))
-      }),
+             |${CoPurchaseGraph.triangleOracleTail}""".stripMargin),
+      (s, dir) => CoPurchaseGraph.triangleStats(
+        CoPurchaseGraph.strongTieEdgesCapped(s, dir, minShared = 5, cap = 16))),
 
     // ---------------------------------------------------------------- A28 (categorical set overlap / Jaccard matrix)
     QueryDef(

@@ -29,6 +29,49 @@ object StatQueries {
 
   private def d28(c: Column): Column = c.cast(DecimalType(28, 12))
 
+  /** A37's oracle, also q_st10's: the streamed registers equal the
+    * batch sketch, so both answer this closed form.
+    */
+  private[queries] def hllDistinctOracle: Option[String] = Some(
+    """WITH h AS (SELECT event_type,
+      |    CAST(CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
+      |         AS UBIGINT) AS BIGINT) AS h
+      |  FROM events),
+      |b AS (SELECT event_type, CAST(h >> 26 AS INT) AS idx, h & 67108863 AS rem
+      |      FROM h),
+      |r AS (SELECT event_type, idx,
+      |    max(CASE WHEN rem = 0 THEN 27 ELSE 27 - length(bin(rem)) END) AS m
+      |  FROM b GROUP BY 1, 2),
+      |g AS (SELECT et.event_type, gs.i
+      |      FROM (SELECT DISTINCT event_type FROM events) et
+      |      CROSS JOIN generate_series(0, 63) gs(i)),
+      |reg AS (SELECT g.event_type, coalesce(r.m, 0) AS m
+      |        FROM g LEFT JOIN r ON r.event_type = g.event_type AND r.idx = g.i),
+      |z AS (SELECT event_type,
+      |    sum(1.0 / CAST(CAST(1 AS BIGINT) << m AS DOUBLE)) AS z,
+      |    count(*) FILTER (WHERE m = 0) AS v FROM reg GROUP BY 1),
+      |est AS (SELECT event_type, v,
+      |    (0.7213 / (1 + 1.079 / 64)) * 4096 / z AS e_raw FROM z),
+      |fin AS (SELECT event_type,
+      |    CASE WHEN e_raw <= 160.0 AND v > 0 THEN 64 * ln(64.0 / v)
+      |         ELSE e_raw END AS e FROM est),
+      |x AS (SELECT event_type, count(DISTINCT user_id) AS n_exact FROM events
+      |      GROUP BY 1)
+      |SELECT fin.event_type, x.n_exact, round(fin.e, 4) AS est,
+      |round(abs(round(fin.e, 4) - x.n_exact) / x.n_exact, 4) AS rel_err
+      |FROM fin JOIN x USING (event_type) ORDER BY event_type""".stripMargin)
+
+  /** A37's answer over an HLL estimate `fin` (event_type, est_raw) and
+    * exact distinct counts `x` (event_type, n_exact) — also q_st10's.
+    */
+  private[queries] def hllDistinctAnswer(fin: DataFrame, x: DataFrame): DataFrame =
+    fin.join(broadcast(x), "event_type")
+      .select(col("event_type"), col("n_exact"),
+        round(col("est_raw"), 4).as("est"),
+        round(abs(round(col("est_raw"), 4) - col("n_exact")) / col("n_exact"), 4)
+          .as("rel_err"))
+      .orderBy("event_type")
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---------------------------------------------------------------- A31 (time-decayed engagement score)
@@ -576,44 +619,13 @@ object StatQueries {
       // no decimal discipline is needed; the small-range correction
       // branch compares deterministic doubles. Output pairs the
       // estimate with the exact count and relative error.
-      Some("""WITH h AS (SELECT event_type,
-             |    CAST(CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-             |         AS UBIGINT) AS BIGINT) AS h
-             |  FROM events),
-             |b AS (SELECT event_type, CAST(h >> 26 AS INT) AS idx, h & 67108863 AS rem
-             |      FROM h),
-             |r AS (SELECT event_type, idx,
-             |    max(CASE WHEN rem = 0 THEN 27 ELSE 27 - length(bin(rem)) END) AS m
-             |  FROM b GROUP BY 1, 2),
-             |g AS (SELECT et.event_type, gs.i
-             |      FROM (SELECT DISTINCT event_type FROM events) et
-             |      CROSS JOIN generate_series(0, 63) gs(i)),
-             |reg AS (SELECT g.event_type, coalesce(r.m, 0) AS m
-             |        FROM g LEFT JOIN r ON r.event_type = g.event_type AND r.idx = g.i),
-             |z AS (SELECT event_type,
-             |    sum(1.0 / CAST(CAST(1 AS BIGINT) << m AS DOUBLE)) AS z,
-             |    count(*) FILTER (WHERE m = 0) AS v FROM reg GROUP BY 1),
-             |est AS (SELECT event_type, v,
-             |    (0.7213 / (1 + 1.079 / 64)) * 4096 / z AS e_raw FROM z),
-             |fin AS (SELECT event_type,
-             |    CASE WHEN e_raw <= 160.0 AND v > 0 THEN 64 * ln(64.0 / v)
-             |         ELSE e_raw END AS e FROM est),
-             |x AS (SELECT event_type, count(DISTINCT user_id) AS n_exact FROM events
-             |      GROUP BY 1)
-             |SELECT fin.event_type, x.n_exact, round(fin.e, 4) AS est,
-             |round(abs(round(fin.e, 4) - x.n_exact) / x.n_exact, 4) AS rel_err
-             |FROM fin JOIN x USING (event_type) ORDER BY event_type""".stripMargin),
+      hllDistinctOracle,
       (s, dir) => {
         val ev = Tables.events(s, dir)
         val fin = Sketches.hllEstimate(
           Sketches.hllRegisters(ev, Seq("event_type"), "user_id"), Seq("event_type"))
         val x = ev.groupBy("event_type").agg(countDistinct("user_id").as("n_exact"))
-        fin.join(broadcast(x), "event_type")
-          .select(col("event_type"), col("n_exact"),
-            round(col("est_raw"), 4).as("est"),
-            round(abs(round(col("est_raw"), 4) - col("n_exact")) / col("n_exact"), 4)
-              .as("rel_err"))
-          .orderBy("event_type")
+        hllDistinctAnswer(fin, x)
       }),
 
     // ---------------------------------------------------------------- A45 (HLL set algebra: intersection estimate)

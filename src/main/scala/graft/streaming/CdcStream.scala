@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.SparkUtil
 import graft.io.TableLog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming face of the engine (SURVEY §2.9).
@@ -32,12 +33,25 @@ object CdcStream {
     * a deployment running concurrent streams should scope the
     * override with a cloned session (spark.newSession) per stream.
     */
-  def withStreamShuffle[T](spark: SparkSession)(body: => T): T = {
+  private def withStreamShuffle[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, graft.SparkUtil.streamShufflePartitions(spark).toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** The run of a bounded stream: start the query `writer` describes
+    * under [[withStreamShuffle]], drain the source
+    * (`processAllAvailable`) and stop it — in a `finally`, so a failed
+    * batch reaches the caller as the exception with no query left
+    * running. Returns the stopped query; its progress stays readable.
+    */
+  def runToEnd(spark: SparkSession)(writer: => DataStreamWriter[Row]): StreamingQuery =
+    withStreamShuffle(spark) {
+      val q = writer.start()
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
 
   /** events.parquet's physical schema, probed from the files actually
     * present: the generator has shipped `ts` both as INT64 nanos
@@ -299,15 +313,8 @@ object CdcStream {
     * which is what makes a replayed batch land value-identical.
     */
   def runForeachBatchEffect(spark: SparkSession, events: DataFrame)(
-      body: (DataFrame, Long) => Unit): Unit = withStreamShuffle(spark) {
-    val q = events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        body(batch, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+      body: (DataFrame, Long) => Unit): Unit =
+    runToEnd(spark)(events.writeStream.foreachBatch(body))
 
   /** [[runForeachBatchTransform]] variant handing the transform the
     * micro-batch id — for operators whose per-batch work must be
@@ -316,15 +323,10 @@ object CdcStream {
     */
   def runForeachBatchTransformWithId(
       spark: SparkSession, events: DataFrame, outDir: String)(
-      transform: (DataFrame, Long) => DataFrame): String = withStreamShuffle(spark) {
-    val q = events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        transform(batch, batchId).write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      transform: (DataFrame, Long) => DataFrame): String = {
+    runForeachBatchEffect(spark, events) { (batch, batchId) =>
+      transform(batch, batchId).write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
     outDir
   }
 
@@ -421,7 +423,7 @@ object CdcStream {
     * committed snapshot dir; `baseDir` must start empty
     * (`SparkUtil.freshDir`), or an earlier run's state merges in.
     */
-  def runMergeToStateTable(spark: SparkSession, events: DataFrame, baseDir: String): String = withStreamShuffle(spark) {
+  def runMergeToStateTable(spark: SparkSession, events: DataFrame, baseDir: String): String = {
     import org.apache.spark.sql.expressions.Window
     val conf = spark.sparkContext.hadoopConfiguration
     val base = new org.apache.hadoop.fs.Path(baseDir)
@@ -441,38 +443,33 @@ object CdcStream {
       else fs.listStatus(base).map(_.getPath.getName)
         .filter(_.startsWith("v")).sortBy(n => n.drop(1).toLong).lastOption
     }
-    val q = events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("ts").desc, col("event_id").desc)
-        val delta = batch
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .select(col("user_id"), col("ts").as("last_ts"),
-            col("event_type").as("last_type"), col("event_id").as("last_id"))
-        val merged = committedVersion() match {
-          case Some(v) =>
-            val old = spark.read.parquet(new org.apache.hadoop.fs.Path(base, v).toString)
-            val wAll = Window.partitionBy("user_id")
-              .orderBy(col("last_ts").desc, col("last_id").desc)
-            old.unionByName(delta)
-              .withColumn("__rn", row_number().over(wAll))
-              .filter(col("__rn") === 1).drop("__rn")
-          case None => delta
-        }
-        merged.write.mode("overwrite").parquet(
-          new org.apache.hadoop.fs.Path(base, s"v$batchId").toString)
-        // commit: tmp pointer + rename (atomic on HDFS-like stores)
-        val tmp = new org.apache.hadoop.fs.Path(base, s"_LATEST.v$batchId.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(s"v$batchId".getBytes("UTF-8")) finally out.close()
-        if (fs.exists(pointer)) fs.delete(pointer, false)
-        fs.rename(tmp, pointer)
-        ()
+    runForeachBatchEffect(spark, events) { (batch, batchId) =>
+      val w = Window.partitionBy("user_id")
+        .orderBy(col("ts").desc, col("event_id").desc)
+      val delta = batch
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+        .select(col("user_id"), col("ts").as("last_ts"),
+          col("event_type").as("last_type"), col("event_id").as("last_id"))
+      val merged = committedVersion() match {
+        case Some(v) =>
+          val old = spark.read.parquet(new org.apache.hadoop.fs.Path(base, v).toString)
+          val wAll = Window.partitionBy("user_id")
+            .orderBy(col("last_ts").desc, col("last_id").desc)
+          old.unionByName(delta)
+            .withColumn("__rn", row_number().over(wAll))
+            .filter(col("__rn") === 1).drop("__rn")
+        case None => delta
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      merged.write.mode("overwrite").parquet(
+        new org.apache.hadoop.fs.Path(base, s"v$batchId").toString)
+      // commit: tmp pointer + rename (atomic on HDFS-like stores)
+      val tmp = new org.apache.hadoop.fs.Path(base, s"_LATEST.v$batchId.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(s"v$batchId".getBytes("UTF-8")) finally out.close()
+      if (fs.exists(pointer)) fs.delete(pointer, false)
+      fs.rename(tmp, pointer)
+    }
     val v = committedVersion().getOrElse(
       throw new IllegalStateException(s"no committed state version under $baseDir"))
     new org.apache.hadoop.fs.Path(base, v).toString
@@ -500,14 +497,8 @@ object CdcStream {
     * oracles check streaming semantics.
     */
   def runToMemory(spark: SparkSession, agg: DataFrame, name: String,
-      mode: String = "complete"): DataFrame = withStreamShuffle(spark) {
-    val q = agg.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      mode: String = "complete"): DataFrame = {
+    runToEnd(spark)(agg.writeStream.outputMode(mode).format("memory").queryName(name))
     spark.table(name)
   }
 }

@@ -160,4 +160,25 @@ class CdcStreamSpec extends AnyFunSuite {
     ledger.advance(1L, 30L)
     assert(ledger.current == 180L)
   }
+
+  test("a failing micro-batch reaches the caller; the run leaves no query and restores the conf") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // a value the streaming override (min(8, cores)) cannot equal, so
+    // an unrestored conf shows
+    spark.conf.set(key, "13")
+    try {
+      val stream = CdcStream.readEvents(spark, CdcStream.ensureStaged(spark, sf))
+      val err = intercept[Exception] {
+        CdcStream.runForeachBatchEffect(spark, stream) { (_, _) =>
+          throw new IllegalStateException("cdcspec: batch failed")
+        }
+      }
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(e => String.valueOf(e.getMessage).contains("cdcspec: batch failed")),
+        err)
+      assert(spark.streams.active.isEmpty)
+      assert(spark.conf.get(key) == "13")
+    } finally spark.conf.set(key, before)
+  }
 }

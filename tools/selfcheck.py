@@ -7,6 +7,9 @@ Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
   - compares row count, sorted column names, and a hash of values with
     columns sorted by name (mirrors the driver's documented compare).
 
+Exits 1 when any result fails, when a requested name has no result
+directory under <outDir>, or when nothing was checked at all.
+
 Usage: python3 tools/selfcheck.py <sfDir> <outDir> [name ...]
 """
 import sys, os, json, glob, hashlib
@@ -88,8 +91,13 @@ def main():
             elif not ok_cols:
                 print(f"  spark cols : {sorted(got.columns)}")
                 print(f"  oracle cols: {sorted(exp.columns)}")
-    print(f"\n== {n_pass} pass / {n_fail} fail / {n_noracle} no-oracle")
-    sys.exit(1 if n_fail else 0)
+    missing = sorted(n for n in only if not os.path.isdir(os.path.join(out_dir, n)))
+    for name in missing:
+        print(f"FAIL  {name}: no result directory under {out_dir}")
+    print(f"\n== {n_pass} pass / {n_fail + len(missing)} fail / {n_noracle} no-oracle")
+    if n_pass + n_fail + n_noracle == 0:
+        print("nothing was checked")
+    sys.exit(1 if n_fail or missing or n_pass + n_fail + n_noracle == 0 else 0)
 
 
 if __name__ == "__main__":
