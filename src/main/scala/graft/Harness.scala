@@ -90,17 +90,15 @@ object Harness {
       cpuSec: Double, error: Option[Throwable])
 
   /** A session with the shared set-up done: one warm scan, so the first
-    * query is not charged parquet footer reads and JIT; the streaming
-    * watch dirs, so q_st1/q_st3 time the stream, not a file copy; and
+    * query is not charged parquet footer reads and JIT; every streaming
+    * watch dir, so no streaming query's first run times a file copy; and
     * the shared star plus day-1 warehouse, so BI views query an
     * already-loaded star and the incremental query measures the apply.
     */
   def start(sfDir: String): Harness = {
     val spark = SparkUtil.local()
     Tables.lineitem(spark, sfDir).write.format("noop").mode("overwrite").save()
-    graft.streaming.CdcStream.ensureStaged(spark, sfDir)
-    graft.streaming.CdcStream.ensureStagedWithSentinel(spark, sfDir)
-    graft.streaming.CdcStream.ensureStagedLateActs(spark, sfDir)
+    graft.streaming.CdcStream.ensureAllStaged(spark, sfDir)
     graft.queries.DwhQueries.warmShared(spark, sfDir)
     new Harness(spark)
   }

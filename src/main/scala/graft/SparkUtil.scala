@@ -2,7 +2,7 @@ package graft
 
 import java.io.File
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One place for session construction so every entrypoint (Verify,
@@ -110,20 +110,26 @@ object SparkUtil {
     val marker = new Path(dstDir, "_STAGED")
     val st = src.getFileSystem(conf).getFileStatus(src)
     val stamp = s"$version:${st.getModificationTime}:${st.getLen}"
-    val current =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-        finally in.close()
-      }
-    if (!current.contains(stamp)) {
+    if (!readStamp(fs, marker).contains(stamp)) {
       if (fs.exists(dstDir)) fs.delete(dstDir, true)
       write(dir)
-      val out = fs.create(marker, true)
-      try out.write(stamp.getBytes("UTF-8")) finally out.close()
+      writeStamp(fs, marker, stamp)
     }
     dir
+  }
+
+  /** The stamp a staging marker file holds; None when it is absent. */
+  private[graft] def readStamp(fs: FileSystem, marker: Path): Option[String] =
+    if (!fs.exists(marker)) None
+    else {
+      val in = fs.open(marker)
+      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
+      finally in.close()
+    }
+
+  private[graft] def writeStamp(fs: FileSystem, marker: Path, stamp: String): Unit = {
+    val out = fs.create(marker, true)
+    try out.write(stamp.getBytes("UTF-8")) finally out.close()
   }
 
   /** Fixed default core count so Bench/Verify numbers are comparable

@@ -259,15 +259,12 @@ object Pipeline {
 
   /** `incrementalBatch` over staging already pinned by `pinStaging`. */
   private[graft] def applyStaging(prev: Dwh, staging: DataFrame, asOf: String): Dwh = {
-    // within-batch dedup per natural key, same survivor rule as the
-    // initial build (Facts.keepLatest): the latest crawl wins
-    def latest(key: String, tracked: Seq[String]): DataFrame =
-      Facts.keepLatest(dimInput(staging, key, tracked), Seq(key)).drop("crawled_at")
-
-    val dimJob = pin(ScdType2.applyBatch(
-      prev.dimJob, latest("job_id", JobTrackedCols), "job_id", JobTrackedCols, "job_sk", asOf))
+    // applyBatch dedups each natural key by the initial build's
+    // survivor rule (Facts.keepLatest): the latest crawl wins
+    val dimJob = pin(ScdType2.applyBatch(prev.dimJob, dimInput(staging, "job_id", JobTrackedCols),
+      "job_id", JobTrackedCols, "job_sk", asOf))
     val dimCompany = pin(ScdType2.applyBatch(
-      prev.dimCompany, latest("company_name_standardized", CompanyTrackedCols),
+      prev.dimCompany, dimInput(staging, "company_name_standardized", CompanyTrackedCols),
       "company_name_standardized", CompanyTrackedCols, "company_sk", asOf))
     val dimLocation = pin(Dimensions.appendNewLocationsKeepSk(
       prev.dimLocation, Dimensions.prepareDimLocation(staging, "location_src")))
@@ -275,9 +272,9 @@ object Pipeline {
     val dimDate = Dimensions.fillDimDate(prev.dimDate, dateLo, dateHi)
 
     val incoming = factInput(staging, dimJob, dimCompany, asOf)
-    val prevFact =
-      if (prev.fact.columns.contains("location_src")) prev.fact
-      else prev.fact.withColumn("location_src", lit(null).cast("string"))
+    // a returned fact never carries location_src; only in_batch rows
+    // feed the bridge, and they take it from `incoming`
+    val prevFact = prev.fact.withColumn("location_src", lit(null).cast("string"))
     // company_sk rides preserveCols (default): the reference's DO
     // UPDATE list omits it, so matched facts keep their original
     // company assignment even if the incoming batch re-resolved it

@@ -58,9 +58,9 @@ object ScdType2 {
 
   /** D4+D6: full snapshot rewrite. `current` must carry (skCol,
     * naturalKey, payload..., effective_date, expiry_date, is_current);
-    * `incoming` carries (naturalKey, payload...) with the same payload
-    * columns. Returns the new snapshot with the same schema as
-    * `current`.
+    * `incoming` carries (naturalKey, payload..., crawled_at) with the
+    * same payload columns. Returns the new snapshot with the same
+    * schema as `current`.
     */
   def applyBatch(
       current: DataFrame, incoming: DataFrame,
@@ -73,16 +73,11 @@ object ScdType2 {
     // is_current row per day, breaking the idempotency contract above;
     // reject it like the reference's PK constraint does. Duplicate keys
     // within one batch would double-insert current versions the same
-    // way — callers with an ordering dedup first (Facts.keepLatest);
-    // residual duplicates collapse deterministically by payload hash.
-    val keyed = incoming.filter(col(naturalKey).isNotNull)
-    val incomingDeduped = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(naturalKey))
-        .orderBy(Facts.tieHash(keyed, Seq(naturalKey)))
-      keyed.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    }
+    // way: the latest crawl survives (Facts.keepLatest, the survivor
+    // rule of every latest-crawl dedup).
+    val incomingDeduped = Facts
+      .keepLatest(incoming.filter(col(naturalKey).isNotNull), Seq(naturalKey))
+      .drop("crawled_at")
     // lazy checkpoint: routed feeds THREE consumers (changedKeys' anti
     // and semi probes, and newRows' numbering) and the executed plan
     // reuses none of them (ReusedExchange=0 measured) — without the

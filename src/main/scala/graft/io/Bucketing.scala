@@ -34,13 +34,7 @@ object Bucketing {
       val st = fs.getFileStatus(new Path(s"$dir/$t.parquet"))
       s"${st.getModificationTime}:${st.getLen}"
     }.mkString(s"v1:$buckets:", ",", "")
-    val current =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-        finally in.close()
-      }
+    val current = graft.SparkUtil.readStamp(fs, marker)
     val haveTables =
       spark.catalog.tableExists(tOrders) && spark.catalog.tableExists(tLineitem)
     val (locOrders, locLineitem) = (new Path(warehouse, tOrders), new Path(warehouse, tLineitem))
@@ -68,8 +62,7 @@ object Bucketing {
       // co-located SMJ can also skip its per-bucket sort
       Snapshots.writeBucketed(graft.Tables.orders(spark, dir), tOrders, "o_orderkey", buckets)
       Snapshots.writeBucketed(graft.Tables.lineitem(spark, dir), tLineitem, "l_orderkey", buckets)
-      val out = fs.create(marker, true)
-      try out.write(stamp.getBytes("UTF-8")) finally out.close()
+      graft.SparkUtil.writeStamp(fs, marker, stamp)
     }
     (tOrders, tLineitem)
   }

@@ -192,7 +192,15 @@ object Dedup {
   private[llm] def jaccardPairsViaBlocking(
       keyed: DataFrame, keyCol: String,
       threshold: Double, maxDocFreq: Int): DataFrame = {
-    val kept = cappedKeyed(keyed, keyCol, maxDocFreq)
+    jaccardAtLeast(blockedOverlaps(cappedKeyed(keyed, keyCol, maxDocFreq), keyCol), threshold)
+  }
+
+  /** Every doc pair (id_a < id_b) sharing a key of the capped exploded
+    * frame `kept`, with its intersection count `inter` and both key-set
+    * sizes `na`/`nb`: each bucket's emitted pairs are counted in one
+    * count-shuffle keyed by the pair.
+    */
+  private def blockedOverlaps(kept: DataFrame, keyCol: String): DataFrame = {
     val sizes = kept.groupBy("__id").agg(count(lit(1)).as("n"))
     // The candidate join's grouping keys are nearly unique per input
     // partition (pairs repeat across keys, which live elsewhere), so a
@@ -206,13 +214,25 @@ object Dedup {
       .repartition(col("id_a"), col("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter"))
-    inter
+    withSizes(inter, sizes)
+  }
+
+  /** Joins both docs' key-set sizes (`sizes`: __id, n) onto pairs as
+    * `na` and `nb`.
+    */
+  private def withSizes(pairs: DataFrame, sizes: DataFrame): DataFrame =
+    pairs
       .join(sizes.select(col("__id").as("id_a"), col("n").as("na")), Seq("id_a"))
       .join(sizes.select(col("__id").as("id_b"), col("n").as("nb")), Seq("id_b"))
+
+  /** Pairs whose Jaccard |A∩B| / |A∪B| from (inter, na, nb) reaches
+    * `threshold`, as (id_a, id_b, jaccard).
+    */
+  private def jaccardAtLeast(overlaps: DataFrame, threshold: Double): DataFrame =
+    overlaps
       .withColumn("jaccard", col("inter") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
 
   /** Exact Jaccard pairs via RARE-KEY SKETCH candidate generation: each
     * doc is sketched by its `sketchK` rarest kept keys (ordered by
@@ -299,13 +319,7 @@ object Dedup {
       .join(keptCand.select(col("__id").as("id_b"), col(keyCol)), Seq("id_b", keyCol))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter"))
-    val sizes = sets.select(col("__id"), col("n"))
-    inter
-      .join(sizes.select(col("__id").as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(sizes.select(col("__id").as("id_b"), col("n").as("nb")), Seq("id_b"))
-      .withColumn("jaccard", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    jaccardAtLeast(withSizes(inter, sets.select(col("__id"), col("n"))), threshold)
   }
 
   /** Ground-truth hook for recall measurement (BENCH_NOTES.md,
@@ -496,18 +510,7 @@ object Dedup {
       shingleN: Int, threshold: Double, maxDocFreq: Int = 500): DataFrame = {
     val keyed = spread(docs)
       .select(col(idCol).as("__id"), explode(shingles(col(textCol), shingleN)).as("s"))
-    val kept = cappedKeyed(keyed, "s", maxDocFreq)
-    val sizes = kept.groupBy("__id").agg(count(lit(1)).as("n"))
-    val inter = kept.select(col("s"), col("__id").as("id_a"))
-      .join(kept.select(col("s"), col("__id").as("id_b")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .repartition(col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("__id").as("id_a"), col("n").as("na")), Seq("id_a"))
-      .join(sizes.select(col("__id").as("id_b"), col("n").as("nb")), Seq("id_b"))
+    blockedOverlaps(cappedKeyed(keyed, "s", maxDocFreq), "s")
       .withColumn("containment", col("inter") / least(col("na"), col("nb")))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "containment")
@@ -676,14 +679,10 @@ object Dedup {
       .join(cand.select("id_a"), Seq("id_a"), "left_semi")
     val keptB = toksD.select(col("__id").as("id_b"), col("t"))
       .join(cand.select("id_b"), Seq("id_b"), "left_semi")
-    cand.join(keptA, Seq("id_a"))
+    val inter = cand.join(keptA, Seq("id_a"))
       .join(keptB, Seq("id_b", "t"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__i"))
-      .join(sizes.select(col("__id").as("id_a"), col("n").as("__na")), Seq("id_a"))
-      .join(sizes.select(col("__id").as("id_b"), col("n").as("__nb")), Seq("id_b"))
-      .withColumn("jaccard", col("__i") / (col("__na") + col("__nb") - col("__i")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+    jaccardAtLeast(withSizes(inter, sizes), threshold)
   }
 
   // ------------------------------------------------------------ SimHash

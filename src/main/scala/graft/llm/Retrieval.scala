@@ -26,10 +26,14 @@ object Retrieval {
 
   /** (id, term, tf) — whitespace tokens, one row per distinct term per doc. */
   def termFreqs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
+    countTerms(tokenRows(docs, idCol, textCol), idCol)
+
+  /** (id, term) — one row per whitespace token. */
+  private def tokenRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("term"))
+
+  private def countTerms(toks: DataFrame, idCol: String): DataFrame =
+    toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
 
   /** Per-doc log-probability under the corpus's own add-one unigram
     * LM: (id, logp_sum, n_tokens) with logp_sum = Σ tf·ln((c+1)/(T+V))
@@ -88,22 +92,10 @@ object Retrieval {
   def bm25(
       docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k1: Double, b: Double, topN: Int): DataFrame = {
-    val toks = docs.select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("term"))
-    val dl = toks.groupBy(idCol).agg(count(lit(1)).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
-    val tf = toks.filter(col("term").isin(terms: _*))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val avgdl = col("total_len").cast("double") / col("n_docs")
-    val idf = log(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val contrib = idf * (col("tf") * (k1 + 1)) /
-      (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / avgdl))
-    val perTerm = tf
-      .join(broadcast(df), "term")
-      .join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .select(col(idCol), col("term"), contrib.as("c"))
+    val toks = tokenRows(docs, idCol, textCol)
+    val (scoring, contrib) =
+      bm25Inputs(toks, countTerms(toks.filter(col("term").isin(terms: _*)), idCol), idCol, k1, b)
+    val perTerm = scoring.select(col(idCol), col("term"), contrib.as("c"))
     val termCols = terms.map(t => sum(when(col("term") === t, col("c"))).as(s"s_$t"))
     val total = terms.map(t => coalesce(col(s"s_$t"), lit(0.0))).reduce(_ + _)
     perTerm
@@ -132,25 +124,33 @@ object Retrieval {
   def bm25PerQuery(
       docs: DataFrame, idCol: String, textCol: String,
       probeTerms: DataFrame, k1: Double, b: Double): DataFrame = {
-    val toks = docs.select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("term"))
+    val toks = tokenRows(docs, idCol, textCol)
+    val (scoring, contrib) = bm25Inputs(toks, countTerms(toks, idCol), idCol, k1, b)
+    scoring
+      .select(col(idCol).as("cand_id"), col("term"),
+        round(contrib, 12).cast("decimal(28,12)").as("c"))
+      .join(probeTerms.select(col("query_id"), col("term")), "term")
+      .groupBy("query_id", "cand_id")
+      .agg(sum(col("c")).as("score"))
+  }
+
+  /** The BM25 scoring frame shared by `bm25` and `bm25PerQuery`: `tf`
+    * (id, term, tf) joined to each term's df, each doc's length `dl`
+    * and the corpus stats (`n_docs`, `total_len`) of the token rows
+    * `toks`, with the per-(doc, term) contribution
+    * idf·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)) over its columns.
+    */
+  private def bm25Inputs(
+      toks: DataFrame, tf: DataFrame, idCol: String, k1: Double, b: Double): (DataFrame, Column) = {
     val dl = toks.groupBy(idCol).agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
-    val tf = toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val avgdl = col("total_len").cast("double") / col("n_docs")
     val idf = log(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val contrib = idf * (col("tf") * (k1 + 1)) /
       (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / avgdl))
-    tf
-      .join(broadcast(df), "term")
-      .join(dl, idCol)
-      .crossJoin(broadcast(stats))
-      .select(col(idCol).as("cand_id"), col("term"),
-        round(contrib, 12).cast("decimal(28,12)").as("c"))
-      .join(probeTerms.select(col("query_id"), col("term")), "term")
-      .groupBy("query_id", "cand_id")
-      .agg(sum(col("c")).as("score"))
+    (tf.join(broadcast(df), "term").join(dl, idCol).crossJoin(broadcast(stats)), contrib)
   }
 
   /** Reciprocal-rank fusion of two rankers' top lists (Cormack et al.

@@ -54,16 +54,36 @@ object Similarity {
   def bruteForceTopK(
       queries: DataFrame, corpus: DataFrame, idCol: String, embCol: String,
       k: Int, scale: Int = 3): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(embCol)).as("__qe"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(embCol)).as("__ce"))
-    val scored = broadcast(q).crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(cosine(col("__qe"), col("__ce")), scale))
+    val (q, c) = annSides(queries, corpus, idCol, embCol, Nil, Nil)
+    cosineTopK(broadcast(q).crossJoin(c), k, scale)
+  }
+
+  /** The query and corpus sides of an ANN pairing: `query_id`/`__qe`
+    * and `neighbor_id`/`__ce` (the double embedding), then each side's
+    * join key and extra columns.
+    */
+  private def annSides(
+      queries: DataFrame, corpus: DataFrame, idCol: String, embCol: String,
+      qKeys: Seq[Column], cKeys: Seq[Column]): (DataFrame, DataFrame) =
+    (queries.select(col(idCol).as("query_id") +: asDouble(col(embCol)).as("__qe") +: qKeys: _*),
+      corpus.select(col(idCol).as("neighbor_id") +: asDouble(col(embCol)).as("__ce") +: cKeys: _*))
+
+  private val NotSelf = col("query_id") =!= col("neighbor_id")
+  private val TopKCols = Seq(col("query_id"), col("rank"), col("neighbor_id"), col("score"))
+
+  /** The exact-cosine tail of every top-k search: keep the candidate
+    * pairs passing `keep`, round the cosine to `scale` decimals BEFORE
+    * ranking, rank per query (ties on neighbor id), cut at k.
+    */
+  private def cosineTopK(
+      pairs: DataFrame, k: Int, scale: Int, keep: Column = NotSelf,
+      out: Seq[Column] = TopKCols): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id"))
-    scored
+    pairs.filter(keep)
+      .withColumn("score", round(cosine(col("__qe"), col("__ce")), scale))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "score")
+      .select(out: _*)
   }
 
   /** Late-interaction (MaxSim) retrieval over MULTI-vector documents —
@@ -171,11 +191,7 @@ object Similarity {
     * of "i:j" as an unsigned integer, mapped to [-1, 1). BigInteger's
     * correctly-rounded doubleValue matches DuckDB's UBIGINT→DOUBLE cast.
     */
-  private[llm] def planeWeight(i: Int, j: Int): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val d = md.digest(s"$i:$j".getBytes("UTF-8"))
-    new java.math.BigInteger(1, java.util.Arrays.copyOf(d, 8)).doubleValue() / TwoPow63 - 1.0
-  }
+  private[llm] def planeWeight(i: Int, j: Int): Double = md5Weight(s"$i:$j")
 
   /** dim × nPlanes fixed hyperplanes. */
   private[llm] def hyperplanes(dim: Int, planes: Int): Array[Array[Double]] =
@@ -204,18 +220,9 @@ object Similarity {
       k: Int, nPlanes: Int = 8, dim: Int = 64, scale: Int = 3): DataFrame = {
     val planes = hyperplanes(dim, nPlanes)
     val bucketUdf = udf((e: Seq[Float]) => bucketOf(e, planes))
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(embCol)).as("__qe"),
-      bucketUdf(col(embCol)).as("__bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(embCol)).as("__ce"),
-      bucketUdf(col(embCol)).as("__bucket"))
-    val scored = q.join(c, Seq("__bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(cosine(col("__qe"), col("__ce")), scale))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "score")
+    val bucket = bucketUdf(col(embCol)).as("__bucket")
+    val (q, c) = annSides(queries, corpus, idCol, embCol, Seq(bucket), Seq(bucket))
+    cosineTopK(q.join(c, Seq("__bucket")), k, scale)
   }
 
   /** Hard-negative mining for contrastive/retrieval training: for each
@@ -232,19 +239,12 @@ object Similarity {
       scale: Int = 3): DataFrame = {
     val planes = hyperplanes(dim, nPlanes)
     val bucketUdf = udf((e: Seq[Float]) => bucketOf(e, planes))
-    val q = queries.select(col(idCol).as("query_id"), col(labelCol).as("__ql"),
-      asDouble(col(embCol)).as("__qe"), bucketUdf(col(embCol)).as("__bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(labelCol).as("__cl"),
-      asDouble(col(embCol)).as("__ce"), bucketUdf(col(embCol)).as("__bucket"))
-    val scored = q.join(c, Seq("__bucket"))
-      .filter(col("query_id") =!= col("neighbor_id") && col("__ql") =!= col("__cl"))
-      .withColumn("score", round(cosine(col("__qe"), col("__ce")), scale))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("__cl").as("neighbor_label"), col("score"))
+    val bucket = bucketUdf(col(embCol)).as("__bucket")
+    val (q, c) = annSides(queries, corpus, idCol, embCol,
+      Seq(bucket, col(labelCol).as("__ql")), Seq(bucket, col(labelCol).as("__cl")))
+    cosineTopK(q.join(c, Seq("__bucket")), k, scale, NotSelf && col("__ql") =!= col("__cl"),
+      Seq(col("query_id"), col("rank"), col("neighbor_id"),
+        col("__cl").as("neighbor_label"), col("score")))
   }
 
   /** Multi-probe LSH ANN: each query scans its own sign-bit bucket AND
@@ -270,32 +270,17 @@ object Similarity {
     val bucketUdf = udf((e: Seq[Float]) => bucketOf(e, planes))
     val probes = (c: Column) => array(c +: (0 until nPlanes).map(i =>
       c.bitwiseXOR(lit(1 << i))): _*)
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(embCol)).as("__qe"),
-      explode(probes(bucketUdf(col(embCol)))).as("__bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(embCol)).as("__ce"),
-      bucketUdf(col(embCol)).as("__bucket"))
-    val scored = q.join(c, Seq("__bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(cosine(col("__qe"), col("__ce")), scale))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "score")
+    val (q, c) = annSides(queries, corpus, idCol, embCol,
+      Seq(explode(probes(bucketUdf(col(embCol)))).as("__bucket")),
+      Seq(bucketUdf(col(embCol)).as("__bucket")))
+    cosineTopK(q.join(c, Seq("__bucket")), k, scale)
   }
 
   /** Deterministic SQL-replayable IVF centroids (namespaced separately
     * from the LSH planes).
     */
-  private[llm] def centroids(dim: Int, k: Int): Array[Array[Double]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Array.tabulate(k) { c =>
-      Array.tabulate(dim) { j =>
-        val d = md.digest(s"c:$c:$j".getBytes("UTF-8"))
-        new java.math.BigInteger(1, java.util.Arrays.copyOf(d, 8)).doubleValue() / TwoPow63 - 1.0
-      }
-    }
-  }
+  private[llm] def centroids(dim: Int, k: Int): Array[Array[Double]] =
+    Array.tabulate(k, dim)((c, j) => md5Weight(s"c:$c:$j"))
 
   /** Cell ids ordered by ascending squared-L2 distance (ties by cell
     * id), truncated to `take`. Sequential accumulation so the DuckDB
@@ -327,18 +312,9 @@ object Similarity {
     val cents = centroids(dim, nCells)
     val probeUdf = udf((e: Seq[Float]) => nearestCells(e, cents, nProbe))
     val cellUdf = udf((e: Seq[Float]) => nearestCells(e, cents, 1).head)
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(embCol)).as("__qe"),
-      explode(probeUdf(col(embCol))).as("__cell"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(embCol)).as("__ce"),
-      cellUdf(col(embCol)).as("__cell"))
-    val scored = q.join(c, Seq("__cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(cosine(col("__qe"), col("__ce")), scale))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "score")
+    val (q, c) = annSides(queries, corpus, idCol, embCol,
+      Seq(explode(probeUdf(col(embCol))).as("__cell")), Seq(cellUdf(col(embCol)).as("__cell")))
+    cosineTopK(q.join(c, Seq("__cell")), k, scale)
   }
 
   /** Nearest-centroid index over a DOUBLE vector, identical
@@ -509,14 +485,27 @@ object Similarity {
     val codes = corpus
       .select(col(idCol).as("neighbor_id"), posexplode(codesUdf(col(embCol))))
       .select(col("neighbor_id"), col("pos").as("__s"), col("col").as("__c"))
-    val dt = queries
-      .select(col(idCol).as("query_id"), posexplode(dtUdf(col(embCol))))
+    val dt = adcTable(queries, idCol, dtUdf(col(embCol)), nCodes)
+    adcTopK(codes.join(broadcast(dt), Seq("__s", "__c")).filter(NotSelf), k)
+  }
+
+  /** Each query's m×k distance lookup table as (query_id, __s, __c,
+    * __dt), every entry rounded to 12dp.
+    */
+  private def adcTable(
+      queries: DataFrame, idCol: String, table: Column, nCodes: Int): DataFrame =
+    queries
+      .select(col(idCol).as("query_id"), posexplode(table))
       .select(col("query_id"), (col("pos") / nCodes).cast("int").as("__s"),
         pmod(col("pos"), lit(nCodes)).cast("int").as("__c"),
         round(col("col"), 12).as("__dt"))
-    codes.join(broadcast(dt), Seq("__s", "__c"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id")
+
+  /** The ADC tail: sum each (query, neighbor)'s table entries as
+    * DECIMAL(28,12), rank ascending per query (ties on neighbor id),
+    * cut at k.
+    */
+  private def adcTopK(entries: DataFrame, k: Int): DataFrame =
+    entries.groupBy("query_id", "neighbor_id")
       .agg(sum(col("__dt").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
         .cast("double").as("adist"))
       .withColumn("rank", row_number().over(
@@ -524,7 +513,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("adist"), 6).as("adist"))
-  }
 
   /** IVF-PQ: the full production ANN shape — the IVF router restricts
     * each query to its nProbe nearest coarse cells (so the scan
@@ -548,11 +536,7 @@ object Similarity {
     val dtUdf = pqTableUdf(cb, m, nCodes, dim)
     val qc = queries.select(col(idCol).as("query_id"),
       explode(probeUdf(col(embCol))).as("__cell"))
-    val dt = queries
-      .select(col(idCol).as("query_id"), posexplode(dtUdf(col(embCol))))
-      .select(col("query_id"), (col("pos") / nCodes).cast("int").as("__s"),
-        pmod(col("pos"), lit(nCodes)).cast("int").as("__c"),
-        round(col("col"), 12).as("__dt"))
+    val dt = adcTable(queries, idCol, dtUdf(col(embCol)), nCodes)
     // the corpus side carries ALL the per-row UDF work (cell route +
     // code assignment) and the downstream explode/join/partial-agg
     // pipelines inside the scan partitions — a small corpus arriving
@@ -563,20 +547,12 @@ object Similarity {
     val ccodes = graft.SparkUtil.widenByFiles(corpus)
       .select(col(idCol).as("neighbor_id"),
         cellUdf(col(embCol)).as("__cell"), codesUdf(col(embCol)).as("__codes"))
-    ccodes.join(broadcast(qc), Seq("__cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    adcTopK(ccodes.join(broadcast(qc), Seq("__cell"))
+      .filter(NotSelf)
       .select(col("query_id"), col("neighbor_id"), posexplode(col("__codes")))
       .select(col("query_id"), col("neighbor_id"), col("pos").as("__s"),
         col("col").as("__c"))
-      .join(broadcast(dt), Seq("query_id", "__s", "__c"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("__dt").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
-        .cast("double").as("adist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adist"), 6).as("adist"))
+      .join(broadcast(dt), Seq("query_id", "__s", "__c")), k)
   }
 
   /** Embedding-cosine near-duplicate pairs (dedup by vector closeness):

@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, Attribute, BindReferences, Descending, GenericInternalRow,
+  Ascending, Attribute, BindReferences, Descending, Expression, GenericInternalRow,
   JoinedRow, RowOrdering, SortDirection, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{
@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.{array, col, explode, lit, pmod, when, xxhash64}
+import org.apache.spark.sql.types.DataType
 
 /** The as-of join as a FIRST-CLASS Catalyst operator — the SURVEY §7.3
   * option-(c) toolchain end to end: a custom `LogicalPlan` node, a
@@ -85,6 +86,52 @@ object AsOfJoinStrategy extends SparkStrategy {
   }
 }
 
+/** What the sort-merge and broadcast as-of execs share: the type checks,
+  * the right side's within-key order and the admit rule.
+  */
+private[plans] object AsOfExecs {
+
+  /** Both sides' ts types and key types must be equal: key comparison
+    * is UnsafeRow-binary (or a left-typed ordering), so a mismatch would
+    * silently mis-compare instead of erroring.
+    */
+  def requireSameTypes(
+      leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
+      leftTs: Attribute, rightTs: Attribute): Unit = {
+    require(rightTs.dataType == leftTs.dataType,
+      s"as-of timestamp types must match: ${leftTs.dataType} vs ${rightTs.dataType}")
+    require(rightKeys.map(_.dataType) == leftKeys.map(_.dataType),
+      s"as-of key types must match: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
+  }
+
+  def tsDirection(forward: Boolean): SortDirection = if (forward) Descending else Ascending
+
+  /** Within a key: ts in merge direction, then the remaining orderable
+    * right columns ascending, so rows tying on (keys, ts) have a
+    * DETERMINISTIC last element — the same field-wise-greatest rule
+    * the window form's `__p` tiebreaker implements.
+    */
+  def rightOrder(
+      rightKeys: Seq[Attribute], rightTs: Attribute, rightOut: Seq[Attribute],
+      forward: Boolean): Seq[SortOrder] =
+    SortOrder(rightTs, tsDirection(forward)) +:
+      rightOut.filterNot(a => rightKeys.contains(a) || a == rightTs)
+        .filter(a => RowOrdering.isOrderable(a.dataType))
+        .map(SortOrder(_, Ascending))
+
+  /** admits(r, l) = "this right ts sorts at-or-before the left ts in
+    * the merge order". Backward (ts asc, nulls FIRST): null right ts
+    * always admits, null left ts admits only null rights. Forward (ts
+    * desc, nulls LAST): mirrored — identical to the window form's
+    * default null ordering in each direction.
+    */
+  def admits(tsType: DataType, forward: Boolean): (Any, Any) => Boolean = {
+    val tsOrd = TypeUtils.getInterpretedOrdering(tsType)
+    if (forward) (r, l) => (l == null) || (r != null && tsOrd.compare(r, l) >= 0)
+    else (r, l) => (r == null) || (l != null && tsOrd.compare(r, l) <= 0)
+  }
+}
+
 case class AsOfJoinExec(
     leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
     leftTs: Attribute, rightTs: Attribute, forward: Boolean,
@@ -101,20 +148,12 @@ case class AsOfJoinExec(
     ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
   /** Both sides sorted by (keys, ts); the right side additionally by
-    * its remaining orderable columns so rows tying on (keys, ts) have
-    * a DETERMINISTIC last element — the same field-wise-greatest rule
-    * the window form's `__p` tiebreaker implements.
+    * its remaining orderable columns (`AsOfExecs.rightOrder`).
     */
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = {
-    val rightTie = right.output
-      .filterNot(a => rightKeys.contains(a) || a == rightTs)
-      .filter(a => RowOrdering.isOrderable(a.dataType))
-    val tsDir: SortDirection = if (forward) Descending else Ascending
-    Seq(
-      leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTs, tsDir),
-      (rightKeys.map(SortOrder(_, Ascending)) :+ SortOrder(rightTs, tsDir)) ++
-        rightTie.map(SortOrder(_, Ascending)))
-  }
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
+    leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTs, AsOfExecs.tsDirection(forward)),
+    rightKeys.map(SortOrder(_, Ascending)) ++
+      AsOfExecs.rightOrder(rightKeys, rightTs, right.output, forward))
 
   override protected def doExecute(): RDD[InternalRow] = {
     val lOut = left.output
@@ -125,29 +164,16 @@ case class AsOfJoinExec(
     val rTs = rightTs
     val keyTypes = leftKeys.map(_.dataType)
     val tsType = leftTs.dataType
-    require(rightTs.dataType == tsType,
-      s"as-of timestamp types must match: $tsType vs ${rightTs.dataType}")
-    // key comparison is UnsafeRow-binary / left-typed interpreted
-    // ordering — a type mismatch would silently mis-compare, not error
-    require(rightKeys.map(_.dataType) == keyTypes,
-      s"as-of key types must match: $keyTypes vs ${rightKeys.map(_.dataType)}")
+    AsOfExecs.requireSameTypes(leftKeys, rightKeys, leftTs, rightTs)
     val allOut = output
+    val fwd = forward
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       val lKeyProj = UnsafeProjection.create(lKeys, lOut)
       val rKeyProj = UnsafeProjection.create(rKeys, rOut)
       val keyOrd = RowOrdering.createNaturalAscendingOrdering(keyTypes)
-      val lTsBound = BindReferences.bindReference[org.apache.spark.sql.catalyst.expressions.Expression](lTs, lOut)
-      val rTsBound = BindReferences.bindReference[org.apache.spark.sql.catalyst.expressions.Expression](rTs, rOut)
-      val tsOrd = TypeUtils.getInterpretedOrdering(tsType)
-      // admit = "this right row sorts at-or-before the left row in the
-      // merge order". Backward (ts asc, nulls FIRST): null right ts
-      // always admits, null left ts admits only null rights. Forward
-      // (ts desc, nulls LAST): mirrored — identical to the window
-      // form's default null ordering in each direction.
-      val fwd = forward
-      def admits(r: Any, l: Any): Boolean =
-        if (fwd) (l == null) || (r != null && tsOrd.compare(r, l) >= 0)
-        else (r == null) || (l != null && tsOrd.compare(r, l) <= 0)
+      val lTsBound = BindReferences.bindReference[Expression](lTs, lOut)
+      val rTsBound = BindReferences.bindReference[Expression](rTs, rOut)
+      val admits = AsOfExecs.admits(tsType, fwd)
       val nullRight = new GenericInternalRow(rOut.length)
       val joined = new JoinedRow
       val resultProj = UnsafeProjection.create(allOut, allOut)
@@ -221,21 +247,10 @@ case class BroadcastAsOfJoinExec(
     val rTs = rightTs
     val fwd = forward
     val tsType = leftTs.dataType
-    require(rightTs.dataType == tsType,
-      s"as-of timestamp types must match: $tsType vs ${rightTs.dataType}")
-    // the hash lookup compares UnsafeRow bytes — typed-mismatch keys
-    // would never match (or misread widths) instead of erroring
-    require(rightKeys.map(_.dataType) == leftKeys.map(_.dataType),
-      s"as-of key types must match: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
+    AsOfExecs.requireSameTypes(leftKeys, rightKeys, leftTs, rightTs)
     val allOut = output
-    // within a key: ts in merge direction, then the payload tiebreak —
-    // identical to the sort-merge exec's right child ordering
-    val tsDir: SortDirection = if (fwd) Descending else Ascending
-    val rightOrder: Seq[SortOrder] =
-      SortOrder(rTs, tsDir) +:
-        rOut.filterNot(a => rKeys.contains(a) || a == rTs)
-          .filter(a => RowOrdering.isOrderable(a.dataType))
-          .map(SortOrder(_, Ascending))
+    // within a key: the sort-merge exec's right child ordering
+    val rightOrder = AsOfExecs.rightOrder(rKeys, rTs, rOut, fwd)
     val broadcastRows = right.executeBroadcast[Array[InternalRow]]()
     left.execute().mapPartitions { lIter =>
       val rKeyProj = UnsafeProjection.create(rKeys, rOut)
@@ -253,14 +268,9 @@ case class BroadcastAsOfJoinExec(
       }
       index.values().forEach(b => b.sortInPlace()(rowOrd.on[InternalRow](identity)))
       val lKeyProj = UnsafeProjection.create(lKeys, lOut)
-      val lTsBound = BindReferences.bindReference[
-        org.apache.spark.sql.catalyst.expressions.Expression](lTs, lOut)
-      val rTsBound = BindReferences.bindReference[
-        org.apache.spark.sql.catalyst.expressions.Expression](rTs, rOut)
-      val tsOrd = TypeUtils.getInterpretedOrdering(tsType)
-      def admits(r: Any, l: Any): Boolean =
-        if (fwd) (l == null) || (r != null && tsOrd.compare(r, l) >= 0)
-        else (r == null) || (l != null && tsOrd.compare(r, l) <= 0)
+      val lTsBound = BindReferences.bindReference[Expression](lTs, lOut)
+      val rTsBound = BindReferences.bindReference[Expression](rTs, rOut)
+      val admits = AsOfExecs.admits(tsType, fwd)
       val nullRight = new GenericInternalRow(rOut.length)
       val joined = new JoinedRow
       val resultProj = UnsafeProjection.create(allOut, allOut)

@@ -156,6 +156,23 @@ object CoPurchaseGraph {
   /** Oracle CTEs of [[twoStepPageRank]] over the oracle's edge CTE `e`
     * and degree CTE `d`, ending in its answer.
     */
+  /** Oracle CTEs p → pc → `edges` (src, dst): the purchase-key graph
+    * with each k-group capped to its 16 lowest-scrambled users, user
+    * pairs sharing ≥ `minShared` keys ([[strongTieEdgesCapped]];
+    * q_a29b, q_a30b).
+    */
+  def cappedEdgesOracleCtes(edges: String, minShared: Int): String =
+    s"""WITH p AS MATERIALIZED (SELECT DISTINCT user_id AS u,
+       |    CAST(props->>'$$.k' AS BIGINT) AS k
+       |  FROM events WHERE event_type = 'purchase'),
+       |pc AS MATERIALIZED (SELECT u, k FROM (SELECT u, k,
+       |    row_number() OVER (PARTITION BY k
+       |      ORDER BY (u * 2654435761) % 4294967296, u) AS rn
+       |  FROM p) WHERE rn <= 16),
+       |$edges AS MATERIALIZED (SELECT a.u AS src, b.u AS dst
+       |      FROM pc a JOIN pc b ON a.k = b.k AND a.u <> b.u
+       |      GROUP BY 1, 2 HAVING count(*) >= $minShared)""".stripMargin
+
   val pageRankOracleTail: String =
     """pr1 AS (SELECT e.dst AS u,
       |    round(0.15 + 0.85 * CAST(sum(CAST(round(1.0 / d.deg, 12)

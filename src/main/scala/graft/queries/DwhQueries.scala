@@ -20,8 +20,7 @@ import org.apache.spark.sql.types.DecimalType
 object DwhQueries {
 
   private val AsOf = "2026-08-12"
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+  import RelationalQueries.dsum
 
   /** customer ⋈ nation with a synthesized per-row location string
     * covering the four parse shapes: "City: District", bare city, JSON
@@ -85,6 +84,26 @@ object DwhQueries {
   /** q_e2e_incremental's pre-existing day-1 warehouse (see its body). */
   private val prevDwhCache =
     scala.collection.concurrent.TrieMap[String, graft.app.Pipeline.Dwh]()
+  /** Oracle CTEs j → e: the e2e star's jobs (k, job_sk, due, ...) with
+    * their company, nation and parsed salary bounds, `eCols` added and
+    * filtered by `eWhere` (q_v_salary_filter, q_v_top10_hn).
+    */
+  private def e2eJobsOracleCtes(eCols: String, eWhere: String): String =
+    s"""WITH j AS (SELECT o_orderkey AS k, o_custkey, o_orderpriority,
+       |                  o_orderdate::TIMESTAMP + (o_orderkey % 30 + 1) * INTERVAL 1 DAY AS due,
+       |                  10000 + row_number() OVER (ORDER BY CAST(o_orderkey AS VARCHAR)) AS job_sk
+       |           FROM orders),
+       |e AS (SELECT j.*, c_name, $eCols
+       |             CASE WHEN k % 3 = 0 THEN CAST(k % 15 + 5 AS DOUBLE)
+       |                  WHEN k % 3 = 1 THEN 0.0
+       |                  ELSE CAST(k % 20 + 5 AS DOUBLE) END AS salary_min,
+       |             CASE WHEN k % 3 = 0 THEN CAST(k % 15 + 10 AS DOUBLE)
+       |                  WHEN k % 3 = 1 THEN 0.0
+       |                  ELSE CAST(k % 20 + 5 AS DOUBLE) END AS salary_max
+       |      FROM j JOIN customer ON c_custkey = o_custkey
+       |             JOIN nation ON n_nationkey = c_nationkey
+       |      $eWhere)""".stripMargin
+
   private def e2eDwh(s: SparkSession, dir: String): graft.app.Pipeline.Dwh =
     dwhCache.getOrElseUpdate(dir, {
       val staging = graft.app.Pipeline.rawToStaging(e2eRaw(s, dir), "2026-08-12 00:00:00")
@@ -274,7 +293,8 @@ object DwhQueries {
           .withColumn(ScdType2.CurrentCol, lit(true))
         val incoming = base.select(col("c_name"),
           when(col("c_custkey") % 7 === 0, concat(col("c_mktsegment"), lit("_V2")))
-            .otherwise(col("c_mktsegment")).as("segment"))
+            .otherwise(col("c_mktsegment")).as("segment"),
+          lit(AsOf).cast("timestamp").as("crawled_at"))
         ScdType2.applyBatch(current, incoming, "c_name", Seq("segment"), "company_sk", AsOf)
           .select(col("company_sk"), col("c_name"), col("segment"),
             date_format(col(ScdType2.EffectiveCol), "yyyy-MM-dd").as("effective_date"),
@@ -668,19 +688,7 @@ object DwhQueries {
     // ---------------------------------------------------------------- vw_job_salary_filter over the e2e star
     QueryDef(
       "q_v_salary_filter", "P4 J3 V-salary-filter O3",
-      Some("""WITH j AS (SELECT o_orderkey AS k, o_custkey, o_orderpriority,
-             |                  o_orderdate::TIMESTAMP + (o_orderkey % 30 + 1) * INTERVAL 1 DAY AS due,
-             |                  10000 + row_number() OVER (ORDER BY CAST(o_orderkey AS VARCHAR)) AS job_sk
-             |           FROM orders),
-             |e AS (SELECT j.*, c_name, c_custkey % 4 AS k4, n_name,
-             |             CASE WHEN k % 3 = 0 THEN CAST(k % 15 + 5 AS DOUBLE)
-             |                  WHEN k % 3 = 1 THEN 0.0
-             |                  ELSE CAST(k % 20 + 5 AS DOUBLE) END AS salary_min,
-             |             CASE WHEN k % 3 = 0 THEN CAST(k % 15 + 10 AS DOUBLE)
-             |                  WHEN k % 3 = 1 THEN 0.0
-             |                  ELSE CAST(k % 20 + 5 AS DOUBLE) END AS salary_max
-             |      FROM j JOIN customer ON c_custkey = o_custkey
-             |             JOIN nation ON n_nationkey = c_nationkey)
+      Some(s"""${e2eJobsOracleCtes("c_custkey % 4 AS k4, n_name,", "")}
              |SELECT job_sk, 'Engineer ' || o_orderpriority AS title_clean,
              |       c_name AS company_name_standardized, salary_min, salary_max,
              |       strftime(due, '%Y-%m-%d') AS due_date,
@@ -702,20 +710,7 @@ object DwhQueries {
     // ---------------------------------------------------------------- vw_top10_hn over the e2e star
     QueryDef(
       "q_v_top10_hn", "P5 W2 F16 V-top10-hn",
-      Some("""WITH j AS (SELECT o_orderkey AS k, o_custkey, o_orderpriority,
-             |                  o_orderdate::TIMESTAMP + (o_orderkey % 30 + 1) * INTERVAL 1 DAY AS due,
-             |                  10000 + row_number() OVER (ORDER BY CAST(o_orderkey AS VARCHAR)) AS job_sk
-             |           FROM orders),
-             |e AS (SELECT j.*, c_name,
-             |             CASE WHEN k % 3 = 0 THEN CAST(k % 15 + 5 AS DOUBLE)
-             |                  WHEN k % 3 = 1 THEN 0.0
-             |                  ELSE CAST(k % 20 + 5 AS DOUBLE) END AS salary_min,
-             |             CASE WHEN k % 3 = 0 THEN CAST(k % 15 + 10 AS DOUBLE)
-             |                  WHEN k % 3 = 1 THEN 0.0
-             |                  ELSE CAST(k % 20 + 5 AS DOUBLE) END AS salary_max
-             |      FROM j JOIN customer ON c_custkey = o_custkey
-             |             JOIN nation ON n_nationkey = c_nationkey
-             |      WHERE n_name = 'NATION_7')
+      Some(s"""${e2eJobsOracleCtes("", "WHERE n_name = 'NATION_7'")}
              |SELECT job_sk, 'Engineer ' || o_orderpriority AS title_clean,
              |       c_name AS company_name_standardized, salary_min, salary_max,
              |       strftime(due, '%Y-%m-%d') AS due_date, 'Hà Nội' AS city,

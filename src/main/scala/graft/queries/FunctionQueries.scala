@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** F-family golden queries. Inputs are literal rows; the Spark side
@@ -15,6 +16,8 @@ import org.apache.spark.sql.functions._
 object FunctionQueries {
 
   private val Now = "2026-08-12 10:30:00"
+  private val Expired = "'Đã hết thời gian ứng tuyển'"
+  private val ZeroDays = "'Còn 0 ngày để ứng tuyển'"
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -86,28 +89,10 @@ object FunctionQueries {
     // ---------------------------------------------------------------- F3
     QueryDef(
       "q_f3_time_remaining", "F3",
-      Some("""SELECT * FROM (VALUES
-             | (CAST(1 AS BIGINT), 'Còn 8 ngày để ứng tuyển'),
-             | (2, 'Còn 19 giờ để ứng tuyển'),
-             | (3, 'Còn 29 phút để ứng tuyển'),
-             | (4, 'Còn 45 giây để ứng tuyển'),
-             | (5, 'Đã hết thời gian ứng tuyển'),
-             | (6, 'Đã hết thời gian ứng tuyển'),
-             | (7, CAST(NULL AS VARCHAR))
-             |) AS t(case_id, time_remaining) ORDER BY case_id""".stripMargin),
-      (s, _) => {
-        import s.implicits._
-        Seq(
-          1L -> Some("2026-08-20 10:30:00"), 2L -> Some("2026-08-13 05:30:00"),
-          3L -> Some("2026-08-12 10:59:30"), 4L -> Some("2026-08-12 10:30:45"),
-          5L -> Some("2026-08-01 00:00:00"), 6L -> Some("2026-08-12 10:30:00"),
-          7L -> Option.empty[String])
-          .toDF("case_id", "due")
-          .select(col("case_id"),
-            TimeFns.timeRemaining(to_timestamp(col("due")), to_timestamp(lit(Now)))
-              .as("time_remaining"))
-          .orderBy("case_id")
-      }),
+      timeRemainingOracle(Seq("'Còn 8 ngày để ứng tuyển'", "'Còn 19 giờ để ứng tuyển'",
+        "'Còn 29 phút để ứng tuyển'", "'Còn 45 giây để ứng tuyển'", Expired, Expired,
+        "CAST(NULL AS VARCHAR)")),
+      (s, _) => timeRemainingCases(s, TimeFns.timeRemaining)),
 
     // ---------------------------------------------------------------- F3 executed variant
     QueryDef(
@@ -115,28 +100,9 @@ object FunctionQueries {
       // (raw_to_staging.py:222-237): whole-days countdown or expired —
       // the <1-day tiers and the NULL case collapse to 'Đã hết...'
       "q_f3b_time_remaining_executed", "F3",
-      Some("""SELECT * FROM (VALUES
-             | (CAST(1 AS BIGINT), 'Còn 8 ngày để ứng tuyển'),
-             | (2, 'Còn 0 ngày để ứng tuyển'),
-             | (3, 'Còn 0 ngày để ứng tuyển'),
-             | (4, 'Còn 0 ngày để ứng tuyển'),
-             | (5, 'Đã hết thời gian ứng tuyển'),
-             | (6, 'Đã hết thời gian ứng tuyển'),
-             | (7, 'Đã hết thời gian ứng tuyển')
-             |) AS t(case_id, time_remaining) ORDER BY case_id""".stripMargin),
-      (s, _) => {
-        import s.implicits._
-        Seq(
-          1L -> Some("2026-08-20 10:30:00"), 2L -> Some("2026-08-13 05:30:00"),
-          3L -> Some("2026-08-12 10:59:30"), 4L -> Some("2026-08-12 10:30:45"),
-          5L -> Some("2026-08-01 00:00:00"), 6L -> Some("2026-08-12 10:30:00"),
-          7L -> Option.empty[String])
-          .toDF("case_id", "due")
-          .select(col("case_id"),
-            TimeFns.timeRemainingExecuted(to_timestamp(col("due")), to_timestamp(lit(Now)))
-              .as("time_remaining"))
-          .orderBy("case_id")
-      }),
+      timeRemainingOracle(Seq("'Còn 8 ngày để ứng tuyển'", ZeroDays, ZeroDays, ZeroDays,
+        Expired, Expired, Expired)),
+      (s, _) => timeRemainingCases(s, TimeFns.timeRemainingExecuted)),
 
     // ---------------------------------------------------------------- F4
     QueryDef(
@@ -413,4 +379,31 @@ object FunctionQueries {
           .orderBy(col("case_id"), col("pos").asc_nulls_first)
       })
   )
+
+  /** q_f3/q_f3b's fixture: one deadline per time-remaining tier (days,
+    * hours, minutes, seconds, past, exactly now, NULL) against `Now`,
+    * rendered by `remaining(due, now)`.
+    */
+  private def timeRemainingCases(
+      s: SparkSession, remaining: (Column, Column) => Column): DataFrame = {
+    import s.implicits._
+    Seq(
+      1L -> Some("2026-08-20 10:30:00"), 2L -> Some("2026-08-13 05:30:00"),
+      3L -> Some("2026-08-12 10:59:30"), 4L -> Some("2026-08-12 10:30:45"),
+      5L -> Some("2026-08-01 00:00:00"), 6L -> Some("2026-08-12 10:30:00"),
+      7L -> Option.empty[String])
+      .toDF("case_id", "due")
+      .select(col("case_id"),
+        remaining(to_timestamp(col("due")), to_timestamp(lit(Now))).as("time_remaining"))
+      .orderBy("case_id")
+  }
+
+  /** The VALUES oracle of [[timeRemainingCases]]: case i+1 expects the
+    * SQL literal `expected(i)`.
+    */
+  private def timeRemainingOracle(expected: Seq[String]): Option[String] = Some(
+    expected.zipWithIndex.map { case (e, i) =>
+      s"(${if (i == 0) "CAST(1 AS BIGINT)" else (i + 1).toString}, $e)"
+    }.mkString("SELECT * FROM (VALUES\n ", ",\n ",
+      "\n) AS t(case_id, time_remaining) ORDER BY case_id"))
 }

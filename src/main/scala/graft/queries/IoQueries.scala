@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.DecimalType
   * idempotent; marker-guarded staging persists across runs.
   */
 object IoQueries {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+  import RelationalQueries.dsum
 
   /** Per-type event count and exact value sum over events — the
     * closed form of every exactly-once landing of the stream (q_st8's
@@ -80,6 +79,40 @@ object IoQueries {
     require(TableLog.tryClaim(s, logDir, TableLog.Commit(4, "ingest-c", c, Nil)))
     a
   }
+
+  /** A TableLog table's live rows per priority: count and exact price
+    * sum (q_s33, q_s35, q_s36), answered over orders by
+    * [[priorityOracle]] with the rows the commits keep.
+    */
+  private def liveByPriority(s: SparkSession, commits: Seq[TableLog.Commit]): DataFrame =
+    s.read.parquet(TableLog.liveFiles(commits): _*)
+      .groupBy(col("o_orderpriority").as("priority"))
+      .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
+      .orderBy("priority")
+
+  private def priorityOracle(where: String): Option[String] = Some(
+    s"""SELECT o_orderpriority AS priority, count(*) AS n,
+       |CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+       |FROM orders $where
+       |GROUP BY priority ORDER BY priority""".stripMargin)
+
+  /** A deletion-vector table's live docs per source: count, id sum and
+    * char sum (q_s29, q_st21), answered over documents by
+    * [[liveBySourceOracle]] with the rows `alive` keeps.
+    */
+  private def liveBySource(live: DataFrame): DataFrame =
+    live.groupBy("source")
+      .agg(count(lit(1)).as("n_live"),
+        sum(col("doc_id")).as("id_sum"),
+        sum(col("n_chars")).as("chars_sum"))
+      .orderBy("source")
+
+  private def liveBySourceOracle(alive: String): Option[String] = Some(
+    s"""SELECT source, count(*) AS n_live,
+       |CAST(sum(doc_id) AS BIGINT) AS id_sum,
+       |CAST(sum(n_chars) AS BIGINT) AS chars_sum
+       |FROM documents WHERE $alive
+       |GROUP BY source ORDER BY source""".stripMargin)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -685,12 +718,7 @@ object IoQueries {
       // surfaces as a wrong live set, not lost speed. Compaction (the
       // copy-on-write escalation for files past a deleted-fraction
       // threshold) is spec-covered in DeletionVectorsSpec.
-      Some("""SELECT source, count(*) AS n_live,
-             |CAST(sum(doc_id) AS BIGINT) AS id_sum,
-             |CAST(sum(n_chars) AS BIGINT) AS chars_sum
-             |FROM documents
-             |WHERE NOT (doc_id % 97 = 0) AND NOT (lang = 'zh' AND doc_id % 5 = 0)
-             |GROUP BY source ORDER BY source""".stripMargin),
+      liveBySourceOracle("NOT (doc_id % 97 = 0) AND NOT (lang = 'zh' AND doc_id % 5 = 0)"),
       (s, dir) => {
         val tmp = SparkUtil.scratchDir("q_s29_dv", dir)
         val (base, dvDir) = (s"$tmp/base", s"$tmp/dv")
@@ -702,12 +730,7 @@ object IoQueries {
         val dv2 = DeletionVectors.build(s, base,
           col("lang") === "zh" && col("doc_id") % 5 === 0)
         DeletionVectors.writeBatch(dv2, dvDir, 2)
-        DeletionVectors.readWithDv(s, base, dvDir)
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_live"),
-            sum(col("doc_id")).as("id_sum"),
-            sum(col("n_chars")).as("chars_sum"))
-          .orderBy("source")
+        liveBySource(DeletionVectors.readWithDv(s, base, dvDir))
       }),
 
     // ---------------------------------------------------------------- S30 (incrementally-maintained combined-stats manifest)
@@ -896,9 +919,7 @@ object IoQueries {
       // |unreferenced files| filesystem calls — no data scan, no
       // shuffle; space reclaim scales with what compaction actually
       // freed, never with table size.
-      Some("""SELECT o_orderpriority AS priority, count(*) AS n,
-             |CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-             |FROM orders GROUP BY priority ORDER BY priority""".stripMargin),
+      priorityOracle(""),
       (s, dir) => {
         val tmp = SparkUtil.freshDir("q_s33_expire", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
@@ -912,10 +933,7 @@ object IoQueries {
           s"vacuum must free exactly the compacted-away files: got $deleted, want $a")
         require(s.read.parquet(v3Files: _*).count() == v3Rows,
           "time travel to the oldest surviving version broke after vacuum")
-        s.read.parquet(TableLog.liveFiles(commits): _*)
-          .groupBy(col("o_orderpriority").as("priority"))
-          .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-          .orderBy("priority")
+        liveByPriority(s, commits)
       }),
 
     // ---------------------------------------------------------------- S34 (partition-spec evolution across generations)
@@ -997,11 +1015,7 @@ object IoQueries {
       // arithmetic is pinned by requires. The claim arbiter is the
       // filesystem's create-fails-if-exists (the Delta LogStore
       // idea): correct under any writer interleaving, no coordinator.
-      Some("""SELECT o_orderpriority AS priority, count(*) AS n,
-             |CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-             |FROM orders
-             |WHERE (o_orderkey % 4 <= 1 AND o_orderkey % 10 <> 0) OR o_orderkey % 4 = 2
-             |GROUP BY priority ORDER BY priority""".stripMargin),
+      priorityOracle("WHERE (o_orderkey % 4 <= 1 AND o_orderkey % 10 <> 0) OR o_orderkey % 4 = 2"),
       (s, dir) => {
         val tmp = SparkUtil.freshDir("q_s35_occ", dir) // idempotent re-runs
         val (dataDir, logDir) = (s"$tmp/data", s"$tmp/log")
@@ -1036,10 +1050,7 @@ object IoQueries {
         val commits = TableLog.readCommits(s, logDir)
         require(commits.map(_.version) == Seq(1, 2, 3),
           s"log must hold exactly v1-v3: ${commits.map(_.version)}")
-        s.read.parquet(TableLog.liveFiles(commits): _*)
-          .groupBy(col("o_orderpriority").as("priority"))
-          .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-          .orderBy("priority")
+        liveByPriority(s, commits)
       }),
 
     // ---------------------------------------------------------------- S36 (table branching + squash merge)
@@ -1060,10 +1071,7 @@ object IoQueries {
       // the conflict, and that the pre-merge fork read is untouched.
       // At 100 TB: a branch costs one directory of metadata, merge is
       // |branch commits| replay + one claim — data files never move.
-      Some("""SELECT o_orderpriority AS priority, count(*) AS n,
-             |CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-             |FROM orders WHERE o_orderkey % 15 <> 0
-             |GROUP BY priority ORDER BY priority""".stripMargin),
+      priorityOracle("WHERE o_orderkey % 15 <> 0"),
       (s, dir) => {
         val tmp = SparkUtil.freshDir("q_s36_branch", dir) // idempotent re-runs
         val (dataDir, mainLog) = (s"$tmp/data", s"$tmp/log/main")
@@ -1114,10 +1122,7 @@ object IoQueries {
         // the fork read is untouched by everything that happened since
         require(TableLog.liveFiles(commits, Some(fork)) == atFork,
           "branch work leaked into the fork-version read")
-        s.read.parquet(TableLog.liveFiles(commits): _*)
-          .groupBy(col("o_orderpriority").as("priority"))
-          .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-          .orderBy("priority")
+        liveByPriority(s, commits)
       }),
 
     // ---------------------------------------------------------------- S23 (schema merge on read)
@@ -1169,16 +1174,7 @@ object IoQueries {
       // the artifact, so it asserts TRUE — any manifest drift fails
       // the hash). One-file-per-shard mechanics are asserted in
       // CorpusSpec.
-      Some("""WITH t AS (SELECT doc_id,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-             |  md5(CAST(doc_id AS VARCHAR)) AS ord
-             |  FROM documents),
-             |c AS (SELECT doc_id, n_tokens,
-             |  CAST(coalesce(sum(n_tokens) OVER (ORDER BY ord, doc_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-             |    AS token_start
-             |  FROM t)
+      Some(s"""${LlmQueries.packStartsOracleCtes}
              |SELECT CAST(floor(token_start / 2048.0) AS BIGINT) AS shard_id,
              |count(*) AS n_docs,
              |CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
@@ -1253,16 +1249,7 @@ object IoQueries {
       // rebuild ledger must equal the original layout shard-for-shard
       // with manifest_ok true — a repair that renumbered, dropped, or
       // double-wrote anything hash-fails.
-      Some("""WITH t AS (SELECT doc_id,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-             |  md5(CAST(doc_id AS VARCHAR)) AS ord
-             |  FROM documents),
-             |c AS (SELECT doc_id, n_tokens,
-             |  CAST(coalesce(sum(n_tokens) OVER (ORDER BY ord, doc_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-             |    AS token_start
-             |  FROM t)
+      Some(s"""${LlmQueries.packStartsOracleCtes}
              |SELECT CAST(floor(token_start / 2048.0) AS BIGINT) AS shard_id,
              |CASE WHEN CAST(floor(token_start / 2048.0) AS BIGINT) = 1
              |     THEN 'rebuilt' ELSE 'kept' END AS status,
@@ -1635,25 +1622,13 @@ object IoQueries {
       // every batch packed at exactly the right offset, which is the
       // continuity invariant stated as SQL. Shards that straddle a
       // batch boundary are merged by the final ledger groupBy.
-      Some("""WITH t AS (SELECT doc_id,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-             |  md5(CAST(doc_id AS VARCHAR)) AS ord,
-             |  (doc_id // 5) % 4 AS batch_idx
-             |  FROM documents),
+      Some(s"""${LlmQueries.packTokensOracleCte(", (doc_id // 5) % 4 AS batch_idx")},
              |base AS (SELECT CAST(coalesce(sum(n_tokens), 0) AS BIGINT) AS bt
              |         FROM t WHERE doc_id % 5 <> 0),
-             |c AS (SELECT doc_id, n_tokens,
-             |  CAST(floor((coalesce(sum(n_tokens) OVER (ORDER BY batch_idx, ord, doc_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + base.bt)
-             |    / 2048.0) AS BIGINT) AS shard_id
-             |  FROM t CROSS JOIN base WHERE doc_id % 5 = 0)
-             |SELECT shard_id, count(*) AS n_docs,
-             |CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-             |CAST(sum(doc_id) AS BIGINT) AS id_sum
-             |FROM c GROUP BY shard_id ORDER BY shard_id""".stripMargin),
+             |${LlmQueries.appendShardsOracleCte("batch_idx, ord, doc_id")}
+             |${LlmQueries.shardSumsOracle}""".stripMargin),
       (s, dir) => {
-        val watch = CdcStream.ensureStagedDocBatchesIndexed(s, dir, nFiles = 4)
+        val watch = CdcStream.ensureStagedDocBatchesIndexed(s, dir)
         // 1-row collect: the standing corpus's token total — the
         // stream's initial append base, not data
         val base = Tables.documents(s, dir)
@@ -1730,7 +1705,7 @@ object IoQueries {
         // the Bench sweep reaps it between passes)
         val manifest = graft.io.Layout.bloomManifest(s, base, "doc_id", mBits, k)
           .localCheckpoint(true)
-        val watch = CdcStream.ensureStagedDocBatches(s, dir, nFiles = 4)
+        val watch = CdcStream.ensureStagedDocBatches(s, dir)
         val stream = CdcStream.fileBatches(s, watch)
         CdcStream.runForeachBatchTransformWithId(s, stream, dvDir) { (b, _) =>
           DeletionVectors.resolve(s, manifest,
@@ -1775,11 +1750,7 @@ object IoQueries {
       // |candidate files| via the Bloom manifest, compaction cost is
       // |rows in crossing files| only, and manifest/tombstone
       // maintenance is |files|-row metadata.
-      Some("""SELECT source, count(*) AS n_live,
-             |CAST(sum(doc_id) AS BIGINT) AS id_sum,
-             |CAST(sum(n_chars) AS BIGINT) AS chars_sum
-             |FROM documents WHERE NOT (doc_id % 15 = 0 AND doc_id % 8 < 2)
-             |GROUP BY source ORDER BY source""".stripMargin),
+      liveBySourceOracle("NOT (doc_id % 15 = 0 AND doc_id % 8 < 2)"),
       (s, dir) => {
         // fresh run: stale generations poison the union
         val dvt = DeletionVectors.Ledger(SparkUtil.freshDir("q_st21_dvc", dir), "doc_id",
@@ -1792,19 +1763,14 @@ object IoQueries {
           .repartition(8, col("cls"))
           .write.partitionBy("cls").mode("overwrite").parquet(dvt.base)
         DeletionVectors.create(s, dvt)
-        val watch = CdcStream.ensureStagedDocBatches(s, dir, nFiles = 4)
+        val watch = CdcStream.ensureStagedDocBatches(s, dir)
         val stream = CdcStream.fileBatches(s, watch)
         CdcStream.runForeachBatchEffect(s, stream) { (b, batchId) =>
           DeletionVectors.applyBatch(s, dvt,
             b.filter(col("doc_id") % 3 === 0 && pmod(col("doc_id"), lit(8)) < 2)
               .select("doc_id"), batchId)
         }
-        DeletionVectors.read(s, dvt)
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_live"),
-            sum(col("doc_id")).as("id_sum"),
-            sum(col("n_chars")).as("chars_sum"))
-          .orderBy("source")
+        liveBySource(DeletionVectors.read(s, dvt))
       }),
 
     // ---------------------------------------------------------------- ST: transactional streaming sink (commit-log visibility)
@@ -2009,7 +1975,7 @@ object IoQueries {
       // streaming form can get.
       LlmQueries.incrementalDedupOracle,
       (s, dir) => {
-        val watch = CdcStream.ensureStagedDocBatches(s, dir, nFiles = 4)
+        val watch = CdcStream.ensureStagedDocBatches(s, dir)
         val corpus = graft.Tables.documents(s, dir)
           .filter(col("doc_id") % 5 =!= 0)
           .select("doc_id", "text")
@@ -2057,7 +2023,7 @@ object IoQueries {
               |GROUP BY d.source ORDER BY d.source""".stripMargin),
       (s, dir) => {
         import graft.llm.Classifier
-        val watch = CdcStream.ensureStagedDocBatches(s, dir, nFiles = 4)
+        val watch = CdcStream.ensureStagedDocBatches(s, dir)
         val (_, m, p) = LlmQueries.nbSeedModel(
           Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0))
         // trained once, pinned: every micro-batch reads the same model
@@ -2109,7 +2075,7 @@ object IoQueries {
              |FROM cov ORDER BY abs(cov) DESC, ci, cj LIMIT 8""".stripMargin),
       (s, dir) => {
         val name = "q_st17_mem"
-        val watch = CdcStream.ensureStagedEmbBatches(s, dir, nFiles = 4)
+        val watch = CdcStream.ensureStagedEmbBatches(s, dir)
         val stream = CdcStream.fileBatches(s, watch)
         val asD = graft.llm.Similarity.asDouble(col("embedding"))
         // one file per trigger = ONE input partition per micro-batch;

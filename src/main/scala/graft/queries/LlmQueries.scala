@@ -75,19 +75,11 @@ object LlmQueries {
     // ---------------------------------------------------------------- MinHash+LSH near-dup (scale path)
     QueryDef(
       "q_l2_minhash_neardup", "LLM-dedup-minhash-lsh",
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      Some(s"""WITH $shingleSizesOracleCtes,
              |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
              |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
              |          GROUP BY 1, 2)
-             |SELECT id_a, id_b,
-             |       round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) AS jaccard
-             |FROM pairs JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-             |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-             |ORDER BY id_a, id_b""".stripMargin),
+             |${jaccardOracleTail("pairs", "0.8")}""".stripMargin),
       (s, dir) =>
         Dedup.minhashNearDupPairs(Tables.documents(s, dir), "doc_id", "text",
             shingleN = 3, perms = 128, bands = 32, threshold = 0.8)
@@ -102,33 +94,14 @@ object LlmQueries {
       // engines compare strings as raw UTF-8 bytes) → pairs sharing
       // ≥ min(2, either side's sketch size) → exact kept-set
       // intersection for candidates only.
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
+      Some(s"""WITH $shingleOracleCtes,
              |freq AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
              |kept AS (SELECT h.doc_id, h.s, f.df FROM sh h JOIN freq f USING (s)
              |         WHERE f.df <= 500),
              |ordered AS (SELECT doc_id, s,
              |              row_number() OVER (PARTITION BY doc_id ORDER BY df, s) AS rn
              |            FROM kept),
-             |sk AS (SELECT doc_id, s FROM ordered WHERE rn <= 16),
-             |sksz AS (SELECT doc_id, count(*) AS z FROM sk GROUP BY doc_id),
-             |cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             |         FROM sk a JOIN sk b ON a.s = b.s AND a.doc_id < b.doc_id
-             |         JOIN sksz za ON za.doc_id = a.doc_id
-             |         JOIN sksz zb ON zb.doc_id = b.doc_id
-             |         GROUP BY 1, 2 HAVING count(*) >= least(2, min(za.z), min(zb.z))),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
-             |inter AS (SELECT c.id_a, c.id_b, count(*) AS inter
-             |          FROM cand c JOIN kept a ON a.doc_id = c.id_a
-             |                      JOIN kept b ON b.doc_id = c.id_b AND b.s = a.s
-             |          GROUP BY 1, 2)
-             |SELECT id_a, id_b,
-             |       round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) AS jaccard
-             |FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-             |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-             |ORDER BY id_a, id_b""".stripMargin),
+             |${sketchJaccardOracle("s", "0.8")}""".stripMargin),
       (s, dir) =>
         Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
             shingleN = 3, threshold = 0.8, maxDocFreq = 500)
@@ -140,18 +113,9 @@ object LlmQueries {
       "q_l4_simhash_neardup", "LLM-dedup-simhash",
       // exact replay of the algorithm: md5-derived token hashes → bit
       // votes → 4×16-bit band blocking → Hamming via xor+bit_count
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t
+      Some(s"""WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS t
              |              FROM documents),
-             |th AS (SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 16)) AS UBIGINT) AS h
-             |       FROM toks),
-             |votes AS (SELECT doc_id, i, sum(CASE WHEN ((h >> i) & 1) = 1 THEN 1 ELSE -1 END) AS v
-             |          FROM th CROSS JOIN generate_series(0, 63) s(i)
-             |          GROUP BY doc_id, i),
-             |sig AS (SELECT doc_id,
-             |          bit_or(CASE WHEN v > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS sg
-             |        FROM votes GROUP BY doc_id),
-             |bands AS (SELECT doc_id, sg, b, (sg >> (b * 16)) & 65535 AS bh
-             |          FROM sig CROSS JOIN generate_series(0, 3) t(b)),
+             |${simhashBandsOracleCtes("toks")},
              |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
              |                a.sg AS sa, c.sg AS sc
              |         FROM bands a JOIN bands c
@@ -167,19 +131,10 @@ object LlmQueries {
     // ---------------------------------------------------------------- brute-force cosine top-k
     QueryDef(
       "q_l5_cosine_topk", "LLM-ann-bruteforce",
-      Some("""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+      Some(s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
              |           FROM embeddings),
-             |scored AS (
-             |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             |         round(list_inner_product(q.e, c.e) /
-             |               (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))),
-             |               3) AS score
-             |  FROM v q JOIN v c ON q.vec_id < 20 AND q.vec_id <> c.vec_id)
-             |SELECT query_id, rank, neighbor_id, score FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |                               ORDER BY score DESC, neighbor_id) AS rank
-             |  FROM scored) t
-             |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+             |${cosineScoredOracleCte("q.vec_id < 20 AND q.vec_id <> c.vec_id")}
+             |${cosineRankOracle("query_id, rank, neighbor_id, score", "rank <= 5 ORDER BY query_id, rank")}""".stripMargin),
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         Similarity.bruteForceTopK(
@@ -192,32 +147,9 @@ object LlmQueries {
       "q_l6_ann_lsh", "LLM-ann-lsh",
       // exact replay: md5-derived hyperplanes → sign-bit buckets →
       // within-bucket cosine top-k, identical fp accumulation order
-      Some("""WITH planes AS (
-             |  SELECT i, j, CAST(('0x' || substr(md5(i || ':' || j), 1, 16)) AS UBIGINT)
-             |               / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 3) a(i) CROSS JOIN generate_series(0, 63) b(j)),
-             |pl AS (SELECT i, list(w ORDER BY j) AS pw FROM planes GROUP BY i),
-             |dots AS (SELECT e.vec_id, pl.i,
-             |           list_inner_product(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-             |                              pl.pw) AS d
-             |         FROM embeddings e CROSS JOIN pl),
-             |vb AS (SELECT vec_id,
-             |         bit_or(CASE WHEN d > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS bucket
-             |       FROM dots GROUP BY vec_id),
-             |v AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS e,
-             |             vb.bucket
-             |      FROM embeddings e JOIN vb ON vb.vec_id = e.vec_id),
-             |scored AS (
-             |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             |         round(list_inner_product(q.e, c.e) /
-             |               (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))),
-             |               3) AS score
-             |  FROM v q JOIN v c ON q.bucket = c.bucket AND q.vec_id < 20 AND q.vec_id <> c.vec_id)
-             |SELECT query_id, rank, neighbor_id, score FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |                               ORDER BY score DESC, neighbor_id) AS rank
-             |  FROM scored) t
-             |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      Some(s"""${lshBucketOracleCtes()},
+             |${cosineScoredOracleCte("q.bucket = c.bucket AND q.vec_id < 20 AND q.vec_id <> c.vec_id")}
+             |${cosineRankOracle("query_id, rank, neighbor_id, score", "rank <= 5 ORDER BY query_id, rank")}""".stripMargin),
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         Similarity.lshTopK(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
@@ -233,34 +165,10 @@ object LlmQueries {
       // sf0.1, single-probe recall@5 is 0.09 vs exact brute force —
       // multi-probe is the recall lever, and the oracle's
       // bit_count(xor) <= 1 join replays the probe set exactly.
-      Some("""WITH planes AS (
-             |  SELECT i, j, CAST(('0x' || substr(md5(i || ':' || j), 1, 16)) AS UBIGINT)
-             |               / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 3) a(i) CROSS JOIN generate_series(0, 63) b(j)),
-             |pl AS (SELECT i, list(w ORDER BY j) AS pw FROM planes GROUP BY i),
-             |dots AS (SELECT e.vec_id, pl.i,
-             |           list_inner_product(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-             |                              pl.pw) AS d
-             |         FROM embeddings e CROSS JOIN pl),
-             |vb AS (SELECT vec_id,
-             |         bit_or(CASE WHEN d > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS bucket
-             |       FROM dots GROUP BY vec_id),
-             |v AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS e,
-             |             vb.bucket
-             |      FROM embeddings e JOIN vb ON vb.vec_id = e.vec_id),
-             |scored AS (
-             |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             |         round(list_inner_product(q.e, c.e) /
-             |               (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))),
-             |               3) AS score
-             |  FROM v q JOIN v c
-             |    ON bit_count(xor(q.bucket, c.bucket)) <= 1
-             |   AND q.vec_id < 20 AND q.vec_id <> c.vec_id)
-             |SELECT query_id, rank, neighbor_id, score FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |                               ORDER BY score DESC, neighbor_id) AS rank
-             |  FROM scored) t
-             |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      Some(s"""${lshBucketOracleCtes()},
+             |${cosineScoredOracleCte(
+               "bit_count(xor(q.bucket, c.bucket)) <= 1 AND q.vec_id < 20 AND q.vec_id <> c.vec_id")}
+             |${cosineRankOracle("query_id, rank, neighbor_id, score", "rank <= 5 ORDER BY query_id, rank")}""".stripMargin),
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         Similarity.lshTopKMultiProbe(emb.filter(col("vec_id") < 20), emb,
@@ -273,18 +181,10 @@ object LlmQueries {
       "q_l12_ann_ivf", "LLM-ann-ivf",
       // exact replay: fixed centroids → nearest-cell assignment (corpus)
       // and 2-cell probing (queries) → within-cell cosine top-k
-      Some("""WITH cents AS (
-             |  SELECT c, j, CAST(('0x' || substr(md5('c:' || c || ':' || j), 1, 16)) AS UBIGINT)
-             |               / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 7) a(c) CROSS JOIN generate_series(0, 63) b(j)),
-             |cl AS (SELECT c, list(w ORDER BY j) AS cw FROM cents GROUP BY c),
+      Some(s"""WITH ${centroidsOracleCtes("cents", "cl")},
              |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
              |      FROM embeddings),
-             |dists AS (
-             |  SELECT vec_id, c, list_inner_product(d, d) AS dist
-             |  FROM (SELECT v.vec_id, cl.c,
-             |               list_transform(list_zip(v.e, cl.cw), s -> s[1] - s[2]) AS d
-             |        FROM v CROSS JOIN cl) t),
+             |${centroidDistOracleCte("dists", "cl")},
              |ranked AS (SELECT vec_id, c,
              |             row_number() OVER (PARTITION BY vec_id ORDER BY dist, c) AS r
              |           FROM dists),
@@ -292,16 +192,10 @@ object LlmQueries {
              |qc AS (SELECT vec_id, c FROM ranked WHERE r <= 2 AND vec_id < 20),
              |scored AS (
              |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-             |         round(list_inner_product(vq.e, vn.e) /
-             |               (sqrt(list_inner_product(vq.e, vq.e))
-             |                * sqrt(list_inner_product(vn.e, vn.e))), 3) AS score
+             |         ${cosineOracle("vq.e", "vn.e")} AS score
              |  FROM qc q JOIN cc n ON n.c = q.c AND n.vec_id <> q.vec_id
              |  JOIN v vq ON vq.vec_id = q.vec_id JOIN v vn ON vn.vec_id = n.vec_id)
-             |SELECT query_id, rank, neighbor_id, score FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |                               ORDER BY score DESC, neighbor_id) AS rank
-             |  FROM scored) t
-             |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+             |${cosineRankOracle("query_id, rank, neighbor_id, score", "rank <= 5 ORDER BY query_id, rank")}""".stripMargin),
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         Similarity.ivfTopK(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
@@ -312,7 +206,7 @@ object LlmQueries {
     // ---------------------------------------------------------------- embedding-cosine near-dup
     QueryDef(
       "q_l7_cosine_neardup", "LLM-dedup-cosine",
-      Some("""WITH aug AS (
+      Some(s"""WITH aug AS (
              |  SELECT vec_id, embedding FROM embeddings
              |  UNION ALL
              |  SELECT vec_id + 1000000000, list_transform(embedding, x -> CAST(x * 2 AS FLOAT))
@@ -320,9 +214,7 @@ object LlmQueries {
              |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM aug),
              |pairs AS (
              |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             |         round(list_inner_product(a.e, b.e) /
-             |               (sqrt(list_inner_product(a.e, a.e)) * sqrt(list_inner_product(b.e, b.e))),
-             |               3) AS score
+             |         ${cosineOracle("a.e", "b.e")} AS score
              |  FROM v a JOIN v b ON a.vec_id < b.vec_id)
              |SELECT id_a, id_b, score FROM pairs WHERE score >= 0.9
              |ORDER BY id_a, id_b""".stripMargin),
@@ -449,7 +341,7 @@ object LlmQueries {
       // `(fp < 2⁶³), fp` in the sketch ORDER BY replays Spark's
       // signed-long ordering of the same md5-derived fingerprints
       // (UBIGINTs ≥ 2⁶³ are negative longs, so they sort first).
-      Some("""WITH t AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS s
+      Some(s"""WITH t AS (SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS s
              |           FROM documents),
              |gi AS (SELECT doc_id, s, length(s) - 6 AS n,
              |              unnest(generate_series(1, length(s) - 6)) AS i
@@ -471,23 +363,7 @@ object LlmQueries {
              |              row_number() OVER (PARTITION BY doc_id
              |                                 ORDER BY df, (fp < 9223372036854775808), fp) AS rn
              |            FROM kept),
-             |sk AS (SELECT doc_id, fp FROM ordered WHERE rn <= 16),
-             |sksz AS (SELECT doc_id, count(*) AS z FROM sk GROUP BY doc_id),
-             |cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             |         FROM sk a JOIN sk b ON a.fp = b.fp AND a.doc_id < b.doc_id
-             |         JOIN sksz za ON za.doc_id = a.doc_id
-             |         JOIN sksz zb ON zb.doc_id = b.doc_id
-             |         GROUP BY 1, 2 HAVING count(*) >= least(2, min(za.z), min(zb.z))),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
-             |inter AS (SELECT c.id_a, c.id_b, count(*) AS inter
-             |          FROM cand c JOIN kept a ON a.doc_id = c.id_a
-             |                      JOIN kept b ON b.doc_id = c.id_b AND b.fp = a.fp
-             |          GROUP BY 1, 2)
-             |SELECT id_a, id_b,
-             |       round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) AS jaccard
-             |FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-             |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-             |ORDER BY id_a, id_b""".stripMargin),
+             |${sketchJaccardOracle("fp", "0.5")}""".stripMargin),
       (s, dir) =>
         Dedup.winnowNearDupPairs(Tables.documents(s, dir), "doc_id", "text",
             k = 7, w = 4, threshold = 0.5, maxDocFreq = 500)
@@ -677,9 +553,7 @@ object LlmQueries {
       // a = doc_id%256 — so pixel_values only matches if every byte of
       // every scanline was reconstructed exactly (a decoder skipping
       // Sub/Up/Average/Paeth de-filtering cannot fake it).
-      Some("""WITH d AS (SELECT source, doc_id,
-             |  doc_id % 64 + 1 AS w, doc_id % 48 + 1 AS h, doc_id % 256 AS a
-             |  FROM documents)
+      Some(s"""$fixturePngOracleCte
              |SELECT source, count(*) AS n,
              |CAST(sum(w * h) AS BIGINT) AS pixel_bytes,
              |CAST(sum(w * (h * a + h * (h - 1) / 2
@@ -688,9 +562,7 @@ object LlmQueries {
              |CAST(sum(h) AS BIGINT) AS sum_height
              |FROM d GROUP BY source ORDER BY source""".stripMargin),
       (s, dir) => {
-        val w = (col("doc_id") % 64 + 1).cast("int")
-        val h = (col("doc_id") % 48 + 1).cast("int")
-        val payload = Multimodal.pngPixelPayload(col("doc_id"), w, h)
+        val payload = fixturePng
         Tables.documents(s, dir)
           .select(col("source"), Multimodal.decodePngPixels(payload).as("px"))
           .groupBy("source")
@@ -712,9 +584,7 @@ object LlmQueries {
       // so the thumbnail's closed form is 8·Σ_ty (a+⌊ty·h/8⌋)%256 —
       // only matched if decode, de-filter, AND the NN sampling grid
       // are all exact.
-      Some("""WITH d AS (SELECT source, doc_id,
-             |  doc_id % 64 + 1 AS w, doc_id % 48 + 1 AS h, doc_id % 256 AS a
-             |  FROM documents),
+      Some(s"""$fixturePngOracleCte,
              |t AS (SELECT source, doc_id,
              |  (SELECT sum((a + (ty * h) // 8) % 256) * 8
              |   FROM (SELECT unnest(generate_series(0, 7)) AS ty)) AS thumb
@@ -723,9 +593,7 @@ object LlmQueries {
              |CAST(sum(thumb) AS BIGINT) AS thumb_sum
              |FROM t GROUP BY source ORDER BY source""".stripMargin),
       (s, dir) => {
-        val w = (col("doc_id") % 64 + 1).cast("int")
-        val h = (col("doc_id") % 48 + 1).cast("int")
-        val payload = Multimodal.pngPixelPayload(col("doc_id"), w, h)
+        val payload = fixturePng
         Tables.documents(s, dir)
           .select(col("source"),
             Multimodal.decodePngThumbSum(payload, 8, 8).as("thumb"))
@@ -743,9 +611,7 @@ object LlmQueries {
       // (a+y)%256 across its w pixels, so the histogram's closed form
       // is w·|{y < h : ⌊((a+y)%256)/64⌋ = bin}| — matched only if
       // every reconstructed pixel landed in the right bucket.
-      Some("""WITH d AS (SELECT source, doc_id,
-             |  doc_id % 64 + 1 AS w, doc_id % 48 + 1 AS h, doc_id % 256 AS a
-             |  FROM documents),
+      Some(s"""$fixturePngOracleCte,
              |r AS (SELECT source, w, ((a + ty) % 256) // 64 AS bin
              |  FROM d CROSS JOIN (SELECT unnest(generate_series(0, 47)) AS ty)
              |  WHERE ty < h)
@@ -756,9 +622,7 @@ object LlmQueries {
              |CAST(sum(CASE WHEN bin = 3 THEN w ELSE 0 END) AS BIGINT) AS h3
              |FROM r GROUP BY source ORDER BY source""".stripMargin),
       (s, dir) => {
-        val w = (col("doc_id") % 64 + 1).cast("int")
-        val h = (col("doc_id") % 48 + 1).cast("int")
-        val payload = Multimodal.pngPixelPayload(col("doc_id"), w, h)
+        val payload = fixturePng
         Tables.documents(s, dir)
           .select(col("source"),
             Multimodal.decodePngHistogram(payload, 4).as("hist"))
@@ -1279,9 +1143,7 @@ object LlmQueries {
              |WHERE g2.n_copies >= 2
              |ORDER BY g2.hash""".stripMargin),
       (s, dir) => {
-        val w = (col("doc_id") % 64 + 1).cast("int")
-        val h = (col("doc_id") % 48 + 1).cast("int")
-        val payload = Multimodal.pngPixelPayload(col("doc_id"), w, h)
+        val payload = fixturePng
         val grp = Tables.documents(s, dir)
           .select(col("doc_id"), Multimodal.decodePngDHash(payload).as("hash"))
           .groupBy("hash")
@@ -1371,20 +1233,8 @@ object LlmQueries {
       // replays the global md5-order exclusive prefix sum: shard_id =
       // floor(tokens-before-this-doc / 2048); per-shard doc count,
       // token total, and id_sum pin the exact assignment.
-      Some("""WITH t AS (SELECT doc_id,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-             |  md5(CAST(doc_id AS VARCHAR)) AS ord
-             |  FROM documents),
-             |c AS (SELECT doc_id, n_tokens,
-             |  CAST(floor(coalesce(sum(n_tokens) OVER (ORDER BY ord, doc_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2048.0) AS BIGINT)
-             |    AS shard_id
-             |  FROM t)
-             |SELECT shard_id, count(*) AS n_docs,
-             |CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-             |CAST(sum(doc_id) AS BIGINT) AS id_sum
-             |FROM c GROUP BY shard_id ORDER BY shard_id""".stripMargin),
+      Some(s"""$packShardsOracleCtes
+             |$shardSumsOracle""".stripMargin),
       (s, dir) =>
         Corpus.packShards(Tables.documents(s, dir), "doc_id", "text", 2048L)
           .groupBy("shard_id")
@@ -1404,16 +1254,7 @@ object LlmQueries {
       // overhang their shard's budget (overflow policy belongs to the
       // consumer). First five shards only, to keep the gate output
       // small — the offsets are global either way.
-      Some("""WITH t AS (SELECT doc_id,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-             |  md5(CAST(doc_id AS VARCHAR)) AS ord
-             |  FROM documents),
-             |c AS (SELECT doc_id, n_tokens,
-             |  CAST(coalesce(sum(n_tokens) OVER (ORDER BY ord, doc_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-             |    AS token_start
-             |  FROM t)
+      Some(s"""$packStartsOracleCtes
              |SELECT CAST(floor(token_start / 2048.0) AS BIGINT) AS shard_id, doc_id,
              |token_start - CAST(floor(token_start / 2048.0) AS BIGINT) * 2048
              |  AS start_in_shard,
@@ -1639,33 +1480,10 @@ object LlmQueries {
       // is bucketed once (the persisted index shape), never
       // cross-joined; vectors whose bucket holds no corpus entry
       // surface nothing and would fall to multi-probe at scale.
-      Some("""WITH planes AS (
-             |  SELECT i, j, CAST(('0x' || substr(md5(i || ':' || j), 1, 16)) AS UBIGINT)
-             |               / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 3) a(i) CROSS JOIN generate_series(0, 63) b(j)),
-             |pl AS (SELECT i, list(w ORDER BY j) AS pw FROM planes GROUP BY i),
-             |dots AS (SELECT e.vec_id, pl.i,
-             |           list_inner_product(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-             |                              pl.pw) AS d
-             |         FROM embeddings e CROSS JOIN pl),
-             |vb AS (SELECT vec_id,
-             |         bit_or(CASE WHEN d > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS bucket
-             |       FROM dots GROUP BY vec_id),
-             |v AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS e,
-             |             vb.bucket
-             |      FROM embeddings e JOIN vb ON vb.vec_id = e.vec_id),
-             |scored AS (
-             |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             |         round(list_inner_product(q.e, c.e) /
-             |               (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))),
-             |               3) AS score
-             |  FROM v q JOIN v c ON q.bucket = c.bucket
-             |  WHERE q.vec_id % 5 = 0 AND c.vec_id % 5 <> 0)
-             |SELECT query_id, neighbor_id, score FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |                               ORDER BY score DESC, neighbor_id) AS rank
-             |  FROM scored) t
-             |WHERE rank = 1 ORDER BY query_id""".stripMargin),
+      Some(s"""${lshBucketOracleCtes()},
+             |${cosineScoredOracleCte(
+               "q.bucket = c.bucket WHERE q.vec_id % 5 = 0 AND c.vec_id % 5 <> 0")}
+             |${cosineRankOracle("query_id, neighbor_id, score", "rank = 1 ORDER BY query_id")}""".stripMargin),
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         Similarity.lshTopK(
@@ -1705,17 +1523,11 @@ object LlmQueries {
       // decimal sums of the per-doc fractions (rounded per-doc before
       // the sum so float-add order cannot leak in). Oracle rebuilds
       // the same 2-grams positionally (unnest + generate_subscripts).
-      Some("""WITH d AS (SELECT doc_id, source,
+      Some(s"""WITH d AS (SELECT doc_id, source,
              |            trim(coalesce(text, '')) AS tt, coalesce(text, '') AS raw
              |          FROM documents),
-             |tok AS (SELECT doc_id, source, string_split_regex(tt, '\s+') AS t FROM d),
-             |g AS (SELECT doc_id, tk || ' ' || t[i + 1] AS gram
-             |      FROM (SELECT doc_id, t, unnest(t) AS tk,
-             |              generate_subscripts(t, 1) AS i FROM tok)
-             |      WHERE i < len(t)),
-             |gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-             |gs AS (SELECT doc_id, sum(c) AS n2, count(*) AS d2, max(c) AS top2
-             |       FROM gc GROUP BY 1),
+             |tok AS (SELECT doc_id, source, string_split_regex(tt, '\\s+') AS t FROM d),
+             |${bigramOracleCtes("tok", "gs")},
              |ln AS (SELECT doc_id,
              |         list_filter(string_split(raw, chr(10)), x -> trim(x) <> '') AS ls
              |       FROM d),
@@ -1723,10 +1535,7 @@ object LlmQueries {
              |  CASE WHEN len(ln.ls) = 0 THEN 0.0
              |       ELSE 1.0 - CAST(len(list_distinct(ln.ls)) AS DOUBLE) / len(ln.ls)
              |  END AS dupl,
-             |  CASE WHEN coalesce(gs.n2, 0) = 0 THEN 0.0
-             |       ELSE 1.0 - CAST(gs.d2 AS DOUBLE) / gs.n2 END AS dup2,
-             |  CASE WHEN coalesce(gs.n2, 0) = 0 THEN 0.0
-             |       ELSE CAST(gs.top2 AS DOUBLE) / gs.n2 END AS top2f
+             |  $bigramFractionsOracle
              |  FROM d
              |  LEFT JOIN gs ON gs.doc_id = d.doc_id
              |  JOIN ln ON ln.doc_id = d.doc_id)
@@ -1834,32 +1643,10 @@ object LlmQueries {
       // engines derive bit-identical next centroids) → re-assign. The
       // output id_sum pins every single assignment; empty clusters
       // keep their previous centroid (grid LEFT JOIN coalesce).
-      Some("""WITH cents0 AS (
-             |  SELECT c, j, CAST(('0x' || substr(md5('c:' || c || ':' || j), 1, 16)) AS UBIGINT)
-             |               / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 7) a(c) CROSS JOIN generate_series(0, 63) b(j)),
-             |cl0 AS (SELECT c, list(w ORDER BY j) AS cw FROM cents0 GROUP BY c),
+      Some(s"""WITH ${centroidsOracleCtes("cents0", "cl0")},
              |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
              |      FROM embeddings),
-             |d1 AS (SELECT vec_id, c, list_inner_product(d, d) AS dist
-             |       FROM (SELECT v.vec_id, cl0.c,
-             |               list_transform(list_zip(v.e, cl0.cw), s -> s[1] - s[2]) AS d
-             |             FROM v CROSS JOIN cl0) t),
-             |a1 AS (SELECT vec_id, c FROM (
-             |         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-             |                  ORDER BY dist, c) AS r FROM d1) WHERE r = 1),
-             |x1 AS (SELECT a1.c, generate_subscripts(v.e, 1) AS j, unnest(v.e) AS x
-             |       FROM a1 JOIN v ON v.vec_id = a1.vec_id),
-             |m1 AS (SELECT c, j,
-             |         CAST(sum(CAST(x AS DECIMAL(25,10))) AS DOUBLE) / count(*) AS w
-             |       FROM x1 GROUP BY c, j),
-             |cl1 AS (SELECT g.c, list(coalesce(m1.w, g.w) ORDER BY g.j) AS cw
-             |        FROM cents0 g LEFT JOIN m1 ON m1.c = g.c AND m1.j = g.j + 1
-             |        GROUP BY g.c),
-             |d2 AS (SELECT vec_id, c, list_inner_product(d, d) AS dist
-             |       FROM (SELECT v.vec_id, cl1.c,
-             |               list_transform(list_zip(v.e, cl1.cw), s -> s[1] - s[2]) AS d
-             |             FROM v CROSS JOIN cl1) t),
+             |$lloydOracleCtes,
              |a2 AS (SELECT vec_id, c FROM (
              |         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
              |                  ORDER BY dist, c) AS r FROM d2) WHERE r = 1)
@@ -2034,29 +1821,19 @@ object LlmQueries {
       // leave picks stable, which is what makes the sample auditable.
       // One scan + a global top-k (TakeOrderedAndProject: per-partition
       // heaps, no sort of the losers). id_sum pins exact membership.
-      Some("""WITH f AS (SELECT doc_id, source,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS w,
-             |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)
-             |    / 4294967296.0 AS u
-             |  FROM documents),
+      Some(s"""$weightedSampleOracleCte,
              |top AS (SELECT doc_id, source FROM f WHERE w > 0
              |        ORDER BY ln(u) / w DESC, doc_id LIMIT 100)
              |SELECT source, count(*) AS n_sampled,
              |CAST(sum(doc_id) AS BIGINT) AS id_sum
              |FROM top GROUP BY source ORDER BY source""".stripMargin),
-      (s, dir) => {
-        val f = Tables.documents(s, dir)
-          .select(col("doc_id"), col("source"),
-            TextAnalysis.tokenCount(col("text")).as("w"),
-            Corpus.hashFraction(col("doc_id")).as("u"))
-          .filter(col("w") > 0)
-        f.orderBy((log(col("u")) / col("w")).desc, col("doc_id"))
+      (s, dir) =>
+        weightedSampleInputs(s, dir)
+          .orderBy((log(col("u")) / col("w")).desc, col("doc_id"))
           .limit(100)
           .groupBy("source")
           .agg(count(lit(1)).as("n_sampled"), sum(col("doc_id")).as("id_sum"))
-          .orderBy("source")
-      }),
+          .orderBy("source")),
 
     // ---------------------------------------------------------------- containment (subset/quotation) dedup
     QueryDef(
@@ -2247,40 +2024,17 @@ object LlmQueries {
       // cells runs entirely on 4-byte PQ codes against the query's
       // broadcast distance table (Similarity.ivfPqTopK). The oracle
       // rebuilds both structures and must agree bit-for-bit.
-      Some("""WITH cents AS (
-             |  SELECT c, j, CAST(('0x' || substr(md5('c:' || c || ':' || j), 1, 16))
-             |         AS UBIGINT) / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 7) a(c) CROSS JOIN generate_series(0, 63) b(j)),
-             |cl AS (SELECT c, list(w ORDER BY j) AS cw FROM cents GROUP BY c),
+      Some(s"""WITH ${centroidsOracleCtes("cents", "cl")},
              |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
              |      FROM embeddings),
-             |cdists AS (SELECT vec_id, c, list_inner_product(d, d) AS dist
-             |  FROM (SELECT v.vec_id, cl.c,
-             |          list_transform(list_zip(v.e, cl.cw), s -> s[1] - s[2]) AS d
-             |        FROM v CROSS JOIN cl) t),
+             |${centroidDistOracleCte("cdists", "cl")},
              |cranked AS (SELECT vec_id, c,
              |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, c) AS r
              |  FROM cdists),
              |cc AS (SELECT vec_id, c FROM cranked WHERE r = 1),
              |qc AS (SELECT vec_id, c FROM cranked WHERE r <= 2 AND vec_id < 20),
-             |cb AS (SELECT s, c, j,
-             |    CAST(('0x' || substr(md5('pq:' || s || ':' || c || ':' || j), 1, 16))
-             |         AS UBIGINT) / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 3) a(s) CROSS JOIN generate_series(0, 15) b(c)
-             |       CROSS JOIN generate_series(0, 15) d(j)),
-             |cbl AS (SELECT s, c, list(w ORDER BY j) AS cw FROM cb GROUP BY s, c),
-             |sub AS (SELECT vec_id, gs.s, v.e[gs.s*16+1 : gs.s*16+16] AS se
-             |        FROM v CROSS JOIN generate_series(0, 3) gs(s)),
-             |pdists AS (SELECT t.vec_id, t.s, t.c, list_inner_product(t.d, t.d) AS dist
-             |  FROM (SELECT sub.vec_id, sub.s, cbl.c,
-             |          list_transform(list_zip(sub.se, cbl.cw), z -> z[1] - z[2]) AS d
-             |        FROM sub JOIN cbl ON cbl.s = sub.s) t),
-             |codes AS (SELECT vec_id, s, c FROM (
-             |    SELECT vec_id, s, c,
-             |      row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, c) AS r
-             |    FROM pdists) WHERE r = 1),
-             |qdt AS (SELECT vec_id AS query_id, s, c, round(dist, 12) AS dt
-             |        FROM pdists WHERE vec_id < 20),
+             |$pqCodebookOracleCtes,
+             |${pqCodesOracleCtes("pdists")},
              |scored AS (SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
              |    CAST(sum(CAST(qdt.dt AS DECIMAL(28,12))) AS DOUBLE) AS adist
              |  FROM qc q JOIN cc n ON n.c = q.c AND n.vec_id <> q.vec_id
@@ -2288,11 +2042,7 @@ object LlmQueries {
              |  JOIN qdt ON qdt.query_id = q.vec_id AND qdt.s = codes.s
              |          AND qdt.c = codes.c
              |  GROUP BY 1, 2)
-             |SELECT query_id, rank, neighbor_id, round(adist, 6) AS adist FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |                               ORDER BY adist, neighbor_id) AS rank
-             |  FROM scored) t
-             |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+             |$adcRankOracle""".stripMargin),
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         Similarity.ivfPqTopK(emb.filter(col("vec_id") < 20), emb, "vec_id",
@@ -2413,36 +2163,15 @@ object LlmQueries {
       // is codes ⋈ broadcast(table) + a DECIMAL-summed 4-term ADC
       // total (Similarity.pqTopK). Entries round to 12dp before the
       // sum so the reduction order cannot leak.
-      Some("""WITH cb AS (
-             |  SELECT s, c, j,
-             |    CAST(('0x' || substr(md5('pq:' || s || ':' || c || ':' || j), 1, 16))
-             |         AS UBIGINT) / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 3) a(s) CROSS JOIN generate_series(0, 15) b(c)
-             |       CROSS JOIN generate_series(0, 15) d(j)),
-             |cbl AS (SELECT s, c, list(w ORDER BY j) AS cw FROM cb GROUP BY s, c),
+      Some(s"""WITH $pqCodebookOracleCtes,
              |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
              |      FROM embeddings),
-             |sub AS (SELECT vec_id, gs.s, v.e[gs.s*16+1 : gs.s*16+16] AS se
-             |        FROM v CROSS JOIN generate_series(0, 3) gs(s)),
-             |dists AS (SELECT t.vec_id, t.s, t.c, list_inner_product(t.d, t.d) AS dist
-             |          FROM (SELECT sub.vec_id, sub.s, cbl.c,
-             |                  list_transform(list_zip(sub.se, cbl.cw), z -> z[1] - z[2]) AS d
-             |                FROM sub JOIN cbl ON cbl.s = sub.s) t),
-             |codes AS (SELECT vec_id, s, c FROM (
-             |    SELECT vec_id, s, c,
-             |      row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, c) AS r
-             |    FROM dists) WHERE r = 1),
-             |qdt AS (SELECT vec_id AS query_id, s, c, round(dist, 12) AS dt
-             |        FROM dists WHERE vec_id < 20),
+             |${pqCodesOracleCtes("dists")},
              |scored AS (SELECT qdt.query_id, codes.vec_id AS neighbor_id,
              |    CAST(sum(CAST(qdt.dt AS DECIMAL(28,12))) AS DOUBLE) AS adist
              |  FROM codes JOIN qdt ON qdt.s = codes.s AND qdt.c = codes.c
              |  WHERE codes.vec_id <> qdt.query_id GROUP BY 1, 2)
-             |SELECT query_id, rank, neighbor_id, round(adist, 6) AS adist FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |                               ORDER BY adist, neighbor_id) AS rank
-             |  FROM scored) t
-             |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+             |$adcRankOracle""".stripMargin),
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         Similarity.pqTopK(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
@@ -2460,29 +2189,21 @@ object LlmQueries {
       // a row_number window — the engine side computes the same ranks
       // with a range exchange + per-partition offsets (no global
       // window), which is the point of the operator.
-      Some("""WITH base AS (SELECT doc_id,
-             |         trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+      Some(s"""WITH base AS (SELECT doc_id,
+             |         trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS nt
              |       FROM documents),
              |r AS (SELECT doc_id,
              |        row_number() OVER (ORDER BY substr(nt, 1, 24), doc_id) AS rn
              |      FROM base),
              |cand AS (SELECT a.doc_id AS da, b.doc_id AS db
              |         FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 2),
-             |toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+             |$shingleSizesOracleCtes,
              |inter AS (SELECT least(c.da, c.db) AS id_a, greatest(c.da, c.db) AS id_b,
              |                 count(*) AS inter
              |          FROM cand c JOIN sh a ON a.doc_id = c.da
              |                      JOIN sh b ON b.doc_id = c.db AND b.s = a.s
              |          GROUP BY 1, 2)
-             |SELECT id_a, id_b,
-             |       round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) AS jaccard
-             |FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-             |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-             |ORDER BY id_a, id_b""".stripMargin),
+             |${jaccardOracleTail("inter", "0.8")}""".stripMargin),
       (s, dir) =>
         Dedup.sortedNeighborhoodPairs(Tables.documents(s, dir), "doc_id", "text",
             keyLen = 24, window = 3, shingleN = 3, threshold = 0.8)
@@ -2560,12 +2281,7 @@ object LlmQueries {
       // global sort. The oracle is the definitional row_number form;
       // the aggregate's window-equivalence is additionally spec-pinned
       // (q_w5b's TopKSpec).
-      Some("""WITH f AS (SELECT doc_id, source,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS w,
-             |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)
-             |    / 4294967296.0 AS u
-             |  FROM documents),
+      Some(s"""$weightedSampleOracleCte,
              |r AS (SELECT source, doc_id,
              |        row_number() OVER (PARTITION BY source
              |                           ORDER BY ln(u) / w DESC, doc_id) AS rank
@@ -2573,11 +2289,7 @@ object LlmQueries {
              |SELECT source, rank, doc_id FROM r WHERE rank <= 20
              |ORDER BY source, rank""".stripMargin),
       (s, dir) => {
-        val f = Tables.documents(s, dir)
-          .select(col("doc_id"), col("source"),
-            TextAnalysis.tokenCount(col("text")).as("w"),
-            Corpus.hashFraction(col("doc_id")).as("u"))
-          .filter(col("w") > 0)
+        val f = weightedSampleInputs(s, dir)
           .select(col("source"), col("doc_id"),
             (log(col("u")) / col("w")).as("__pri"))
         graft.operators.TopK.groupedTopKAgg(f, Seq("source"), "__pri", "doc_id", 20)
@@ -2656,35 +2368,13 @@ object LlmQueries {
       // (vec_id+1e9, clear of the id space at any SF) co-cluster with their originals by
       // construction, tie on distance, and lose — every keep/drop
       // decision is pinned per vector.
-      Some("""WITH cents0 AS (
-             |  SELECT c, j, CAST(('0x' || substr(md5('c:' || c || ':' || j), 1, 16)) AS UBIGINT)
-             |               / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 7) a(c) CROSS JOIN generate_series(0, 63) b(j)),
-             |cl0 AS (SELECT c, list(w ORDER BY j) AS cw FROM cents0 GROUP BY c),
+      Some(s"""WITH ${centroidsOracleCtes("cents0", "cl0")},
              |aug AS (
              |  SELECT vec_id, embedding FROM embeddings
              |  UNION ALL
              |  SELECT vec_id + 1000000000, embedding FROM embeddings WHERE vec_id < 50),
              |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM aug),
-             |d1 AS (SELECT vec_id, c, list_inner_product(d, d) AS dist
-             |       FROM (SELECT v.vec_id, cl0.c,
-             |               list_transform(list_zip(v.e, cl0.cw), s -> s[1] - s[2]) AS d
-             |             FROM v CROSS JOIN cl0) t),
-             |a1 AS (SELECT vec_id, c FROM (
-             |         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-             |                  ORDER BY dist, c) AS r FROM d1) WHERE r = 1),
-             |x1 AS (SELECT a1.c, generate_subscripts(v.e, 1) AS j, unnest(v.e) AS x
-             |       FROM a1 JOIN v ON v.vec_id = a1.vec_id),
-             |m1 AS (SELECT c, j,
-             |         CAST(sum(CAST(x AS DECIMAL(25,10))) AS DOUBLE) / count(*) AS w
-             |       FROM x1 GROUP BY c, j),
-             |cl1 AS (SELECT g.c, list(coalesce(m1.w, g.w) ORDER BY g.j) AS cw
-             |        FROM cents0 g LEFT JOIN m1 ON m1.c = g.c AND m1.j = g.j + 1
-             |        GROUP BY g.c),
-             |d2 AS (SELECT vec_id, c, list_inner_product(d, d) AS dist
-             |       FROM (SELECT v.vec_id, cl1.c,
-             |               list_transform(list_zip(v.e, cl1.cw), s -> s[1] - s[2]) AS d
-             |             FROM v CROSS JOIN cl1) t),
+             |$lloydOracleCtes,
              |a2 AS (SELECT vec_id, c, dist FROM (
              |         SELECT vec_id, c, dist, row_number() OVER (PARTITION BY vec_id
              |                  ORDER BY dist, c) AS r FROM d2) WHERE r = 1),
@@ -2692,9 +2382,7 @@ object LlmQueries {
              |  SELECT a.vec_id AS ia, b.vec_id AS ib, a.dist AS da, b.dist AS db
              |  FROM a2 a JOIN a2 b ON a.c = b.c AND a.vec_id < b.vec_id
              |  JOIN v va ON va.vec_id = a.vec_id JOIN v vb ON vb.vec_id = b.vec_id
-             |  WHERE round(list_inner_product(va.e, vb.e) /
-             |        (sqrt(list_inner_product(va.e, va.e)) * sqrt(list_inner_product(vb.e, vb.e))),
-             |        3) >= 0.95),
+             |  WHERE ${cosineOracle("va.e", "vb.e")} >= 0.95),
              |losers AS (
              |  SELECT DISTINCT CASE WHEN da < db THEN ia WHEN db < da THEN ib
              |                       ELSE greatest(ia, ib) END AS vec_id
@@ -3248,30 +2936,12 @@ object LlmQueries {
       // the same decimal build over the ideal ranking. Scale shape:
       // both rankers are key-partitioned bucket/window work; the
       // evaluation join is per-(query, neighbor).
-      Some("""WITH planes AS (
-             |  SELECT i, j, CAST(('0x' || substr(md5(i || ':' || j), 1, 16)) AS UBIGINT)
-             |               / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 3) a(i) CROSS JOIN generate_series(0, 63) b(j)),
-             |pl AS (SELECT i, list(w ORDER BY j) AS pw FROM planes GROUP BY i),
-             |dots AS (SELECT e.vec_id, pl.i,
-             |           list_inner_product(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-             |                              pl.pw) AS d
-             |         FROM embeddings e CROSS JOIN pl),
-             |vb AS (SELECT vec_id,
-             |         bit_or(CASE WHEN d > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS bucket
-             |       FROM dots GROUP BY vec_id),
-             |v AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS e,
-             |             vb.bucket
-             |      FROM embeddings e JOIN vb ON vb.vec_id = e.vec_id),
+      Some(s"""${lshBucketOracleCtes()},
              |sys AS (SELECT query_id, neighbor_id, rank FROM (
              |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             |         round(list_inner_product(q.e, c.e) /
-             |               (sqrt(list_inner_product(q.e, q.e))
-             |                * sqrt(list_inner_product(c.e, c.e))), 3) AS score,
+             |         ${cosineOracle("q.e", "c.e")} AS score,
              |         row_number() OVER (PARTITION BY q.vec_id
-             |           ORDER BY round(list_inner_product(q.e, c.e) /
-             |               (sqrt(list_inner_product(q.e, q.e))
-             |                * sqrt(list_inner_product(c.e, c.e))), 3) DESC, c.vec_id)
+             |           ORDER BY ${cosineOracle("q.e", "c.e")} DESC, c.vec_id)
              |           AS rank
              |  FROM v q JOIN v c
              |    ON bit_count(xor(q.bucket, c.bucket)) <= 1
@@ -3279,9 +2949,7 @@ object LlmQueries {
              |truth AS (SELECT query_id, neighbor_id, 11 - rank AS rel FROM (
              |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              |         row_number() OVER (PARTITION BY q.vec_id
-             |           ORDER BY round(list_inner_product(q.e, c.e) /
-             |               (sqrt(list_inner_product(q.e, q.e))
-             |                * sqrt(list_inner_product(c.e, c.e))), 3) DESC, c.vec_id)
+             |           ORDER BY ${cosineOracle("q.e", "c.e")} DESC, c.vec_id)
              |           AS rank
              |  FROM v q JOIN v c ON q.vec_id < 20 AND q.vec_id <> c.vec_id) t
              |  WHERE rank <= 10),
@@ -3484,23 +3152,7 @@ object LlmQueries {
       // funnel counts — are engine-independent without any rounding.
       // Thresholds calibrated so every stage drops a nonzero share at
       // sf0.001/0.01/0.1 (500→193→149→142→100→41 docs at sf0.001).
-      Some("""WITH d AS (SELECT doc_id, lang, trim(coalesce(text, '')) AS tt FROM documents),
-             |tok AS (SELECT doc_id, lang, string_split_regex(tt, '\s+') AS t FROM d),
-             |g AS (SELECT doc_id, tk || ' ' || t[i + 1] AS gram
-             |      FROM (SELECT doc_id, t, unnest(t) AS tk,
-             |              generate_subscripts(t, 1) AS i FROM tok)
-             |      WHERE i < len(t)),
-             |gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-             |gs AS (SELECT doc_id, sum(c) AS n2, count(*) AS d2, max(c) AS top2
-             |       FROM gc GROUP BY 1),
-             |per AS (SELECT tok.doc_id, lang, len(t) AS n,
-             |  CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is','for')))
-             |       AS DOUBLE) / len(t) AS stopratio,
-             |  CASE WHEN coalesce(gs.n2, 0) = 0 THEN 0.0
-             |       ELSE 1.0 - CAST(gs.d2 AS DOUBLE) / gs.n2 END AS dup2,
-             |  CASE WHEN coalesce(gs.n2, 0) = 0 THEN 0.0
-             |       ELSE CAST(gs.top2 AS DOUBLE) / gs.n2 END AS top2f
-             |  FROM tok LEFT JOIN gs ON gs.doc_id = tok.doc_id),
+      Some(s"""$filterMeasuresOracleCtes,
              |c AS (SELECT lang = 'en' AS c1, lang = 'en' AND n >= 30 AS c2,
              |  lang = 'en' AND n >= 30 AND stopratio >= 0.02 AS c3,
              |  lang = 'en' AND n >= 30 AND stopratio >= 0.02 AND dup2 <= 0.05 AS c4,
@@ -3609,12 +3261,12 @@ object LlmQueries {
       // under each source's tier cap, re-spreading what capped
       // sources couldn't absorb. Every step is 64-bit multiply-then-
       // floor-divide — the whole plan is exact in both engines.
-      Some("""WITH per AS (SELECT source,
-             |    CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS avail,
+      Some(s"""WITH per AS (SELECT source,
+             |    CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS avail,
              |    CAST(sum(CASE WHEN lang = 'en' AND
-             |        CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
+             |        CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
              |             x -> x IN ('the','a','of','and','to','in','is','for'))) AS DOUBLE)
-             |          / len(string_split_regex(trim(text), '\s+')) >= 0.02
+             |          / len(string_split_regex(trim(text), '\\s+')) >= 0.02
              |      THEN 1 ELSE 0 END) AS BIGINT) AS n_good
              |  FROM documents GROUP BY 1),
              |rk AS (SELECT *, CAST(row_number() OVER (ORDER BY n_good DESC, source) AS BIGINT)
@@ -3624,26 +3276,7 @@ object LlmQueries {
              |    CAST(CASE WHEN qrank <= 5 THEN 4 WHEN qrank <= 15 THEN 2 ELSE 1 END
              |         * avail AS BIGINT) AS cap
              |  FROM rk),
-             |b AS (SELECT CAST(2 * sum(avail) AS BIGINT) AS budget,
-             |             CAST(sum(avail) AS BIGINT) AS sumw0 FROM per),
-             |r1 AS (SELECT tt.*, least(cap, (b.budget * avail) // b.sumw0) AS alloc
-             |       FROM tt CROSS JOIN b),
-             |s2 AS (SELECT CAST(sum(CASE WHEN alloc < cap THEN avail ELSE 0 END) AS BIGINT)
-             |         AS sumw, CAST(sum(alloc) AS BIGINT) AS tot FROM r1),
-             |r2 AS (SELECT r1.source, r1.avail, r1.n_good, r1.qrank, r1.tier, r1.cap,
-             |    CASE WHEN alloc < cap AND s2.sumw > 0
-             |      THEN least(cap, alloc + greatest(((b.budget - s2.tot) * avail) // s2.sumw,
-             |                                       0))
-             |      ELSE alloc END AS alloc
-             |  FROM r1 CROSS JOIN b CROSS JOIN s2),
-             |s3 AS (SELECT CAST(sum(CASE WHEN alloc < cap THEN avail ELSE 0 END) AS BIGINT)
-             |         AS sumw, CAST(sum(alloc) AS BIGINT) AS tot FROM r2),
-             |r3 AS (SELECT r2.source, r2.avail, r2.n_good, r2.qrank, r2.tier, r2.cap,
-             |    CASE WHEN alloc < cap AND s3.sumw > 0
-             |      THEN least(cap, alloc + greatest(((b.budget - s3.tot) * avail) // s3.sumw,
-             |                                       0))
-             |      ELSE alloc END AS alloc
-             |  FROM r2 CROSS JOIN b CROSS JOIN s3)
+             |${epochMixOracleCtes(Seq("source", "avail", "n_good", "qrank", "tier", "cap"), "")}
              |SELECT source, avail, n_good, qrank, tier, cap, alloc,
              |  (alloc * 1000000) // avail AS epochs_micro
              |FROM r3 ORDER BY source""".stripMargin),
@@ -3951,35 +3584,12 @@ object LlmQueries {
       // inequality rides the pairing join). The oracle replays the
       // md5 hyperplanes, the bucket join, the label filter and the
       // rank exactly.
-      Some("""WITH planes AS (
-             |  SELECT i, j, CAST(('0x' || substr(md5(i || ':' || j), 1, 16)) AS UBIGINT)
-             |               / 9223372036854775808.0 - 1.0 AS w
-             |  FROM generate_series(0, 3) a(i) CROSS JOIN generate_series(0, 63) b(j)),
-             |pl AS (SELECT i, list(w ORDER BY j) AS pw FROM planes GROUP BY i),
-             |dots AS (SELECT e.vec_id, pl.i,
-             |           list_inner_product(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-             |                              pl.pw) AS d
-             |         FROM embeddings e CROSS JOIN pl),
-             |vb AS (SELECT vec_id,
-             |         bit_or(CASE WHEN d > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS bucket
-             |       FROM dots GROUP BY vec_id),
-             |v AS (SELECT e.vec_id, e.label,
-             |             list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS e,
-             |             vb.bucket
-             |      FROM embeddings e JOIN vb ON vb.vec_id = e.vec_id),
-             |scored AS (
-             |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             |         c.label AS neighbor_label,
-             |         round(list_inner_product(q.e, c.e) /
-             |               (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))),
-             |               3) AS score
-             |  FROM v q JOIN v c ON q.bucket = c.bucket
-             |  WHERE q.vec_id % 10 = 0 AND c.vec_id <> q.vec_id AND c.label <> q.label)
-             |SELECT query_id, rank, neighbor_id, neighbor_label, score FROM (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id
-             |                               ORDER BY score DESC, neighbor_id) AS rank
-             |  FROM scored) t
-             |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin),
+      Some(s"""${lshBucketOracleCtes("e.label,")},
+             |${cosineScoredOracleCte(
+               "q.bucket = c.bucket WHERE q.vec_id % 10 = 0 AND c.vec_id <> q.vec_id AND c.label <> q.label",
+               extra = "c.label AS neighbor_label,")}
+             |${cosineRankOracle("query_id, rank, neighbor_id, neighbor_label, score",
+               "rank <= 3 ORDER BY query_id, rank")}""".stripMargin),
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         Similarity.hardNegatives(
@@ -3999,16 +3609,7 @@ object LlmQueries {
       // renumber), every other shard is untouched — the cost is
       // |affected shards|, never a corpus repack. Oracle replays the
       // pack prefix sum and both ledger branches.
-      Some("""WITH t AS (SELECT doc_id,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-             |  md5(CAST(doc_id AS VARCHAR)) AS ord
-             |  FROM documents),
-             |c AS (SELECT doc_id, n_tokens,
-             |  CAST(floor(coalesce(sum(n_tokens) OVER (ORDER BY ord, doc_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2048.0) AS BIGINT)
-             |    AS shard_id
-             |  FROM t),
+      Some(s"""$packShardsOracleCtes,
              |aff AS (SELECT DISTINCT shard_id FROM c WHERE doc_id % 101 = 0),
              |k AS (SELECT shard_id, 'kept' AS status, count(*) AS n_items,
              |        CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
@@ -4046,22 +3647,11 @@ object LlmQueries {
       // last partial shard's tail, numbering proceeds, and no standing
       // shard is touched or renumbered. The oracle replays the offset
       // continuation; shard ids + per-shard sums pin the whole append.
-      Some("""WITH t AS (SELECT doc_id,
-             |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-             |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-             |  md5(CAST(doc_id AS VARCHAR)) AS ord
-             |  FROM documents),
+      Some(s"""${packTokensOracleCte()},
              |base AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS bt FROM t
              |         WHERE doc_id % 5 <> 0),
-             |c AS (SELECT doc_id, n_tokens,
-             |  CAST(floor((coalesce(sum(n_tokens) OVER (ORDER BY ord, doc_id
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + base.bt)
-             |    / 2048.0) AS BIGINT) AS shard_id
-             |  FROM t CROSS JOIN base WHERE doc_id % 5 = 0)
-             |SELECT shard_id, count(*) AS n_docs,
-             |CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-             |CAST(sum(doc_id) AS BIGINT) AS id_sum
-             |FROM c GROUP BY shard_id ORDER BY shard_id""".stripMargin),
+             |${appendShardsOracleCte("ord, doc_id")}
+             |$shardSumsOracle""".stripMargin),
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         // 1-row collect: the standing corpus's token total (bounded
@@ -4480,29 +4070,16 @@ object LlmQueries {
       // broken Hamming threshold moves a number. Scale shape: the two
       // generators are the standing q_l2/q_l4 plans; the audit adds
       // one (id_a, id_b)-keyed join over pair lists.
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-             |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-             |                                            for i in generate_series(1, len(w)-2)])) AS s
-             |       FROM toks WHERE len(w) >= 3),
-             |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      Some(s"""WITH $shingleSizesOracleCtes,
              |ipairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
              |           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
              |           GROUP BY 1, 2),
              |ex AS (SELECT id_a, id_b FROM ipairs
              |       JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
              |       WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-             |t2 AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t
+             |t2 AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS t
              |       FROM documents),
-             |th AS (SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 16)) AS UBIGINT) AS h
-             |       FROM t2),
-             |votes AS (SELECT doc_id, i, sum(CASE WHEN ((h >> i) & 1) = 1 THEN 1 ELSE -1 END) AS v
-             |          FROM th CROSS JOIN generate_series(0, 63) s(i)
-             |          GROUP BY doc_id, i),
-             |sig AS (SELECT doc_id,
-             |          bit_or(CASE WHEN v > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS sg
-             |        FROM votes GROUP BY doc_id),
-             |bands AS (SELECT doc_id, sg, b, (sg >> (b * 16)) & 65535 AS bh
-             |          FROM sig CROSS JOIN generate_series(0, 3) t(b)),
+             |${simhashBandsOracleCtes("t2")},
              |ap AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
              |       FROM bands a JOIN bands c
              |         ON a.b = c.b AND a.bh = c.bh AND a.doc_id < c.doc_id
@@ -4672,23 +4249,7 @@ object LlmQueries {
       s"SELECT '${RuleNames(i - 1)}' AS rule_a, '${RuleNames(j - 1)}' AS rule_b, " +
         s"h${i}_$j AS n_both, ${if (i == j) s"u$i" else "CAST(0 AS BIGINT)"} AS n_only FROM a")
       .mkString("\n  UNION ALL ")
-    s"""WITH d AS (SELECT doc_id, lang, trim(coalesce(text, '')) AS tt FROM documents),
-       |tok AS (SELECT doc_id, lang, string_split_regex(tt, '\\s+') AS t FROM d),
-       |g AS (SELECT doc_id, tk || ' ' || t[i + 1] AS gram
-       |      FROM (SELECT doc_id, t, unnest(t) AS tk,
-       |              generate_subscripts(t, 1) AS i FROM tok)
-       |      WHERE i < len(t)),
-       |gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-       |gs AS (SELECT doc_id, sum(c) AS n2, count(*) AS d2, max(c) AS top2
-       |       FROM gc GROUP BY 1),
-       |per AS (SELECT tok.doc_id, lang, len(t) AS n,
-       |  CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is','for')))
-       |       AS DOUBLE) / len(t) AS stopratio,
-       |  CASE WHEN coalesce(gs.n2, 0) = 0 THEN 0.0
-       |       ELSE 1.0 - CAST(gs.d2 AS DOUBLE) / gs.n2 END AS dup2,
-       |  CASE WHEN coalesce(gs.n2, 0) = 0 THEN 0.0
-       |       ELSE CAST(gs.top2 AS DOUBLE) / gs.n2 END AS top2f
-       |  FROM tok LEFT JOIN gs ON gs.doc_id = tok.doc_id),
+    s"""$filterMeasuresOracleCtes,
        |fl AS (SELECT CASE WHEN lang <> 'en' THEN 1 ELSE 0 END AS f1,
        |  CASE WHEN n < 30 THEN 1 ELSE 0 END AS f2,
        |  CASE WHEN stopratio < 0.02 THEN 1 ELSE 0 END AS f3,
@@ -4704,18 +4265,343 @@ object LlmQueries {
        |ORDER BY rule_a, rule_b""".stripMargin
   }
 
+  /** Oracle CTEs toks (doc_id, w) and sh (doc_id, s): each doc's
+    * distinct word 3-shingles ([[Dedup.shingles]]).
+    */
+  private def shingleOracleCtes: String =
+    """toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
+      |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
+      |                                            for i in generate_series(1, len(w)-2)])) AS s
+      |       FROM toks WHERE len(w) >= 3)""".stripMargin
+
+  /** [[shingleOracleCtes]], then sizes (doc_id, n): each shingle-set size. */
+  private def shingleSizesOracleCtes: String =
+    s"""$shingleOracleCtes,
+       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)""".stripMargin
+
+  /** The Jaccard answer of the dedup queries: pairs of `from` (id_a,
+    * id_b, inter) over the set sizes, at Jaccard ≥ `threshold`.
+    */
+  private def jaccardOracleTail(from: String, threshold: String): String =
+    s"""SELECT id_a, id_b,
+       |       round(CAST(inter AS DOUBLE) / (sa.n + sb.n - inter), 6) AS jaccard
+       |FROM $from JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
+       |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= $threshold
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** The rare-key sketch verify of [[Dedup.jaccardPairsViaSketch]] over
+    * kept (doc_id, `key`) and its ordered ranks (q_l3, q_l13): the 16
+    * rarest keys, pairs sharing ≥ min(2, either sketch size), exact
+    * intersections, then the Jaccard answer.
+    */
+  private def sketchJaccardOracle(key: String, threshold: String): String =
+    s"""sk AS (SELECT doc_id, $key FROM ordered WHERE rn <= 16),
+       |sksz AS (SELECT doc_id, count(*) AS z FROM sk GROUP BY doc_id),
+       |cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
+       |         FROM sk a JOIN sk b ON a.$key = b.$key AND a.doc_id < b.doc_id
+       |         JOIN sksz za ON za.doc_id = a.doc_id
+       |         JOIN sksz zb ON zb.doc_id = b.doc_id
+       |         GROUP BY 1, 2 HAVING count(*) >= least(2, min(za.z), min(zb.z))),
+       |sizes AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
+       |inter AS (SELECT c.id_a, c.id_b, count(*) AS inter
+       |          FROM cand c JOIN kept a ON a.doc_id = c.id_a
+       |                      JOIN kept b ON b.doc_id = c.id_b AND b.$key = a.$key
+       |          GROUP BY 1, 2)
+       |${jaccardOracleTail("inter", threshold)}""".stripMargin
+
+  /** Oracle CTEs th → votes → sig (doc_id, sg) → bands (doc_id, sg, b,
+    * bh): the 64-bit md5 SimHash of `toks` (doc_id, t) and its 4×16-bit
+    * bands ([[Dedup.simhashNearDupPairs]]; q_l4, q_l90).
+    */
+  private def simhashBandsOracleCtes(toks: String): String =
+    s"""th AS (SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 16)) AS UBIGINT) AS h
+       |       FROM $toks),
+       |votes AS (SELECT doc_id, i, sum(CASE WHEN ((h >> i) & 1) = 1 THEN 1 ELSE -1 END) AS v
+       |          FROM th CROSS JOIN generate_series(0, 63) s(i)
+       |          GROUP BY doc_id, i),
+       |sig AS (SELECT doc_id,
+       |          bit_or(CASE WHEN v > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS sg
+       |        FROM votes GROUP BY doc_id),
+       |bands AS (SELECT doc_id, sg, b, (sg >> (b * 16)) & 65535 AS bh
+       |          FROM sig CROSS JOIN generate_series(0, 3) t(b))""".stripMargin
+
+  /** Oracle CTEs g → gc → `gs` (doc_id, n2, d2, top2): each doc's
+    * positional word 2-grams of `tok` (doc_id, t) — total, distinct and
+    * top count.
+    */
+  private def bigramOracleCtes(tok: String, gs: String): String =
+    s"""g AS (SELECT doc_id, tk || ' ' || t[i + 1] AS gram
+       |      FROM (SELECT doc_id, t, unnest(t) AS tk,
+       |              generate_subscripts(t, 1) AS i FROM $tok)
+       |      WHERE i < len(t)),
+       |gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
+       |$gs AS (SELECT doc_id, sum(c) AS n2, count(*) AS d2, max(c) AS top2
+       |       FROM gc GROUP BY 1)""".stripMargin
+
+  /** The duplicate-2gram and top-2gram fractions over gs. */
+  private def bigramFractionsOracle: String =
+    """CASE WHEN coalesce(gs.n2, 0) = 0 THEN 0.0
+      |       ELSE 1.0 - CAST(gs.d2 AS DOUBLE) / gs.n2 END AS dup2,
+      |  CASE WHEN coalesce(gs.n2, 0) = 0 THEN 0.0
+      |       ELSE CAST(gs.top2 AS DOUBLE) / gs.n2 END AS top2f""".stripMargin
+
+  /** Oracle CTEs d → tok → bigrams → per (doc_id, lang, n, stopratio,
+    * dup2, top2f): the five filter-rule measures of q_l70 and q_l78.
+    */
+  private def filterMeasuresOracleCtes: String =
+    s"""WITH d AS (SELECT doc_id, lang, trim(coalesce(text, '')) AS tt FROM documents),
+       |tok AS (SELECT doc_id, lang, string_split_regex(tt, '\\s+') AS t FROM d),
+       |${bigramOracleCtes("tok", "gs")},
+       |per AS (SELECT tok.doc_id, lang, len(t) AS n,
+       |  CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is','for')))
+       |       AS DOUBLE) / len(t) AS stopratio,
+       |  $bigramFractionsOracle
+       |  FROM tok LEFT JOIN gs ON gs.doc_id = tok.doc_id)""".stripMargin
+
+  /** (doc_id, source, w, u) of every doc with tokens: its token count
+    * and md5 fraction, the Efraimidis-Spirakis sampling inputs (q_l38,
+    * q_l48). Its oracle is [[weightedSampleOracleCte]] (w > 0 applied
+    * by each query).
+    */
+  private def weightedSampleInputs(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("doc_id"), col("source"),
+        TextAnalysis.tokenCount(col("text")).as("w"),
+        Corpus.hashFraction(col("doc_id")).as("u"))
+      .filter(col("w") > 0)
+
+  /** Oracle CTE f (doc_id, source, w, u): each doc's token count and
+    * md5 fraction, the Efraimidis-Spirakis sampling inputs (q_l38, q_l48).
+    */
+  private def weightedSampleOracleCte: String =
+    """WITH f AS (SELECT doc_id, source,
+      |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
+      |       ELSE len(string_split_regex(trim(text), '\s+')) END AS w,
+      |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)
+      |    / 4294967296.0 AS u
+      |  FROM documents)""".stripMargin
+
+  /** Oracle CTEs b → r1 → s2 → r2 → s3 → r3 (`cols`, alloc): a budget
+    * of twice per's total tokens apportioned ∝ avail under each tt
+    * row's cap in three integer water-filling rounds
+    * ([[Corpus.epochMixPlanLocal]]; q_l72, q_l21b). `mat` is inserted
+    * after the names of b, r1 and r2.
+    */
+  private def epochMixOracleCtes(cols: Seq[String], mat: String): String = {
+    def round(k: Int, prev: String, rMat: String) =
+      s"""s$k AS (SELECT CAST(sum(CASE WHEN alloc < cap THEN avail ELSE 0 END) AS BIGINT)
+         |         AS sumw, CAST(sum(alloc) AS BIGINT) AS tot FROM $prev),
+         |r$k AS$rMat (SELECT ${cols.map(c => s"$prev.$c").mkString(", ")},
+         |    CASE WHEN alloc < cap AND s$k.sumw > 0
+         |      THEN least(cap, alloc + greatest(((b.budget - s$k.tot) * avail) // s$k.sumw,
+         |                                       0))
+         |      ELSE alloc END AS alloc
+         |  FROM $prev CROSS JOIN b CROSS JOIN s$k)""".stripMargin
+    s"""b AS$mat (SELECT CAST(2 * sum(avail) AS BIGINT) AS budget,
+       |             CAST(sum(avail) AS BIGINT) AS sumw0 FROM per),
+       |r1 AS$mat (SELECT tt.*, least(cap, (b.budget * avail) // b.sumw0) AS alloc
+       |       FROM tt CROSS JOIN b),
+       |${round(2, "r1", mat)},
+       |${round(3, "r2", "")}""".stripMargin
+  }
+
+  /** The q_m3-q_m5 fixture image of each doc: a grayscale PNG of
+    * (doc_id % 64 + 1) × (doc_id % 48 + 1) pixels whose row y is the
+    * constant byte (doc_id + y) % 256.
+    */
+  private def fixturePng: Column = Multimodal.pngPixelPayload(
+    col("doc_id"), (col("doc_id") % 64 + 1).cast("int"), (col("doc_id") % 48 + 1).cast("int"))
+
+  /** Oracle CTE d (source, doc_id, w, h, a) of [[fixturePng]]. */
+  private def fixturePngOracleCte: String =
+    """WITH d AS (SELECT source, doc_id,
+      |  doc_id % 64 + 1 AS w, doc_id % 48 + 1 AS h, doc_id % 256 AS a
+      |  FROM documents)""".stripMargin
+
+  /** DuckDB replay of [[Similarity.cosine]] between the double lists
+    * `a` and `b`, rounded to 3dp as the ANN operators round it.
+    */
+  private def cosineOracle(a: String, b: String): String =
+    s"round(list_inner_product($a, $b) / " +
+      s"(sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b))), 3)"
+
+  /** Oracle CTE `scored` (query_id, neighbor_id, `extra`, score): the
+    * rounded cosine of every pair of `v` rows `on` admits.
+    */
+  private def cosineScoredOracleCte(on: String, extra: String = ""): String =
+    s"""scored AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, $extra
+       |         ${cosineOracle("q.e", "c.e")} AS score
+       |  FROM v q JOIN v c ON $on)""".stripMargin
+
+  /** The oracle tail of the cosine top-k queries: rank `scored` per
+    * query (score desc, neighbor id), then select `cols` `where`.
+    */
+  private def cosineRankOracle(cols: String, where: String): String =
+    s"""SELECT $cols FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |                               ORDER BY score DESC, neighbor_id) AS rank
+       |  FROM scored) t
+       |WHERE $where""".stripMargin
+
+  /** Oracle CTEs `cents` (c, j, w) and `cl` (c, cw): the 8 md5
+    * centroids of [[Similarity.centroids]] over 64 dims.
+    */
+  private def centroidsOracleCtes(cents: String, cl: String): String =
+    s"""$cents AS (
+       |  SELECT c, j, CAST(('0x' || substr(md5('c:' || c || ':' || j), 1, 16)) AS UBIGINT)
+       |               / 9223372036854775808.0 - 1.0 AS w
+       |  FROM generate_series(0, 7) a(c) CROSS JOIN generate_series(0, 63) b(j)),
+       |$cl AS (SELECT c, list(w ORDER BY j) AS cw FROM $cents GROUP BY c)""".stripMargin
+
+  /** Oracle CTE `name` (vec_id, c, dist): the squared L2 distance of
+    * every v row to every centroid of `cl`, accumulated in dim order.
+    */
+  private def centroidDistOracleCte(name: String, cl: String): String =
+    s"""$name AS (SELECT vec_id, c, list_inner_product(d, d) AS dist
+       |  FROM (SELECT v.vec_id, $cl.c,
+       |          list_transform(list_zip(v.e, $cl.cw), s -> s[1] - s[2]) AS d
+       |        FROM v CROSS JOIN $cl) t)""".stripMargin
+
+  /** Oracle CTEs of one Lloyd round after the first assignment over v
+    * and cents0/cl0 ([[Similarity.kmeansAssign]]; q_l26, q_l56): d1 →
+    * a1 → exact-decimal means m1 → cl1 → d2 (vec_id, c, dist).
+    */
+  private def lloydOracleCtes: String =
+    s"""${centroidDistOracleCte("d1", "cl0")},
+       |a1 AS (SELECT vec_id, c FROM (
+       |         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
+       |                  ORDER BY dist, c) AS r FROM d1) WHERE r = 1),
+       |x1 AS (SELECT a1.c, generate_subscripts(v.e, 1) AS j, unnest(v.e) AS x
+       |       FROM a1 JOIN v ON v.vec_id = a1.vec_id),
+       |m1 AS (SELECT c, j,
+       |         CAST(sum(CAST(x AS DECIMAL(25,10))) AS DOUBLE) / count(*) AS w
+       |       FROM x1 GROUP BY c, j),
+       |cl1 AS (SELECT g.c, list(coalesce(m1.w, g.w) ORDER BY g.j) AS cw
+       |        FROM cents0 g LEFT JOIN m1 ON m1.c = g.c AND m1.j = g.j + 1
+       |        GROUP BY g.c),
+       |${centroidDistOracleCte("d2", "cl1")}""".stripMargin
+
+  /** Oracle CTEs cb (s, c, j, w) and cbl (s, c, cw): the md5 PQ
+    * codebooks of [[Similarity.pqCodebooks]], 4 subspaces × 16 codes.
+    */
+  private def pqCodebookOracleCtes: String =
+    """cb AS (SELECT s, c, j,
+      |    CAST(('0x' || substr(md5('pq:' || s || ':' || c || ':' || j), 1, 16))
+      |         AS UBIGINT) / 9223372036854775808.0 - 1.0 AS w
+      |  FROM generate_series(0, 3) a(s) CROSS JOIN generate_series(0, 15) b(c)
+      |       CROSS JOIN generate_series(0, 15) d(j)),
+      |cbl AS (SELECT s, c, list(w ORDER BY j) AS cw FROM cb GROUP BY s, c)""".stripMargin
+
+  /** Oracle CTEs over v and cbl: sub-vectors, `dists` (vec_id, s, c,
+    * dist), each vector's codes and the first 20 vectors' 12dp ADC
+    * table qdt (query_id, s, c, dt).
+    */
+  private def pqCodesOracleCtes(dists: String): String =
+    s"""sub AS (SELECT vec_id, gs.s, v.e[gs.s*16+1 : gs.s*16+16] AS se
+       |        FROM v CROSS JOIN generate_series(0, 3) gs(s)),
+       |$dists AS (SELECT t.vec_id, t.s, t.c, list_inner_product(t.d, t.d) AS dist
+       |  FROM (SELECT sub.vec_id, sub.s, cbl.c,
+       |          list_transform(list_zip(sub.se, cbl.cw), z -> z[1] - z[2]) AS d
+       |        FROM sub JOIN cbl ON cbl.s = sub.s) t),
+       |codes AS (SELECT vec_id, s, c FROM (
+       |    SELECT vec_id, s, c,
+       |      row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, c) AS r
+       |    FROM $dists) WHERE r = 1),
+       |qdt AS (SELECT vec_id AS query_id, s, c, round(dist, 12) AS dt
+       |        FROM $dists WHERE vec_id < 20)""".stripMargin
+
+  /** The oracle tail of the PQ queries: the top 5 of `scored` per
+    * query by ADC distance (ties on neighbor id).
+    */
+  private def adcRankOracle: String =
+    """SELECT query_id, rank, neighbor_id, round(adist, 6) AS adist FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY query_id
+      |                               ORDER BY adist, neighbor_id) AS rank
+      |  FROM scored) t
+      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** Oracle CTEs replaying [[Similarity.bucketOf]] over 4 md5
+    * hyperplanes (q_l6, q_l6b, q_l23, q_l67, q_l85): planes → pl →
+    * dots → vb (vec_id, bucket), then v (vec_id, `extra`, double
+    * embedding e, bucket).
+    */
+  private def lshBucketOracleCtes(extra: String = ""): String =
+    s"""WITH planes AS (
+       |  SELECT i, j, CAST(('0x' || substr(md5(i || ':' || j), 1, 16)) AS UBIGINT)
+       |               / 9223372036854775808.0 - 1.0 AS w
+       |  FROM generate_series(0, 3) a(i) CROSS JOIN generate_series(0, 63) b(j)),
+       |pl AS (SELECT i, list(w ORDER BY j) AS pw FROM planes GROUP BY i),
+       |dots AS (SELECT e.vec_id, pl.i,
+       |           list_inner_product(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
+       |                              pl.pw) AS d
+       |         FROM embeddings e CROSS JOIN pl),
+       |vb AS (SELECT vec_id,
+       |         bit_or(CASE WHEN d > 0 THEN (1::UBIGINT << i) ELSE 0::UBIGINT END) AS bucket
+       |       FROM dots GROUP BY vec_id),
+       |v AS (SELECT e.vec_id, $extra list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS e,
+       |             vb.bucket
+       |      FROM embeddings e JOIN vb ON vb.vec_id = e.vec_id)""".stripMargin
+
+  /** Oracle CTE t (doc_id, n_tokens, ord`extra`): each doc's
+    * whitespace token count ([[TextAnalysis.tokenCount]]) and its md5
+    * packing order ([[Corpus.packShards]]).
+    */
+  private[queries] def packTokensOracleCte(extra: String = ""): String =
+    s"""WITH t AS (SELECT doc_id,
+       |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
+       |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
+       |  md5(CAST(doc_id AS VARCHAR)) AS ord$extra
+       |  FROM documents)""".stripMargin
+
+  /** t, then c (doc_id, n_tokens, token_start): the exclusive token
+    * prefix sum in packing order (q_l35, q_s24, q_s26).
+    */
+  private[queries] def packStartsOracleCtes: String =
+    packTokensOracleCte() + """,
+      |c AS (SELECT doc_id, n_tokens,
+      |  CAST(coalesce(sum(n_tokens) OVER (ORDER BY ord, doc_id
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+      |    AS token_start
+      |  FROM t)""".stripMargin
+
+  /** t, then c (doc_id, n_tokens, shard_id) at 2048 tokens per shard
+    * (q_l17, q_l83).
+    */
+  private[queries] def packShardsOracleCtes: String =
+    packTokensOracleCte() + """,
+      |c AS (SELECT doc_id, n_tokens,
+      |  CAST(floor(coalesce(sum(n_tokens) OVER (ORDER BY ord, doc_id
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2048.0) AS BIGINT)
+      |    AS shard_id
+      |  FROM t)""".stripMargin
+
+  /** Oracle CTE c (doc_id, n_tokens, shard_id) of the appended docs
+    * (every 5th) packed in `order` from the standing corpus's token
+    * total `base.bt` ([[Corpus.packShardsAppend]]; q_l84, q_st19).
+    */
+  private[queries] def appendShardsOracleCte(order: String): String =
+    s"""c AS (SELECT doc_id, n_tokens,
+       |  CAST(floor((coalesce(sum(n_tokens) OVER (ORDER BY $order
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + base.bt)
+       |    / 2048.0) AS BIGINT) AS shard_id
+       |  FROM t CROSS JOIN base WHERE doc_id % 5 = 0)""".stripMargin
+
+  /** The per-shard answer of the packing queries over c. */
+  private[queries] def shardSumsOracle: String =
+    """SELECT shard_id, count(*) AS n_docs,
+      |CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
+      |CAST(sum(doc_id) AS BIGINT) AS id_sum
+      |FROM c GROUP BY shard_id ORDER BY shard_id""".stripMargin
+
   /** Oracle CTEs shared by the dedup-decision queries (q_l14, q_l50,
     * q_l15): exact 3-shingle Jaccard ≥ 0.8 pairs (np) ∪ normalized-md5
     * pairs (ep), then connected components as the minimum reachable
     * id (comp: id, cluster_id) via a recursive CTE.
     */
   private def dupComponentsOracleCtes: String =
-    """WITH RECURSIVE
-      |toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-      |                                            for i in generate_series(1, len(w)-2)])) AS s
-      |       FROM toks WHERE len(w) >= 3),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    s"""WITH RECURSIVE
+      |$shingleSizesOracleCtes,
       |np AS (SELECT id_a, id_b FROM
       |         (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
       |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -4723,7 +4609,7 @@ object LlmQueries {
       |       JOIN sizes sa ON sa.doc_id = p.id_a
       |       JOIN sizes sb ON sb.doc_id = p.id_b
       |       WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-      |fp AS (SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
+      |fp AS (SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
       |       FROM documents),
       |ep AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
       |       FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id),
@@ -4758,11 +4644,7 @@ object LlmQueries {
     * batches' decisions union to the batch answer.
     */
   private[queries] def incrementalDedupOracle: Option[String] = Some(
-    """WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-      |                                            for i in generate_series(1, len(w)-2)])) AS s
-      |       FROM toks WHERE len(w) >= 3),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    s"""WITH $shingleSizesOracleCtes,
       |inter AS (SELECT b.doc_id AS new_id, c.doc_id AS corpus_id, count(*) AS inter
       |          FROM sh b JOIN sh c ON b.s = c.s
       |          WHERE b.doc_id % 5 = 0 AND c.doc_id % 5 <> 0
@@ -4843,14 +4725,6 @@ object LlmQueries {
     s"$head,\n$rounds"
   }
 
-  /** Generated oracle for q_l74: the full unigram-LM hard-EM replay.
-    * Unrolls `rounds` EM rounds, each containing the `maxLen`-position
-    * Viterbi DP (per position, the min-(cost, seg) extension over the
-    * ≤ `pieceLen` pieces ending there — the same per-position greedy
-    * the Scala DP performs), count re-estimation, and the
-    * ceil(3/4)-keep prune. Costs are integer micro-nats
-    * round(-ln((cnt+1)/(T+V))·1e6), so DP sums replay exactly.
-    */
   /** The q_l21b modern-recipe chain, stages 1-7, ending at the
     * repeated item frame (rep_id, doc_id, source, text, ...) ready
     * for shard packing - shared by the aggregate gate (q_l21b) and
@@ -4971,17 +4845,11 @@ object LlmQueries {
     * (q_s25, IoQueries).
     */
   private[queries] def curationOracleCtes: String =
-    """WITH d0 AS (SELECT doc_id, source, lang, trim(coalesce(text, '')) AS tt
+    s"""WITH d0 AS (SELECT doc_id, source, lang, trim(coalesce(text, '')) AS tt
       |  FROM documents),
-      |tok0 AS MATERIALIZED (SELECT doc_id, source, lang, string_split_regex(tt, '\s+') AS t
+      |tok0 AS MATERIALIZED (SELECT doc_id, source, lang, string_split_regex(tt, '\\s+') AS t
       |  FROM d0),
-      |g AS (SELECT doc_id, tk || ' ' || t[i + 1] AS gram
-      |      FROM (SELECT doc_id, t, unnest(t) AS tk,
-      |              generate_subscripts(t, 1) AS i FROM tok0)
-      |      WHERE i < len(t)),
-      |gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-      |gsum AS (SELECT doc_id, sum(c) AS n2, count(*) AS d2, max(c) AS top2
-      |         FROM gc GROUP BY 1),
+      |${bigramOracleCtes("tok0", "gsum")},
       |pass AS MATERIALIZED (SELECT tok0.doc_id, source, lang, t
       |  FROM tok0 LEFT JOIN gsum ON gsum.doc_id = tok0.doc_id
       |  WHERE len(t) >= 30
@@ -5012,16 +4880,16 @@ object LlmQueries {
       |cleaned AS (SELECT doc_id, source, lang,
       |    string_agg(line, ' ' ORDER BY i) AS text
       |  FROM keptl GROUP BY 1, 2, 3),
-      |fp AS (SELECT *, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
+      |fp AS (SELECT *, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
       |  FROM cleaned),
       |ded AS (SELECT doc_id, source, lang, text FROM fp
       |        QUALIFY doc_id = min(doc_id) OVER (PARTITION BY f)),
       |corp AS MATERIALIZED (SELECT * FROM ded WHERE doc_id % 97 <> 0),
-      |ctoks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM corp),
+      |ctoks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM corp),
       |csh AS (SELECT doc_id, unnest(list_distinct([array_to_string(w[i:i+4], ' ')
       |                                             for i in generate_series(1, len(w)-4)])) AS s
       |        FROM ctoks WHERE len(w) >= 5),
-      |etoks AS (SELECT string_split_regex(trim(text), '\s+') AS w FROM documents
+      |etoks AS (SELECT string_split_regex(trim(text), '\\s+') AS w FROM documents
       |          WHERE doc_id % 97 = 0),
       |esh AS (SELECT DISTINCT unnest([array_to_string(w[i:i+4], ' ')
       |                                for i in generate_series(1, len(w)-4)]) AS s
@@ -5045,7 +4913,7 @@ object LlmQueries {
       |          unnest(generate_series(1, n)) AS copy_id
       |        FROM mcnt WHERE n > 0)),
       |per AS MATERIALIZED (SELECT source,
-      |    CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS avail
+      |    CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS avail
       |  FROM mix GROUP BY 1),
       |rk AS (SELECT source, avail,
       |    CAST(row_number() OVER (ORDER BY avail DESC, source) AS BIGINT) AS qrank
@@ -5054,26 +4922,7 @@ object LlmQueries {
       |    CAST(CASE WHEN qrank <= 5 THEN 4 WHEN qrank <= 15 THEN 2 ELSE 1 END
       |         * avail AS BIGINT) AS cap
       |  FROM rk),
-      |b AS MATERIALIZED (SELECT CAST(2 * sum(avail) AS BIGINT) AS budget,
-      |             CAST(sum(avail) AS BIGINT) AS sumw0 FROM per),
-      |r1 AS MATERIALIZED (SELECT tt.*, least(cap, (b.budget * avail) // b.sumw0) AS alloc
-      |       FROM tt CROSS JOIN b),
-      |s2 AS (SELECT CAST(sum(CASE WHEN alloc < cap THEN avail ELSE 0 END) AS BIGINT)
-      |         AS sumw, CAST(sum(alloc) AS BIGINT) AS tot FROM r1),
-      |r2 AS MATERIALIZED (SELECT r1.source, r1.avail, r1.cap,
-      |    CASE WHEN alloc < cap AND s2.sumw > 0
-      |      THEN least(cap, alloc + greatest(((b.budget - s2.tot) * avail) // s2.sumw,
-      |                                       0))
-      |      ELSE alloc END AS alloc
-      |  FROM r1 CROSS JOIN b CROSS JOIN s2),
-      |s3 AS (SELECT CAST(sum(CASE WHEN alloc < cap THEN avail ELSE 0 END) AS BIGINT)
-      |         AS sumw, CAST(sum(alloc) AS BIGINT) AS tot FROM r2),
-      |r3 AS (SELECT r2.source, r2.avail, r2.cap,
-      |    CASE WHEN alloc < cap AND s3.sumw > 0
-      |      THEN least(cap, alloc + greatest(((b.budget - s3.tot) * avail) // s3.sumw,
-      |                                       0))
-      |      ELSE alloc END AS alloc
-      |  FROM r2 CROSS JOIN b CROSS JOIN s3),
+      |${epochMixOracleCtes(Seq("source", "avail", "cap"), " MATERIALIZED")},
       |rt AS (SELECT source, CAST(alloc AS DOUBLE) / avail AS rate FROM r3),
       |rep AS (SELECT m.doc_id, m.item, m.text,
       |    CAST(floor(rate) + CASE WHEN
@@ -5085,7 +4934,7 @@ object LlmQueries {
       |  FROM rep WHERE n > 0),
       |p AS (SELECT doc_id,
       |  CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-      |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
+      |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
       |  md5(item || '#' || CAST(rep_copy AS VARCHAR)) AS ord,
       |  item || '#' || CAST(rep_copy AS VARCHAR) AS rid
       |  FROM repe),
@@ -5176,6 +5025,14 @@ object LlmQueries {
        |$emRounds""".stripMargin
   }
 
+  /** Generated oracle for q_l74: the full unigram-LM hard-EM replay.
+    * Unrolls `rounds` EM rounds, each containing the `maxLen`-position
+    * Viterbi DP (per position, the min-(cost, seg) extension over the
+    * ≤ `pieceLen` pieces ending there — the same per-position greedy
+    * the Scala DP performs), count re-estimation, and the
+    * ceil(3/4)-keep prune. Costs are integer micro-nats
+    * round(-ln((cnt+1)/(T+V))·1e6), so DP sums replay exactly.
+    */
   private def unigramOracleSql(
       maxLen: Int, pieceLen: Int, seedN: Int, rounds: Int): String =
     s"""${unigramOracleCtes(maxLen, pieceLen, seedN, rounds)},

@@ -26,7 +26,47 @@ import org.apache.spark.sql.types.DecimalType
 object RelationalQueries {
 
   /** sum(CAST(c AS DECIMAL(18,2))) :: double — exact in both engines. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+  private[queries] def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+
+  /** One event per user, the first by `order`, counted and summed per
+    * type (q_w1 keep-first, q_w3 last-wins by the reversed order).
+    */
+  private def onePerUser(s: SparkSession, dir: String, order: Column*): DataFrame =
+    Tables.events(s, dir)
+      .withColumn("rn", row_number().over(Window.partitionBy("user_id").orderBy(order: _*)))
+      .filter(col("rn") === 1)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
+      .orderBy("event_type")
+
+  private def onePerUserOracle(order: String): Option[String] = Some(
+    s"""SELECT event_type, count(*) AS n,
+       |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+       |FROM (SELECT * FROM events
+       |      QUALIFY row_number() OVER (PARTITION BY user_id
+       |        ORDER BY $order) = 1)
+       |GROUP BY event_type ORDER BY event_type""".stripMargin)
+
+  /** Order count and exact price sum of each (priority, status)
+    * grouping set of `sets` (a rollup or cube), subtotals labeled 'ALL'
+    * (q_a12, q_a14).
+    */
+  private def priorityStatusLattice(sets: org.apache.spark.sql.RelationalGroupedDataset): DataFrame =
+    sets
+      .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
+      .select(
+        coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
+        coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
+        col("n"), col("sum_price"))
+      .orderBy("priority", "status")
+
+  private def priorityStatusLatticeOracle(groupBy: String): Option[String] = Some(
+    s"""SELECT coalesce(o_orderpriority, 'ALL') AS priority,
+       |coalesce(o_orderstatus, 'ALL') AS status,
+       |count(*) AS n,
+       |CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+       |FROM orders GROUP BY $groupBy (o_orderpriority, o_orderstatus)
+       |ORDER BY priority, status""".stripMargin)
 
   /** round(dsum/cnt, 6) — deterministic average. */
   private def davg(c: Column): Column = round(dsum(c) / count(lit(1)), 6)
@@ -575,21 +615,8 @@ object RelationalQueries {
     // ---------------------------------------------------------------- W1/S2 (keep-first-per-key dedup)
     QueryDef(
       "q_w1_keep_first", "W1 S2 A8",
-      Some("""SELECT event_type, count(*) AS n,
-             |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-             |FROM (SELECT * FROM events
-             |      QUALIFY row_number() OVER (PARTITION BY user_id
-             |        ORDER BY date_trunc('microseconds', ts), event_id) = 1)
-             |GROUP BY event_type ORDER BY event_type""".stripMargin),
-      (s, dir) => {
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        Tables.events(s, dir)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-          .orderBy("event_type")
-      }),
+      onePerUserOracle("date_trunc('microseconds', ts), event_id"),
+      (s, dir) => onePerUser(s, dir, col("ts"), col("event_id"))),
 
     // ---------------------------------------------------------------- W2 (top-k)
     QueryDef(
@@ -607,21 +634,8 @@ object RelationalQueries {
     // ---------------------------------------------------------------- W3/S5 (last-wins upsert window)
     QueryDef(
       "q_w3_last_wins", "W3 S5",
-      Some("""SELECT event_type, count(*) AS n,
-             |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-             |FROM (SELECT * FROM events
-             |      QUALIFY row_number() OVER (PARTITION BY user_id
-             |        ORDER BY date_trunc('microseconds', ts) DESC, event_id DESC) = 1)
-             |GROUP BY event_type ORDER BY event_type""".stripMargin),
-      (s, dir) => {
-        val w = Window.partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
-        Tables.events(s, dir)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-          .orderBy("event_type")
-      }),
+      onePerUserOracle("date_trunc('microseconds', ts) DESC, event_id DESC"),
+      (s, dir) => onePerUser(s, dir, col("ts").desc, col("event_id").desc)),
 
     // ---------------------------------------------------------------- W4 (as-of / nearest-earlier temporal join)
     QueryDef("q_w4_asof_join", "W4 as-of join", asofPurchasesOracle, asofPurchases(None)),
@@ -707,21 +721,9 @@ object RelationalQueries {
       // Expand + aggregation, not three scans. Subtotal rows are
       // labeled 'ALL' on both sides (coalesce), which also sidesteps
       // the engines' differing NULL sort positions.
-      Some("""SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-             |coalesce(o_orderstatus, 'ALL') AS status,
-             |count(*) AS n,
-             |CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-             |FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-             |ORDER BY priority, status""".stripMargin),
-      (s, dir) =>
-        Tables.orders(s, dir)
-          .rollup(col("o_orderpriority"), col("o_orderstatus"))
-          .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-          .select(
-            coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-            coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-            col("n"), col("sum_price"))
-          .orderBy("priority", "status")),
+      priorityStatusLatticeOracle("ROLLUP"),
+      (s, dir) => priorityStatusLattice(
+        Tables.orders(s, dir).rollup(col("o_orderpriority"), col("o_orderstatus")))),
 
     // ---------------------------------------------------------------- F20 (JSON property extraction)
     QueryDef(
@@ -966,21 +968,9 @@ object RelationalQueries {
       // hierarchical 3-set subset): per (priority, status), per
       // priority, per status, grand total — ONE Expand + aggregation,
       // not four scans. 'ALL' labeling as in q_a12.
-      Some("""SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-             |coalesce(o_orderstatus, 'ALL') AS status,
-             |count(*) AS n,
-             |CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-             |FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
-             |ORDER BY priority, status""".stripMargin),
-      (s, dir) =>
-        Tables.orders(s, dir)
-          .cube(col("o_orderpriority"), col("o_orderstatus"))
-          .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-          .select(
-            coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-            coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-            col("n"), col("sum_price"))
-          .orderBy("priority", "status")),
+      priorityStatusLatticeOracle("CUBE"),
+      (s, dir) => priorityStatusLattice(
+        Tables.orders(s, dir).cube(col("o_orderpriority"), col("o_orderstatus")))),
 
     // ---------------------------------------------------------------- A15 (batch sessionization)
     QueryDef(
@@ -1737,16 +1727,7 @@ object RelationalQueries {
       // phase-equivalence bug is a hash mismatch, not lost rows. Same
       // two unrolled rounded-DECIMAL PageRank iterations as q_a29 —
       // the wall delta between the two queries IS the cap's value.
-      Some(s"""WITH p AS MATERIALIZED (SELECT DISTINCT user_id AS u,
-             |    CAST(props->>'$$.k' AS BIGINT) AS k
-             |  FROM events WHERE event_type = 'purchase'),
-             |pc AS MATERIALIZED (SELECT u, k FROM (SELECT u, k,
-             |    row_number() OVER (PARTITION BY k
-             |      ORDER BY (u * 2654435761) % 4294967296, u) AS rn
-             |  FROM p) WHERE rn <= 16),
-             |e AS MATERIALIZED (SELECT a.u AS src, b.u AS dst
-             |      FROM pc a JOIN pc b ON a.k = b.k AND a.u <> b.u
-             |      GROUP BY 1, 2 HAVING count(*) >= 3),
+      Some(s"""${CoPurchaseGraph.cappedEdgesOracleCtes("e", minShared = 3)},
              |d AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY 1),
              |${CoPurchaseGraph.pageRankOracleTail}""".stripMargin),
       (s, dir) => CoPurchaseGraph.twoStepPageRank(
@@ -1848,16 +1829,7 @@ object RelationalQueries {
       // node worst-case — then the identical once-per-triangle
       // (a<b<c) two-join count and clustering coefficient. The
       // oracle replays cap, threshold, and count exactly.
-      Some(s"""WITH p AS MATERIALIZED (SELECT DISTINCT user_id AS u,
-             |    CAST(props->>'$$.k' AS BIGINT) AS k
-             |  FROM events WHERE event_type = 'purchase'),
-             |pc AS MATERIALIZED (SELECT u, k FROM (SELECT u, k,
-             |    row_number() OVER (PARTITION BY k
-             |      ORDER BY (u * 2654435761) % 4294967296, u) AS rn
-             |  FROM p) WHERE rn <= 16),
-             |und AS MATERIALIZED (SELECT a.u AS src, b.u AS dst
-             |        FROM pc a JOIN pc b ON a.k = b.k AND a.u <> b.u
-             |        GROUP BY 1, 2 HAVING count(*) >= 5),
+      Some(s"""${CoPurchaseGraph.cappedEdgesOracleCtes("und", minShared = 5)},
              |deg AS (SELECT src AS u, count(*) AS d FROM und GROUP BY 1),
              |o AS MATERIALIZED (SELECT src, dst FROM und WHERE src < dst),
              |${CoPurchaseGraph.triangleOracleTail}""".stripMargin),

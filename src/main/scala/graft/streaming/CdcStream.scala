@@ -91,27 +91,42 @@ object CdcStream {
     }
   }
 
+  /** Every watch dir the registry's streaming queries read, staged
+    * once up front so no query's first run pays the staging.
+    */
+  def ensureAllStaged(spark: SparkSession, dir: String): Unit = {
+    ensureStaged(spark, dir)
+    ensureStagedWithSentinel(spark, dir)
+    ensureStagedLateActs(spark, dir)
+    ensureStagedDocBatches(spark, dir)
+    ensureStagedDocBatchesIndexed(spark, dir)
+    ensureStagedEmbBatches(spark, dir)
+  }
+
+  /** Files (= micro-batches) in each batch watch dir. */
+  private val BatchFiles = 4
+
   /** Stage the ARRIVING slice of the documents table (doc_id % 5 = 0,
-    * q_l22's batch convention) into a watch dir as `nFiles` separate
+    * q_l22's batch convention) into a watch dir as `BatchFiles` separate
     * parquet files — with `maxFilesPerTrigger = 1` the file source
-    * then delivers them as nFiles genuine micro-batches, which is the
+    * then delivers them as that many genuine micro-batches, which is the
     * continuous-ingest shape q_st15 exists to pin. Range-partitioned
     * by doc_id so the file split is deterministic. Idempotent and
     * marker-guarded like every staging helper here.
     */
-  def ensureStagedDocBatches(spark: SparkSession, dir: String, nFiles: Int = 4): String = {
+  def ensureStagedDocBatches(spark: SparkSession, dir: String): String = {
     SparkUtil.stagedDir(spark, "stream_docs_watch", dir,
-        s"$dir/documents.parquet", s"v1:$nFiles") { staged =>
+        s"$dir/documents.parquet", s"v1:$BatchFiles") { staged =>
       graft.Tables.documents(spark, dir)
         .filter(org.apache.spark.sql.functions.col("doc_id") % 5 === 0)
-        .repartitionByRange(nFiles, org.apache.spark.sql.functions.col("doc_id"))
+        .repartitionByRange(BatchFiles, org.apache.spark.sql.functions.col("doc_id"))
         .write.mode("overwrite").parquet(staged)
     }
   }
 
   /** Watch dir for the streaming pack-append twin (q_st19): the
-    * arriving slice (doc_id % 5 = 0) split into `nFiles` EXPLICIT
-    * micro-batches by (doc_id div 5) % nFiles. Unlike the range split
+    * arriving slice (doc_id % 5 = 0) split into `BatchFiles` EXPLICIT
+    * micro-batches by (doc_id div 5) % BatchFiles. Unlike the range split
     * of [[ensureStagedDocBatches]] (sampled boundaries), this
     * assignment is a pure function of doc_id that the SQL oracle can
     * replay — and shard numbering continuity across micro-batches
@@ -120,18 +135,17 @@ object CdcStream {
     * source's (timestamp, path) ordering then delivers batch 0..n-1
     * deterministically under maxFilesPerTrigger=1.
     */
-  def ensureStagedDocBatchesIndexed(
-      spark: SparkSession, dir: String, nFiles: Int = 4): String = {
+  def ensureStagedDocBatchesIndexed(spark: SparkSession, dir: String): String = {
     SparkUtil.stagedDir(spark, "stream_docs_idx_watch", dir,
-        s"$dir/documents.parquet", s"v1:$nFiles") { staged =>
+        s"$dir/documents.parquet", s"v1:$BatchFiles") { staged =>
       import org.apache.spark.sql.functions._
       val docs = graft.Tables.documents(spark, dir)
         .filter(col("doc_id") % 5 === 0)
       val fs = new org.apache.hadoop.fs.Path(staged)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (0 until nFiles).foreach { b =>
+      (0 until BatchFiles).foreach { b =>
         val out = new org.apache.hadoop.fs.Path(staged, f"batch_$b%02d.parquet")
-        TableLog.landFile(docs.filter(expr(s"pmod(doc_id div 5, $nFiles)") === b), out.toString)
+        TableLog.landFile(docs.filter(expr(s"pmod(doc_id div 5, $BatchFiles)") === b), out.toString)
         // fixed epoch base keeps the staged dir byte-identical across
         // runs (the marker guard skips re-staging); 60 s spacing keeps
         // every file inside the source's maxFileAge window
@@ -140,16 +154,16 @@ object CdcStream {
     }
   }
 
-  /** Watch dir carrying the FULL embeddings table as `nFiles`
+  /** Watch dir carrying the FULL embeddings table as `BatchFiles`
     * range-partitioned files — the arrival stream for sketch-state
     * convergence checks over the vector column (q_st17). Marker-
     * guarded like `ensureStagedDocBatches`.
     */
-  def ensureStagedEmbBatches(spark: SparkSession, dir: String, nFiles: Int = 4): String = {
+  def ensureStagedEmbBatches(spark: SparkSession, dir: String): String = {
     SparkUtil.stagedDir(spark, "stream_emb_watch", dir,
-        s"$dir/embeddings.parquet", s"v1:$nFiles") { staged =>
+        s"$dir/embeddings.parquet", s"v1:$BatchFiles") { staged =>
       graft.Tables.embeddings(spark, dir)
-        .repartitionByRange(nFiles, org.apache.spark.sql.functions.col("vec_id"))
+        .repartitionByRange(BatchFiles, org.apache.spark.sql.functions.col("vec_id"))
         .write.mode("overwrite").parquet(staged)
     }
   }

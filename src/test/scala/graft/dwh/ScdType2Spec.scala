@@ -13,6 +13,11 @@ class ScdType2Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Incoming (job_id, title_clean) rows, all of one crawl instant. */
+  private def crawled(rows: (String, String)*) =
+    rows.toDF("job_id", "title_clean")
+      .withColumn("crawled_at", lit("2026-08-12 00:00:00").cast("timestamp"))
+
   private def currentDim = Seq(
     (10001L, "JOB001", "Python Developer", java.sql.Date.valueOf("2026-01-01"),
       null.asInstanceOf[java.sql.Date], true),
@@ -21,8 +26,7 @@ class ScdType2Spec extends AnyFunSuite {
     .toDF("job_sk", "job_id", "title_clean", "effective_date", "expiry_date", "is_current")
 
   test("changed title closes old row and appends new current version") {
-    val incoming = Seq(("JOB001", "Senior Python Developer"), ("JOB002", "Java Developer"))
-      .toDF("job_id", "title_clean")
+    val incoming = crawled(("JOB001", "Senior Python Developer"), ("JOB002", "Java Developer"))
     val snap = ScdType2.applyBatch(currentDim, incoming, "job_id", Seq("title_clean"),
       "job_sk", "2026-08-12")
     val job1 = snap.filter($"job_id" === "JOB001").orderBy("job_sk").collect()
@@ -40,8 +44,7 @@ class ScdType2Spec extends AnyFunSuite {
   }
 
   test("re-applying the same batch is idempotent") {
-    val incoming = Seq(("JOB001", "Senior Python Developer"), ("JOB003", "Data Engineer"))
-      .toDF("job_id", "title_clean")
+    val incoming = crawled(("JOB001", "Senior Python Developer"), ("JOB003", "Data Engineer"))
     val snap1 = ScdType2.applyBatch(currentDim, incoming, "job_id", Seq("title_clean"),
       "job_sk", "2026-08-12")
     val snap2 = ScdType2.applyBatch(snap1, incoming, "job_id", Seq("title_clean"),
@@ -54,11 +57,10 @@ class ScdType2Spec extends AnyFunSuite {
     // a NULL key can never match the routing join, so without the
     // guard it would insert a fresh "current" row on EVERY batch;
     // duplicate keys would double-insert current versions
-    val incoming = Seq(
+    val incoming = crawled(
       (null.asInstanceOf[String], "Ghost Role"),
       ("JOB003", "Data Engineer"),
       ("JOB003", "Analytics Engineer"))
-      .toDF("job_id", "title_clean")
     val snap = ScdType2.applyBatch(currentDim, incoming, "job_id", Seq("title_clean"),
       "job_sk", "2026-08-13")
     assert(snap.filter($"job_id".isNull).isEmpty)

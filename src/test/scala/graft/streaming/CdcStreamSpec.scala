@@ -12,6 +12,15 @@ class CdcStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  test("ensureAllStaged leaves every watch dir behind its _STAGED marker") {
+    CdcStream.ensureAllStaged(spark, sf)
+    Seq("stream_events_watch", "stream_events_sentinel", "stream_late_acts",
+        "stream_docs_watch", "stream_docs_idx_watch", "stream_emb_watch").foreach { name =>
+      val marker = new java.io.File(graft.SparkUtil.scratchDir(name, sf), "_STAGED")
+      assert(marker.isFile, s"$name has no _STAGED marker")
+    }
+  }
+
   test("streaming dedup drops re-delivered events") {
     val stream = CdcStream.readEvents(spark, CdcStream.ensureStaged(spark, sf))
     val deduped = CdcStream.runToMemory(spark,
